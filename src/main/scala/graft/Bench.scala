@@ -360,7 +360,7 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val loadStart = loadavg()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Session.cpus
     // Self-enforced wall-clock budget (BENCH_r13 lesson: the driver
     // runs the bench under an external `timeout` — rc=124 mid-stateful
     // after the 155-query catalog growth + settle gates pushed the
@@ -388,18 +388,7 @@ object Bench {
     // the forks on the pristine box removes both the spike AND the
     // settle-gate wall-clock that fed the r13 rc=124.
     lazy val spark: SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        // stop() joins the stream thread FOREVER by default — a wedged
-        // micro-batch would hang the bench after the deadline fired;
-        // progress is harvested BEFORE stop, so a short join suffices
-        .config("spark.sql.streaming.stopTimeout", "15s")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
+      val s = Session.local(cpus)
       // ERROR, not WARN: parent WARN lines (stream-stop stack traces,
       // AQE notices) printing after the last emit are tail-window
       // pollution — BENCH_r13's 2000-char tail was 100% WARN output
@@ -547,7 +536,7 @@ object Bench {
     // earns one retry, best-of. A 2-entry array IS the retry marker.
     def extTrialsOf(name: String): Seq[(Double, Double)] = {
       val first = run(name)
-      if (first._1 < 0 || first._2 > cpus.toInt / 2.0 ||
+      if (first._1 < 0 || first._2 > cpus / 2.0 ||
           drifted(name, first._1)) Seq(first, run(name))
       else Seq(first)
     }
@@ -772,7 +761,7 @@ object Bench {
           // floor 4 min, ceiling capMin (the retry passes capMin=3,
           // which then wins over the floor — min applied LAST)
           timeoutMin = math.min(capMin, math.max(4L,
-            (remainingSec() - 330) / 60)).toInt, cpus = cpus)
+            (remainingSec() - 330) / 60)).toInt, cpus = cpus.toString)
       }
     def parseStateful(lines: List[String]): List[(Long, Long, Double, Double)] =
       lines.flatMap { l =>
@@ -866,7 +855,7 @@ object Bench {
           // child's own budget + incremental ROCKS_SWEEP prints mean
           // a tight watchdog degrades cells, never loses them
           timeoutMin = math.min(capMin, math.max(3L,
-            (remainingSec() - 280) / 60)).toInt, cpus = cpus)
+            (remainingSec() - 280) / 60)).toInt, cpus = cpus.toString)
         out.reverseIterator.find(_.startsWith("ROCKS_SWEEP "))
           .map(_.stripPrefix("ROCKS_SWEEP ").trim)
           .orElse { System.err.println(
@@ -1010,7 +999,7 @@ object Bench {
     if (remainingSec() < 100) System.err.println(
       s"[bench] budget: skipped pipeline phase (remaining=${remainingSec()}s)")
     else try {
-      val s = records.repartition(cpus.toInt)
+      val s = records.repartition(cpus)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
       staged = Some(s)
       val stagedPipeline = pipelineOver(s)
@@ -1071,7 +1060,7 @@ object Bench {
     def measureStreaming(rowsPerBatch: Long): (Long, Double, Int) = {
       val synth = spark.readStream.format("rate-micro-batch")
         .option("rowsPerBatch", rowsPerBatch)
-        .option("numPartitions", cpus.toInt)
+        .option("numPartitions", cpus)
         .load()
       val kafkaShaped = synth.select(
         col("value").cast("string").cast("binary").as("key"),
@@ -1158,17 +1147,18 @@ object Bench {
         "/graft-scaling-sf1"
       // reuse fixtures only when they were ramped from THIS sfDir (a
       // marker file pins the source); /tmp survives within a round's
-      // c32 + c8 driver runs, so the second run skips the synthesis
-      val marker = new java.io.File(s"$rampDir/.src")
+      // c32 + c8 driver runs, so the second run skips the synthesis.
+      // The marker is written only after a synthesis completes, and
+      // removed before one starts: an interrupted rewrite must not read
+      // as reusable on the next run
+      val marker = java.nio.file.Paths.get(rampDir, ".src")
       val reuse = new java.io.File(s"$rampDir/lineitem.parquet").exists() &&
-        marker.exists() &&
-        scala.io.Source.fromFile(marker).mkString.trim == sfDir
+        java.nio.file.Files.exists(marker) &&
+        java.nio.file.Files.readString(marker).trim == sfDir
+      if (!reuse) java.nio.file.Files.deleteIfExists(marker)
       ScaleRamp.synthesize(spark, sfDir, rampDir, factor = 10,
-        cpus = cpus.toInt, reuse = reuse)
-      if (!reuse) {
-        val w = new java.io.PrintWriter(marker)
-        try w.print(sfDir) finally w.close()
-      }
+        cpus = cpus, reuse = reuse)
+      if (!reuse) java.nio.file.Files.writeString(marker, sfDir)
       // settle after the multi-hundred-MB fixture write — the first
       // dev run forked c32 straight into the write's load/page-cache
       // wake (load 12) and read 17.4 s for a 2.4 s query while the

@@ -1,12 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: dump `.explain("formatted")` for catalog queries to files —
   * `runMain graft.ExplainDump <sfDir> <outDir> <queryName>...`
-  * (no names = all). One `<outDir>/<name>.txt` per query. The session
-  * mirrors the Bench session (adaptive on, shuffle partitions = cpus)
-  * so the dumped plan is the plan the bench actually runs.
+  * (no names = all). One `<outDir>/<name>.txt` per query. Runs on the
+  * Bench session ([[Session.local]]), so the dumped plan is the plan
+  * the bench actually runs.
   */
 object ExplainDump {
   def main(args: Array[String]): Unit = {
@@ -14,15 +12,7 @@ object ExplainDump {
     val outDir = args.lift(1).getOrElse("/tmp/graft-plans")
     val names = if (args.length > 2) args.drop(2).toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(Session.cpus)
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { n =>

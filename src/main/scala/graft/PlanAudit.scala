@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan audit main: prints the formatted physical plan of each headline
   * query and flags scale killers — missing filter pushdown, unpruned
   * scans, cartesian products, missing broadcasts, non-codegen spans —
@@ -589,16 +587,10 @@ object PlanAudit {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // AQE defers codegen wrapping to stage materialization, which hides
-      // WholeStageCodegen spans from plan inspection — disable for audit
-      .config("spark.sql.adaptive.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(Session.cpus)
+    // AQE defers codegen wrapping to stage materialization, which hides
+    // WholeStageCodegen spans from plan inspection — disable for audit
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.sparkContext.setLogLevel("ERROR")
 
     Bench.headline.foreach { name =>

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Child-process main for the RocksDB state-store sweep.
   *
   * Run in its own JVM (forked by [[Bench]]) because rocksdbjni's
@@ -19,24 +17,17 @@ import org.apache.spark.sql.SparkSession
   */
 object RocksBench {
   def main(args: Array[String]): Unit = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     // IO weather stamp (the StatefulBench child-side rationale)
     System.err.println(s"[bench] child disk probe ${Bench.diskMbPerS()} MB/s")
-    val spark: SparkSession = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.stopTimeout", "15s")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      // changelog checkpointing: commit only the batch's delta instead
-      // of the full SST snapshot — without it RocksDB commit cost grows
-      // with TOTAL state and the comparison to heap is meaningless
-      .config(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        "true")
-      .getOrCreate()
+    val cpus = Session.cpus
+    val spark = Session.local(cpus)
+    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    // changelog checkpointing: commit only the batch's delta instead
+    // of the full SST snapshot — without it RocksDB commit cost grows
+    // with TOTAL state and the comparison to heap is meaningless
+    spark.conf.set(
+      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
     spark.sparkContext.setLogLevel("ERROR")
 
     // ONE short warm pass (batches 0-1 at the smaller size), then one
@@ -71,7 +62,7 @@ object RocksBench {
     // whole 150 s budget warming and skipped every cell; the deadline
     // also reserves ≥180 s for the measured cells (r16).
     if (remainingSec() > 210)
-      Bench.measureStateful(spark, sizes.max, cpus.toInt,
+      Bench.measureStateful(spark, sizes.max, cpus,
         deadlineSec = math.max(30L, math.min(120L, remainingSec() - 180)),
         untilBatch = 2)
     else System.err.println(
@@ -88,7 +79,7 @@ object RocksBench {
     sizes.foreach { n =>
       def pass() = {
         val (rows, sec, nBatches) = Bench.measureStateful(spark, n,
-          cpus.toInt, deadlineSec = math.min(300L, remainingSec() - 30))
+          cpus, deadlineSec = math.min(300L, remainingSec() - 30))
         (Bench.sweepValue(rows, sec, nBatches, 4), sec, nBatches)
       }
       if (remainingSec() < 60) System.err.println(

@@ -82,15 +82,8 @@ object ScaleRamp {
     val srcDir = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val outDir = if (args.length > 1) args(1) else "/tmp/graft-ramp"
     val factor = sys.env.getOrElse("GRAFT_RAMP_FACTOR", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-scale-ramp")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val cpus = Session.cpus
+    val spark = Session.local(cpus)
     spark.sparkContext.setLogLevel("WARN")
 
     // GRAFT_RAMP_REUSE=1 skips fixture synthesis when outDir already
@@ -98,7 +91,7 @@ object ScaleRamp {
     // 100× should not pay the multi-minute write again
     val reuse = sys.env.get("GRAFT_RAMP_REUSE").contains("1") &&
       new java.io.File(s"$outDir/lineitem.parquet").exists()
-    synthesize(spark, srcDir, outDir, factor, cpus.toInt, reuse)
+    synthesize(spark, srcDir, outDir, factor, cpus, reuse)
 
     def time(dir: String, name: String): Double = {
       val t0 = System.nanoTime()

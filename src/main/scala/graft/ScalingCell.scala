@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Child-process main for the bench's sf1 scaling cell (r16, the r15
   * verdict's ask #5): times a comma-separated query list over a
   * pre-synthesized 10× ramp dir at THIS fork's core count. The parent
@@ -21,20 +19,13 @@ object ScalingCell {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val names = args(1).split(",").toSeq.filter(_.nonEmpty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = Session.cpus
     val t0 = System.nanoTime()
     val budgetSec = sys.env.get("GRAFT_CHILD_BUDGET_SEC").map(_.toLong)
     def remainingSec(): Long = budgetSec
       .map(b => b - (System.nanoTime() - t0) / 1000000000L)
       .getOrElse(Long.MaxValue / 2)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     def sweep(): Unit = spark.sparkContext.getPersistentRDDs.values
       .foreach(_.unpersist(blocking = false))
@@ -51,12 +42,11 @@ object ScalingCell {
         val t1 = System.nanoTime()
         Queries.all(n)(spark, dir).write.format("noop").mode("overwrite").save()
         val sec = (System.nanoTime() - t1) / 1e9
-        sweep()
         println(f"SCALING $n cpus=$cpus sec=$sec%.3f")
         System.out.flush()
       } catch { case e: Throwable =>
         System.err.println(s"[bench] scaling $n failed: ${e.getMessage}")
-      }
+      } finally sweep()
     }
     spark.stop()
   }

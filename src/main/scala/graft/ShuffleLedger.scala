@@ -108,14 +108,7 @@ object ShuffleLedger {
   def main(args: Array[String]): Unit = {
     val dirA = if (args.nonEmpty) args(0) else "/root/testdata/sf0.01"
     val dirB = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(Session.cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     // GRAFT_SHUFFLE_QUERIES overrides the default headline set —

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: measure the stateful streaming path in isolation —
   * `runMain graft.StatefulBench [rowsPerBatch ...]`. Prints per-batch
   * progress (GRAFT_BENCH_DEBUG-style) and the rec/s each size lands,
@@ -27,34 +25,29 @@ object StatefulBench {
   def main(args: Array[String]): Unit = {
     val sizes = if (args.nonEmpty) args.toSeq.map(_.toLong)
       else Seq(50000L, 100000L, 250000L)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
     val t0 = System.nanoTime()
     val budgetSec = sys.env.get("GRAFT_CHILD_BUDGET_SEC").map(_.toLong)
     def remainingSec(): Long = budgetSec
       .map(b => b - (System.nanoTime() - t0) / 1000000000L)
       .getOrElse(Long.MaxValue / 2)
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.streaming.stopTimeout", "15s")
-      .config("spark.ui.enabled", "false")
     // IO weather stamp (the parent's disk_mb_per_s ledger, child-side):
     // the heap store's full-snapshot commits are disk-bound, so this
     // line in the kept stderr log makes a cratered cell attributable
     System.err.println(s"[bench] child disk probe ${Bench.diskMbPerS()} MB/s")
-    val spark = (if (sys.env.get("GRAFT_STATE_STORE").contains("rocksdb"))
-      builder.config("spark.sql.streaming.stateStore.providerClass",
+    val cpus = Session.cpus
+    val spark = Session.local(cpus)
+    if (sys.env.get("GRAFT_STATE_STORE").contains("rocksdb")) {
+      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-        // without changelog checkpointing every commit uploads the FULL
-        // SST snapshot — commit cost grows with total state and the
-        // provider loses to heap on any growing-state workload;
-        // changelog mode commits only the batch's delta (snapshots
-        // happen in background maintenance), the configuration a real
-        // deployment runs
-        .config("spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-          "true")
-    else builder).getOrCreate()
+      // without changelog checkpointing every commit uploads the FULL
+      // SST snapshot — commit cost grows with total state and the
+      // provider loses to heap on any growing-state workload;
+      // changelog mode commits only the batch's delta (snapshots
+      // happen in background maintenance), the configuration a real
+      // deployment runs
+      spark.conf.set(
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
+    }
     spark.sparkContext.setLogLevel("ERROR")
     // ONE short warm pass per child (batches 0-1), then measured
     // passes. Rationale: every measured pass already EXCLUDES its own
@@ -75,7 +68,7 @@ object StatefulBench {
     // warm that burns 120 s used to leave the 2M cell a too-short
     // deadline and the cheap cell nothing.
     if (remainingSec() > 210)
-      Bench.measureStateful(spark, sizes.max, cpus.toInt,
+      Bench.measureStateful(spark, sizes.max, cpus,
         deadlineSec = math.max(30L, math.min(120L, remainingSec() - 180)),
         untilBatch = 2)
     else System.err.println(
@@ -97,7 +90,7 @@ object StatefulBench {
         // per-bucket state
         val base = if (n >= 2000000L) 300L else 180L
         val (rows, sec, batches) = Bench.measureStateful(spark, n,
-          cpus.toInt, deadlineSec = math.min(base, remainingSec() - 30))
+          cpus, deadlineSec = math.min(base, remainingSec() - 30))
         (rows, sec, batches, Bench.sweepValue(rows, sec, batches, 4))
       }
       if (remainingSec() < 60) {

@@ -1,29 +1,19 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: time individual catalog queries — materialized through the
   * noop sink (every column of every row computed; `count()` would let
   * Catalyst prune columns and whole subtrees, see the optimization
   * guide §1.4) — `runMain graft.TimeQuery <sfDir> <queryName>...`
   * (no names = all). Two passes per query; the second is the warm
-  * number. Adaptive on, matching the Bench session, so the measured
-  * plan is the bench's plan.
+  * number. Runs on the Bench session ([[Session.local]]), so the
+  * measured plan is the bench's plan.
   */
 object TimeQuery {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val names = if (args.length > 1) args.tail.toSeq
       else SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "8")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(Session.cpus)
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       val fn = SparkEntry.queries(n)

@@ -1,7 +1,7 @@
 package graft.dedup
 
 import graft.functions.{HashFns, TextFns}
-import graft.ops.Scale
+import graft.ops.{Lineage, Scale}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -535,9 +535,8 @@ object Dedup {
     // round — persist alone leaves an exponentially-growing logical
     // plan that the optimizer re-walks per round. The dual-path
     // (reliable checkpoint dir when set, localCheckpoint otherwise)
-    // is the shared [[graft.ops.Lineage.cut]] as of r16 — see the
-    // trade-off note on the final cut below.
-    def cut(df: DataFrame): DataFrame = graft.ops.Lineage.cut(df)
+    // is the shared [[Lineage.cut]] — see the trade-off note on the
+    // final cut below.
     // ONE materialization of the caller's pairs subtree (r15): the old
     // shape evaluated `pairs` twice — once for the initial edge set and
     // once for the vertex set — and the caller's pair source is often
@@ -545,7 +544,7 @@ object Dedup {
     // for `allIds`). Self-loops are kept in the checkpointed table so
     // the vertex set still sees ids whose only pair is (id, id); the
     // edge set filters them out exactly as before.
-    val oriented = cut(pairs.select(
+    val oriented = Lineage.cut(pairs.select(
         greatest(col(idACol), col(idBCol)).as("src"),
         least(col(idACol), col(idBCol)).as("dst"))
       .distinct())
@@ -557,7 +556,7 @@ object Dedup {
     var converged = edgeCount == 0
     var iter = 0
     while (!converged && edgeCount > smallCutoff && iter < maxIter) {
-      val next = cut(smallStar(largeStar(edges)))
+      val next = Lineage.cut(smallStar(largeStar(edges)))
       // Convergence = set equality (both sides are distinct). The
       // symmetric-difference probe costs two set-diff shuffles — at
       // small-per-round data the per-round JOB LAUNCHES dominate the
@@ -593,7 +592,7 @@ object Dedup {
     // the finisher result is cut (≤ one row per residue vertex) so its
     // one-task job runs once, not once per downstream reference
     val fromEdges =
-      if (!converged && edgeCount <= smallCutoff) cut(unionFindLabels(edges))
+      if (!converged && edgeCount <= smallCutoff) Lineage.cut(unionFindLabels(edges))
       else edges.select(col("src").as("id"), col("dst").as("cluster_id"))
         .groupBy("id").agg(min("cluster_id").as("cluster_id"))
     val labeled = fromEdges
@@ -700,9 +699,7 @@ object Dedup {
       .agg(sort_array(collect_set(col("t"))).as("ts"))
       .withColumn("n", size(col("ts")).cast("bigint"))
       .where(col("n") >= 1)
-    if (d.sparkSession.sparkContext.getCheckpointDir.isDefined)
-      a.checkpoint(eager = true)
-    else a.localCheckpoint(eager = true)
+    Lineage.cut(a)
   }
 
   /** Persisted exact-decontamination index of an eval/reference
@@ -1682,10 +1679,7 @@ object Dedup {
       .agg(sort_array(collect_set(col("t"))).as("ts"))
       .withColumn("n", size(col("ts")).cast("bigint"))
       .where(col("n") >= 1)
-    val arrays =
-      if (df.sparkSession.sparkContext.getCheckpointDir.isDefined)
-        arrays0.checkpoint(eager = true)
-      else arrays0.localCheckpoint(eager = true)
+    val arrays = Lineage.cut(arrays0)
     val exploded = arrays.select(col("id"), col("n"), explode(col("ts")).as("t"))
     val dft = exploded.groupBy("t").agg(count(lit(1)).as("dfc"))
     // prefix length n − ⌈τ·n⌉ + 1, integer: ⌈τ·n⌉ = (τ·n + 999) div 1000

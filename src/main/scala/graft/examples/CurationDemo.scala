@@ -1,10 +1,9 @@
 package graft.examples
 
-import graft.Tables
+import graft.{Session, Tables}
 import graft.dedup.{Curation, Dedup}
 import graft.functions.TextFns
 import graft.ops.{Mixture, TextStats}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** End-to-end curation walkthrough over the fixture corpus — the
@@ -25,13 +24,7 @@ import org.apache.spark.sql.functions._
 object CurationDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(Session.cpus)
     spark.sparkContext.setLogLevel("ERROR")
 
     val docs = Tables.documents(spark, sfDir)

@@ -1,9 +1,9 @@
 package graft.examples
 
+import graft.Session
 import graft.formats._
 import org.apache.avro.Schema
 import org.apache.avro.generic.GenericData
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 import scala.jdk.CollectionConverters._
@@ -17,11 +17,7 @@ import scala.jdk.CollectionConverters._
   */
 object FormatsDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(Session.cpus)
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
 

@@ -1,7 +1,7 @@
 package graft.examples
 
+import graft.Session
 import graft.ops.Profile
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Data-quality / governance walkthrough over the test fixtures: the
@@ -19,13 +19,7 @@ import org.apache.spark.sql.functions._
 object QualityDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(Session.cpus)
     spark.sparkContext.setLogLevel("WARN")
 
     val lineitem = spark.read.parquet(s"$sfDir/lineitem.parquet")

@@ -1,9 +1,10 @@
 package graft.examples
 
+import graft.Session
 import graft.formats.Json
 import graft.streaming._
 import graft.streaming.KafkaShape.{Header, KafkaRecord}
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -15,11 +16,7 @@ import org.apache.spark.sql.functions._
   */
 object StreamingDemo {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Session.local(Session.cpus)
     spark.sparkContext.setLogLevel("WARN")
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.LogicalRDD
 
 /** Lineage cuts for bounded multi-consumer intermediates — the one
   * place that decides HOW a plan is truncated, shared by every
@@ -35,10 +36,14 @@ object Lineage {
     * checkpointed intermediates instead of relying on harness-level
     * global unpersist). Safe ONLY after every consumer has been
     * materialized — a localCheckpointed plan cannot recompute dropped
-    * blocks. No-op (harmless) for the reliable-checkpoint path.
+    * blocks. The blocks belong to the RDD behind the cut's `LogicalRDD`
+    * leaf, which `Dataset.unpersist` never reaches (it only consults
+    * the cache manager). No-op for the reliable-checkpoint path, whose
+    * RDD is written to the checkpoint dir, not persisted.
     */
-  def release(df: DataFrame): Unit = {
-    df.unpersist(blocking = false)
-    ()
-  }
+  def release(df: DataFrame): Unit =
+    df.queryExecution.logical.collectLeaves().foreach {
+      case r: LogicalRDD => r.rdd.unpersist(blocking = false)
+      case _ => ()
+    }
 }

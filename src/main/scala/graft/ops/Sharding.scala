@@ -64,7 +64,7 @@ object Sharding {
     * ClusteredDistribution(shard, source) — hash keys are a subset of
     * the clustering keys), so neither window plans its own exchange;
     * left to defaults, Spark would shuffle twice — once per window
-    * partitioning. Verified with `graft.tools.PlanDump`.
+    * partitioning. Verified with `graft.ExplainDump`.
     */
   def weightedInterleave(df: DataFrame, idCol: String, srcCol: String,
                          weights: Map[String, Double], nShards: Int,

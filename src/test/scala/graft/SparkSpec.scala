@@ -5,7 +5,8 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local SparkSession for all suites (one JVM-wide session —
   * `getOrCreate` returns the same instance, so suites don't thrash
-  * contexts).
+  * contexts). A suite that needs different SQL confs runs on
+  * `spark.newSession()` so the change cannot leak into later suites.
   */
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
@@ -14,14 +15,7 @@ trait SparkSpec extends AnyFunSuite {
 
 object SparkSpec {
   lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val s = Session.local(4)
     s.sparkContext.setLogLevel("WARN")
     s
   }

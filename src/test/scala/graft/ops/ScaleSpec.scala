@@ -35,25 +35,29 @@ class ScaleSpec extends SparkSpec {
   }
 
   test("bucketed tables join without a shuffle exchange") {
-    val wh = java.nio.file.Files.createTempDirectory("graft-wh").toString
-    val s = org.apache.spark.sql.SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.warehouse.dir", wh)
-      .config("spark.sql.autoBroadcastJoinThreshold", "-1")   // force non-broadcast
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    val a = s.range(1000).select(col("id").as("k"), (col("id") * 2).as("va"))
-    val b = s.range(1000).select(col("id").as("k2"), (col("id") * 3).as("vb"))
-    Scale.writeBucketed(a, "bucketed_a", "k", 4)
-    Scale.writeBucketed(b, "bucketed_b", "k2", 4)
-    val joined = Scale.bucketedJoin(s, "bucketed_a", "bucketed_b", "k", "k2")
-    val plan = joined.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange"),
-      s"bucketed join should not shuffle:\n$plan")
-    assert(joined.count() === 1000)
-    s.sql("DROP TABLE IF EXISTS bucketed_a")
-    s.sql("DROP TABLE IF EXISTS bucketed_b")
+    val threshold = "spark.sql.autoBroadcastJoinThreshold"
+    val shared = spark.conf.get(threshold)
+    // a child session owns its SQL conf: forcing the non-broadcast join
+    // here must not leak into the suites that share `spark`
+    val s = spark.newSession()
+    s.conf.set(threshold, "-1")
+    // warehouse.dir is static (fixed by the shared session), so the
+    // managed tables go to a database with its own temp location
+    val wh = java.nio.file.Files.createTempDirectory("graft-wh").toUri
+    s.sql(s"CREATE DATABASE scale_spec LOCATION '$wh'")
+    try {
+      val a = s.range(1000).select(col("id").as("k"), (col("id") * 2).as("va"))
+      val b = s.range(1000).select(col("id").as("k2"), (col("id") * 3).as("vb"))
+      Scale.writeBucketed(a, "scale_spec.bucketed_a", "k", 4)
+      Scale.writeBucketed(b, "scale_spec.bucketed_b", "k2", 4)
+      val joined = Scale.bucketedJoin(s, "scale_spec.bucketed_a",
+        "scale_spec.bucketed_b", "k", "k2")
+      val plan = joined.queryExecution.executedPlan.toString
+      assert(!plan.contains("Exchange"),
+        s"bucketed join should not shuffle:\n$plan")
+      assert(joined.count() === 1000)
+    } finally s.sql("DROP DATABASE IF EXISTS scale_spec CASCADE")
+    assert(spark.conf.get(threshold) === shared)
   }
 
   test("sequence packing: greedy per-shard cut at the token budget") {
