@@ -1,5 +1,7 @@
 package graft
 
+import java.nio.file.{Files, Path, Paths}
+
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs the headline queries on SPARK_GRAFT_SF_DIR and
@@ -18,12 +20,22 @@ object Bench {
     "q19_time_bucket_agg", "q22_token_count", "q24_exact_dedup",
     "q28_cosine_topk", "q29_minhash_buckets", "q30_simhash", "q31_ann_lsh")
 
+  /** Extended set: every catalog query numbered 76 or above (the
+    * round-7+ heavy operators) outside the headline set, in catalog
+    * order. Tracked OUTSIDE the headline total so round-over-round
+    * totals stay comparable to earlier BENCH_r* artifacts.
+    */
+  lazy val extendedNames: Seq[String] = Queries.all.keys.toSeq
+    .map(n => (n.drop(1).takeWhile(_.isDigit).toInt, n))
+    .filter { case (num, n) => num >= 76 && !headline.contains(n) }
+    .sortBy(_._1).map(_._2)
+
   /** 1/5/15-minute host load — stamped into the JSON at start and end
     * so a contended run is self-diagnosing (BENCH_r07 was judged
     * unusable only by out-of-band load data).
     */
   def loadavg(): Seq[Double] =
-    try scala.io.Source.fromFile("/proc/loadavg").mkString
+    try Files.readString(Paths.get("/proc/loadavg"))
       .split("\\s+").take(3).toSeq.map(_.toDouble)
     catch { case _: Throwable => Seq(-1.0, -1.0, -1.0) }
 
@@ -38,7 +50,7 @@ object Bench {
   def cpuJiffies(): (Long, Long) =
     try {
       // cpu user nice system idle iowait irq softirq steal ...
-      val f = scala.io.Source.fromFile("/proc/stat").getLines()
+      val f = Files.readString(Paths.get("/proc/stat")).linesIterator
         .next().split("\\s+").drop(1).map(_.toLong)
       (f.take(8).sum, if (f.length > 7) f(7) else 0L)
     } catch { case _: Throwable => (-1L, -1L) }
@@ -80,6 +92,67 @@ object Bench {
       } finally { f.delete(); () }
     } catch { case _: Throwable => -1L }
 
+  /** Seconds left of a `budgetSec` wall-clock budget starting now —
+    * the one clock the bench's phase scheduler, its in-phase shedding
+    * and every forked child read.
+    */
+  def budgetClock(budgetSec: Long): () => Long = {
+    val t0 = System.nanoTime()
+    () => budgetSec - (System.nanoTime() - t0) / 1000000000L
+  }
+
+  /** A forked child's clock: the budget [[forkChild]] hands it in
+    * `GRAFT_CHILD_BUDGET_SEC`, unbounded when the child runs standalone.
+    */
+  def childClock(): () => Long =
+    sys.env.get("GRAFT_CHILD_BUDGET_SEC").map(s => budgetClock(s.toLong))
+      .getOrElse(() => Long.MaxValue / 2)
+
+  /** One row of the bench's phase table: `contract` phases carry the
+    * driver-contract figures, `floorSec` is the least remaining budget
+    * the phase needs to start, and `run` does the work and returns the
+    * follow-up phases it requests (a state-store retry).
+    */
+  final case class Phase(name: String, contract: Boolean, floorSec: Long,
+                         run: () => Seq[Phase])
+
+  /** The bench's one budget scheduler. Runs the first pass of every
+    * contract phase in table order, then the follow-ups they requested,
+    * then the optional phases — so a retry or an optional phase spends
+    * only what the contract phases left. A phase whose floor no longer
+    * fits is skipped and logged; a phase that throws is logged. Either
+    * way its artifact keys keep their sentinels. `start` and `finish`
+    * bracket every phase, run or skipped. Returns the names of the
+    * phases that ran, in order.
+    */
+  def schedule(table: Seq[Phase], remainingSec: () => Long,
+               start: String => Unit, finish: String => Unit): Seq[String] = {
+    val ran = Seq.newBuilder[String]
+    def runAll(phases: Seq[Phase]): Seq[Phase] = phases.flatMap { p =>
+      start(p.name)
+      val followUps =
+        if (remainingSec() < p.floorSec) {
+          System.err.println(s"[bench] budget: skipped ${p.name} phase " +
+            s"(remaining=${remainingSec()}s, floor=${p.floorSec}s)")
+          Nil
+        } else {
+          ran += p.name
+          // a failure (or a budget-watchdog cancel) degrades the phase
+          // to its sentinels — it must never take the final emits along
+          try p.run()
+          catch { case e: Throwable =>
+            System.err.println(s"[bench] ${p.name} phase failed: ${e.getMessage}")
+            Nil
+          }
+        }
+      finish(p.name)
+      followUps
+    }
+    val followUps = runAll(table.filter(_.contract))
+    runAll(followUps ++ table.filterNot(_.contract))
+    ran.result()
+  }
+
   /** Sweep cell value: rec/s when all `required` batches completed
     * inside the deadline, else the -1 sentinel — a partial run under
     * host contention must be distinguishable from "measured zero"
@@ -114,20 +187,14 @@ object Bench {
       // read progress BEFORE stop(): even if the stop times out, the
       // completed batches' numbers survive into the JSON
       val measured = sq.recentProgress.filter(p => p.batchId >= 1 && p.batchId <= 4)
-      // per-batch trigger durations ALWAYS go to stderr (one compact
-      // line) — the r14 full-bench stateful cell read 118k rec/s with
-      // zero diagnostics because the per-batch breakdown only existed
-      // behind GRAFT_BENCH_DEBUG and the child stderr was deleted;
-      // a uniform-slow vs one-bad-batch profile distinguishes host
-      // contention from a state-store hiccup
+      // per-batch trigger durations and input rows ALWAYS go to stderr
+      // (one compact line): a uniform-slow vs one-bad-batch profile
+      // distinguishes host contention from a state-store hiccup
       System.err.println(s"[bench] $label batches " +
         sq.recentProgress.map(p => s"${p.batchId}:" +
-          s"${p.durationMs.getOrDefault("triggerExecution", 0L)}ms")
+          s"${p.durationMs.getOrDefault("triggerExecution", 0L)}ms" +
+          s"/${p.numInputRows}rows")
           .mkString(" "))
-      if (sys.env.contains("GRAFT_BENCH_DEBUG"))
-        sq.recentProgress.foreach(p => System.err.println(
-          s"[bench-debug] $label batch=${p.batchId} " +
-            s"rows=${p.numInputRows} durationMs=${p.durationMs}"))
       try sq.stop()
       catch { case e: Throwable =>
         System.err.println(s"[bench] streaming stop timed out: ${e.getMessage}") }
@@ -202,8 +269,10 @@ object Bench {
   }
 
   /** Fork a fresh child JVM running `mainClass` with this JVM's
-    * classpath and flags, and return its stdout lines. Shared by the
-    * stateful and RocksDB phases: a fresh JVM isolates GC-sensitive
+    * classpath and flags, and return its stdout lines. `stateStore` is
+    * the child's `GRAFT_STATE_STORE` (never inherited from this JVM).
+    * Shared by both state-store phases and the scaling cell: a fresh
+    * JVM isolates GC-sensitive
     * state-store measurements from the extended sweep's heap
     * pressure, and contains rocksdbjni's teardown-SEGV class of
     * crashes to a -1 sentinel instead of a dead bench. The child
@@ -218,7 +287,8 @@ object Bench {
     * whatever lines the child produced.
     */
   private def forkChild(mainClass: String, args: Seq[String],
-                        timeoutMin: Int, cpus: String): List[String] =
+                        timeoutMin: Int, cpus: String,
+                        stateStore: Option[String] = None): List[String] =
     try {
       import scala.jdk.CollectionConverters._
       val javaBin = System.getProperty("java.home") + "/bin/java"
@@ -226,28 +296,30 @@ object Bench {
         .getInputArguments.asScala.toSeq
         .filterNot(a => a.startsWith("-agentlib") || a.startsWith("-javaagent") ||
           a.startsWith("-agentpath") || a.startsWith("-Xrunjdwp"))
-      val childTmp = java.nio.file.Files.createTempDirectory("graft-fork-tmp")
+      val childTmp = Files.createTempDirectory("graft-fork-tmp")
       // stderr goes OUTSIDE childTmp and survives the cleanup: the
       // per-batch timing lines are the only evidence when a child
       // measures slow without failing (see the timeStream batches
       // stamp) — childTmp itself is deleted because a halted child
       // skips its own shutdown hooks
-      val keepDir = java.nio.file.Paths.get(
+      val keepDir = Paths.get(
         sys.props.getOrElse("java.io.tmpdir", "/tmp"), "graft-bench-childlogs")
-      java.nio.file.Files.createDirectories(keepDir)
-      val errFile = keepDir.resolve(
-        s"$mainClass-${System.currentTimeMillis / 1000}.stderr.log").toFile
+      Files.createDirectories(keepDir)
+      val errFile = keepDir.resolve(s"$mainClass${stateStore.fold("")("-" + _)}" +
+        s"-${System.currentTimeMillis / 1000}.stderr.log")
       val cmd = Seq(javaBin) ++ jvmArgs ++
         Seq(s"-Djava.io.tmpdir=$childTmp",
           "-cp", System.getProperty("java.class.path"), mainClass) ++ args
       val pb = new ProcessBuilder(cmd.asJava)
       pb.environment().put("SPARK_GRAFT_CPUS", cpus)
+      pb.environment().remove("GRAFT_STATE_STORE")
+      stateStore.foreach(pb.environment().put("GRAFT_STATE_STORE", _))
       // the child sheds its own work (shrunken deadlines, dropped
       // retries) instead of being shot mid-pass by the watchdog —
       // 30 s of slack covers JVM startup + session teardown
       pb.environment().put("GRAFT_CHILD_BUDGET_SEC",
         (timeoutMin * 60L - 30L).toString)
-      pb.redirectError(ProcessBuilder.Redirect.to(errFile))
+      pb.redirectError(ProcessBuilder.Redirect.to(errFile.toFile))
       val proc = pb.start()
       val watchdog = new Thread(() => {
         try {
@@ -261,14 +333,14 @@ object Bench {
         .getLines().toList
       proc.waitFor()
       if (proc.exitValue() != 0 || out.isEmpty)
-        try scala.io.Source.fromFile(errFile).getLines().toList.takeRight(12)
+        try new String(Files.readAllBytes(errFile)).linesIterator.toList.takeRight(12)
           .foreach(l => System.err.println(s"[bench] $mainClass stderr: $l"))
         catch { case _: Throwable => () }
       try {
-        import java.nio.file.{Files, Path}
-        import java.util.Comparator
-        Files.walk(childTmp).sorted(Comparator.reverseOrder[Path]())
+        val walk = Files.walk(childTmp)
+        try walk.sorted(java.util.Comparator.reverseOrder[Path]())
           .forEach(p => { Files.deleteIfExists(p); () })
+        finally walk.close()
       } catch { case _: Throwable => () }
       out
     } catch { case e: Throwable =>
@@ -346,6 +418,11 @@ object Bench {
   private val phaseDisk =
     scala.collection.mutable.LinkedHashMap.empty[String, Long]
 
+  private def phaseEnd(phase: String): Unit = {
+    artifact("loadavg_end") = "[" + loadavg().mkString(",") + "]"
+    emit(phase)
+  }
+
   private def phaseStart(phase: String): Unit = {
     phaseJiffies = cpuJiffies()
     phaseDisk(phase) = diskMbPerS()
@@ -368,7 +445,7 @@ object Bench {
     // was last printed as the artifact tail). The bench must DEGRADE
     // (skip tail queries / shrink fork watchdogs / drop optional
     // cells, each skip logged and sentinel-recorded) rather than be
-    // killed: every phase boundary checks remainingSec.
+    // killed: [[schedule]] gates every phase on this clock.
     // default 780 s: the external timeout is believed ~900 s (BENCH_r12
     // at ~11 min passed, r13 died just after reaching the stateful
     // fork at ~14-15 min), THIS clock starts ~30-60 s after the
@@ -377,9 +454,7 @@ object Bench {
     // guard check (the r14 dev run on an 840 budget landed at 885 s
     // in-main — too close to a 900 s kill)
     val budgetSec = sys.env.getOrElse("GRAFT_BENCH_BUDGET_SEC", "780").toLong
-    val benchStartNanos = System.nanoTime()
-    def remainingSec(): Long =
-      budgetSec - (System.nanoTime() - benchStartNanos) / 1000000000L
+    val remainingSec = budgetClock(budgetSec)
     // LAZY: the two forked state-store phases run FIRST, before this
     // JVM holds any Spark session — a state-store child measured into
     // the catalog sweep's decaying load spike reads 2-4× low (r12
@@ -399,8 +474,8 @@ object Bench {
       // (r14 dev) and pushed the bench into the external kill with the
       // final emits unprinted. Once the budget is spent, cancel every
       // running job (repeatedly — stages launched after a cancel die
-      // too): the in-flight phase degrades to its catch-block sentinel
-      // and the remaining phases sprint to the final emits.
+      // too): the in-flight phase degrades to its sentinels and the
+      // remaining phases sprint to the final emits.
       val watchdog = new Thread(() => {
         try {
           while (true) {
@@ -427,9 +502,7 @@ object Bench {
       // queries' figures up to 10× (measured: q250 warm 49 s as the
       // 15th query of a session vs 5.0 s isolated), and under the
       // stalest-first rotation a different subset suffers each round,
-      // silently breaking round-over-round comparability. The
-      // pipeline's staged cache is only consumed inside its own phase,
-      // so dropping it during the later sweep is free memory back.
+      // silently breaking round-over-round comparability.
       // try/finally (r16): a FAILED query's leaked blocks must be
       // dropped too — the old catch-path return skipped the sweep and
       // left them contaminating every later query.
@@ -466,13 +539,17 @@ object Bench {
     // from it, which is what the sweep-order parity fallback is for.
     val priorScalar =
       "\\\\?\"(q\\d+[A-Za-z0-9_]+)\\\\?\":\\s*(-?\\d+(?:\\.\\d+)?)[,}]".r
-    val priorFiles: Seq[(Int, java.io.File)] = try {
+    // (round, file name, text) of every prior artifact, newest first,
+    // read once: the drift guard, the sweep order and the ledger drift
+    // all scan these texts
+    val priorFiles: Seq[(Int, String, String)] = try {
       val dir = new java.io.File(
         sys.env.getOrElse("GRAFT_PRIOR_BENCH_DIR", "."))
       Option(dir.listFiles((_: java.io.File, n: String) =>
-        n.matches("BENCH_r\\d+\\.json"))).getOrElse(Array.empty)
-        .map(f => ("\\d+".r.findFirstIn(f.getName).getOrElse("0").toInt, f))
-        .sortBy(-_._1).toSeq
+        n.matches("BENCH_r\\d+\\.json"))).getOrElse(Array.empty).toSeq
+        .map(f => ("\\d+".r.findFirstIn(f.getName).getOrElse("0").toInt, f.getName,
+          try Files.readString(f.toPath) catch { case _: Throwable => "" }))
+        .sortBy(-_._1)
     } catch { case _: Throwable => Seq.empty }
     // inferred current round: newest prior artifact number + 1 — the
     // driver writes BENCH_r{N}.json into the repo every round, so
@@ -482,29 +559,20 @@ object Bench {
     // which catalog entries EXISTED last round (name mention, even in
     // the escaped tail) — entries newer than every mention are this
     // round's operators and always measure first
-    val priorRaw: String = priorFiles.headOption.map { case (_, f) =>
-      try scala.io.Source.fromFile(f).mkString
-      catch { case _: Throwable => "" }
-    }.getOrElse("")
-    val priorBench: Map[String, Double] = try {
-      // newest first, but SKIP artifacts with no per-query data — a
-      // killed round's file (BENCH_r13: rc=124, tail only) would
-      // otherwise silently disable the guard for the whole next round
-      priorFiles.iterator.map { case (_, f) =>
-        val txt = scala.io.Source.fromFile(f).mkString
-        val m = priorScalar.findAllMatchIn(txt)
+    val priorRaw: String = priorFiles.headOption.map(_._3).getOrElse("")
+    // newest first, but SKIP artifacts with no per-query data — a
+    // killed round's file (BENCH_r13: rc=124, tail only) would
+    // otherwise silently disable the guard for the whole next round
+    val priorBench: Map[String, Double] = priorFiles.iterator
+      .map { case (_, name, txt) =>
+        (name, priorScalar.findAllMatchIn(txt)
           .map(m => m.group(1) -> m.group(2).toDouble)
-          .filter(_._2 > 0).toMap
-        (f.getName, m)
+          .filter(_._2 > 0).toMap)
       }
-        .collectFirst { case (name, m) if m.nonEmpty =>
-          System.err.println(s"[bench] drift guard vs $name (${m.size} figures)")
-          m
-        }.getOrElse(Map.empty)
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] drift guard unavailable: ${e.getMessage}")
-      Map.empty
-    }
+      .collectFirst { case (name, m) if m.nonEmpty =>
+        System.err.println(s"[bench] drift guard vs $name (${m.size} figures)")
+        m
+      }.getOrElse(Map.empty)
     def drifted(name: String, sec: Double): Boolean =
       sec >= 0 && priorBench.get(name).exists { p =>
         val d = sec > 1.5 * p
@@ -554,110 +622,8 @@ object Bench {
         "\"" + k + "\":[" + ts.map(_._2).mkString(",") + "]"
       }.mkString("{", ",", "}")
 
-    // the round-7+ heavy operators, tracked OUTSIDE the headline total
-    // so round-over-round totals stay comparable to earlier BENCH_r*
-    val extendedNames = Seq("q76_knn_self", "q79_ivf_auto", "q80_dup_ngram_spans",
-      "q81_semdedup", "q82_shuffle_shards", "q83_dedup_cut",
-      "q84_weighted_interleave", "q85_hll_distinct", "q86_hll_merge",
-      "q87_bloom_contamination", "q88_cms_topk", "q89_bloom_flag",
-      "q90_kmv_distinct", "q91_kmv_merge", "q92_hist_quantiles",
-      "q93_minhash_sources", "q94_kmv_jaccard", "q95_hist_by_lang",
-      "q96_multi_bloom", "q97_cms_by_lang", "q98_topk_shards",
-      "q99_priority_sample", "q100_priority_by_lang", "q101_hll_windowed",
-      "q102_kmv_windowed", "q103_cms_agg", "q104_kmv_matrix",
-      "q105_kmv_setops", "q106_lm_surprisal", "q107_zorder_stats",
-      "q108_sq_ann", "q109_bm25", "q110_table_profile",
-      "q111_incremental_minhash", "q112_bpe_train", "q113_bpe_tokens",
-      "q114_nb_classifier", "q115_image_header_probe", "q116_wav_probe",
-      "q117_pq_adc", "q118_ivfpq", "q119_gopher_rules",
-      "q120_dsir_scores", "q121_containment", "q122_budget_select",
-      "q123_ann_recall", "q124_pmi_collocations", "q125_fuzzy_names",
-      "q126_skew_report", "q127_centroid_drift", "q128_cdc_chunks", "q129_winnow_matches",
-      "q130_blocklist_gate", "q131_cross_source_dups", "q132_bpe_coverage",
-      "q133_budget_by_lang", "q134_hard_negatives",
-      "q135_cluster_balance", "q136_quantile_norm", "q137_fuzzy_decontam",
-      "q138_temperature_mix", "q139_entity_clusters", "q140_price_outliers",
-      "q141_sessionization", "q142_png_pixels", "q143_setsim_join",
-      "q144_event_funnel", "q145_funnel_report", "q146_png_grid_features",
-      "q147_rank_eval", "q148_random_projection", "q149_rp_recall",
-      "q150_exact_decontam", "q151_retention_cohorts", "q152_textrank",
-      "q153_label_noise", "q154_novelty_curve", "q155_psi_drift",
-      "q156_data_expectations", "q157_ref_integrity",
-      "q158_snapshot_diff", "q159_bmp_pixels", "q160_wav_pcm",
-      "q161_word_triangles", "q162_assoc_rules", "q163_gif_pixels",
-      "q164_join_amplification", "q165_heaps_curve", "q166_image_dhash",
-      "q167_trending", "q168_audio_fingerprint", "q169_psi_baseline",
-      "q170_zipf_report", "q171_jpeg_pixels", "q172_decontam_index",
-      "q173_decontam_probe", "q174_png_adam7", "q175_ngram_overlap",
-      "q176_cluster_reps", "q177_stratified_sample", "q178_bbit_minhash",
-      "q179_classification_report", "q180_cohens_kappa",
-      "q181_discriminative_words", "q182_distinct_ngrams",
-      "q183_bayesian_rates", "q184_uncertainty_sample",
-      "q185_js_divergence", "q186_rank_rbo", "q187_heavy_changers",
-      "q188_burstiness", "q189_length_gini", "q190_token_entropy",
-      "q191_dbscan", "q192_cbor_decode", "q193_bm25_index",
-      "q194_bm25_probe", "q195_percolate", "q196_seasonal_anomalies",
-      "q197_cusum_shifts", "q198_chao1_richness", "q199_mann_kendall",
-      "q200_lead_lag", "q201_wasserstein_drift",
-      "q202_markov_transitions", "q203_markov_stationary",
-      "q204_sequence_patterns",
-      "q205_rrf_hybrid", "q206_benford_screen", "q207_survival_curve", "q208_mmr_rerank", "q209_text_tiling",
-      "q210_zonemap_pruning", "q211_concurrency_curve",
-      "q212_calibration_report",
-      "q213_item_similarity", "q214_rfm_segments", "q215_cohort_ltv",
-      "q216_transition_dwell",
-      "q217_scd2_intervals", "q218_fleiss_kappa", "q219_hill_tail",
-      "q220_ewma_bands", "q221_bitext_margin", "q222_kcore_profile",
-      "q223_theilsen_slope", "q224_pit_join", "q225_dataset_card",
-      "q226_acf", "q227_ks_drift", "q228_attribution",
-      "q229_lorenz_curve", "q230_session_paths",
-      "q231_compression_ratio", "q232_user_profile",
-      "q233_revenue_trend", "q234_tone_detect",
-      "q235_winsorized_stats", "q236_kn_surprisal",
-      "q237_cluster_labels", "q238_vocab_jaccard",
-      "q239_source_outliers", "q240_brand_affinity",
-      "q241_roc_auc", "q242_ols_trend", "q243_pareto_front",
-      "q244_ab_test", "q245_script_mix", "q246_readability",
-      "q247_phrase_search", "q248_lsh_eval", "q249_interval_coverage",
-      "q250_markov_attribution", "q251_record_linkage",
-      "q252_negative_sample", "q253_sequence_surprisal",
-      "q254_kn_next_word", "q255_source_tfidf_cosine",
-      "q256_nb_auc", "q257_growth_accounting",
-      "q258_partition_agreement", "q259_woe_iv",
-      "q260_target_encode", "q261_bootstrap_ci", "q262_label_prop",
-      "q263_golden_records", "q264_cuped", "q265_max_coverage",
-      "q266_loo_source_impact", "q267_image_dup_clusters",
-      "q268_intrinsic_dim", "q269_neyman_sample", "q270_hopkins", "q271_ch_index",
-      "q272_did_report", "q273_gini_split", "q274_kendall_tau",
-      "q275_bootstrap_ratio", "q276_spearman_rho",
-      "q277_chi_squared", "q278_mwu_drift", "q279_k_anonymity",
-      "q280_shapley_attribution", "q281_logrank",
-      "q282_matryoshka_recall", "q283_brown_forecast", "q284_bh_fdr",
-      "q285_pca_top", "q286_isotonic_calibration",
-      "q287_fairness_report", "q288_cum_sqrt_strata",
-      "q289_conformal", "q290_mcnemar", "q291_map_eval",
-      "q292_phonetic_blocking", "q293_ql_retrieval", "q294_silhouette",
-      "q295_krippendorff", "q296_t_closeness", "q297_cem_att",
-      "q298_holt_winters", "q299_token_f1", "q300_hits",
-      "q301_cmh_test", "q302_qini_curve", "q303_jw_verify",
-      "q304_sample_size", "q305_cronbach", "q306_sprt",
-      "q307_good_turing", "q308_yule_k", "q309_ece_report",
-      "q310_doremi_step", "q311_concentration", "q312_lm_cross_ppl",
-      "q313_burrows_delta", "q314_brier_decomp", "q315_anova",
-      "q316_durbin_watson", "q317_surprisal_spans", "q318_dim_anova",
-      "q319_seasonal_strength", "q320_cv_auc", "q321_brown_forsythe",
-      "q322_kruskal_wallis", "q323_chi_residuals", "q324_jonckheere",
-      "q325_cochran_q", "q326_friedman", "q327_page_trend",
-      "q328_wilcoxon", "q329_cliffs_delta", "q330_template_boilerplate",
-      "q331_ljung_box", "q332_runs_test", "q333_theil", "q334_cohens_d",
-      "q335_adjusted_rand", "q336_bcubed", "q337_vmeasure",
-      "q338_lsh_plan", "q339_mp4_probe", "q340_webm_probe",
-      "q341_changepoint", "q342_flac_probe", "q343_mp3_probe",
-      "q344_ogg_probe", "q345_seed_expansion", "q346_risk_coverage",
-      "q347_tiff_probe", "q348_avi_probe", "q349_media_inventory",
-      "q350_curation_verdict", "q351_raking", "q352_raked_sample",
-      "q353_html_extract", "q354_curated_web", "q355_html_outlinks",
-      "q356_url_dedup", "q357_line_dedup", "q358_warc_extract")
+    val scalingNames = Seq("q04_join_shuffle_agg", "q29_minhash_buckets",
+      "q30_simhash", "q31_ann_lsh")
 
     // sentinel-initialize EVERY artifact field up front so the first
     // emit — and any emit a kill interrupts after — is a complete,
@@ -693,7 +659,11 @@ object Bench {
     artifact("disk_mb_per_s") = "{}"
     artifact("stateful_retried") = "false"
     artifact("rocksdb_retried") = "false"
-    artifact("scaling_sf1") = "{}"
+    for (p <- Seq("stateful", "rocksdb", "headline"))
+      artifact(s"${p}_settle_sec") = "-1"
+    artifact("scaling_sf1") = scalingNames
+      .map(n => "\"" + n + "\":{\"c32\":-1,\"c8\":-1,\"ratio\":-1}")
+      .mkString("{", ",", "}")
     artifact("shuffle_ledger") = "{}"
     artifact("shuffle_ledger_dirs") = "{}"
     artifact("shuffle_ledger_drift") = "{}"
@@ -702,6 +672,23 @@ object Bench {
       .map { case (k, v) => "\"" + k + "\":\"" + v + "\"" }
       .mkString("{", ",", "}")
     artifact("phases_done") = "\"none\""
+
+    // a swept figure's cells (rowsPerBatch, rows, sec, rec/s) as the
+    // artifact's by-batch-size object, -1 for a cell not measured
+    def byBatchJson(cells: Seq[(Long, Long, Double, Double)]): String =
+      cells.map { case (n, _, _, rps) =>
+        "\"" + n + "\":" + (if (rps < 0) "-1" else rps.round.toString)
+      }.mkString("{", ",", "}")
+    // the headline figure of a sweep is its best complete cell
+    def recordSweep(key: String, cells: Seq[(Long, Long, Double, Double)]): Unit = {
+      val complete = cells.filter(_._4 >= 0)
+      val (_, rows, sec, rps) =
+        if (complete.nonEmpty) complete.maxBy(_._4) else (0L, 0L, 0.0, -1.0)
+      artifact(s"${key}_rec_per_sec") = if (rps < 0) "-1" else rps.round.toString
+      artifact(s"${key}_rows") = rows.toString
+      artifact(s"${key}_sec") = sec.toString
+      artifact(s"${key}_by_batch_size") = byBatchJson(cells)
+    }
 
     // r14 verdict ask #4: a forked state-store cell measured through a
     // hypervisor-steal burst or a noisy-neighbor disk window reads
@@ -726,252 +713,107 @@ object Bench {
       stealBad || diskBad
     }
 
-    // ---- forked state-store phases FIRST (pristine box, no parent
-    // session yet — see the lazy `spark` note) ----
-
-    phaseStart("stateful")
-    // STATEFUL streaming throughput — the operator a real deployment
-    // sizes is the keyed-state path (flatMapGroupsWithState), not the
-    // stateless decode pipeline; the reference's KEY_ORDERED figure
-    // (BASELINE.md: 285,750 rec/s @0 µs) is its natural comparable.
-    // SimHash + band explode + per-bucket state scan all inside the
-    // measured trigger, swept over batch sizes (per-trigger commit
-    // cost amortizes with batch size; 500k prices it, 2M is the peak).
-    // Runs in a FORKED fresh JVM ([[StatefulBench]]): fresh-JVM
-    // isolation for a GC-sensitive workload, and a child crash
-    // degrades to -1 sentinels instead of a dead bench.
-    artifact("stateful_settle_sec") = settle(maxWaitSec = 45).toString
-    val statefulSweepSizes = Seq(500000L, 2000000L)
-    var statefulRan = false
-    def statefulFork(sizes: Seq[Long], minRemaining: Long,
-                     capMin: Long): List[String] =
-      if (remainingSec() < minRemaining) {
-        System.err.println(
-          s"[bench] budget: skipped stateful fork (remaining=${remainingSec()}s)")
-        List.empty[String]
-      } else {
-        statefulRan = true
-        forkChild("graft.StatefulBench", sizes.map(_.toString),
-          // 6 min covers warm + best-of-2 on the 2M cell under normal
-          // weather; under the steal bursts this box shows, the child's
-          // own budget (GRAFT_CHILD_BUDGET_SEC) sheds the retries and
-          // prints per-pass lines, so capping tighter costs nothing —
-          // the r14 dev run burned a full 7-min watchdog and lost
-          // EVERYTHING because results only printed at the end
-          // floor 4 min, ceiling capMin (the retry passes capMin=3,
-          // which then wins over the floor — min applied LAST)
-          timeoutMin = math.min(capMin, math.max(4L,
-            (remainingSec() - 330) / 60)).toInt, cpus = cpus.toString)
+    /** One state-store phase, run once per provider: settle, fork
+      * [[StatefulBench]] over `sizes` (the child prints a line per
+      * PASS, kill-proofing — the best pass per size wins), `record`
+      * the cells, and request one retry of the suspect cells as a
+      * follow-up phase. A cell is suspect below the ~1× floor always,
+      * or below 500 k (well under this box's honest 600 k+ band) when
+      * the fork window's stamps were dirty — the judge's r14 heap cell
+      * read 351 k at 35 k ppm steal, above the baseline floor but
+      * still a weather artifact. The suspect test reads the window's
+      * stamps, so it runs here, before the next phaseStart. The first
+      * fork's watchdog is capped at 5 min, floored at `minCapMin`,
+      * and keeps `reserveSec` for the contract phases behind it: the
+      * child's own budget sheds retries and its per-pass lines survive
+      * a kill, so a tight cap degrades cells, never loses them.
+      */
+    def stateStorePhase(name: String, stateStore: Option[String],
+                        sizes: Seq[Long], floorSec: Long, minCapMin: Long,
+                        reserveSec: Long,
+                        record: Seq[(Long, Long, Double, Double)] => Unit): Phase = {
+      val passLine =
+        """rowsPerBatch=(\d+)\s+batches=(\d+) rows=(\d+) sec=([\d.]+) rec/s=(-?\d+)""".r
+      var passes = List.empty[(Long, Long, Double, Double)]
+      def best = sizes.map(n => passes.filter(_._1 == n).maxByOption(_._4)
+        .getOrElse((n, 0L, 0.0, -1.0)))
+      def fork(cells: Seq[Long], timeoutMin: Long): Unit = {
+        passes ++= forkChild("graft.StatefulBench", cells.map(_.toString),
+          timeoutMin.toInt, cpus.toString, stateStore)
+          .flatMap(l => passLine.findFirstMatchIn(l).map(m => (m.group(1).toLong,
+            m.group(3).toLong, m.group(4).toDouble, m.group(5).toDouble)))
+        record(best)
       }
-    def parseStateful(lines: List[String]): List[(Long, Long, Double, Double)] =
-      lines.flatMap { l =>
-        val re = """rowsPerBatch=(\d+)\s+batches=(\d+) rows=(\d+) sec=([\d.]+) rec/s=(-?\d+)""".r
-        re.findFirstMatchIn(l).map(m => (m.group(1).toLong, m.group(3).toLong,
-          m.group(4).toDouble, m.group(5).toDouble))
-      }
-    // cap 5 (was 6): on a clean box the child finishes warm + both
-    // cells in ~240 s; under the heavy-steal windows this box shows,
-    // the extra minute only bought more -1 sentinels while starving
-    // the streaming + ledger phases behind it (two r15 dev runs)
-    var statefulParsed = parseStateful(statefulFork(statefulSweepSizes,
-      minRemaining = 400, capMin = 5))
-    // stamp-triggered retry (see stateStoreFloor above): re-run ONLY
-    // the suspect cells once after a settle and keep the best pass
-    // per cell across both runs. A cell is suspect below the ~1×
-    // floor always, or below 500 k (well under this box's honest
-    // 600 k+ band) when the fork window's stamps were dirty — the
-    // judge's r14 heap cell read 351 k at 35 k ppm steal, above the
-    // baseline floor but still a weather artifact.
-    locally {
-      val bestBySize = statefulSweepSizes.map(n => n ->
-        statefulParsed.filter(_._1 == n).map(_._4).foldLeft(-1.0)(math.max))
-      val weather = forkWeatherBad("stateful")
-      val suspectCap = if (weather) 500000.0 else stateStoreFloor
-      val retrySizes = bestBySize.filter(_._2 < suspectCap).map(_._1)
-      // slack-gated: a retry must never starve the rocksdb fork
-      // (needs 300 s) behind it. r16: the r15 gate (> 560 s, 3-min
-      // cap) could NEVER fire inside the driver's 780 s budget — after
-      // the first 5-min fork at most ~435 s remain — so the machinery
-      // existed but the artifact kept its -1s. A 2-min cap + settle
-      // costs ≤ 165 s, and the child (ascending cells, warm shed under
-      // its 90 s budget) lands the cheap cell inside that, so > 470 s
-      // of slack keeps the rocksdb fork (300 s gate) whole and the
-      // retry now fits the driver budget. Under the judge's untimed
-      // re-runs it always has room.
-      if (statefulRan && retrySizes.nonEmpty && remainingSec() > 470) {
-        System.err.println(s"[bench] stateful retry cells " +
-          s"${retrySizes.mkString(",")} (weather=$weather " +
-          s"remaining=${remainingSec()}s)")
-        settle(maxWaitSec = 45)
-        statefulParsed = statefulParsed ++ parseStateful(
-          statefulFork(retrySizes, minRemaining = 380, capMin = 2))
-        artifact("stateful_retried") = "true"
-      }
-    }
-    // the child prints a line per PASS (kill-proofing) — keep the
-    // best rec/s per size
-    val statefulSweep = statefulSweepSizes.map { n =>
-      val passes = statefulParsed.filter(_._1 == n)
-      if (passes.isEmpty) (n, 0L, 0.0, -1.0) else passes.maxBy(_._4)
-    }
-    val statefulComplete = statefulSweep.filter(_._4 >= 0)
-    val (_, statefulRows, statefulSec, statefulRecPerSec) =
-      if (statefulComplete.nonEmpty) statefulComplete.maxBy(_._4)
-      else (0L, 0L, 0.0, -1.0)
-    val statefulSweepJson = statefulSweep.map { case (n, _, _, rps) =>
-      "\"" + n + "\":" + (if (rps < 0) "-1" else rps.round.toString)
-    }.mkString("{", ",", "}")
-    artifact("stateful_rec_per_sec") =
-      if (statefulRecPerSec < 0) "-1" else statefulRecPerSec.round.toString
-    artifact("stateful_rows") = statefulRows.toString
-    artifact("stateful_sec") = statefulSec.toString
-    artifact("stateful_by_batch_size") = statefulSweepJson
-    artifact("loadavg_end") = "[" + loadavg().mkString(",") + "]"
-    emit("stateful")
-
-    phaseStart("rocksdb")
-    // The same keyed-state path on the RocksDB provider: the
-    // HDFS-backed heap store snapshots the WHOLE store per commit, so
-    // its commit cost scales with total state; RocksDB (changelog
-    // mode) commits only the delta — the crossover is exactly the
-    // state-volume regime the big batches reach. Forked for the same
-    // isolation reasons plus rocksdbjni's teardown-SEGV class of
-    // crashes. The stateful child just ran 32 threads hot — one
-    // bounded settle keeps this child's figures honest.
-    artifact("rocksdb_settle_sec") = settle(maxWaitSec = 45).toString
-    var rocksRan = false
-    def rocksFork(sizeArgs: Seq[Long], minRemaining: Long,
-                  capMin: Long): Option[String] =
-      if (remainingSec() < minRemaining) {
-        System.err.println(
-          s"[bench] budget: skipped rocksdb fork (remaining=${remainingSec()}s)")
-        None
-      } else {
-        rocksRan = true
-        val out = forkChild("graft.RocksBench", sizeArgs.map(_.toString),
-          // same remaining-aware cap as the stateful fork: the
-          // best-of-2 2M cell may double, but headline/pipeline/
-          // streaming still need their ~4 min after this — and the
-          // child's own budget + incremental ROCKS_SWEEP prints mean
-          // a tight watchdog degrades cells, never loses them
-          timeoutMin = math.min(capMin, math.max(3L,
-            (remainingSec() - 280) / 60)).toInt, cpus = cpus.toString)
-        out.reverseIterator.find(_.startsWith("ROCKS_SWEEP "))
-          .map(_.stripPrefix("ROCKS_SWEEP ").trim)
-          .orElse { System.err.println(
-            "[bench] rocksdb child produced no sweep line")
-            None }
-      }
-    def rocksCells(json: String): Map[Long, Long] =
-      "\"(\\d+)\":(-?\\d+)".r.findAllMatchIn(json)
-        .map(m => m.group(1).toLong -> m.group(2).toLong).toMap
-    val rocksSizes = Seq(1000000L, 2000000L)
-    var rocksBest: Map[Long, Long] =
-      rocksSizes.map(_ -> -1L).toMap ++
-        rocksFork(Seq.empty, minRemaining = 300, capMin = 5)
-          .map(rocksCells).getOrElse(Map.empty)
-    // stamp-triggered retry, mirroring the stateful phase: suspect =
-    // below the ~1× floor always, or below 500 k under a dirty stamp
-    // (driver r14's RocksDB@2M read 109 k in a disk-bound window the
-    // stamps flagged; one settle + single-cell re-run catches it)
-    locally {
-      val weather = forkWeatherBad("rocksdb")
-      val suspectCap = if (weather) 500000L else stateStoreFloor.toLong
-      val retrySizes = rocksSizes.filter(n => rocksBest(n) < suspectCap)
-      // r16: gate 480 → 420 with a 2-min cap (the stateful-retry
-      // budget-fitting rationale) — retry + settle ≤ 165 s leaves the
-      // headline's full mode (220 s) whole, and the driver's 780 s
-      // budget can actually reach 420 here when the forks shed early
-      if (rocksRan && retrySizes.nonEmpty && remainingSec() > 420) {
-        System.err.println(s"[bench] rocksdb retry cells " +
-          s"${retrySizes.mkString(",")} (weather=$weather " +
-          s"remaining=${remainingSec()}s)")
-        settle(maxWaitSec = 45)
-        rocksFork(retrySizes, minRemaining = 330, capMin = 2)
-          .map(rocksCells).getOrElse(Map.empty)
-          .foreach { case (n, v) =>
-            if (v > rocksBest.getOrElse(n, -1L)) rocksBest += (n -> v) }
-        artifact("rocksdb_retried") = "true"
-      }
-    }
-    val rocksSweepJson = rocksSizes
-      .map(n => "\"" + n + "\":" + rocksBest(n)).mkString("{", ",", "}")
-    artifact("stateful_rocksdb_by_batch_size") = rocksSweepJson
-    artifact("loadavg_end") = "[" + loadavg().mkString(",") + "]"
-    emit("rocksdb")
-
-    // ---- parent-session phases: headline → pipeline → streaming →
-    // extended sweep (the sweep runs LAST as the budget shock
-    // absorber — every high-value figure is already in the artifact
-    // when budget pressure starts shedding queries) ----
-
-    // the forks leave 32 threads' worth of decaying load behind —
-    // the r14 dev run started the headline at loadavg 12.5 and its
-    // first trials read 2-5× slow; one bounded settle keeps the
-    // phase's figures attributable to the engine
-    artifact("headline_settle_sec") = settle(maxWaitSec = 45).toString
-    phaseStart("headline")
-    // warm-up: a FULL untimed pass of the headline set, not just q01
-    // (r13 judge finding: the binary grew ~2.5× across rounds and the
-    // JIT warm-up tail with it — with a single small-query warm-up
-    // the first timed trial of each query carries compile time, the
-    // best-of-2 total reads ~2× its steady state, and round-over-
-    // round totals stop being comparable; steady-state parity with
-    // r12 was judge-confirmed once warm). Under budget pressure
-    // (weather-slowed forks ahead of us) the warm pass drops and the
-    // trials go single-shot — logged and visible in the trials
-    // arrays, because a degraded-but-present headline beats an
-    // rc=124 that loses pipeline/streaming too.
-    val headlinePressure = remainingSec() < 220
-    if (headlinePressure) System.err.println(
-      s"[bench] budget: headline degraded mode (remaining=${remainingSec()}s)" +
-        " — no warm pass, single trials")
-    else headline.foreach { n =>
-      try {
-        Queries.all(n)(spark, sfDir)
-          .write.format("noop").mode("overwrite").save()
-        // same leak hygiene as run(): the warm pass must not seed the
-        // storage pool the timed trials then fight
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
-      } catch { case _: Throwable => () }
+      Phase(name, contract = true, floorSec, () => {
+        artifact(s"${name}_settle_sec") = settle(maxWaitSec = 45).toString
+        fork(sizes, math.min(5L, math.max(minCapMin, (remainingSec() - reserveSec) / 60)))
+        val weather = forkWeatherBad(name)
+        val suspectCap = if (weather) 500000.0 else stateStoreFloor
+        val retryCells = best.filter(_._4 < suspectCap).map(_._1)
+        if (retryCells.isEmpty) Nil
+        else {
+          System.err.println(s"[bench] $name retry requested for cells " +
+            s"${retryCells.mkString(",")} (weather=$weather)")
+          // settle + a 2-min watchdog: the child (ascending cells, warm
+          // shed under its 90 s budget) lands the cheap cell inside it
+          Seq(Phase(s"${name}_retry", contract = false, floorSec = 45 + 120, () => {
+            settle(maxWaitSec = 45)
+            fork(retryCells, timeoutMin = 2)
+            artifact(s"${name}_retried") = "true"
+            Nil
+          }))
+        }
+      })
     }
 
-    val results =
-      if (headlinePressure) headline.map(n => n ->
-        // under pressure even single trials stop at the margin — a
-        // 5×-slow box can eat 4 min on 13 "quick" queries
-        (if (remainingSec() > 60) Seq(run(n)) else Seq((-1.0, -1.0))))
-      else headline.map(n => n -> trialsOf(n))
-    val total = results.map(r => bestOf(r._2)).filter(_ >= 0).sum
-    artifact("value") = total.toString
-    artifact("queries") = results
-      .map { case (k, ts) => "\"" + k + "\":" + bestOf(ts) }
-      .mkString("{", ",", "}")
-    artifact("trials") = trialsJsonOf(results)
-    artifact("trial_loadavg") = loadJsonOf(results)
-    artifact("loadavg_end") = "[" + loadavg().mkString(",") + "]"
-    emit("headline")
+    var headlineResults = Seq.empty[(String, Seq[(Double, Double)])]
+    def headlinePhase(): Unit = {
+      // the forks leave their threads' worth of decaying load behind —
+      // the r14 dev run started the headline at loadavg 12.5 and its
+      // first trials read 2-5× slow; one bounded settle keeps the
+      // phase's figures attributable to the engine
+      artifact("headline_settle_sec") = settle(maxWaitSec = 45).toString
+      // warm-up: a FULL untimed pass of the headline set, not just q01
+      // (r13 judge finding: the binary grew ~2.5× across rounds and the
+      // JIT warm-up tail with it — with a single small-query warm-up
+      // the first timed trial of each query carries compile time, the
+      // best-of-2 total reads ~2× its steady state, and round-over-
+      // round totals stop being comparable; steady-state parity with
+      // r12 was judge-confirmed once warm). Under budget pressure
+      // (weather-slowed forks ahead of us) the warm pass drops and the
+      // trials go single-shot — logged and visible in the trials
+      // arrays, because a degraded-but-present headline beats an
+      // rc=124 that loses pipeline/streaming too.
+      val pressure = remainingSec() < 220
+      if (pressure) System.err.println(
+        s"[bench] budget: headline degraded mode (remaining=${remainingSec()}s)" +
+          " — no warm pass, single trials")
+      else headline.foreach { n =>
+        try {
+          Queries.all(n)(spark, sfDir)
+            .write.format("noop").mode("overwrite").save()
+          // same leak hygiene as run(): the warm pass must not seed the
+          // storage pool the timed trials then fight
+          spark.sparkContext.getPersistentRDDs.values
+            .foreach(_.unpersist(blocking = false))
+        } catch { case _: Throwable => () }
+      }
+      headlineResults =
+        if (pressure) headline.map(n => n ->
+          // under pressure even single trials stop at the margin — a
+          // 5×-slow box can eat 4 min on 13 "quick" queries
+          (if (remainingSec() > 60) Seq(run(n)) else Seq((-1.0, -1.0))))
+        else headline.map(n => n -> trialsOf(n))
+      artifact("value") =
+        headlineResults.map(r => bestOf(r._2)).filter(_ >= 0).sum.toString
+      artifact("queries") = headlineResults
+        .map { case (k, ts) => "\"" + k + "\":" + bestOf(ts) }
+        .mkString("{", ",", "}")
+      artifact("trials") = trialsJsonOf(headlineResults)
+      artifact("trial_loadavg") = loadJsonOf(headlineResults)
+    }
 
-    phaseStart("pipeline")
-    // kpipe-comparable figure: records/s through the decode→operators→
-    // sink pipeline (BASELINE.md reports the reference's consumer in
-    // rec/s). Same decode→transform→sink shape as q37, but unordered
-    // (a consumer pipeline has no global sort) and replicated 60× so
-    // each timed trial runs multiple seconds — long enough that fixed
-    // job overhead and transient host contention can't dominate the
-    // best-of-3.
     import org.apache.spark.sql.functions._
-    val replicated = Tables.events(spark, sfDir)
-      .withColumn("rep", explode(sequence(lit(0), lit(59))))
-    val records = replicated.select(
-      col("event_id").cast("string").cast("binary").as("key"),
-      to_json(struct(col("event_id"), col("user_id"), col("event_type"), col("value")))
-        .cast("binary").as("value"),
-      lit("events").as("topic"), col("rep").as("partition"),
-      col("event_id").as("offset"), col("ts").as("timestamp"),
-      lit(0).as("timestampType"),
-      array().cast("array<struct<key:string,value:binary>>").as("headers"))
     def pipelineOver(recs: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
       graft.streaming.Graft
         .json(recs, "event_id BIGINT, user_id BIGINT, event_type STRING, value DOUBLE")
@@ -980,169 +822,147 @@ object Bench {
         .toDF
         .select(col("res.value.event_id"), col("res.value.user_id"),
           col("res.value.value"), col("source"))
-    // pre-materialize the input in executor memory (the reference
-    // benchmark consumes pre-produced records whose segments sit in the
-    // broker's page cache — its measured cost is decode→transform→sink,
-    // not ingest IO). Round 4 staged these rows as parquet in /tmp and
-    // re-read them per trial; on a contended host that turned the trial
-    // into a disk benchmark (BENCH_r04: 29–141 s/trial for work that is
-    // ~1.5 s of CPU). An in-memory cache keeps the timed region honest
-    // and host-independent. ~6 M rows × ~200 B ≈ 1.2 GB — far under the
-    // local[32] storage pool.
-    // spread across all cores first — events is a single small parquet
-    // file, so without this the decode stage would run on 1-2 partitions
-    // budget guard (the r14 rc=124 lesson: pipeline + streaming ran
-    // unguarded after a weather-slowed fork window and the external
-    // kill took BOTH): skip with the -1 sentinels rather than start
-    // work the clock cannot hold
-    var staged: Option[org.apache.spark.sql.DataFrame] = None
-    if (remainingSec() < 100) System.err.println(
-      s"[bench] budget: skipped pipeline phase (remaining=${remainingSec()}s)")
-    else try {
-      val s = records.repartition(cpus)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
-      staged = Some(s)
-      val stagedPipeline = pipelineOver(s)
-      val eventRows = s.count()   // materializes the cache
-      stagedPipeline.write.format("noop").mode("overwrite").save()   // warm codegen
-      // best of 3 timed trials — single-trial numbers swing ±50% with
-      // JIT/GC in a fresh JVM; steady-state throughput is the max.
-      // Same contention-retry rule as the catalog trials: a >3× spread
-      // (BENCH_r08's pipeline trials spanned 129-641 s under external
-      // load) earns one extra sample — a 4-entry array is the marker.
-      def pipelineTrial(): Double = {
-        val t0 = System.nanoTime()
-        stagedPipeline.write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
-      }
-      // budget-aware trials: a steal burst can run one 1.3 s trial for
-      // 168 s (r14 dev), so each further trial requires live budget —
-      // the first is unconditional (the phase guard already passed)
-      val pipelineBase = pipelineTrial() +:
-        (2 to 3).flatMap(_ =>
-          if (remainingSec() > 60) Some(pipelineTrial()) else None)
-      val pipelineTrials =
-        if (pipelineBase.max / pipelineBase.min.max(1e-9) > 3.0 &&
-            remainingSec() > 60)
-          pipelineBase :+ pipelineTrial()
-        else pipelineBase
-      val pipelineSec = pipelineTrials.min
-      val recPerSec = if (pipelineSec > 0) eventRows / pipelineSec else 0.0
-      artifact("pipeline_trials_sec") = "[" + pipelineTrials.mkString(",") + "]"
-      artifact("pipeline_rec_per_sec") = recPerSec.round.toString
-      artifact("pipeline_rows") = eventRows.toString
-    } catch { case e: Throwable =>
-      // a watchdog cancel (or anything else) mid-phase degrades to the
-      // -1 sentinels — it must never take the final emits with it
-      System.err.println(s"[bench] pipeline phase failed: ${e.getMessage}")
-    }
-    artifact("loadavg_end") = "[" + loadavg().mkString(",") + "]"
-    emit("pipeline")
 
-    phaseStart("streaming")
-    // streaming micro-batch throughput — BASELINE.md names "micro-batch
-    // streaming throughput for the Kafka path" as the kpipe-comparable
-    // streaming figure. Same decode→transform→sink pipeline, running as
-    // a real micro-batch StreamingQuery over Kafka-shaped records. The
-    // source is rate-micro-batch (deterministic 250k rows/batch, spread
-    // over all cores) with the JSON payload synthesized inline — a
-    // MemoryStream would measure its own per-row object encoding
-    // (~3 µs/row on the scan path, 30× the pipeline itself), and a file
-    // source would measure the host's disk. Record synthesis is charged
-    // to the pipeline, so the figure is conservative. Batch 0 (codegen
-    // warm-up) is excluded, matching the batch trials' warm-up run;
-    // batches 1-4 are measured by their own triggerExecution times, so
-    // trigger-idle gaps don't inflate the denominator.
-    // measured at several batch sizes: per-trigger fixed cost (offset
-    // log + commit log writes, planning) is amortized by batch size, so
-    // the sweep separates pipeline throughput from trigger overhead —
-    // the headline is the best size, the sweep is in the JSON.
-    def measureStreaming(rowsPerBatch: Long): (Long, Double, Int) = {
-      val synth = spark.readStream.format("rate-micro-batch")
-        .option("rowsPerBatch", rowsPerBatch)
-        .option("numPartitions", cpus)
-        .load()
-      val kafkaShaped = synth.select(
-        col("value").cast("string").cast("binary").as("key"),
-        to_json(struct(
-          col("value").as("event_id"),
-          pmod(col("value"), lit(150L)).as("user_id"),
-          when(pmod(col("value"), lit(20L)) === 0L, lit("error"))
-            .otherwise(lit("click")).as("event_type"),
-          round(col("value") / 7.0, 3).as("value"))).cast("binary").as("value"),
-        lit("events").as("topic"), lit(0).as("partition"),
-        col("value").as("offset"), col("timestamp"),
+    def pipelinePhase(): Unit = {
+      // kpipe-comparable figure: records/s through the decode→operators→
+      // sink pipeline (BASELINE.md reports the reference's consumer in
+      // rec/s). Same decode→transform→sink shape as q37, but unordered
+      // (a consumer pipeline has no global sort) and replicated 60× so
+      // each timed trial runs multiple seconds — long enough that fixed
+      // job overhead and transient host contention can't dominate the
+      // best-of-3.
+      val replicated = Tables.events(spark, sfDir)
+        .withColumn("rep", explode(sequence(lit(0), lit(59))))
+      val records = replicated.select(
+        col("event_id").cast("string").cast("binary").as("key"),
+        to_json(struct(col("event_id"), col("user_id"), col("event_type"), col("value")))
+          .cast("binary").as("value"),
+        lit("events").as("topic"), col("rep").as("partition"),
+        col("event_id").as("offset"), col("ts").as("timestamp"),
         lit(0).as("timestampType"),
         array().cast("array<struct<key:string,value:binary>>").as("headers"))
-      timeStream(ckpt => pipelineOver(kafkaShaped).writeStream
-        .format("noop").option("checkpointLocation", ckpt).start(),
-        // deadline bends to the remaining budget (60 s reserved for
-        // drain + final emits) so a weather-slowed cell degrades to
-        // fewer measured batches instead of an external kill
-        deadlineSec = math.max(30L, math.min(180L, remainingSec() - 60)),
-        label = s"stateless/$rowsPerBatch")
+      // pre-materialize the input in executor memory (the reference
+      // benchmark consumes pre-produced records whose segments sit in the
+      // broker's page cache — its measured cost is decode→transform→sink,
+      // not ingest IO). Round 4 staged these rows as parquet in /tmp and
+      // re-read them per trial; on a contended host that turned the trial
+      // into a disk benchmark (BENCH_r04: 29–141 s/trial for work that is
+      // ~1.5 s of CPU). An in-memory cache keeps the timed region honest
+      // and host-independent. ~6 M rows × ~200 B ≈ 1.2 GB — far under the
+      // local[32] storage pool.
+      // spread across all cores first — events is a single small parquet
+      // file, so without this the decode stage would run on 1-2 partitions
+      val s = records.repartition(cpus)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_ONLY)
+      try {
+        val stagedPipeline = pipelineOver(s)
+        val eventRows = s.count()   // materializes the cache
+        stagedPipeline.write.format("noop").mode("overwrite").save()   // warm codegen
+        // best of 3 timed trials — single-trial numbers swing ±50% with
+        // JIT/GC in a fresh JVM; steady-state throughput is the max.
+        // Same contention-retry rule as the catalog trials: a >3× spread
+        // (BENCH_r08's pipeline trials spanned 129-641 s under external
+        // load) earns one extra sample — a 4-entry array is the marker.
+        def pipelineTrial(): Double = {
+          val t0 = System.nanoTime()
+          stagedPipeline.write.format("noop").mode("overwrite").save()
+          (System.nanoTime() - t0) / 1e9
+        }
+        // budget-aware trials: a steal burst can run one 1.3 s trial for
+        // 168 s (r14 dev), so each further trial requires live budget —
+        // the first is unconditional (the phase floor already passed)
+        val pipelineBase = pipelineTrial() +:
+          (2 to 3).flatMap(_ =>
+            if (remainingSec() > 60) Some(pipelineTrial()) else None)
+        val pipelineTrials =
+          if (pipelineBase.max / pipelineBase.min.max(1e-9) > 3.0 &&
+              remainingSec() > 60)
+            pipelineBase :+ pipelineTrial()
+          else pipelineBase
+        val pipelineSec = pipelineTrials.min
+        val recPerSec = if (pipelineSec > 0) eventRows / pipelineSec else 0.0
+        artifact("pipeline_trials_sec") = "[" + pipelineTrials.mkString(",") + "]"
+        artifact("pipeline_rec_per_sec") = recPerSec.round.toString
+        artifact("pipeline_rows") = eventRows.toString
+      } finally {
+        // the ~1.2 GB staged input is this phase's alone: free it before
+        // the later phases (and the state-store retry forks) need memory
+        s.unpersist(blocking = true)
+      }
     }
-    // two sizes, not three: the 250k cell prices per-trigger overhead,
-    // the 2M cell is where throughput peaks (r10/r11 sweep shape) — the
-    // middle cell never changed the headline and cost ~1 min of the
-    // wall-clock budget the SIGKILL hardening is trying to reclaim.
-    // The 2M HEADLINE cell runs first; the 250k pricing cell is
-    // optional under budget pressure (skip logged, -1 sentinel kept).
-    // whole-phase guard first (the pipeline-guard rationale): a
-    // streaming cell started with < 2 min left cannot finish its 4
-    // measured batches + drain before the external kill
-    val streamCells =
-      (if (remainingSec() > 120) Seq(2000000L)
-       else { System.err.println(
-         s"[bench] budget: skipped streaming phase (remaining=${remainingSec()}s)")
-         Seq.empty[Long] }) ++
-      (if (remainingSec() > 330) Seq(250000L)
-       else { System.err.println(
-         s"[bench] budget: skipped 250k streaming cell (remaining=${remainingSec()}s)")
-         Seq.empty[Long] })
-    val streamMeasured = streamCells.map { n =>
-      val (rows, sec, nBatches) = measureStreaming(n)
-      (n, rows, sec, sweepValue(rows, sec, nBatches, 4))
-    }
-    val streamSweep = Seq(250000L, 2000000L).map { n =>
-      streamMeasured.find(_._1 == n).getOrElse((n, 0L, 0.0, -1.0))
-    }
-    val complete = streamSweep.filter(_._4 >= 0)
-    val (_, streamRows, streamingSec, streamingRecPerSec) =
-      if (complete.nonEmpty) complete.maxBy(_._4)
-      else (0L, 0L, 0.0, -1.0)
-    val sweepJson = streamSweep.map { case (n, _, _, rps) =>
-      "\"" + n + "\":" + (if (rps < 0) "-1" else rps.round.toString)
-    }.mkString("{", ",", "}")
-    artifact("streaming_rec_per_sec") =
-      if (streamingRecPerSec < 0) "-1" else streamingRecPerSec.round.toString
-    artifact("streaming_rows") = streamRows.toString
-    artifact("streaming_sec") = streamingSec.toString
-    artifact("streaming_by_batch_size") = sweepJson
-    artifact("loadavg_end") = "[" + loadavg().mkString(",") + "]"
-    emit("streaming")
 
-    phaseStart("scaling")
-    // r15 verdict ask #5: at sf0.1 every headline 8v32 ratio was
-    // ≤ 1.15 — per-task scheduling overhead at 32 threads exceeds the
-    // sub-1.4 s compute, so the driver's scaling block measured the
-    // scheduler, not the plans. This cell times the four shuffle-heavy
-    // headline queries on a 10× ramp (the ScaleRamp synthesis:
-    // replicated facts with REMAPPED keys — group sizes and join
-    // fan-outs stay realistic) in two forked JVMs, 32 and 8 cores, and
-    // records sf1 per-query seconds + the c8/c32 ratio. Budget-gated
-    // like the ledger: it yields to every prior phase and sheds whole
-    // under pressure (the driver's 780 s window rarely holds it; the
-    // expanded-budget dev runs and the judge's untimed re-runs do).
-    val scalingNames = Seq("q04_join_shuffle_agg", "q29_minhash_buckets",
-      "q30_simhash", "q31_ann_lsh")
-    artifact("scaling_sf1") = scalingNames
-      .map(n => "\"" + n + "\":{\"c32\":-1,\"c8\":-1,\"ratio\":-1}")
-      .mkString("{", ",", "}")
-    if (remainingSec() < 420)
-      System.err.println(
-        s"[bench] budget: skipped sf1 scaling cell (remaining=${remainingSec()}s)")
-    else try {
+    def streamingPhase(): Unit = {
+      // streaming micro-batch throughput — BASELINE.md names "micro-batch
+      // streaming throughput for the Kafka path" as the kpipe-comparable
+      // streaming figure. Same decode→transform→sink pipeline, running as
+      // a real micro-batch StreamingQuery over Kafka-shaped records. The
+      // source is rate-micro-batch (deterministic rows per batch, spread
+      // over all cores) with the JSON payload synthesized inline — a
+      // MemoryStream would measure its own per-row object encoding
+      // (~3 µs/row on the scan path, 30× the pipeline itself), and a file
+      // source would measure the host's disk. Record synthesis is charged
+      // to the pipeline, so the figure is conservative. Batch 0 (codegen
+      // warm-up) is excluded, matching the batch trials' warm-up run;
+      // batches 1-4 are measured by their own triggerExecution times, so
+      // trigger-idle gaps don't inflate the denominator.
+      // measured at several batch sizes: per-trigger fixed cost (offset
+      // log + commit log writes, planning) is amortized by batch size, so
+      // the sweep separates pipeline throughput from trigger overhead —
+      // the headline is the best size, the sweep is in the JSON.
+      def measureStreaming(rowsPerBatch: Long): (Long, Double, Int) = {
+        val synth = spark.readStream.format("rate-micro-batch")
+          .option("rowsPerBatch", rowsPerBatch)
+          .option("numPartitions", cpus)
+          .load()
+        val kafkaShaped = synth.select(
+          col("value").cast("string").cast("binary").as("key"),
+          to_json(struct(
+            col("value").as("event_id"),
+            pmod(col("value"), lit(150L)).as("user_id"),
+            when(pmod(col("value"), lit(20L)) === 0L, lit("error"))
+              .otherwise(lit("click")).as("event_type"),
+            round(col("value") / 7.0, 3).as("value"))).cast("binary").as("value"),
+          lit("events").as("topic"), lit(0).as("partition"),
+          col("value").as("offset"), col("timestamp"),
+          lit(0).as("timestampType"),
+          array().cast("array<struct<key:string,value:binary>>").as("headers"))
+        timeStream(ckpt => pipelineOver(kafkaShaped).writeStream
+          .format("noop").option("checkpointLocation", ckpt).start(),
+          // deadline bends to the remaining budget (60 s reserved for
+          // drain + final emits) so a weather-slowed cell degrades to
+          // fewer measured batches instead of an external kill
+          deadlineSec = math.max(30L, math.min(180L, remainingSec() - 60)),
+          label = s"stateless/$rowsPerBatch")
+      }
+      // two sizes, not three: the 250k cell prices per-trigger overhead,
+      // the 2M cell is where throughput peaks (r10/r11 sweep shape) — the
+      // middle cell never changed the headline and cost ~1 min of the
+      // wall-clock budget the SIGKILL hardening is trying to reclaim.
+      // The 2M HEADLINE cell runs first; the 250k pricing cell is
+      // optional under budget pressure (skip logged, -1 sentinel kept).
+      val cells = Seq(2000000L) ++
+        (if (remainingSec() > 330) Seq(250000L)
+         else { System.err.println(
+           s"[bench] budget: skipped 250k streaming cell (remaining=${remainingSec()}s)")
+           Nil })
+      val measured = cells.map { n =>
+        val (rows, sec, nBatches) = measureStreaming(n)
+        (n, rows, sec, sweepValue(rows, sec, nBatches, 4))
+      }
+      recordSweep("streaming", Seq(250000L, 2000000L).map { n =>
+        measured.find(_._1 == n).getOrElse((n, 0L, 0.0, -1.0))
+      })
+    }
+
+    def scalingPhase(): Unit = {
+      // r15 verdict ask #5: at sf0.1 every headline 8v32 ratio was
+      // ≤ 1.15 — per-task scheduling overhead at 32 threads exceeds the
+      // sub-1.4 s compute, so the driver's scaling block measured the
+      // scheduler, not the plans. This cell times the four shuffle-heavy
+      // headline queries on a 10× ramp (the ScaleRamp synthesis:
+      // replicated facts with REMAPPED keys — group sizes and join
+      // fan-outs stay realistic) in two forked JVMs, 32 and 8 cores, and
+      // records sf1 per-query seconds + the c8/c32 ratio.
       val rampDir = sys.props.getOrElse("java.io.tmpdir", "/tmp") +
         "/graft-scaling-sf1"
       // reuse fixtures only when they were ramped from THIS sfDir (a
@@ -1151,14 +971,13 @@ object Bench {
       // The marker is written only after a synthesis completes, and
       // removed before one starts: an interrupted rewrite must not read
       // as reusable on the next run
-      val marker = java.nio.file.Paths.get(rampDir, ".src")
+      val marker = Paths.get(rampDir, ".src")
       val reuse = new java.io.File(s"$rampDir/lineitem.parquet").exists() &&
-        java.nio.file.Files.exists(marker) &&
-        java.nio.file.Files.readString(marker).trim == sfDir
-      if (!reuse) java.nio.file.Files.deleteIfExists(marker)
+        Files.exists(marker) && Files.readString(marker).trim == sfDir
+      if (!reuse) Files.deleteIfExists(marker)
       ScaleRamp.synthesize(spark, sfDir, rampDir, factor = 10,
         cpus = cpus, reuse = reuse)
-      if (!reuse) java.nio.file.Files.writeString(marker, sfDir)
+      if (!reuse) Files.writeString(marker, sfDir)
       // settle after the multi-hundred-MB fixture write — the first
       // dev run forked c32 straight into the write's load/page-cache
       // wake (load 12) and read 17.4 s for a 2.4 s query while the
@@ -1189,29 +1008,25 @@ object Bench {
         "\"" + n + "\":{\"c32\":" + c32 + ",\"c8\":" + c8 +
           ",\"ratio\":" + ratio + "}"
       }.mkString("{", ",", "}")
-    } catch { case e: Throwable =>
-      System.err.println(s"[bench] scaling phase failed: ${e.getMessage}")
     }
-    artifact("loadavg_end") = "[" + loadavg().mkString(",") + "]"
-    emit("scaling")
 
-    phaseStart("shuffle_ledger")
-    // r14 verdict ask #5: the shuffle ledger (measured shuffle-write
-    // bytes per query at two scale factors — SCALE_RAMP.md's volume
-    // evidence) runs as a bench phase so the per-query byte ratios
-    // land IN the driver artifact and a ratio regression is visible
-    // round-over-round without a separate tool run. Headline + dedup
-    // family on the parent session; the output-driven exemptions
-    // (q121/q129) ship machine-readably in shuffle_ledger_exempt.
-    // Runs BEFORE the extended sweep (which is the budget shock
-    // absorber — anything after it never runs on a constrained box)
-    // but yields to every higher-value phase via its own guard.
-    locally {
+    def shuffleLedgerPhase(): Unit = {
+      // r14 verdict ask #5: the shuffle ledger (measured shuffle-write
+      // bytes per query at two scale factors — SCALE_RAMP.md's volume
+      // evidence) runs as a bench phase so the per-query byte ratios
+      // land IN the driver artifact and a ratio regression is visible
+      // round-over-round without a separate tool run. Headline + dedup
+      // family on the parent session; the output-driven exemptions
+      // (q121/q129) ship machine-readably in shuffle_ledger_exempt.
       val base = sfDir.replaceAll("/+$", "")
       val dirA =
         if (base.endsWith("sf0.1")) base.stripSuffix("sf0.1") + "sf0.01"
         else if (base.endsWith("sf0.01")) base.stripSuffix("sf0.01") + "sf0.001"
         else ""
+      if (dirA.isEmpty || !new java.io.File(dirA).isDirectory) {
+        System.err.println(s"[bench] shuffle ledger: no smaller sf dir for $sfDir")
+        return
+      }
       // degraded mode: under budget pressure run the DEDUP-family
       // subset only (the "only fingerprints shuffle" claims are the
       // ledger's primary target) instead of dropping the whole phase
@@ -1225,129 +1040,155 @@ object Bench {
           Seq("q24_exact_dedup", "q121_containment", "q129_winnow_matches",
             "q143_setsim_join", "q150_exact_decontam")
         }
-      if (dirA.isEmpty || !new java.io.File(dirA).isDirectory)
-        System.err.println(s"[bench] shuffle ledger: no smaller sf dir for $sfDir")
-      else if (remainingSec() < 110)
-        System.err.println(
-          s"[bench] budget: skipped shuffle ledger (remaining=${remainingSec()}s)")
-      else try {
-        val rows = ShuffleLedger.measureRows(spark, ledgerNames,
-          dirA, sfDir, proceed = () => remainingSec() > 70)
-        artifact("shuffle_ledger") = rows.mkString("{", ",", "}")
-        artifact("shuffle_ledger_dirs") =
-          s"""{"a":"$dirA","b":"$sfDir"}"""
-        // drift vs the newest prior artifact that carried a ledger:
-        // flag ratios growing >1.5× (excluding the documented
-        // output-driven entries) so a volume regression is one grep
-        // escape-tolerant like priorScalar: a driver-wrapped artifact
-        // carries the ledger (if at all) inside the \"-escaped tail
-        val priorRatios: Map[String, Double] = try {
-          priorFiles.iterator.map { case (_, f) =>
-            val txt = scala.io.Source.fromFile(f).mkString
-            ("\\\\?\"(q\\d+[A-Za-z0-9_]+)\\\\?\":\\{\\\\?\"a_bytes\\\\?\":" +
-              "[^{}]*\\\\?\"ratio_x\\\\?\":\\s*(-?\\d+(?:\\.\\d+)?)\\}").r
-              .findAllMatchIn(txt)
-              .map(m => m.group(1) -> m.group(2).toDouble)
-              .filter(_._2 > 0).toMap
-          }.find(_.nonEmpty).getOrElse(Map.empty)
-        } catch { case _: Throwable => Map.empty }
-        val nowRatios = rows.flatMap { r =>
-          ("\"(q\\d+[A-Za-z0-9_]+)\":\\{.*\"ratio_x\":" +
-            "(-?\\d+(?:\\.\\d+)?)\\}").r.findFirstMatchIn(r)
+      val rows = ShuffleLedger.measureRows(spark, ledgerNames,
+        dirA, sfDir, proceed = () => remainingSec() > 70)
+      artifact("shuffle_ledger") = rows.mkString("{", ",", "}")
+      artifact("shuffle_ledger_dirs") =
+        s"""{"a":"$dirA","b":"$sfDir"}"""
+      // drift vs the newest prior artifact that carried a ledger:
+      // flag ratios growing >1.5× (excluding the documented
+      // output-driven entries) so a volume regression is one grep
+      // escape-tolerant like priorScalar: a driver-wrapped artifact
+      // carries the ledger (if at all) inside the \"-escaped tail
+      val priorRatioRe =
+        ("\\\\?\"(q\\d+[A-Za-z0-9_]+)\\\\?\":\\{\\\\?\"a_bytes\\\\?\":" +
+          "[^{}]*\\\\?\"ratio_x\\\\?\":\\s*(-?\\d+(?:\\.\\d+)?)\\}").r
+      val priorRatios: Map[String, Double] = priorFiles.iterator
+        .map { case (_, _, txt) =>
+          priorRatioRe.findAllMatchIn(txt)
             .map(m => m.group(1) -> m.group(2).toDouble)
-        }.toMap
-        val drift = nowRatios.toSeq.sortBy(_._1).collect {
-          case (q, r) if r > 0 && priorRatios.get(q).exists(p => r > 1.5 * p) &&
-              !ShuffleLedger.outputDriven.contains(q) =>
-            "\"" + q + "\":{\"prior\":" + priorRatios(q) + ",\"now\":" + r + "}"
-        }
-        artifact("shuffle_ledger_drift") = drift.mkString("{", ",", "}")
-        if (drift.nonEmpty) System.err.println(
-          s"[bench] shuffle ledger drift: ${drift.mkString(", ")}")
-      } catch { case e: Throwable =>
-        System.err.println(s"[bench] shuffle ledger failed: ${e.getMessage}")
+            .filter(_._2 > 0).toMap
+        }.find(_.nonEmpty).getOrElse(Map.empty)
+      val nowRatios = rows.flatMap { r =>
+        ("\"(q\\d+[A-Za-z0-9_]+)\":\\{.*\"ratio_x\":" +
+          "(-?\\d+(?:\\.\\d+)?)\\}").r.findFirstMatchIn(r)
+          .map(m => m.group(1) -> m.group(2).toDouble)
+      }.toMap
+      val drift = nowRatios.toSeq.sortBy(_._1).collect {
+        case (q, r) if r > 0 && priorRatios.get(q).exists(p => r > 1.5 * p) &&
+            !ShuffleLedger.outputDriven.contains(q) =>
+          "\"" + q + "\":{\"prior\":" + priorRatios(q) + ",\"now\":" + r + "}"
       }
+      artifact("shuffle_ledger_drift") = drift.mkString("{", ",", "}")
+      if (drift.nonEmpty) System.err.println(
+        s"[bench] shuffle ledger drift: ${drift.mkString(", ")}")
     }
-    artifact("loadavg_end") = "[" + loadavg().mkString(",") + "]"
-    emit("shuffle_ledger")
 
-    phaseStart("extended")
-    // The sweep runs LAST — the budget shock absorber. Guard: keep a
-    // small stop margin for the final emits; once the margin is hit,
-    // remaining queries record the -1 sentinel and the skip count is
-    // logged — a truncated sweep must be visible in the artifact,
-    // never silent (and never an rc=124). Execution order is
-    // STALEST-FIRST (r14 verdict ask #3: newest-first shed the SAME
-    // contiguous oldest block every constrained round, silently
-    // halving round-over-round comparability): queries with NO
-    // figure in the newest parseable prior artifact — shed last
-    // round, or new this round — run first, then the previously-
-    // measured set; within each group newest-first. The shed tail is
-    // then exactly the set with the freshest prior figures, so
-    // BENCH_r{N} ∪ BENCH_r{N-1} covers the catalog and no query goes
-    // two constrained rounds unmeasured. A cumulative artifact line
-    // re-emits every ~75 s DURING the sweep, so even an external
-    // kill mid-sweep preserves every completed query.
-    val extStopMarginSec = 50L
-    var extSkipped = 0
-    val extBuf = scala.collection.mutable.LinkedHashMap[String, Seq[(Double, Double)]]()
-    def extendedJsonOf(): String = extendedNames.map { n =>
-      "\"" + n + "\":" + extBuf.get(n).map(bestOf).getOrElse(-1.0)
-    }.mkString("{", ",", "}")
-    var lastPartialEmit = System.nanoTime()
-    // Sweep order, three layers (r14 ask #3 — the shed tail must
-    // rotate round-over-round):
-    //  1. THIS round's new operators first (names absent from the
-    //     newest prior artifact — catalog order is chronological, so
-    //     everything past the last mentioned name is new);
-    //  2. if the prior artifact yields real extended coverage (raw
-    //     stdout artifact, ≥1/3 of the names), stalest-first:
-    //     unmeasured-last-round before measured;
-    //  3. otherwise (driver-wrapped artifact: tail-truncated, prior
-    //     extended coverage unknowable) alternate the sweep DIRECTION
-    //     by round parity — odd rounds oldest-first, even rounds
-    //     newest-first — so any two consecutive constrained rounds
-    //     cover the catalog between them.
-    val lastKnownIdx = extendedNames.lastIndexWhere(priorRaw.contains)
-    val (oldOnes, newOnes) = extendedNames.splitAt(lastKnownIdx + 1)
-    val priorKnown = oldOnes.count(priorBench.contains)
-    val restOrder =
-      if (priorKnown >= oldOnes.size / 3) {
-        val (stale, fresh) =
-          oldOnes.reverse.partition(n => !priorBench.contains(n))
-        System.err.println(s"[bench] sweep order: ${newOnes.size} new, " +
-          s"${stale.size} unmeasured-last-round, then ${fresh.size} measured")
-        stale ++ fresh
-      } else {
-        val oldestFirst = currentRound % 2 == 1
-        System.err.println(s"[bench] sweep order: ${newOnes.size} new, " +
-          s"then parity ${if (oldestFirst) "oldest" else "newest"}-first " +
-          s"(round $currentRound, prior coverage $priorKnown/${oldOnes.size})")
-        if (oldestFirst) oldOnes else oldOnes.reverse
+    def extendedPhase(): Unit = {
+      // The sweep runs LAST — the budget shock absorber. Guard: keep a
+      // small stop margin for the final emits; once the margin is hit,
+      // remaining queries record the -1 sentinel and the skip count is
+      // logged — a truncated sweep must be visible in the artifact,
+      // never silent (and never an rc=124). Execution order is
+      // STALEST-FIRST (r14 verdict ask #3: newest-first shed the SAME
+      // contiguous oldest block every constrained round, silently
+      // halving round-over-round comparability): queries with NO
+      // figure in the newest parseable prior artifact — shed last
+      // round, or new this round — run first, then the previously-
+      // measured set; within each group newest-first. The shed tail is
+      // then exactly the set with the freshest prior figures, so
+      // BENCH_r{N} ∪ BENCH_r{N-1} covers the catalog and no query goes
+      // two constrained rounds unmeasured. A cumulative artifact line
+      // re-emits every ~75 s DURING the sweep, so even an external
+      // kill mid-sweep preserves every completed query.
+      val extStopMarginSec = 50L
+      var extSkipped = 0
+      val extBuf = scala.collection.mutable.LinkedHashMap[String, Seq[(Double, Double)]]()
+      def extendedJsonOf(): String = extendedNames.map { n =>
+        "\"" + n + "\":" + extBuf.get(n).map(bestOf).getOrElse(-1.0)
+      }.mkString("{", ",", "}")
+      var lastPartialEmit = System.nanoTime()
+      // Sweep order, three layers (r14 ask #3 — the shed tail must
+      // rotate round-over-round):
+      //  1. THIS round's new operators first (names absent from the
+      //     newest prior artifact — catalog order is chronological, so
+      //     everything past the last mentioned name is new);
+      //  2. if the prior artifact yields real extended coverage (raw
+      //     stdout artifact, ≥1/3 of the names), stalest-first:
+      //     unmeasured-last-round before measured;
+      //  3. otherwise (driver-wrapped artifact: tail-truncated, prior
+      //     extended coverage unknowable) alternate the sweep DIRECTION
+      //     by round parity — odd rounds oldest-first, even rounds
+      //     newest-first — so any two consecutive constrained rounds
+      //     cover the catalog between them.
+      val lastKnownIdx = extendedNames.lastIndexWhere(priorRaw.contains)
+      val (oldOnes, newOnes) = extendedNames.splitAt(lastKnownIdx + 1)
+      val priorKnown = oldOnes.count(priorBench.contains)
+      val restOrder =
+        if (priorKnown >= oldOnes.size / 3) {
+          val (stale, fresh) =
+            oldOnes.reverse.partition(n => !priorBench.contains(n))
+          System.err.println(s"[bench] sweep order: ${newOnes.size} new, " +
+            s"${stale.size} unmeasured-last-round, then ${fresh.size} measured")
+          stale ++ fresh
+        } else {
+          val oldestFirst = currentRound % 2 == 1
+          System.err.println(s"[bench] sweep order: ${newOnes.size} new, " +
+            s"then parity ${if (oldestFirst) "oldest" else "newest"}-first " +
+            s"(round $currentRound, prior coverage $priorKnown/${oldOnes.size})")
+          if (oldestFirst) oldOnes else oldOnes.reverse
+        }
+      (newOnes.reverse ++ restOrder).foreach { n =>
+        if (remainingSec() > extStopMarginSec) extBuf(n) = extTrialsOf(n)
+        else { extSkipped += 1; extBuf(n) = Seq((-1.0, -1.0)) }
+        if (System.nanoTime() - lastPartialEmit > 75L * 1000 * 1000 * 1000) {
+          lastPartialEmit = System.nanoTime()
+          artifact("extended") = extendedJsonOf()
+          phaseEnd("extended_partial")
+        }
       }
-    (newOnes.reverse ++ restOrder).foreach { n =>
-      if (remainingSec() > extStopMarginSec) extBuf(n) = extTrialsOf(n)
-      else { extSkipped += 1; extBuf(n) = Seq((-1.0, -1.0)) }
-      if (System.nanoTime() - lastPartialEmit > 75L * 1000 * 1000 * 1000) {
-        lastPartialEmit = System.nanoTime()
-        artifact("extended") = extendedJsonOf()
-        artifact("loadavg_end") = "[" + loadavg().mkString(",") + "]"
-        emit("extended_partial")
-      }
+      if (extSkipped > 0) System.err.println(
+        s"[bench] budget: skipped oldest $extSkipped extended queries " +
+          s"(remaining=${remainingSec()}s)")
+      artifact("extended_skipped") = extSkipped.toString
+      artifact("extended") = extendedJsonOf()
+      artifact("trial_loadavg") = loadJsonOf(headlineResults ++
+        extendedNames.map(n => n -> extBuf(n)))
     }
-    if (extSkipped > 0) System.err.println(
-      s"[bench] budget: skipped oldest $extSkipped extended queries " +
-        s"(remaining=${remainingSec()}s)")
-    artifact("extended_skipped") = extSkipped.toString
-    artifact("extended") = extendedJsonOf()
-    artifact("trial_loadavg") = loadJsonOf(results ++
-      extendedNames.map(n => n -> extBuf(n)))
-    artifact("loadavg_end") = "[" + loadavg().mkString(",") + "]"
-    emit("extended")
+
+    def step(body: => Unit): () => Seq[Phase] = () => { body; Nil }
+    // The phase table. Contract phases first-pass in this order: the
+    // forked state-store phases FIRST (pristine box, no parent session
+    // yet — see the lazy `spark` note), then the parent-session phases.
+    // Their retries and the optional phases follow on what is left;
+    // the extended sweep runs LAST as the budget shock absorber (every
+    // high-value figure is already in the artifact when budget pressure
+    // starts shedding queries). Floors: the whole phase cannot do
+    // useful work with less — in-phase shedding handles the rest.
+    val table = Seq(
+      // STATEFUL streaming throughput — the operator a real deployment
+      // sizes is the keyed-state path (flatMapGroupsWithState), not the
+      // stateless decode pipeline; the reference's KEY_ORDERED figure
+      // (BASELINE.md: 285,750 rec/s @0 µs) is its natural comparable.
+      // SimHash + band explode + per-bucket state scan all inside the
+      // measured trigger, swept over batch sizes (per-trigger commit
+      // cost amortizes with batch size; 500k prices it, 2M is the peak).
+      stateStorePhase("stateful", None, Seq(500000L, 2000000L),
+        floorSec = 400, minCapMin = 4, reserveSec = 330,
+        recordSweep("stateful", _)),
+      // The same keyed-state path on the RocksDB provider: the
+      // HDFS-backed heap store snapshots the WHOLE store per commit, so
+      // its commit cost scales with total state; RocksDB (changelog
+      // mode) commits only the delta — the crossover is exactly the
+      // state-volume regime the big batches reach.
+      stateStorePhase("rocksdb", Some("rocksdb"), Seq(1000000L, 2000000L),
+        floorSec = 300, minCapMin = 3, reserveSec = 280,
+        cells => artifact("stateful_rocksdb_by_batch_size") = byBatchJson(cells)),
+      Phase("headline", contract = true, floorSec = 0, step(headlinePhase())),
+      Phase("pipeline", contract = true, floorSec = 100, step(pipelinePhase())),
+      // a streaming cell started with < 2 min left cannot finish its 4
+      // measured batches + drain before the external kill
+      Phase("streaming", contract = true, floorSec = 120, step(streamingPhase())),
+      // yields to every prior phase and sheds whole under pressure (the
+      // driver's 780 s window rarely holds it; expanded-budget runs do)
+      Phase("scaling", contract = false, floorSec = 420, step(scalingPhase())),
+      Phase("shuffle_ledger", contract = false, floorSec = 110,
+        step(shuffleLedgerPhase())),
+      Phase("extended", contract = false, floorSec = 0, step(extendedPhase())))
+    schedule(table, remainingSec, phaseStart, phaseEnd)
 
     // stop the session BEFORE the final emit so no Spark shutdown
     // logging can interleave after the last compact line
-    staged.foreach(_.unpersist(blocking = true))
     spark.stop()
     emit("all")
   }

@@ -20,11 +20,7 @@ object ScalingCell {
     val dir = args(0)
     val names = args(1).split(",").toSeq.filter(_.nonEmpty)
     val cpus = Session.cpus
-    val t0 = System.nanoTime()
-    val budgetSec = sys.env.get("GRAFT_CHILD_BUDGET_SEC").map(_.toLong)
-    def remainingSec(): Long = budgetSec
-      .map(b => b - (System.nanoTime() - t0) / 1000000000L)
-      .getOrElse(Long.MaxValue / 2)
+    val remainingSec = Bench.childClock()
     val spark = Session.local(cpus)
     spark.sparkContext.setLogLevel("ERROR")
     def sweep(): Unit = spark.sparkContext.getPersistentRDDs.values

@@ -1,10 +1,11 @@
 package graft
 
-/** Dev tool: measure the stateful streaming path in isolation —
-  * `runMain graft.StatefulBench [rowsPerBatch ...]`. Prints per-batch
-  * progress (GRAFT_BENCH_DEBUG-style) and the rec/s each size lands,
-  * without waiting for the full `graft.Bench` sweep.
-  * `GRAFT_STATE_STORE=rocksdb` switches the provider from the
+/** The stateful streaming path measured in its own JVM —
+  * `runMain graft.StatefulBench [rowsPerBatch ...]`, and the child
+  * [[Bench]] forks for both state-store phases. Prints each batch's
+  * trigger time and input rows to stderr and one result line per pass
+  * (`rowsPerBatch=<n> batches=<b> rows=<r> sec=<s> rec/s=<v>`) to
+  * stdout. `GRAFT_STATE_STORE=rocksdb` switches the provider from the
   * default heap-backed HDFS store to RocksDB — the provider a real
   * deployment uses once keyed state outgrows executor heap (state
   * lives off-heap/on-disk with changelog checkpointing; heap-backed
@@ -20,16 +21,20 @@ package graft
   * terminal for its cell — the box is too slow for the cell today,
   * and retrying the biggest cell is exactly how the whole fork
   * window got burned.
+  *
+  * Exits by `Runtime.halt` after flushing stdout, without stopping
+  * Spark, for both providers: session stop unloads every RocksDB
+  * store, the teardown window where rocksdbjni's `LoggerJniCallback`
+  * can SEGV (a background flush thread logging from an unattached
+  * native thread). The halt is safe because the JVM is always a fork —
+  * of [[Bench]], which deletes the child's tmpdir, or of `runMain`
+  * (`run / fork := true`).
   */
 object StatefulBench {
   def main(args: Array[String]): Unit = {
     val sizes = if (args.nonEmpty) args.toSeq.map(_.toLong)
       else Seq(50000L, 100000L, 250000L)
-    val t0 = System.nanoTime()
-    val budgetSec = sys.env.get("GRAFT_CHILD_BUDGET_SEC").map(_.toLong)
-    def remainingSec(): Long = budgetSec
-      .map(b => b - (System.nanoTime() - t0) / 1000000000L)
-      .getOrElse(Long.MaxValue / 2)
+    val remainingSec = Bench.childClock()
     // IO weather stamp (the parent's disk_mb_per_s ledger, child-side):
     // the heap store's full-snapshot commits are disk-bound, so this
     // line in the kept stderr log makes a cratered cell attributable
@@ -114,6 +119,7 @@ object StatefulBench {
         }
       }
     }
-    spark.stop()
+    System.out.flush()
+    Runtime.getRuntime.halt(0)
   }
 }
