@@ -896,7 +896,7 @@ object OracleSql {
       val m8qp = graft.ops.TextStats.mitchellE8Sql("qp", divOp = "//")
       val two20 = 1L << shift
       s"""WITH tr AS (SELECT lang, ${tokensE("text")} AS w FROM documents
-         |            WHERE doc_id % 5 <> $f),
+         |            WHERE doc_id % 5 <> $f AND lang IS NOT NULL),
          |te AS (SELECT doc_id, lang, ${tokensE("text")} AS w FROM documents
          |       WHERE doc_id % 5 = $f),
          |cls AS (SELECT lang AS label, count(*) AS n_docs,

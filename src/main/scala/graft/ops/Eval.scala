@@ -2125,11 +2125,14 @@ object Eval {
       pmod(col(idCol), lit(k)).as("__f"),
       col(labelCol).as("__lab"),
       graft.functions.TextFns.tokens(col(textCol)).as("__w"))
+    // the training side drops null-label docs, as NaiveBayes.train does
+    // (a null label is no class); every doc of a fold is still scored
+    val labeled = base.where(col("__lab").isNotNull)
     // grid-bounded count tables (folds × labels × vocab), cut once
     // (dual-path: reliable checkpoint under a checkpoint dir, r16) —
     // three consumers below, released after the fold table lands
     val cntF = Lineage.cut(
-      base.select(col("__f"), col("__lab"), explode(col("__w")).as("t"))
+      labeled.select(col("__f"), col("__lab"), explode(col("__w")).as("t"))
         .groupBy("__f", "__lab", "t").agg(count(lit(1)).as("c")))
     val foldsDf = docs.sparkSession.range(folds)
       .select(col("id").as("__f"))
@@ -2161,7 +2164,7 @@ object Eval {
     // exactly) instead of re-tokenizing the corpus — one tokenize pass
     // fewer; the doc counts read only (fold, label), never the text.
     val clsF = Lineage.cut(
-      base.groupBy("__f", "__lab").agg(count(lit(1)).as("nd"))
+      labeled.groupBy("__f", "__lab").agg(count(lit(1)).as("nd"))
         .join(cntF.groupBy("__f", "__lab").agg(sum("c").as("nt")),
           Seq("__f", "__lab"), "left")
         .na.fill(0L, Seq("nt"))) // k × L rows

@@ -31,16 +31,18 @@ import org.apache.spark.sql.functions._
   * like the sketch and LM profile stores.
   *
   * Scale shape: training is two map-side-partial hash aggregations
-  * plus a distinct (one corpus scan). Scoring precomputes the
-  * per-(class, token) surprisal on the VOCAB-BOUNDED model grid
-  * (plus the per-class unseen-token constant), broadcasts it, and
-  * runs the token stream × L classes (L = class count, small)
-  * through one broadcast hash probe + integer add per row into a
-  * map-side-partial (doc, class) aggregation, then a per-doc window
-  * for the argmin — the corpus is never shuffled before the
-  * aggregation (beyond broadcastable vocabularies the count-table
-  * shuffle join is the fallback shape). No driver-side state
-  * anywhere.
+  * plus a distinct (one corpus scan each). Scoring reads each model
+  * table once: one global aggregation over the class and vocabulary
+  * rows gives the L-row class table (L = class count, small; priors
+  * and the unseen-token constant precomputed there), and the
+  * per-(class, token) surprisal is precomputed on the VOCAB-BOUNDED
+  * model grid and broadcast. The docs are scanned once and
+  * hash-partitioned by id (the only corpus shuffle); each token × L
+  * classes goes through one broadcast hash probe + integer add into
+  * the (doc, class) aggregation, and the per-doc argmin window runs
+  * on the same partitioning. At sf0.001 q256 plans 4 document scans
+  * and 13 Spark jobs. The grid broadcast is unconditional (ROADMAP:
+  * "unconditional broadcast hints"). No state outside the query plan.
   */
 object NaiveBayes {
 
@@ -50,11 +52,12 @@ object NaiveBayes {
   final case class NbModel(classCounts: DataFrame, tokenCounts: DataFrame,
                            vocab: DataFrame)
 
-  /** Train on a labeled corpus: one scan, two hash aggregations and a
-    * distinct, all map-side-partial.
+  /** Train on a labeled corpus: two hash aggregations and a
+    * distinct, all map-side-partial. Null-label docs are dropped: a
+    * null label is no class.
     */
   def train(docs: DataFrame, labelCol: String, textCol: String): NbModel = {
-    val toks = docs.select(col(labelCol).as("label"),
+    val toks = docs.where(col(labelCol).isNotNull).select(col(labelCol).as("label"),
       TextFns.tokens(col(textCol)).as("w"))
     val tok = toks.select(col("label"), explode(col("w")).as("t"))
     NbModel(
@@ -77,67 +80,75 @@ object NaiveBayes {
   private val Shift = TextStats.LmShift
   private val Two20 = s"CAST(${1L << Shift} AS BIGINT)"
 
+  /** −log2 of the smoothed p(t | class) in eighth-bits for a token
+    * seen `c` times in the class: m8(((T_l + V) << SHIFT) div (c + 1))
+    * − 8·SHIFT, over the `n_tokens` and `v` columns in scope.
+    */
+  private def surprisalE8(c: String): Column =
+    graft.functions.MitchellE8(expr(
+      s"greatest((CAST(n_tokens + v AS DECIMAL(38,0)) * ${1L << Shift}) " +
+        s"div ($c + 1), $Two20)")) - lit(8L * Shift)
+
   /** Score docs under a model: one row per doc — `(idCol, carry...,
     * pred, s_e8, margin_e8)` with `pred` the minimum-surprisal class
     * (ties to the smallest label), `s_e8` its total surprisal in
     * eighth-bits, and `margin_e8` the gap to the runner-up (0 when
     * the model has a single class). Unseen tokens smooth through
-    * c = 0; empty docs score on priors alone.
+    * c = 0; empty and null docs score on priors alone.
     */
   def score(docs: DataFrame, idCol: String, textCol: String, model: NbModel,
             carry: Seq[String] = Seq.empty): DataFrame = {
-    val v = model.vocab.agg(count(lit(1)).as("v"))
-    val nAll = model.classCounts.agg(sum("n_docs").as("n_all"))
-    val classes = model.classCounts
-      .crossJoin(broadcast(v)).crossJoin(broadcast(nAll))
-      .withColumn("qp", expr(
-        s"greatest((CAST(n_all AS DECIMAL(38,0)) * ${1L << Shift}) div n_docs, $Two20)"))
-      .withColumn("prior_e8",
-        graft.functions.MitchellE8(col("qp")) - lit(8L * Shift))
-      .select("label", "n_tokens", "v", "prior_e8")
-
-    val toks = docs.select(col(idCol).as("__id") +: carry.map(col) :+
-      TextFns.tokens(col(textCol)).as("w"): _*)
-    // r16 (the cvAuc scoring rationale): the surprisal arithmetic is a
-    // function of the VOCAB-BOUNDED model grid, not of the corpus — so
-    // the DECIMAL division + Mitchell log precompute per (class, token)
-    // MODEL row (m8tab; u8tab carries the c = 0 unseen-token constant
-    // per class, the identical expression with c pinned to 0), and the
-    // corpus-side scoring pass is one broadcast hash probe + an integer
-    // add per (token, class) row — no shuffle before the per-(doc,
-    // class) partial aggregation, where the old shape sort-merge-joined
-    // every (corpus token × class) row against the count table.
-    // Bit-identical: same q/m8 expressions over the same (c, n_tokens,
-    // v) values; the per-(doc, class) sum of longs is order-free.
-    // Broadcast bound: trained vocab × L rows (the scaladoc's
-    // "broadcast when the trained vocabulary is bounded" case); beyond
-    // broadcastable vocabularies the old shuffle join is the fallback.
+    // the per-class table (label, T_l, V, prior −log2(N_l/N), the
+    // unseen-token c = 0 surprisal), built once: ONE global aggregation
+    // over the class rows and the vocabulary rows (label null) yields
+    // the class list and V, and N folds from that list. The grid below
+    // prunes the prior, so a separate N aggregate would differ between
+    // the two consumers and be re-planned, scan included; this way both
+    // share the one aggregation stage and each model table is read once
+    val clsCols = model.classCounts.select("label", "n_docs", "n_tokens")
+    val classes = clsCols
+      .unionByName(model.vocab.select(clsCols.schema.map(f =>
+        lit(null).cast(f.dataType).as(f.name)): _*))
+      .agg(collect_list(when(col("label").isNotNull,
+          struct("label", "n_docs", "n_tokens"))).as("cls"),
+        count_if(col("label").isNull).as("v"))
+      .select(explode(col("cls")).as("c"), col("v"),
+        aggregate(col("cls.n_docs"), lit(0L), _ + _).as("n_all"))
+      .select(col("c.*"), col("v"), col("n_all"))
+      .select(col("label"), col("n_tokens"), col("v"),
+        (graft.functions.MitchellE8(expr(
+          s"greatest((CAST(n_all AS DECIMAL(38,0)) * ${1L << Shift}) div n_docs, $Two20)"))
+          - lit(8L * Shift)).as("prior_e8"),
+        surprisalE8("CAST(0 AS BIGINT)").as("u8v"))
+    // the surprisal of every seen (class, token) on the VOCAB-BOUNDED
+    // model grid (r16), so the corpus side is one hash probe and an
+    // integer add per (token, class) row. Broadcast bound: trained
+    // vocab × L rows, not bounded by construction. Without the hint
+    // q256 plans the same broadcast join at sf0.001 and sf0.01 (size
+    // estimate under the threshold) and a sort-merge join at sf0.1; a
+    // size-based choice is ROADMAP's open "unconditional broadcast
+    // hints" item.
     val m8tab = model.tokenCounts
       .join(broadcast(classes.select("label", "n_tokens", "v")), Seq("label"))
-      .withColumn("q", expr(
-        s"greatest((CAST(n_tokens + v AS DECIMAL(38,0)) * ${1L << Shift}) " +
-          s"div (c + 1), $Two20)"))
-      // native m8 (r15): one leading-zeros call per row instead of the
-      // ~130-branch CASE ladder; bit-equal (MitchellE8Spec)
-      .select(col("label"), col("t"),
-        (graft.functions.MitchellE8(col("q")) - lit(8L * Shift)).as("m8v"))
-    val u8tab = classes
-      .withColumn("c", lit(0L))
-      .withColumn("q", expr(
-        s"greatest((CAST(n_tokens + v AS DECIMAL(38,0)) * ${1L << Shift}) " +
-          s"div (c + 1), $Two20)"))
-      .select(col("label"),
-        (graft.functions.MitchellE8(col("q")) - lit(8L * Shift)).as("u8v"))
-    val perTok = toks.select(col("__id"), explode(col("w")).as("t"))
-      .crossJoin(broadcast(u8tab))
+      .select(col("label"), col("t"), surprisalE8("c").as("m8v"))
+    // ONE scan of the docs, hash-partitioned by id once so that the
+    // (doc, class) aggregation and the per-doc argmin window both run
+    // in place: each token (a null token for an empty or null doc) ×
+    // the L classes, one aggregation that adds the prior, the window.
+    // Bit-identical to summing per-token surprisals and the prior
+    // apart: the same q/m8 expressions over the same (c, n_tokens, v)
+    // values, and a sum of longs is order-free.
+    val byClass = docs
+      .select(col(idCol).as("__id") +: carry.map(col) :+ col(textCol).as("__text"): _*)
+      .repartition(col("__id"))
+      .select(col("__id") +: carry.map(col) :+
+        explode_outer(TextFns.tokens(col("__text"))).as("t"): _*)
+      .crossJoin(broadcast(classes.select("label", "prior_e8", "u8v")))
       .join(broadcast(m8tab), Seq("label", "t"), "left")
-      .groupBy("__id", "label")
-      .agg(sum(coalesce(col("m8v"), col("u8v"))).as("tok_e8"))
-
-    val byClass = toks.select(col("__id") +: carry.map(col): _*)
-      .crossJoin(broadcast(classes.select("label", "prior_e8")))
-      .join(perTok, Seq("__id", "label"), "left")
-      .withColumn("s_e8", col("prior_e8") + coalesce(col("tok_e8"), lit(0L)))
+      .groupBy(col("__id") +: carry.map(col) :+ col("label") :+ col("prior_e8"): _*)
+      .agg(sum(when(col("t").isNull, lit(0L))
+        .otherwise(coalesce(col("m8v"), col("u8v")))).as("tok_e8"))
+      .withColumn("s_e8", col("prior_e8") + col("tok_e8"))
     val w = Window.partitionBy("__id").orderBy(col("s_e8").asc, col("label").asc)
     byClass
       .withColumn("rnk", row_number().over(w))

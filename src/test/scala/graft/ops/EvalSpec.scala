@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSpec
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class EvalSpec extends SparkSpec {
@@ -757,6 +758,28 @@ class EvalSpec extends SparkSpec {
     }
   }
 
+  /** (fold, n_pos, n_neg, auc_x1e6) of the fused cvAuc and of the naive
+    * loop that trains and scores one NaiveBayes model per fold.
+    */
+  private def cvAucFusedAndNaive(docs: DataFrame, folds: Int)
+      : (Seq[(Long, Long, Long, Long)], Seq[(Long, Long, Long, Long)]) = {
+    def rows(df: DataFrame) = df.orderBy("fold")
+      .collect().map(r => (r.getAs[Long]("fold"), r.getAs[Long]("n_pos"),
+        r.getAs[Long]("n_neg"), r.getAs[Long]("auc_x1e6"))).toSeq
+    val naive = (0 until folds).map { f =>
+      val scored = NaiveBayes.trainScore(
+        docs.where(pmod(col("doc_id"), lit(folds)) =!= f),
+        docs.where(pmod(col("doc_id"), lit(folds)) === f),
+        "lang", "doc_id", "text", Seq("lang"))
+      Eval.rocAuc(
+        scored.select(lit(f.toLong).as("fold"),
+          expr("least(margin_e8 div 2, CAST(10 AS BIGINT))").as("conf_bin"),
+          (col("lang") === col("pred")).as("ok")),
+        "fold", "conf_bin", "ok")
+    }.reduce(_ unionByName _)
+    (rows(Eval.cvAuc(docs, "lang", "doc_id", "text", folds)), rows(naive))
+  }
+
   test("cvAuc: fused leave-one-fold-out pass ≡ naive per-fold train/score") {
     // r15 optimization pin: cvAuc derives each fold's complement model
     // from one global aggregation (global − own fold) instead of
@@ -771,25 +794,20 @@ class EvalSpec extends SparkSpec {
         else "alpha beta gamma shared alef bet tokens"
       (i, lab, text)
     }.toDF("doc_id", "lang", "text")
-    val folds = 3
-    val naive = (0 until folds).map { f =>
-      val scored = NaiveBayes.trainScore(
-        docs.where(pmod(col("doc_id"), lit(folds)) =!= f),
-        docs.where(pmod(col("doc_id"), lit(folds)) === f),
-        "lang", "doc_id", "text", Seq("lang"))
-      Eval.rocAuc(
-        scored.select(lit(f.toLong).as("fold"),
-          expr("least(margin_e8 div 2, CAST(10 AS BIGINT))").as("conf_bin"),
-          (col("lang") === col("pred")).as("ok")),
-        "fold", "conf_bin", "ok")
-    }.reduce(_ unionByName _).orderBy("fold")
-      .collect().map(r => (r.getAs[Long]("fold"), r.getAs[Long]("n_pos"),
-        r.getAs[Long]("n_neg"), r.getAs[Long]("auc_x1e6"))).toSeq
-    val fused = Eval.cvAuc(docs, "lang", "doc_id", "text", folds)
-      .orderBy("fold")
-      .collect().map(r => (r.getAs[Long]("fold"), r.getAs[Long]("n_pos"),
-        r.getAs[Long]("n_neg"), r.getAs[Long]("auc_x1e6"))).toSeq
+    val (fused, naive) = cvAucFusedAndNaive(docs, 3)
     assert(fused === naive)
+  }
+
+  test("cvAuc: a null-label doc trains no class and scores as a miss") {
+    val docs = Seq((0L, "a", "alpha alef"), (1L, "b", "beta bet"),
+      (2L, "a", "alpha apple"), (3L, "b", "beta banana"),
+      (4L, null, "beta beta beta"), (5L, "a", "alef aleph"),
+      (6L, "b", "bet banana"), (7L, "a", "alpha")).toDF("doc_id", "lang", "text")
+    val (fused, naive) = cvAucFusedAndNaive(docs, 2)
+    assert(fused === naive)
+    // every doc is scored once; the null-label doc 4 (fold 0) is a miss
+    assert(fused.map(r => r._2 + r._3).sum === 8L)
+    assert(fused.head._3 >= 1L)
   }
 
   test("chiResiduals: hand 2x2 standardized residuals share magnitude sqrt(chi2)") {

@@ -78,4 +78,55 @@ class NaiveBayesSpec extends SparkSpec {
       .map { case Row(id: Long, l: String, p: String, _, mg: Long) => (id, l, p, mg > 0) }
     assert(got.toSeq == Seq((1L, "en", "en", true), (2L, "fr", "fr", true)))
   }
+
+  private def scored(train: DataFrame, docs: DataFrame): Seq[(Long, String, Long, Long)] =
+    NaiveBayes.trainScore(train, docs, "lang", "doc_id", "text")
+      .orderBy("doc_id").collect().toSeq
+      .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
+
+  test("null-label training docs form no class") {
+    val train = Seq(("x", "a a"), (null, "b b b"), ("y", "c")).toDF("lang", "text")
+    val model = NaiveBayes.train(train, "lang", "text")
+    assert(model.classCounts.collect().map(_.getString(0)).toSet === Set("x", "y"))
+    val docs = Seq((1L, "b b"), (2L, "a"), (3L, "")).toDF("doc_id", "text")
+    assert(scored(train, docs).forall(_._2 != null))
+  }
+
+  test("a null-text doc scores on priors alone") {
+    val train = Seq(("x", "a"), ("x", "b"), ("y", "c")).toDF("lang", "text")
+    val docs = Seq((1L, null: String)).toDF("doc_id", "text")
+    val px = e8((3L << Shift) / 2L)
+    val py = e8(3L << Shift)
+    assert(scored(train, docs) === Seq((1L, "x", px, py - px)))
+  }
+
+  test("an exact s_e8 tie goes to the smaller label, margin 0") {
+    // symmetric classes: same prior, same T_l, and "q" unseen in both
+    val train = Seq(("z", "a"), ("b", "c")).toDF("lang", "text")
+    val docs = Seq((1L, "q"), (2L, "q q")).toDF("doc_id", "text")
+    val got = scored(train, docs)
+    assert(got.map(g => (g._1, g._2, g._4)) === Seq((1L, "b", 0L), (2L, "b", 0L)))
+  }
+
+  test("a one-class model scores every doc with margin 0") {
+    val train = Seq(("x", "a b"), ("x", "a")).toDF("lang", "text")
+    val docs = Seq((1L, "a"), (2L, "zz"), (3L, "")).toDF("doc_id", "text")
+    val got = scored(train, docs)
+    assert(got.map(g => (g._2, g._4)) === Seq(("x", 0L), ("x", 0L), ("x", 0L)))
+    // V=2, T_x=3, N=N_x=2: prior 0; "a" seen twice
+    assert(got.map(_._3) === Seq(e8((5L << Shift) / 3L), e8(5L << Shift), 0L))
+  }
+
+  test("q256 at sf0.001: at most 18 jobs and at most 6 document scans") {
+    val q = graft.Queries.all("q256_nb_auc")
+    graft.Tables.documents(spark, sf) // the schema memo is warm in the catalog
+    var df: DataFrame = null
+    val jobs = jobsIn { df = q(spark, sf); df.collect(); () }
+    assert(jobs <= 18, s"q256 ran $jobs jobs")
+    val scans = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+      .collectWithSubqueries(df.queryExecution.executedPlan) {
+        case s: org.apache.spark.sql.execution.FileSourceScanExec => s
+      }
+    assert(scans.nonEmpty && scans.size <= 6, s"q256 scans documents ${scans.size} times")
+  }
 }
