@@ -878,10 +878,10 @@ object OracleSql {
         |FROM agg ORDER BY lang""".stripMargin
 
     /** Twin of q114_nb_classifier: identical class/token/vocab counts
-      * over the 80% hold-in, the IDENTICAL generated Mitchell-log CASE
-      * (`//` spelling) for both the priors and the smoothed per-token
-      * surprisals, the same argmin tie-break (s_e8, label) and
-      * runner-up margin.
+      * over the 80% hold-in, the Mitchell-log CASE (`//` spelling;
+      * bit-equal to the plan's native log) for both the priors and
+      * the smoothed per-token surprisals, the same argmin tie-break
+      * (s_e8, label) and runner-up margin.
       */
     def nbClassifierSql: String = nbClassifierFoldSql(0)
 
@@ -1170,8 +1170,8 @@ object OracleSql {
     /** Twin of q120_dsir_scores: same hashed-unigram buckets
       * (md5-derived hash61 % 64), same add-one-smoothed inverted
       * ratios through HUGEINT (exact, like the LM twin's DECIMAL
-      * path), and the IDENTICAL generated Mitchell-log CASE — only
-      * the `//` spelling differs. Unseen buckets come from a
+      * path), and the Mitchell-log CASE (`//` spelling; bit-equal to
+      * the plan's native log). Unseen buckets come from a
       * range(64) left join exactly as the Spark side's `range(B)`.
       * Every SUM in a hashed projection is CAST to BIGINT
       * (OracleSql.scala:13's rule — DuckDB SUM(BIGINT) is HUGEINT).
@@ -1232,9 +1232,9 @@ object OracleSql {
         |FROM rk ORDER BY doc_id""".stripMargin
 
     /** Twin of q138_temperature_mix: same per-source token counts,
-      * the IDENTICAL generated Mitchell CASE (ratio form) and its
-      * IDENTICAL generated inverse (exp2E8 — both from the one
-      * emitter, `//` spelling), same normalization and hash filter.
+      * the Mitchell CASE (ratio form; bit-equal to the plan's native
+      * log) and the IDENTICAL generated inverse (exp2E8 — one emitter,
+      * `//` spelling), same normalization and hash filter.
       */
     def temperatureMixSql: String = {
       val shift = graft.ops.TextStats.LmShift
@@ -1288,9 +1288,10 @@ object OracleSql {
         |ORDER BY sd.doc_id""".stripMargin
 
     /** Twin of q124_pmi_collocations: same bigram counts (2-shingle
-      * strings), same self-marginals, the IDENTICAL Mitchell CASE
-      * over q = (c2·N << 20) // (c1l·c1r) through HUGEINT, same
-      * clamp, same (pmi DESC, bigram ASC) top-50.
+      * strings), same self-marginals, the Mitchell CASE (bit-equal to
+      * the plan's native log) over q = (c2·N << 20) // (c1l·c1r)
+      * through HUGEINT, same clamp, same (pmi DESC, bigram ASC)
+      * top-50.
       */
     def pmiCollocationsSql: String = {
       val shift = graft.ops.TextStats.LmShift
@@ -2183,11 +2184,12 @@ object OracleSql {
     }
 
     /** Twin of q207_survival_curve: same censoring rule, same
-      * lifetime-day reduction, the IDENTICAL emitted KM hazard term
-      * ([[graft.ops.Funnel.kmTermSql]] with `//`), same cumsums.
+      * lifetime-day reduction, the same KM hazard term
+      * ([[graft.ops.Funnel.kmTermSql]]; the Spark plan computes it with
+      * the native Mitchell log), same cumsums.
       */
     def survivalCurveSql: String = {
-      val term = graft.ops.Funnel.kmTermSql(divOp = "//")
+      val term = graft.ops.Funnel.kmTermSql()
       s"""WITH sp AS (SELECT user_id AS u,
          |              min(date_trunc('day', ts)) AS first_d,
          |              max(date_trunc('day', ts)) AS last_d
@@ -3131,11 +3133,12 @@ object OracleSql {
 
     /** Twin of q185_js_divergence: same (lang, word) counts, pair
       * grid over the union vocabulary via FULL JOIN, same smoothed
-      * ppm clamps, and the IDENTICAL emitted JSD term string
-      * ([[graft.ops.Profile.jsdTermSql]], `//` variant).
+      * ppm clamps, and the same JSD term
+      * ([[graft.ops.Profile.jsdTermSql]]; the Spark plan computes it
+      * with the native Mitchell log).
       */
     def jsDivergenceSql: String = {
-      val term = graft.ops.Profile.jsdTermSql(divOp = "//")
+      val term = graft.ops.Profile.jsdTermSql()
       s"""WITH tk AS (SELECT lang AS g, unnest(${tokensE("text")}) AS w
          |      FROM documents),
          |c AS (SELECT g, w, CAST(count(*) AS BIGINT) AS cnt
@@ -3231,13 +3234,13 @@ object OracleSql {
          |ORDER BY pred, rn""".stripMargin
 
     /** Twin of q181_discriminative_words: same per-doc-distinct
-      * document frequencies, the IDENTICAL emitted G² string
-      * (`//` divOp variant of [[graft.ops.TextStats.dunningG2Sql]] —
-      * shared text, zero drift), ranked by a per-class window where
-      * Spark uses the bounded heap.
+      * document frequencies, the same G² sum
+      * ([[graft.ops.TextStats.dunningG2Sql]]; the Spark plan computes
+      * it with the native Mitchell log), ranked by a per-class window
+      * where Spark uses the bounded heap.
       */
     def discriminativeWordsSql: String = {
-      val g2 = graft.ops.TextStats.dunningG2Sql(divOp = "//")
+      val g2 = graft.ops.TextStats.dunningG2Sql()
       s"""WITH tk AS (SELECT lang, doc_id,
          |        unnest(list_distinct(${tokensE("text")})) AS word
          |      FROM documents),
@@ -5587,10 +5590,9 @@ object OracleSql {
     /** Twin of q106_lm_surprisal: same bigram counts (c2 over the
       * 2-shingle string, c1 over the left token — parallel unnest of
       * the two aligned lists zips them in DuckDB), same V, and the
-      * IDENTICAL generated Mitchell-log CASE expression
-      * (TextStats.mitchellE8Sql with DuckDB's `//` spelling of integer
-      * division — every other token of the expression is shared with
-      * the Spark plan, so the integer arithmetic cannot drift).
+      * Mitchell-log CASE expression (TextStats.mitchellE8Sql with
+      * DuckDB's `//` spelling of integer division; `MitchellE8Spec`
+      * pins it bit-equal to the plan's native log).
       */
     def lmSurprisalSql: String = {
       val shift = graft.ops.TextStats.LmShift
@@ -8153,7 +8155,7 @@ object OracleSql {
     /** Twin of q236_kn_surprisal: the q106 bigram CTEs extended with
       * follower / left-context / type counts, the same rational KN
       * ratio through HUGEINT with the same [2^20, 2^62] clamp, and
-      * the IDENTICAL generated Mitchell-log CASE.
+      * the Mitchell-log CASE (bit-equal to the plan's native log).
       */
     def knSurprisalSql: String = {
       val shift = graft.ops.TextStats.LmShift
@@ -8669,7 +8671,7 @@ object OracleSql {
 
     /** Twin of q251_record_linkage: same nation blocks, same derived
       * equality keys, same exact Σp² u-ppm, same eighth-bit log2
-      * weights (L shared verbatim via divOp) and the same top-50
+      * weights (the log2E8Sql ladder; native in the plan) and the same top-50
       * (score, id) order.
       */
     def recordLinkageSql: String = {
@@ -10224,7 +10226,8 @@ object OracleSql {
       val m8a = graft.ops.TextStats.mitchellE8Sql("qa", divOp = "//")
       val m8b = graft.ops.TextStats.mitchellE8Sql("qb", divOp = "//")
       val m8d = graft.ops.TextStats.mitchellE8Sql("qd", divOp = "//")
-      val e8mu = graft.ops.TextStats.mitchellE8Long(mu << 20)
+      val e8mu = graft.ops.TextStats.mitchellLong(mu << 20,
+        graft.ops.TextStats.E8Bits)
       s"""WITH wd AS (SELECT doc_id, ${tokensE("text")} AS w FROM documents),
          |dlt AS (SELECT doc_id, CAST(len(w) AS BIGINT) AS dl FROM wd),
          |st AS (SELECT CAST(SUM(dl) AS BIGINT) AS tot FROM dlt),

@@ -2981,9 +2981,9 @@ object Queries {
     * 2×2 document-frequency contingency — the supervised complement
     * to q124's PMI, computed entirely in integer eighth-bit logs (χ²'s
     * N·(ad−bc)² would overflow at corpus scale; G² decomposes into
-    * per-count logs that never leave int64). The twin evaluates the
-    * SAME emitted G² SQL string (`//` divOp variant) — the q156
-    * shared-text discipline.
+    * per-count logs that never leave int64). The plan computes the
+    * logs with the native Mitchell expression; the twin evaluates the
+    * same sum as SQL ([[graft.ops.TextStats.dunningG2Sql]]).
     */
   val q181_discriminative_words: Q = (s, d) =>
     TextStats.discriminativeWords(Tables.documents(s, d), "doc_id", "text",

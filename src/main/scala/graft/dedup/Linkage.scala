@@ -18,9 +18,10 @@ import org.apache.spark.sql.functions._
   *    in exact ppm through DECIMAL(38);
   *  - mᵢ are caller-supplied ppm literals (the no-training-data
   *    convention; EM fitting would be nondeterministic);
-  *  - logs are [[graft.ops.TextStats.log2E8Sql]] eighth-bit integer
-  *    log2 — score_e8 = Σ (L(m) − L(u)) or (L(1e6−m) − L(1e6−u)),
-  *    shared verbatim with the DuckDB twin.
+  *  - logs are eighth-bit integer log2 (the native
+  *    [[graft.functions.MitchellE8.log2E8]]; the DuckDB twin uses the
+  *    equal [[graft.ops.TextStats.log2E8Sql]]) — score_e8 = Σ (L(m) −
+  *    L(u)) or (L(1e6−m) − L(1e6−u)).
   *
   * Reference scope note: kpipe has no entity-resolution surface; this
   * is part of the training-data-pipeline extension family (cross-source
@@ -30,9 +31,13 @@ object Linkage {
 
   /** One comparison field: a derived EQUALITY key (blocking-free
     * fields like "phone area code" or "balance $10 band") plus its
-    * assumed m ppm.
+    * assumed m ppm, strictly inside (0, 10⁶) so both m and 1 − m have
+    * a finite log.
     */
-  case class LinkField(name: String, key: Column, mPpm: Long)
+  case class LinkField(name: String, key: Column, mPpm: Long) {
+    require(mPpm >= 1 && mPpm <= 999999,
+      s"field $name: mPpm=$mPpm must lie in [1, 999999]")
+  }
 
   /** Score candidate pairs A×B (two sides of a split, e.g. two CRM
     * extracts) under Fellegi–Sunter with exact-u weights.
@@ -100,8 +105,7 @@ object Linkage {
     */
   private def weightsFrom(pop: DataFrame,
                           fields: Seq[LinkField]): DataFrame = {
-    import graft.ops.TextStats.log2E8Sql
-    def L(e: String) = log2E8Sql(e)
+    import graft.functions.MitchellE8.log2E8
     val n = pop.agg(count(lit(1)).as("__n"))
     val uCols = fields.map { f =>
       pop.groupBy(s"__k_${f.name}").agg(count(lit(1)).as("__c"))
@@ -110,11 +114,13 @@ object Linkage {
         .select(expr("greatest(CAST((1000000 * __s2) div " +
           "(CAST(__n AS DECIMAL(38,0)) * __n) AS BIGINT), 1)")
           .as(s"u_${f.name}"))
+        // every log argument is >= 1: mPpm and 10^6 - mPpm by
+        // LinkField's bound, u and 10^6 - u by their clamps
         .select(col(s"u_${f.name}"),
-          expr(s"${L(s"CAST(${f.mPpm} AS BIGINT)")} - ${L(s"u_${f.name}")}")
+          (log2E8(lit(f.mPpm)) - log2E8(col(s"u_${f.name}")))
             .as(s"wa_${f.name}"),
-          expr(s"${L(s"CAST(${1000000L - f.mPpm} AS BIGINT)")} - " +
-            s"${L(s"greatest(1000000 - u_${f.name}, 1)")}")
+          (log2E8(lit(1000000L - f.mPpm)) -
+            log2E8(greatest(lit(1000000L) - col(s"u_${f.name}"), lit(1L))))
             .as(s"wd_${f.name}"))
     }
     uCols.reduce(_.crossJoin(_)).localCheckpoint()

@@ -7,20 +7,22 @@ import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.types.{DataType, LongType}
 
-/** Mitchell eighth-bit log2 as ONE codegen'd expression — the native
-  * form of [[graft.ops.TextStats.mitchellE8Sql]]'s 43-branch CASE
-  * ladder (floor-log2 + pow2 floor + pow2/8, ~130 generated branches
-  * per call). A projection that inlines several of the SQL ladders
-  * (q181's Dunning G² carries 16 logs) blows janino's 64 KB method
-  * limit and silently drops the whole stage to interpreted execution;
-  * this expression compiles to one static call around
-  * `Long.numberOfLeadingZeros`. Values are bit-equal to the SQL
-  * emitter on the shared domain ([[graft.ops.TextStats.mitchellE8Long]]
-  * is the same arithmetic and is differentially specced against the
-  * CASE form; `MitchellE8Spec` pins this expression to both). The SQL
-  * emitter itself stays — it is the DuckDB twin's only option.
+/** Mitchell log2 with `bits` fraction bits ([[graft.ops.TextStats.E8Bits]]
+  * for eighth-bit, [[graft.ops.TextStats.E256Bits]] for 1/256-bit) as
+  * ONE codegen'd expression — the only way a Spark plan computes a
+  * Mitchell log. It compiles to one static call of
+  * [[graft.ops.TextStats.mitchellLong]] around
+  * `Long.numberOfLeadingZeros`. The SQL CASE ladders
+  * ([[graft.ops.TextStats.mitchellE8Sql]], `mitchellE256Sql`, ~130
+  * generated branches per call) are the DuckDB twin's form and the
+  * specs' reference: a projection that inlines several of them (q181's
+  * Dunning G² carries 16 logs) blows janino's 64 KB method limit and
+  * silently drops the whole stage to interpreted execution.
+  * `MitchellE8Spec` pins this expression to the ladder and the mirror at
+  * both resolutions. Below the domain floor 2^20 it returns the mirror's
+  * clamped value, where the ladder extrapolates.
   */
-case class MitchellE8(child: Expression) extends UnaryExpression {
+case class MitchellE8(child: Expression, bits: Int) extends UnaryExpression {
 
   override def checkInputDataTypes(): TypeCheckResult =
     if (child.dataType == LongType) TypeCheckResult.TypeCheckSuccess
@@ -28,23 +30,28 @@ case class MitchellE8(child: Expression) extends UnaryExpression {
       s"$prettyName requires a bigint input, got ${child.dataType.catalogString}")
 
   override def dataType: DataType = LongType
-  override def prettyName: String = "graft_mitchell_e8"
+  override def prettyName: String = s"graft_mitchell_e${1 << bits}"
 
   override protected def nullSafeEval(input: Any): Any =
-    graft.ops.TextStats.mitchellE8Long(input.asInstanceOf[Long])
+    graft.ops.TextStats.mitchellLong(input.asInstanceOf[Long], bits)
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev,
-      c => s"graft.ops.TextStats.mitchellE8Long($c)")
+      c => s"graft.ops.TextStats.mitchellLong($c, $bits)")
 
   override protected def withNewChildInternal(newChild: Expression): MitchellE8 =
     copy(child = newChild)
 }
 
 object MitchellE8 {
-  /** Column form. */
-  def apply(c: Column): Column =
-    GraftBridge.column(MitchellE8(GraftBridge.expression(c)))
+  /** Eighth-bit form over a bigint column — [[graft.ops.TextStats.mitchellE8Sql]]. */
+  def apply(c: Column): Column = of(c, graft.ops.TextStats.E8Bits)
+
+  /** 1/256-bit form over a bigint column — [[graft.ops.TextStats.mitchellE256Sql]]. */
+  def e256(c: Column): Column = of(c, graft.ops.TextStats.E256Bits)
+
+  private def of(c: Column, bits: Int): Column =
+    GraftBridge.column(MitchellE8(GraftBridge.expression(c), bits))
 
   /** Eighth-bit integer log2 of a POSITIVE count column — the native
     * form of [[graft.ops.TextStats.log2E8Sql]]:

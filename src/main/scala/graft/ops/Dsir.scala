@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.functions.{HashFns, TextFns}
+import graft.functions.{HashFns, MitchellE8, TextFns}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -12,9 +12,10 @@ import org.apache.spark.sql.functions._
   * than under the RAW distribution, then keep the top-weighted docs.
   *
   * The float log-likelihood ratio of the paper is replaced by the
-  * repo's integer-exact Mitchell-log discipline
-  * ([[TextStats.mitchellE8Sql]], eighth-bit units), so the whole
-  * surface is oracle-hashable:
+  * repo's integer-exact Mitchell log (eighth-bit units: the native
+  * [[graft.functions.MitchellE8]] in the plan, the equal
+  * [[TextStats.mitchellE8Sql]] ladder in the DuckDB twin), so the
+  * whole surface is oracle-hashable:
   *
   *   - features: token → 61-bit md5 hash → bucket `hash61(t) % B`
   *     (hashed unigrams; B bounded, default 256);
@@ -106,8 +107,7 @@ object Dsir {
     full
       .withColumn("q_t", expr(q("tot_t", "c_t")))
       .withColumn("q_r", expr(q("tot_r", "c_r")))
-      .withColumn("lam_e8", expr(
-        s"(${TextStats.mitchellE8Sql("q_r")}) - (${TextStats.mitchellE8Sql("q_t")})"))
+      .withColumn("lam_e8", MitchellE8(col("q_r")) - MitchellE8(col("q_t")))
       .select("b", "lam_e8")
   }
 

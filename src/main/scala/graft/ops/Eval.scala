@@ -1092,8 +1092,9 @@ object Eval {
     * itself — w₁ = E256((p₁·2²⁰) div p₀) − 256·20, and the mirrored
     * w₀ from q₀/q₁ ≥ 1 — keeps the error RELATIVE to the small
     * weight (≤ ~5% at these ratios, sign-safe). Both ratios go
-    * through the SAME [[graft.ops.TextStats.mitchellE256Sql]]
-    * emitter in both engines, so the fold is integer-identical; the
+    * through the same Mitchell e256 log in both engines (native in
+    * the plan, [[graft.ops.TextStats.mitchellE256Sql]] in the twin),
+    * so the fold is integer-identical; the
     * Wald boundaries 256·log₂((1−β)/α) and 256·log₂(β/(1−α)) are
     * emitted literals.
     * Decision: `accept_h1` / `accept_h0` / `continue`. p₀ is the
@@ -1134,7 +1135,7 @@ object Eval {
     */
   private def sprtFromCountsDf(counts: DataFrame, mdeRelPct: Int,
                                alphaPpm: Long, betaPpm: Long): DataFrame = {
-    import graft.ops.TextStats.mitchellE256Sql
+    import graft.functions.MitchellE8
     val tot = counts.agg(sum("n").cast("bigint").as("__nt"),
       sum("k").cast("bigint").as("__kt"))
     val (upE256, loE256) = sprtBoundsE256(alphaPpm, betaPpm)
@@ -1144,15 +1145,17 @@ object Eval {
       .withColumn("p1_ppm", expr(
         s"least(p0_ppm + ($mdeRelPct * p0_ppm) div 100, " +
           "CAST(999999 AS BIGINT))"))
-      // both ratios >= 1 by construction, so both scaled ratios sit
-      // in the Mitchell domain
+      // p1 >= p0 unless p0 = 10^6, so both scaled ratios sit in the
+      // Mitchell domain; at p0 = 10^6 (every trial a success) __r1 lies
+      // in (2^20 - 2^12, 2^20), where the ladder's truncating division
+      // also gives the floor value, and __r0 = 0 multiplies n - k = 0
       .withColumn("__r1", expr(
         s"(p1_ppm * ${1L << 20}) div p0_ppm"))
       .withColumn("__r0", expr(
         s"((1000000 - p0_ppm) * ${1L << 20}) div (1000000 - p1_ppm)"))
-      .withColumn("llr_e256", expr(
-        s"k * ((${mitchellE256Sql("__r1")}) - 5120) - " +
-          s"(n - k) * ((${mitchellE256Sql("__r0")}) - 5120)"))
+      .withColumn("llr_e256",
+        col("k") * (MitchellE8.e256(col("__r1")) - lit(5120L)) -
+          (col("n") - col("k")) * (MitchellE8.e256(col("__r0")) - lit(5120L)))
       .select(col("g"), col("n"), col("k"), col("p0_ppm"), col("p1_ppm"),
         col("llr_e256"),
         expr(s"CASE WHEN llr_e256 >= $upE256 THEN 'accept_h1' " +
@@ -2594,29 +2597,26 @@ object Eval {
     // H(b|a)/H(b) quotient — subtract it per term (the q333
     // discipline); num ≥ den throughout so the difference is ≥ 0
     val sh = 256 * graft.ops.TextStats.LmShift
-    def ratioLogE256(num: String, den: String): String =
-      s"(${graft.ops.TextStats.mitchellE256Sql(
-        s"(($num * ${shift}L) div ($den))")} - $sh)"
+    // w·log2(num/den) in e256 units over DECIMAL(38,0)
+    def wLogE256(w: String, num: String, den: String): org.apache.spark.sql.Column =
+      expr(s"CAST($w AS DECIMAL(38,0))") * (graft.functions.MitchellE8.e256(
+        expr(s"($num * ${shift}L) div ($den)")) - lit(sh.toLong))
     val c = cells.localCheckpoint() // marginals + joint off one pass
     val ra = c.groupBy("a").agg(sum("cnt").as("na"))
     val rb = c.groupBy("b").agg(sum("cnt").as("nb"))
     val tot = c.agg(sum("cnt").as("n"))
     // n·H(b|a) and n·H(a|b) in e256 units: Σ cnt·log2(marginal/cnt)
     val hba = c.join(broadcast(ra), Seq("a"))
-      .select(expr(s"CAST(cnt AS DECIMAL(38,0)) * " +
-        s"(${ratioLogE256("na", "cnt")})").as("t"))
+      .select(wLogE256("cnt", "na", "cnt").as("t"))
       .agg(sum("t").as("hba"))
     val hab = c.join(broadcast(rb), Seq("b"))
-      .select(expr(s"CAST(cnt AS DECIMAL(38,0)) * " +
-        s"(${ratioLogE256("nb", "cnt")})").as("t"))
+      .select(wLogE256("cnt", "nb", "cnt").as("t"))
       .agg(sum("t").as("hab"))
     val hb = rb.crossJoin(broadcast(tot))
-      .select(expr(s"CAST(nb AS DECIMAL(38,0)) * " +
-        s"(${ratioLogE256("n", "nb")})").as("t"))
+      .select(wLogE256("nb", "n", "nb").as("t"))
       .agg(sum("t").as("hb"))
     val ha = ra.crossJoin(broadcast(tot))
-      .select(expr(s"CAST(na AS DECIMAL(38,0)) * " +
-        s"(${ratioLogE256("n", "na")})").as("t"))
+      .select(wLogE256("na", "n", "na").as("t"))
       .agg(sum("t").as("ha"))
     tot.crossJoin(broadcast(hba)).crossJoin(broadcast(hab))
       .crossJoin(broadcast(hb)).crossJoin(broadcast(ha))

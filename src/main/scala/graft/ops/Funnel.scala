@@ -1139,16 +1139,26 @@ object Funnel {
   }
 
   /** The Kaplan–Meier hazard term in Mitchell eighth-bit log2 units,
-    * expecting columns (n_risk, d) in scope — shared verbatim with
-    * the oracle twin via the divOp parameter. Days with no event
+    * expecting columns (n_risk, d) in scope — [[survivalCurve]]'s
+    * term in the DuckDB twin's SQL (`//` spelling); the Spark plan
+    * builds it from the native log ([[kmTerm]]). Days with no event
     * contribute 0; the greatest(…, 1) clamp keeps the final
     * everyone-dies day defined (true S(t) = 0, log −∞) rather than
     * NULL-dropping it from the cumsum.
     */
-  def kmTermSql(divOp: String = "div"): String = {
-    def L(e: String) = graft.ops.TextStats.log2E8Sql(e, divOp)
+  def kmTermSql(): String = {
+    def L(e: String) = graft.ops.TextStats.log2E8Sql(e, "//")
     s"(CASE WHEN d > 0 THEN ${L("greatest(n_risk - d, 1)")} " +
       s"- ${L("n_risk")} ELSE CAST(0 AS BIGINT) END)"
+  }
+
+  /** [[kmTermSql]] over the native log. Both log arguments are ≥ 1:
+    * n_risk ≥ d > 0 on the evaluated branch, and the clamp. */
+  private def kmTerm: Column = {
+    def L(c: Column) = graft.functions.MitchellE8.log2E8(c)
+    when(col("d") > 0,
+      L(greatest(col("n_risk") - col("d"), lit(1L))) - L(col("n_risk")))
+      .otherwise(lit(0L))
   }
 
   /** Kaplan–Meier survival curve over user lifetimes — "how long do
@@ -1192,7 +1202,7 @@ object Funnel {
     byT.crossJoin(broadcast(n))
       .withColumn("n_risk",
         col("n_total") - coalesce(sum("a").over(wPrev), lit(0L)))
-      .withColumn("term", expr(kmTermSql()))
+      .withColumn("term", kmTerm)
       .withColumn("log_surv_e8", sum("term").over(wCum).cast("bigint"))
       .select(col("t").as("t_days"), col("n_risk"), col("d").as("n_events"),
         col("cen").as("n_censored"), col("log_surv_e8"))
@@ -1632,7 +1642,8 @@ object Funnel {
     * transition model — the anomalous-journey detector: each user's
     * consecutive event-type transitions are scored by
     * −log2 p(a→b) = L(out_total(a)) − L(count(a→b)) in eighth-bit
-    * integer log2 ([[graft.ops.TextStats.log2E8Sql]]), and the user
+    * integer log2 (native [[graft.functions.MitchellE8.log2E8]];
+    * tot ≥ cnt ≥ 1), and the user
     * gets the mean (surprisal_e8 = Σ div n). Bot sessions walk
     * high-probability loops and score LOW; scripted scanners and
     * broken clients hit rare transitions and score HIGH — same
@@ -1644,7 +1655,7 @@ object Funnel {
     */
   def sequenceSurprisal(df: DataFrame, userCol: String, typeCol: String,
                         tsCol: String, idCol: String): DataFrame = {
-    import graft.ops.TextStats.log2E8Sql
+    import graft.functions.MitchellE8.log2E8
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("__u").orderBy(col("__ts"), col("__id"))
     val pairs = df.select(col(userCol).as("__u"), col(typeCol).as("a"),
@@ -1656,7 +1667,7 @@ object Funnel {
     val tot = counts.groupBy("a").agg(sum("cnt").as("tot"))
     val scoredTrans = broadcast(counts.join(tot, "a")
       .select(col("a"), col("b"),
-        expr(s"${log2E8Sql("tot")} - ${log2E8Sql("cnt")}").as("surp_e8")))
+        (log2E8(col("tot")) - log2E8(col("cnt"))).as("surp_e8")))
     pairs.join(scoredTrans, Seq("a", "b"))
       .groupBy(col("__u").as(userCol))
       .agg(count(lit(1)).as("n_trans"),

@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.functions.HashFns
+import graft.functions.{HashFns, MitchellE8}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -142,7 +142,6 @@ object Mixture {
                        alphaNum: Int = 7, alphaDen: Int = 10): DataFrame = {
     require(alphaDen > 0 && alphaNum >= 0 && alphaNum <= alphaDen,
       s"need 0 <= alpha = $alphaNum/$alphaDen <= 1")
-    val m8 = TextStats.mitchellE8Sql("__q")
     val counts = df.select(col(srcCol).as("src"), tokens.as("__t"))
       .groupBy("src").agg(sum("__t").as("n"))
     val tot = counts.agg(sum("n").as("__tot"))
@@ -155,7 +154,8 @@ object Mixture {
           s"div greatest(n, CAST(1 AS BIGINT)), " +
           s"CAST(${1L << TextStats.LmShift} AS BIGINT)), " +
           s"CAST(${1L << 62} AS BIGINT)) AS BIGINT)"))
-      .withColumn("delta_e8", expr(s"$m8 - ${8 * TextStats.LmShift}"))
+      // __q is clamped to >= 2^20 above
+      .withColumn("delta_e8", MitchellE8(col("__q")) - lit(8L * TextStats.LmShift))
       .withColumn("__d", expr(TextStats.exp2E8Sql(
         s"(((${alphaDen - alphaNum}) * delta_e8) div $alphaDen) + " +
           s"${8 * TextStats.LmShift}")))

@@ -10,9 +10,10 @@ import org.apache.spark.sql.functions._
   * training-data pipeline (McCallum & Nigam 1998, "A Comparison of
   * Event Models for Naive Bayes Text Classification"), with every
   * logarithm replaced by Mitchell's integer log2 approximation in
-  * eighth-bit units ([[TextStats.mitchellE8Sql]]) so train AND
-  * inference are oracle-hashable — the same no-float discipline as
-  * the LM surprisal and BM25 operators.
+  * eighth-bit units (the native [[graft.functions.MitchellE8]]; the
+  * DuckDB twin uses the equal [[TextStats.mitchellE8Sql]] ladder) so
+  * train AND inference are oracle-hashable — the same no-float
+  * discipline as the LM surprisal and BM25 operators.
   *
   * Scoring minimizes total surprisal (= maximizes log-likelihood):
   * per token t and class l, with add-one smoothing,

@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import graft.functions.MitchellE8
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** ANALYZE-style table profiling — the data-quality dashboard scan a
@@ -163,8 +164,8 @@ object Profile {
         expr(s"CAST((greatest(p_ppm, q_ppm) * ${1L << TextStats.LmShift}) " +
           "div least(p_ppm, q_ppm) AS BIGINT)").as("q"))
       .select(col("g"), col("st"),
-        expr(s"abs(p_ppm - q_ppm) * (${TextStats.mitchellE8Sql("q")} " +
-          s"- ${8 * TextStats.LmShift})").as("term"))
+        (abs(col("p_ppm") - col("q_ppm")) * (MitchellE8(col("q")) -
+          lit(8L * TextStats.LmShift))).as("term"))
       .groupBy("g", "st")
       .agg(count(lit(1)).as("n_bins"), sum("term").as("__t"))
       .select(col("g").as(groupCol), col("st").as("n_rows"),
@@ -216,8 +217,8 @@ object Profile {
         expr(s"CAST((greatest(p_ppm, q_ppm) * ${1L << TextStats.LmShift}) " +
           "div least(p_ppm, q_ppm) AS BIGINT)").as("q"))
       .select(col("g"), col("st"),
-        expr(s"abs(p_ppm - q_ppm) * (${TextStats.mitchellE8Sql("q")} " +
-          s"- ${8 * TextStats.LmShift})").as("term"))
+        (abs(col("p_ppm") - col("q_ppm")) * (MitchellE8(col("q")) -
+          lit(8L * TextStats.LmShift))).as("term"))
       .groupBy("g", "st")
       .agg(count(lit(1)).as("n_bins"), sum("term").as("__t"))
       .select(col("g").as(groupCol), col("st").as("n_rows"),
@@ -842,13 +843,20 @@ object Profile {
     * p·(L(2p) − L(p+q)) + q·(L(2q) − L(p+q)) with
     * L = [[graft.ops.TextStats.log2E8Sql]] — over columns p_ppm /
     * q_ppm (Laplace-smoothed ≥ 1, so every log argument is ≥ 2).
-    * Shared VERBATIM between the Spark `expr` and the DuckDB twin via
-    * `divOp`.
+    * The DuckDB twin's SQL (`//` spelling); the Spark plan builds the
+    * same term from the native log ([[jsdTerm]]).
     */
-  def jsdTermSql(divOp: String = "div"): String = {
-    def L(e: String) = graft.ops.TextStats.log2E8Sql(e, divOp)
+  def jsdTermSql(): String = {
+    def L(e: String) = graft.ops.TextStats.log2E8Sql(e, "//")
     s"(p_ppm * (${L("2 * p_ppm")} - ${L("p_ppm + q_ppm")}) " +
       s"+ q_ppm * (${L("2 * q_ppm")} - ${L("p_ppm + q_ppm")}))"
+  }
+
+  /** [[jsdTermSql]] over the native log. */
+  private def jsdTerm: Column = {
+    def L(c: Column) = MitchellE8.log2E8(c)
+    val (p, q) = (col("p_ppm"), col("q_ppm"))
+    p * (L(lit(2L) * p) - L(p + q)) + q * (L(lit(2L) * q) - L(p + q))
   }
 
   /** Pairwise Jensen–Shannon divergence between per-group word
@@ -861,8 +869,9 @@ object Profile {
     * (mass on either side's exclusive words counts), and
     * JSD = ½Σ[p·ln(2p/(p+q)) + q·ln(2q/(p+q))] evaluates entirely in
     * [[graft.ops.TextStats.log2E8Sql]] eighth-bit integer logs —
-    * emitted as micro-bits (10⁻⁶ bit), exact across engines by the
-    * shared [[jsdTermSql]] string.
+    * emitted as micro-bits (10⁻⁶ bit), exact across engines: the
+    * twin's [[jsdTermSql]] and the plan's native [[jsdTerm]] compute
+    * the same integers.
     *
     * Scale shape: ONE (group, word) count reduction (map-side
     * partial, checkpointed — every downstream leg reuses it), a
@@ -898,7 +907,7 @@ object Profile {
           "div (ta + nu) AS BIGINT), CAST(1 AS BIGINT))").as("p_ppm"),
         expr("greatest(CAST((CAST(cb + 1 AS DECIMAL(38,0)) * 1000000) " +
           "div (tb + nu) AS BIGINT), CAST(1 AS BIGINT))").as("q_ppm"))
-      .withColumn("term", expr(jsdTermSql()))
+      .withColumn("term", jsdTerm)
       .groupBy("ga", "gb")
       .agg(max("nu").as("n_words"), sum("term").as("__s"))
       .select(col("ga").as("lang_a"), col("gb").as("lang_b"),
@@ -1226,7 +1235,7 @@ object Profile {
     * model training.
     *
     * Integer-exact throughout: WOE in eighth-bit log2 via the
-    * Mitchell emitter with +1 Laplace smoothing,
+    * Mitchell log with +1 Laplace smoothing,
     * q = ((pos+1)·(N+1)·2^20) div ((neg+1)·(P+1)) — the ratio is
     * taken larger-over-smaller and signed by a CASE, so the Mitchell
     * domain floor is never hit and NO negative integer division
@@ -1274,7 +1283,6 @@ object Profile {
     * [[woeIvFromCounts]] so batch and streaming cannot drift.
     */
   private def woeIvFromCountsDf(counts: DataFrame): DataFrame = {
-    val m8 = (q: String) => graft.ops.TextStats.mitchellE8Sql(q, "div")
     val sh = 1L << graft.ops.TextStats.LmShift
     val tot = counts.groupBy("feature")
       .agg(sum("n_pos").as("p_tot"), sum("n_neg").as("n_tot"))
@@ -1283,9 +1291,11 @@ object Profile {
         expr("CAST(n_pos + 1 AS DECIMAL(38,0)) * (n_tot + 1)"))
       .withColumn("qneg",
         expr("CAST(n_neg + 1 AS DECIMAL(38,0)) * (p_tot + 1)"))
-      .withColumn("woe_e8", expr(
-        s"CAST(CASE WHEN qpos >= qneg THEN ${m8(s"((qpos * $sh) div qneg)")} - 160 " +
-          s"ELSE -(${m8(s"((qneg * $sh) div qpos)")} - 160) END AS BIGINT)"))
+      // each branch takes the larger-over-smaller ratio, so the log
+      // argument is >= 2^20
+      .withColumn("woe_e8", when(col("qpos") >= col("qneg"),
+          MitchellE8(expr(s"(qpos * $sh) div qneg")) - lit(160L))
+        .otherwise(-(MitchellE8(expr(s"(qneg * $sh) div qpos")) - lit(160L))))
       .withColumn("dp_ppm", expr(
         "(1000000 * n_pos) div greatest(p_tot, 1) - " +
           "(1000000 * n_neg) div greatest(n_tot, 1)"))
@@ -1496,11 +1506,12 @@ object Profile {
     * within-group (spread inside each) — the only standard inequality
     * index that decomposes additively, which is exactly what a
     * mixture owner needs ("is revenue concentration a nation story or
-    * a per-customer story"). Integer-exact via the shared Mitchell
-    * e256 log emitter (the q155 PSI discipline at 32× finer
-    * quantization): every log is a RATIO log — q = (greatest·2²⁰) div
-    * least, lr = ±(m256(q) − 256·20) — so both engines evaluate the
-    * identical piecewise-linear surface. Per group:
+    * a per-customer story"). Integer-exact via the Mitchell e256 log
+    * (the q155 PSI discipline at 32× finer quantization; native in
+    * the plan, the SQL ladder in the twin): every log is a RATIO log
+    * — q = (greatest·2²⁰) div least ≥ 2²⁰, lr = ±(m256(q) − 256·20)
+    * — so both engines evaluate the identical piecewise-linear
+    * surface. Per group:
     * within_me256 = (1000·Σᵢ xᵢ·lr(xᵢ, x̄_g)) div X_g and
     * between_me256 = (1000·X_g·lr(x̄_g, x̄)) div X, in milli-(1/256
     * log2) units — value-weighted BEFORE the divide, so no per-unit
@@ -1508,14 +1519,13 @@ object Profile {
     * the documented e256 quantization. Zero/negative values drop
     * (Theil's domain).
     *
-    * Scale shape: one unit scan with the codegen'd log CASE, one
+    * Scale shape: one unit scan with the codegen'd native log, one
     * (group) reduction, a broadcast group-means table (group domain
     * bounded — the per-group-report contract) and a one-row totals
     * broadcast.
     */
   def theilDecomposition(df: DataFrame, groupCol: String,
                          valueExpr: org.apache.spark.sql.Column): DataFrame = {
-    val sh = 256 * graft.ops.TextStats.LmShift
     val unit = df.select(col(groupCol).cast("string").as("g"),
         valueExpr.cast("bigint").as("x"))
       .where(col("x") > 0)
@@ -1525,17 +1535,13 @@ object Profile {
     val tot = pg.agg(sum("ng").as("n"), sum("xg").as("x"))
     val mg = pg.select(col("g"), col("ng"), col("xg"),
       expr("xg div ng").as("mg"))
-    // ratio column FIRST, then one Mitchell CASE over it (the q155
-    // discipline — splicing the emitter around a compound expression
-    // would replicate it per CASE branch)
+    // ratio column FIRST (greatest·2^20 div least, so >= 2^20), then
+    // the native e256 log over it
     val shift = 1L << graft.ops.TextStats.LmShift
     val within = unit.join(broadcast(mg.select("g", "mg")), Seq("g"))
       .withColumn("__q",
         expr(s"(greatest(x, mg) * ${shift}L) div least(x, mg)"))
-      .withColumn("__lr", expr(
-        s"CASE WHEN x >= mg THEN " +
-          s"(${graft.ops.TextStats.mitchellE256Sql("__q")} - $sh) " +
-          s"ELSE -(${graft.ops.TextStats.mitchellE256Sql("__q")} - $sh) END"))
+      .withColumn("__lr", signedLogE256(col("x") >= col("mg"), col("__q")))
       .select(col("g"),
         expr("CAST(x AS DECIMAL(38,0)) * __lr").as("t"))
       .groupBy("g").agg(sum("t").as("tw"))
@@ -1544,10 +1550,7 @@ object Profile {
       .withColumn("__m", expr("x div n"))
       .withColumn("__qb",
         expr(s"(greatest(mg, __m) * ${shift}L) div least(mg, __m)"))
-      .withColumn("__lrb", expr(
-        s"CASE WHEN mg >= __m THEN " +
-          s"(${graft.ops.TextStats.mitchellE256Sql("__qb")} - $sh) " +
-          s"ELSE -(${graft.ops.TextStats.mitchellE256Sql("__qb")} - $sh) END"))
+      .withColumn("__lrb", signedLogE256(col("mg") >= col("__m"), col("__qb")))
       .select(col("g").as(groupCol),
         col("ng").cast("bigint").as("n_units"),
         col("xg").cast("bigint").as("total_value"),
@@ -1563,6 +1566,14 @@ object Profile {
         expr("CAST(CASE WHEN tw >= 0 THEN (1000 * tw) div xg " +
           "ELSE -((-(1000 * tw)) div xg) END AS BIGINT)")
           .as("within_me256"))
+  }
+
+  /** ±(m256(q) − 256·SHIFT), the sign taken from `pos`: the signed
+    * ratio log of [[theilDecomposition]]'s terms.
+    */
+  private def signedLogE256(pos: Column, q: Column): Column = {
+    val lr = MitchellE8.e256(q) - lit(256L * TextStats.LmShift)
+    when(pos, lr).otherwise(-lr)
   }
 
   def concentration(df: DataFrame, groupCol: String,

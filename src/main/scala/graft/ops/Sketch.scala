@@ -466,9 +466,8 @@ object Sketch {
   /** Union estimate ×10 over (u_n, u_kth) columns as a generated SQL
     * string — div-parameterized so the Spark plan (`div`, DECIMAL)
     * and the DuckDB twin (`//`, HUGEINT) evaluate the IDENTICAL
-    * arithmetic from ONE emitter (the mitchellE8Sql discipline; a
-    * hand-mirrored copy is exactly where an integer-division drift
-    * would hide).
+    * arithmetic from ONE emitter (a hand-mirrored copy is exactly
+    * where an integer-division drift would hide).
     */
   def kmvUnionEstX10Sql(k: Int, divOp: String = "div"): String =
     s"CAST(CASE WHEN u_n < $k THEN u_n * 10 " +

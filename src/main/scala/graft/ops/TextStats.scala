@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.functions.TextFns
+import graft.functions.{MitchellE8, TextFns}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -74,24 +74,32 @@ object TextStats {
     */
   final val LmShift = 20
 
+  /** Fraction bits of the two Mitchell log resolutions: eighth-bit
+    * (e8) and 1/256-bit (e256).
+    */
+  final val E8Bits = 3
+  final val E256Bits = 8
+
   /** floor(log2(q)) for q in [2^20, 2^63) as an explicit threshold
     * CASE — NO engine log/bin function anywhere, so the value (and its
     * output format) cannot drift between Spark and the oracle engine.
-    * Kept as a generated SQL string so the Spark plan and the DuckDB
-    * twin evaluate the IDENTICAL expression.
+    * Part of the SQL Mitchell ladder, which the DuckDB twin evaluates
+    * and the specs use as the reference for the native form.
     */
   def floorLog2CaseSql(qE: String): String =
     "(CASE " + (62 to LmShift by -1)
       .map(i => s"WHEN $qE >= ${1L << i} THEN $i").mkString(" ") +
       s" ELSE ${LmShift} END)"
 
-  /** 2^floor(log2(q)) by the same threshold CASE (literal values — no
-    * shift-by-column, whose typing differs across engines).
+  /** 2^(floor(log2(q)) − down) by the same threshold CASE (literal
+    * values — no shift-by-column, whose typing differs across
+    * engines): `down` = 0 is the power-of-two floor p itself, and
+    * `down` = b its exact 2^−b fraction (valid for b ≤ SHIFT).
     */
-  def pow2FloorCaseSql(qE: String): String =
+  def pow2FloorCaseSql(qE: String, down: Int = 0): String =
     "(CASE " + (62 to LmShift by -1)
-      .map(i => s"WHEN $qE >= ${1L << i} THEN CAST(${1L << i} AS BIGINT)")
-      .mkString(" ") + s" ELSE CAST(${1L << LmShift} AS BIGINT) END)"
+      .map(i => s"WHEN $qE >= ${1L << i} THEN CAST(${1L << (i - down)} AS BIGINT)")
+      .mkString(" ") + s" ELSE CAST(${1L << (LmShift - down)} AS BIGINT) END)"
 
   /** Mitchell's logarithm approximation (Mitchell 1962) in EIGHTH-bit
     * units, integer end to end: with e = floor(log2 q) and p = 2^e,
@@ -99,25 +107,64 @@ object TextStats {
     * between powers of two, monotone, max error ~0.086 bit. Exact
     * integer products and divisions, so it is bit-identical on any
     * engine — the same no-float discipline as the sketch estimates.
-    * Only the integer-division SPELLING differs per engine (`div` in
-    * Spark SQL, `//` in DuckDB) — pass `divOp` accordingly; every
-    * other token of the generated expression is shared.
+    *
+    * This SQL ladder (~130 generated branches per call) is the DuckDB
+    * twin's form and the specs' reference; every Spark plan computes
+    * the same value with the native [[graft.functions.MitchellE8]]
+    * expression, since a projection inlining several ladders overflows
+    * janino's 64 KB method limit. Only the integer-division SPELLING
+    * differs per engine (`div` in Spark SQL, `//` in DuckDB) — pass
+    * `divOp` accordingly. Domain [2^20, 2^63): the ladder does NOT
+    * clamp below 2^20 (it extrapolates: q = 0 gives 152), while the
+    * native form and [[mitchellLong]] clamp to the floor (160).
     */
-  /** 2^(floor(log2(q)) − 3) by the same threshold CASE — the exact
-    * eighth of [[pow2FloorCaseSql]] (valid because SHIFT ≥ 3).
+  def mitchellE8Sql(qE: String, divOp: String = "div"): String =
+    mitchellSql(qE, E8Bits, divOp)
+
+  /** Mitchell log2 in 1/256-bit units — [[mitchellE8Sql]] with 32×
+    * finer interpolation, for surfaces where the ratio of interest is
+    * SMALL (an SPRT per-trial weight at a 10% MDE is 0.14 bits ≈ 1
+    * eighth-bit — below e8 resolution — but 35 e256 units). Same
+    * division-only no-overflow form, same [2^20, 2^63) domain, same
+    * twin-and-spec role; the piecewise-linear interpolation error
+    * (≤ ~0.086 bit) is unchanged — only the QUANTIZATION is finer.
     */
-  def pow2FloorDiv8CaseSql(qE: String): String =
-    "(CASE " + (62 to LmShift by -1)
-      .map(i => s"WHEN $qE >= ${1L << i} THEN CAST(${1L << (i - 3)} AS BIGINT)")
-      .mkString(" ") + s" ELSE CAST(${1L << (LmShift - 3)} AS BIGINT) END)"
+  def mitchellE256Sql(qE: String, divOp: String = "div"): String =
+    mitchellSql(qE, E256Bits, divOp)
+
+  /** 2^bits·e + (q − p) div (p >> bits): (q − p)·2^bits div p exactly
+    * (p is a power of two ≥ 2^20, so p >> bits is exact and floor
+    * commutes) — the division-only form never multiplies, so no q in
+    * [2^20, 2^63) can overflow the interpolation term.
+    */
+  private def mitchellSql(qE: String, bits: Int, divOp: String): String =
+    s"(${1 << bits} * ${floorLog2CaseSql(qE)} + " +
+      s"($qE - ${pow2FloorCaseSql(qE)}) $divOp ${pow2FloorCaseSql(qE, bits)})"
+
+  /** Scala mirror of the Mitchell log with `bits` fraction bits
+    * ([[E8Bits]] ≡ [[mitchellE8Sql]], [[E256Bits]] ≡
+    * [[mitchellE256Sql]]): (e << bits) + (q − p) div (p >> bits).
+    * The native [[graft.functions.MitchellE8]] expression calls it
+    * from generated code with a constant `bits`, and executor-side
+    * imperative code (streaming state) calls it directly. Inputs below
+    * 2^20 clamp to the domain floor; `MitchellE8Spec` pins it
+    * bit-equal to the ladder on the domain.
+    */
+  def mitchellLong(q: Long, bits: Int): Long = {
+    val qc = math.max(q, 1L << LmShift)
+    val e = 63 - java.lang.Long.numberOfLeadingZeros(qc)
+    val p = 1L << e
+    (e.toLong << bits) + (qc - p) / (p >> bits)
+  }
 
   /** Inverse Mitchell: 2^(m/8) for integer eighth-bit m, as the
     * exact piecewise-linear inverse of [[mitchellE8Sql]] — with
     * e = m div 8 and f = m mod 8, 2^(m/8) ≈ 2^e·(1 + f/8) =
     * (8 + f)·2^(e−3), exact integers throughout. Emitted as a
     * threshold CASE over literal 2^(e−3) multipliers (never a
-    * shift-by-column, whose typing differs across engines). Same
-    * one-emitter discipline as the forward log.
+    * shift-by-column, whose typing differs across engines). Unlike
+    * the forward log it has no native form: Spark plans and the
+    * DuckDB twin share this one emitter.
     *
     * Domain [24, 479]: below 24 the ELSE arm returns 1; m is clamped
     * to 479 BEFORE splitting into e/f, so at saturation the function
@@ -136,89 +183,28 @@ object TextStats {
     s"(CASE $cases ELSE CAST(1 AS BIGINT) END)"
   }
 
-  /** 2^(floor(log2(q)) − 8) by the same threshold CASE — the exact
-    * 1/256 of [[pow2FloorCaseSql]] (valid because SHIFT ≥ 8).
+  /** The BM25 scoring expressions — shared VERBATIM by [[bm25]] and
+    * [[bm25Probe]] so the per-query path and the persisted-index path
+    * cannot drift in the arithmetic. Operate over columns (tf, df,
+    * dl, n_docs, avdl).
     */
-  def pow2FloorDiv256CaseSql(qE: String): String =
-    "(CASE " + (62 to LmShift by -1)
-      .map(i => s"WHEN $qE >= ${1L << i} THEN CAST(${1L << (i - 8)} AS BIGINT)")
-      .mkString(" ") + s" ELSE CAST(${1L << (LmShift - 8)} AS BIGINT) END)"
-
-  /** Mitchell log2 in 1/256-bit units — [[mitchellE8Sql]] with 32×
-    * finer interpolation, for surfaces where the ratio of interest is
-    * SMALL (an SPRT per-trial weight at a 10% MDE is 0.14 bits ≈ 1
-    * eighth-bit — below e8 resolution — but 35 e256 units). Same
-    * division-only no-overflow form, same [2^20, 2^63) domain, same
-    * one-emitter discipline; the piecewise-linear interpolation error
-    * (≤ ~0.086 bit) is unchanged — only the QUANTIZATION is finer.
-    */
-  def mitchellE256Sql(qE: String, divOp: String = "div"): String = {
-    val e = floorLog2CaseSql(qE)
-    val p = pow2FloorCaseSql(qE)
-    val p256 = pow2FloorDiv256CaseSql(qE)
-    s"(256 * $e + ($qE - $p) $divOp $p256)"
+  private def bm25QExpr: String = {
+    val two20 = s"CAST(${1L << LmShift} AS BIGINT)"
+    s"greatest((CAST((2 * n_docs) - (2 * df) + 1 AS DECIMAL(38,0)) " +
+      s"* ${1L << LmShift}) div ((2 * df) + 1), $two20)"
   }
+  private val Bm25TfnExpr =
+    "(22000 * tf * avdl) div ((10 * tf * avdl) + (3 * avdl) + (9 * dl))"
 
-  /** Scala mirror of [[mitchellE256Sql]] — same domain and clamp
-    * convention as [[mitchellE8Long]].
-    */
-  def mitchellE256Long(q: Long): Long = {
-    val qc = math.max(q, 1L << LmShift)
-    val e = 63 - java.lang.Long.numberOfLeadingZeros(qc)
-    val p = 1L << e
-    256L * e + (qc - p) / (p >> 8)
-  }
+  private def bm25Score(tfRows: DataFrame): DataFrame =
+    tfRows
+      .withColumn("q", expr(bm25QExpr))
+      .withColumn("idf_e8", MitchellE8(col("q")) - lit(8L * LmShift))
+      .withColumn("tfn_x1000", expr(Bm25TfnExpr))
+      .groupBy("__id")
+      .agg(sum(expr("idf_e8 * tfn_x1000")).as("bm25_x"),
+        count(lit(1)).as("n_terms_hit"), min(col("dl")).as("n_tokens"))
 
-  def mitchellE8Sql(qE: String, divOp: String = "div"): String = {
-    val e = floorLog2CaseSql(qE)
-    val p = pow2FloorCaseSql(qE)
-    val p8 = pow2FloorDiv8CaseSql(qE)
-    // (q − p)·8 div p ≡ (q − p) div (p/8) exactly (p is a power of two
-    // ≥ 2^20, so p/8 is exact and floor commutes) — the division-only
-    // form never multiplies, so no q in [2^20, 2^63) can overflow the
-    // interpolation term ((q − p)·8 would wrap past q > p + 2^60)
-    s"(8 * $e + ($qE - $p) $divOp $p8)"
-  }
-
-  /** Scala mirror of [[mitchellE8Sql]] for executor-side imperative
-    * code (streaming state) — same domain [2^20, 2^63), same
-    * division-only interpolation, differentially specced bit-equal
-    * to the SQL emitter. Inputs below 2^20 clamp to the domain floor
-    * (the SQL callers pre-clamp the same way).
-    */
-  def mitchellE8Long(q: Long): Long = {
-    val qc = math.max(q, 1L << LmShift)
-    val e = 63 - java.lang.Long.numberOfLeadingZeros(qc)
-    val p = 1L << e
-    8L * e + (qc - p) / (p >> 3)
-  }
-
-  /** Corpus-trained bigram language-model surprisal per document —
-    * the LM-quality signal of a CCNet-style filtering stage (Wenzek et
-    * al. 2020), with the float perplexity replaced by an integer-exact
-    * surrogate so the whole surface is oracle-hashable:
-    *
-    * p(w2|w1) = (c2+1)/(c1+V)  (add-one smoothing; c2 = corpus bigram
-    * count, c1 = corpus left-context count, V = vocabulary size), and
-    * per-bigram surprisal −log2 p ≈ (m8(q) − 8·SHIFT)/8 bits with
-    * q = ((c1+V) << SHIFT) div (c2+1) and m8 = [[mitchellE8Sql]].
-    * c1+V ≥ c2+1 always (every bigram occurrence contributes its left
-    * token to c1), so q ≥ 2^SHIFT and surprisal is ≥ 0.
-    *
-    * Returns one row per input doc: (idCol, carry..., n_bigrams,
-    * surprisal_e8 = Σ per-bigram eighth-bits, avg_bits_x10 =
-    * 10·surprisal_e8 div (8·n_bigrams)) — high average surprisal =
-    * improbable text under the corpus's own statistics = the cut
-    * candidate. Docs with < 2 tokens emit (0, 0, 0).
-    *
-    * Scale shape: the classic distributed LM-count job — one scan
-    * explodes bigrams (map-side), c2/c1 are hash aggregations on the
-    * bigram/token string with map-side partials, scoring re-joins the
-    * bigram stream to the two count tables by key (sort-merge at 100 TB
-    * corpus scale; Catalyst broadcasts them when small), V rides in as
-    * a broadcast single-row cross join. No driver-side state, no
-    * window, nothing unbounded per key.
-    */
   /** Integer-exact BM25 retrieval scoring (Robertson & Zaragoza 2009,
     * "The Probabilistic Relevance Framework: BM25 and Beyond") — the
     * seed-set relevance miner of a retrieval-based curation stage
@@ -244,28 +230,6 @@ object TextStats {
     * broadcast tables onto the tf rows; top-k is a TakeOrdered (O(k)
     * per partition, no global sort materialization).
     */
-  /** The BM25 scoring expressions — shared VERBATIM by [[bm25]] and
-    * [[bm25Probe]] so the per-query path and the persisted-index path
-    * cannot drift in the arithmetic. Operate over columns (tf, df,
-    * dl, n_docs, avdl).
-    */
-  private def bm25QExpr: String = {
-    val two20 = s"CAST(${1L << LmShift} AS BIGINT)"
-    s"greatest((CAST((2 * n_docs) - (2 * df) + 1 AS DECIMAL(38,0)) " +
-      s"* ${1L << LmShift}) div ((2 * df) + 1), $two20)"
-  }
-  private val Bm25TfnExpr =
-    "(22000 * tf * avdl) div ((10 * tf * avdl) + (3 * avdl) + (9 * dl))"
-
-  private def bm25Score(tfRows: DataFrame): DataFrame =
-    tfRows
-      .withColumn("q", expr(bm25QExpr))
-      .withColumn("idf_e8", expr(s"${mitchellE8Sql("q")} - ${8 * LmShift}"))
-      .withColumn("tfn_x1000", expr(Bm25TfnExpr))
-      .groupBy("__id")
-      .agg(sum(expr("idf_e8 * tfn_x1000")).as("bm25_x"),
-        count(lit(1)).as("n_terms_hit"), min(col("dl")).as("n_tokens"))
-
   def bm25(docs: DataFrame, idCol: String, textCol: String,
            terms: DataFrame, termCol: String, carry: Seq[String] = Seq.empty,
            k: Int = 100): DataFrame = {
@@ -375,10 +339,10 @@ object TextStats {
     * decomposed rank-exactly into matched-term gains plus a
     * length-only prior: Σ_{hits} log(1 + tf·T/(μ·cf)) +
     * |q|·log(μ/(dl+μ)). Everything is integer eighth-bit logs
-    * ([[mitchellE8Sql]], the one-emitter discipline): the gain is
+    * ([[mitchellE8Sql]]'s values, native in the plan): the gain is
     * E8((tf·T + μ·cf)·2¹⁰) − E8(μ·cf·2¹⁰) and the prior is
     * |q|·(E8(μ·2²⁰) − E8((dl+μ)·2²⁰)), with the μ·2²⁰ term a Scala
-    * [[mitchellE8Long]] literal (μ is a power of two so it's exact).
+    * [[mitchellLong]] literal (μ is a power of two so it's exact).
     *
     * Scale shape: identical to [[bm25]] — postings join a broadcast
     * term list, cf/tf are one reduction each, corpus totals and |q|
@@ -428,24 +392,25 @@ object TextStats {
     */
   private def qlScore(tf: DataFrame, cf: DataFrame, dl: DataFrame,
                       nq: DataFrame, mu: Long, k: Int): DataFrame = {
-    require(mu > 0 && (mu & (mu - 1)) == 0,
-      s"mu must be a power of two, got $mu")
+    // mu ≥ 2^10 keeps every log argument in the Mitchell domain:
+    // qb = mu·cf·2^10 ≥ 2^20 (cf ≥ 1 per hit term), qa ≥ qb, and
+    // qd = (dl + mu)·2^20 ≥ 2^20
+    require(mu >= 1024 && (mu & (mu - 1)) == 0,
+      s"mu must be a power of two >= 1024, got $mu")
     val stats = dl.agg(sum("dl").as("tot"))
     val hits = tf.join(broadcast(cf), "t")
       .crossJoin(broadcast(stats))
       .withColumn("qa", expr(s"(tf * tot + $mu * cf) * 1024"))
       .withColumn("qb", expr(s"($mu * cf) * 1024"))
-      .withColumn("__gain", expr(
-        s"${mitchellE8Sql("qa")} - ${mitchellE8Sql("qb")}"))
+      .withColumn("__gain", MitchellE8(col("qa")) - MitchellE8(col("qb")))
       .groupBy("__id")
       .agg(sum("__gain").as("__hit"), count(lit(1)).as("n_terms_hit"))
-    val e8mu = mitchellE8Long(mu << 20)
+    val e8mu = mitchellLong(mu << 20, E8Bits)
     dl.join(hits, Seq("__id"), "left")
       .crossJoin(broadcast(nq))
       .withColumn("qd", expr(s"(dl + $mu) * ${1L << 20}"))
-      .withColumn("ql_e8", expr(
-        s"coalesce(__hit, CAST(0 AS BIGINT)) + " +
-          s"nq * (CAST($e8mu AS BIGINT) - (${mitchellE8Sql("qd")}))"))
+      .withColumn("ql_e8", coalesce(col("__hit"), lit(0L)) +
+        col("nq") * (lit(e8mu) - MitchellE8(col("qd"))))
       .orderBy(desc("ql_e8"), col("__id"))
       .limit(k)
       .select(col("__id").as("id"), col("dl").as("n_tokens"),
@@ -574,7 +539,7 @@ object TextStats {
       .withColumn("q",
         expr(s"greatest((CAST(c1 + v AS DECIMAL(38,0)) * ${1L << LmShift}) div (c2 + 1), " +
           s"CAST(${1L << LmShift} AS BIGINT))"))
-      .withColumn("m8", expr(mitchellE8Sql("q")))
+      .withColumn("m8", MitchellE8(col("q")))
       .groupBy("__id")
       .agg(count(lit(1)).as("n_bigrams"),
         sum(expr(s"m8 - ${8 * LmShift}")).as("surprisal_e8"))
@@ -587,7 +552,33 @@ object TextStats {
         expr("(surprisal_e8 * 10) div greatest(8 * n_bigrams, CAST(1 AS BIGINT))"))
   }
 
-  /** Train-and-score in one call (the q106 oracle surface):
+  /** Corpus-trained bigram language-model surprisal per document —
+    * the LM-quality signal of a CCNet-style filtering stage (Wenzek et
+    * al. 2020), with the float perplexity replaced by an integer-exact
+    * surrogate so the whole surface is oracle-hashable:
+    *
+    * p(w2|w1) = (c2+1)/(c1+V)  (add-one smoothing; c2 = corpus bigram
+    * count, c1 = corpus left-context count, V = vocabulary size), and
+    * per-bigram surprisal −log2 p ≈ (m8(q) − 8·SHIFT)/8 bits with
+    * q = ((c1+V) << SHIFT) div (c2+1) and m8 = [[mitchellE8Sql]].
+    * c1+V ≥ c2+1 always (every bigram occurrence contributes its left
+    * token to c1), so q ≥ 2^SHIFT and surprisal is ≥ 0.
+    *
+    * Returns one row per input doc: (idCol, carry..., n_bigrams,
+    * surprisal_e8 = Σ per-bigram eighth-bits, avg_bits_x10 =
+    * 10·surprisal_e8 div (8·n_bigrams)) — high average surprisal =
+    * improbable text under the corpus's own statistics = the cut
+    * candidate. Docs with < 2 tokens emit (0, 0, 0).
+    *
+    * Scale shape: the classic distributed LM-count job — one scan
+    * explodes bigrams (map-side), c2/c1 are hash aggregations on the
+    * bigram/token string with map-side partials, scoring re-joins the
+    * bigram stream to the two count tables by key (sort-merge at 100 TB
+    * corpus scale; Catalyst broadcasts them when small), V rides in as
+    * a broadcast single-row cross join. No driver-side state, no
+    * window, nothing unbounded per key.
+    *
+    * Train-and-score in one call (the q106 oracle surface):
     * `lmScore(df, lmTrain(df))`. Kept as the single-corpus entry
     * point; the split lifecycle is for incremental profiles.
     */
@@ -679,7 +670,7 @@ object TextStats {
           s"(CAST(greatest(4 * c2 - 3, 0) AS DECIMAL(38,0)) * nt " +
           s"+ CAST(3 AS DECIMAL(38,0)) * n1w1 * ncw2), " +
           s"CAST(${1L << LmShift} AS BIGINT)), CAST(${1L << 62} AS BIGINT)) AS BIGINT)"))
-      .withColumn("m8", expr(mitchellE8Sql("q")))
+      .withColumn("m8", MitchellE8(col("q")))
       .groupBy("__id")
       .agg(count(lit(1)).as("n_bigrams"),
         sum(expr(s"m8 - ${8 * LmShift}")).as("kn_surprisal_e8"))
@@ -735,7 +726,7 @@ object TextStats {
     val w = Window.partitionBy("w1").orderBy(col("q"), col("w2"))
     scored.withColumn("rank", row_number().over(w).cast("bigint"))
       .where(col("rank") <= topK)
-      .withColumn("m8", expr(mitchellE8Sql("q")))
+      .withColumn("m8", MitchellE8(col("q")))
       .select(col("w1").as("context"), col("rank"),
         col("w2").as("next_word"),
         expr(s"((m8 - ${8 * LmShift}) * 10) div 8").as("kn_bits_x10"))
@@ -852,7 +843,7 @@ object TextStats {
         s"CAST(least(greatest((CAST(c2 AS DECIMAL(38,0)) * n_tot * ${1L << LmShift}) " +
           s"div (CAST(c1l AS DECIMAL(38,0)) * c1r), CAST(${1L << LmShift} AS BIGINT)), " +
           s"CAST(${1L << 62} AS BIGINT)) AS BIGINT)"))
-      .withColumn("pmi_e8", expr(s"${mitchellE8Sql("q")} - ${8 * LmShift}"))
+      .withColumn("pmi_e8", MitchellE8(col("q")) - lit(8L * LmShift))
       .where(col("c2") >= minCount)
       .select(col("bg").as("bigram"), col("c2"), col("pmi_e8"))
       .orderBy(desc("pmi_e8"), col("bigram"))
@@ -1048,7 +1039,7 @@ object TextStats {
     * rank (a Zipfian corpus drops ≈ 8·log2((r+1)/r) e8 per rank; a
     * flat drop profile means boilerplate, a cliff means a
     * degenerate vocabulary). Integer end to end — the log is the
-    * shared Mitchell emitter over cnt·2²⁰.
+    * native Mitchell eighth-bit log over cnt·2²⁰ (cnt ≥ 1).
     *
     * Scale shape: ONE map-side-partial word count; the top-(k+1) is
     * the bounded-heap aggregate; the lead window runs over ≤ k+1
@@ -1068,8 +1059,7 @@ object TextStats {
         (col("__pos") + 1).cast("bigint").as("rank"))
     val w = Window.orderBy("rank") // ≤ k+1 rows by construction
     top
-      .withColumn("__m",
-        expr(mitchellE8Sql(s"(cnt * ${1L << LmShift})")))
+      .withColumn("__m", MitchellE8(col("cnt") * lit(1L << LmShift)))
       .withColumn("drop_e8",
         (col("__m") - lead("__m", 1).over(w)).cast("bigint"))
       .where(col("rank") <= k)
@@ -1293,8 +1283,8 @@ object TextStats {
     val tot = counts.groupBy("g")
       .agg(sum("c").as("t"), count(lit(1)).as("n_distinct"))
     counts.join(broadcast(tot), Seq("g"))
-      .withColumn("__term",
-        expr(s"c * (${log2E8Sql("t")} - ${log2E8Sql("c")})"))
+      .withColumn("__term", col("c") *
+        (MitchellE8.log2E8(col("t")) - MitchellE8.log2E8(col("c"))))
       .groupBy("g")
       .agg(max("t").as("n_tokens"), max("n_distinct").as("n_distinct"),
         sum("__term").as("__s"))
@@ -1402,8 +1392,9 @@ object TextStats {
     * m8(n·2^20) − 160 ≈ 8·log2(n) for n ≥ 1 — lifts [[mitchellE8Sql]]
     * (domain [2^20, 2^63)) onto plain counts so log-likelihood
     * statistics can be decomposed into per-count logs with every
-    * argument ≥ 1 (no negative-log clamping). Shared VERBATIM between
-    * the Spark `expr` and the DuckDB twin via `divOp`.
+    * argument ≥ 1 (no negative-log clamping). The DuckDB twin's form
+    * and the specs' reference; Spark plans use the native
+    * [[graft.functions.MitchellE8.log2E8]].
     */
   def log2E8Sql(nE: String, divOp: String = "div"): String =
     s"(${mitchellE8Sql(s"(($nE) * ${1L << LmShift})", divOp)} - ${8 * LmShift})"
@@ -1413,10 +1404,12 @@ object TextStats {
     * L = [[log2E8Sql]] — zero cells contribute nothing (guarded
     * lazily), so every evaluated log argument is ≥ 1. Emitted in
     * eighth-bits ×2 (the G² doubling folded in). Expects columns
-    * n11, df, n_class, n_total in scope.
+    * n11, df, n_class, n_total in scope. DuckDB spelling (`//`): only
+    * the twin evaluates it; [[discriminativeWords]] builds the same
+    * sum from the native log.
     */
-  def dunningG2Sql(divOp: String = "div"): String = {
-    def L(e: String) = log2E8Sql(e, divOp)
+  def dunningG2Sql(): String = {
+    def L(e: String) = log2E8Sql(e, "//")
     def term(n: String, r: String, c: String) =
       s"(CASE WHEN ($n) > 0 THEN ($n) * (${L(n)} + ${L("n_total")} " +
         s"- ${L(r)} - ${L(c)}) ELSE 0 END)"
@@ -1453,13 +1446,11 @@ object TextStats {
     val nc = df.groupBy(col(classCol).as("lang"))
       .agg(count(lit(1)).as("n_class"))
     val nTot = df.agg(count(lit(1)).as("n_total"))
-    // native G² (r15): the SQL emitter inlines 16 CASE-ladder logs
-    // (~2000 generated branches) — janino's 64 KB method limit failed
-    // the stage and dropped it to interpreted execution (observed:
-    // "Code grows beyond 64 KB" on exactly this projection). The
-    // native MitchellE8 expression is bit-equal to the emitter
-    // (MitchellE8Spec); the twin keeps [[dunningG2Sql]].
-    def lg(e: Column): Column = graft.functions.MitchellE8.log2E8(e)
+    // G² over the native log: the SQL form inlines 16 CASE-ladder logs
+    // (~2000 generated branches), which failed janino's 64 KB method
+    // limit on exactly this projection and dropped the stage to
+    // interpreted execution (r15). The twin keeps [[dunningG2Sql]].
+    def lg(e: Column): Column = MitchellE8.log2E8(e)
     def term(n: Column, r: Column, c0: Column): Column =
       when(n > 0, n * (lg(n) + lg(col("n_total")) - lg(r) - lg(c0)))
         .otherwise(lit(0L))
@@ -1710,7 +1701,8 @@ object TextStats {
       .select((-col("__b.nc")).as("xk1"))
     top.crossJoin(broadcast(xk1))
       .agg(count(lit(1)).as("__rows"), min("xk1").as("x_kplus1"),
-        sum(expr(s"${log2E8Sql("c")} - ${log2E8Sql("xk1")}")).as("__t"))
+        sum(MitchellE8.log2E8(col("c")) - MitchellE8.log2E8(col("xk1")))
+          .as("__t"))
       .select(lit(k.toLong).as("k"), col("x_kplus1"),
         col("__t").cast("bigint").as("t_e8"),
         expr(s"CAST((8 * ${k}L * 1000000000) div " +
@@ -1805,8 +1797,8 @@ object TextStats {
     val dfw = tf.groupBy("w").agg(count(lit(1)).as("dfw"))
     val ng = tf.select("g").distinct().agg(count(lit(1)).as("ng"))
     val wgt = tf.join(dfw, "w").crossJoin(broadcast(ng))
-      .withColumn("wt", expr(
-        s"tf * (${log2E8Sql("ng + 1")} - ${log2E8Sql("dfw")})"))
+      .withColumn("wt", col("tf") * (MitchellE8.log2E8(col("ng") + 1) -
+        MitchellE8.log2E8(col("dfw"))))
     val norms = wgt.groupBy("g")
       .agg(sum(expr("CAST(wt AS DECIMAL(38,0)) * wt")).as("n2"))
     val dots = wgt.select(col("g").as("ga"), col("w"), col("wt").as("wa"))
@@ -2103,7 +2095,7 @@ object TextStats {
       .withColumn("q",
         expr(s"greatest((CAST(c1 + v AS DECIMAL(38,0)) * ${1L << LmShift}) " +
           s"div (c2 + 1), CAST(${1L << LmShift} AS BIGINT))"))
-      .withColumn("e8", expr(s"${mitchellE8Sql("q")} - ${8 * LmShift}"))
+      .withColumn("e8", MitchellE8(col("q")) - lit(8L * LmShift))
     val ws = Window.partitionBy("__id").orderBy("pos")
       .rowsBetween(-(window - 1), 0)
     val wr = Window.partitionBy("__id")
@@ -2167,7 +2159,7 @@ object TextStats {
       .withColumn("q",
         expr(s"greatest((CAST(c1 + v AS DECIMAL(38,0)) * ${1L << LmShift}) " +
           s"div (c2 + 1), CAST(${1L << LmShift} AS BIGINT))"))
-      .withColumn("m8", expr(mitchellE8Sql("q")))
+      .withColumn("m8", MitchellE8(col("q")))
       .groupBy(col("ga").as("group_a"), col("gb").as("group_b"))
       .agg(sum("ca").as("n_bigrams"),
         sum(expr(s"ca * (m8 - ${8 * LmShift})")).as("cross_e8"))

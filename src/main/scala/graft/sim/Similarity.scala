@@ -1518,8 +1518,9 @@ object Similarity {
       .agg(min(when(col("rn") === 1, col("d2"))).as("d1"),
         min(when(col("rn") === 2, col("d2"))).as("d2b"))
       .where(col("d2b").isNotNull)
-      .select(expr(graft.ops.TextStats
-        .mitchellE8Sql(s"((d2b * $sh) div d1)") + " - 160").as("e8"))
+      // d2b >= d1 > 0, so the ratio is >= 2^20
+      .select((graft.functions.MitchellE8(expr(s"(d2b * $sh) div d1")) -
+        lit(160L)).as("e8"))
     mu.agg(count(lit(1)).as("n_points"), sum("e8").as("sum_e8"))
       .select(col("n_points"), col("sum_e8"),
         expr("CAST(CASE WHEN coalesce(sum_e8, 0) <= 0 THEN -1 ELSE " +

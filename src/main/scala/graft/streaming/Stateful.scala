@@ -947,7 +947,7 @@ object Stateful {
     * the alarm a serving pipeline watches for input drift. Identical
     * integer math to the batch form (Laplace ppm over the union bin
     * set, Mitchell eighth-bit log via
-    * [[graft.ops.TextStats.mitchellE8Long]], |p−q|·(m8−160) terms),
+    * [[graft.ops.TextStats.mitchellLong]], |p−q|·(m8−160) terms),
     * differentially specced bit-equal to the batch operator over
     * everything delivered.
     */
@@ -995,7 +995,8 @@ object Stateful {
               val ratio = (math.max(pPpm, qPpm) << graft.ops.TextStats.LmShift) /
                 math.min(pPpm, qPpm)
               psi += math.abs(pPpm - qPpm) *
-                (graft.ops.TextStats.mitchellE8Long(ratio) -
+                (graft.ops.TextStats.mitchellLong(ratio,
+                  graft.ops.TextStats.E8Bits) -
                   8L * graft.ops.TextStats.LmShift)
             }
             Iterator.single(PsiUpdate(key, st, nb, psi))

@@ -46,6 +46,51 @@ trait SparkSpec extends AnyFunSuite {
       sc.removeSparkListener(listener)
     }
   }
+
+  /** Whole-stage codegen fallbacks logged while `body` runs: Spark
+    * 4.1's `WholeStageCodegenExec` logs "Found too long generated codes"
+    * (INFO, a stage over `spark.sql.codegen.hugeMethodLimit` runs
+    * without whole-stage codegen) and "Whole-stage codegen disabled for
+    * plan" (WARN, the generated code failed to compile). Either means
+    * the stage runs interpreted. The logger is raised to INFO for the
+    * duration, since the shared session logs at WARN.
+    */
+  def codegenFallbacksIn(body: => Unit): Int = {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, Logger, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val messages = Seq("Found too long generated codes",
+      "Whole-stage codegen disabled for plan")
+    val fallbacks = new java.util.concurrent.atomic.AtomicInteger()
+    val appender = new AbstractAppender("graft-codegen-fallbacks", null,
+        null, true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = {
+        val m = e.getMessage.getFormattedMessage
+        if (messages.exists(m.contains)) fallbacks.incrementAndGet()
+      }
+    }
+    val logger = LogManager.getLogger(
+      classOf[org.apache.spark.sql.execution.WholeStageCodegenExec])
+      .asInstanceOf[Logger]
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val prior = logger.getLevel
+    appender.start()
+    // addAppender gives the logger its own LoggerConfig, so the level
+    // change below stays on this one logger
+    logger.addAppender(appender)
+    logger.setLevel(Level.INFO)
+    logger.get().setLevel(Level.INFO)
+    ctx.updateLoggers()
+    try { body; fallbacks.get }
+    finally {
+      logger.removeAppender(appender)
+      logger.setLevel(prior)
+      logger.get().setLevel(prior)
+      ctx.updateLoggers()
+      appender.stop()
+    }
+  }
 }
 
 object SparkSpec {

@@ -10,7 +10,7 @@ class LinkageSpec extends SparkSpec {
   // eighth-bit log2 of a ppm value, the Scala mirror of the operator's
   // log2E8Sql weights
   private def L(n: Long): Long =
-    TextStats.mitchellE8Long(n * (1L << 20)) - 160L
+    TextStats.mitchellLong(n * (1L << 20), TextStats.E8Bits) - 160L
 
   test("fellegiSunter: exact u weights, agreement bits, score order") {
     // one block; records 1/2 agree everywhere, 3 agrees with nobody

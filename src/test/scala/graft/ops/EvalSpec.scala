@@ -448,7 +448,7 @@ class EvalSpec extends SparkSpec {
 
   test("sprtScreen: mitchell-mirror LLR replay, decisions, counts ≡ rows") {
     import spark.implicits._
-    def e256(x: Long) = graft.ops.TextStats.mitchellE256Long(x)
+    def e256(x: Long) = graft.ops.TextStats.mitchellLong(x, graft.ops.TextStats.E256Bits)
     // pooled p0 = 3000/20000 = 150000 ppm, p1 = 165000
     val counts = Seq(("hot", 10000L, 2000L), ("cold", 10000L, 1000L))
     val out = Eval.sprtFromCounts(spark, counts)

@@ -747,7 +747,7 @@ class FunnelSpec extends SparkSpec {
 
   test("sequenceSurprisal: rare transitions score high, common ones low") {
     def L(n: Long): Long =
-      graft.ops.TextStats.mitchellE8Long(n * (1L << 20)) - 160L
+      graft.ops.TextStats.mitchellLong(n * (1L << 20), graft.ops.TextStats.E8Bits) - 160L
     // u1: a->b, b->a, a->b ; u2: a->a
     // counts: (a,b)=2 (b,a)=1 (a,a)=1 ; totals: a=3, b=1
     val ev = Seq(

@@ -249,7 +249,7 @@ class TextStatsSpec extends SparkSpec {
     val sql = df.selectExpr("q", TextStats.mitchellE8Sql("q") + " AS m")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     qs.foreach { q =>
-      assert(TextStats.mitchellE8Long(q) === sql(q),
+      assert(TextStats.mitchellLong(q, TextStats.E8Bits) === sql(q),
         s"Scala/SQL Mitchell drift at q=$q")
     }
   }
@@ -260,7 +260,7 @@ class TextStatsSpec extends SparkSpec {
     val out = TextStats.zipfReport(docs, "id", "text", k = 3)
       .orderBy("rank").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getLong(2), r.getLong(3)))
-    def m8(c: Long) = TextStats.mitchellE8Long(c << 20)
+    def m8(c: Long) = TextStats.mitchellLong(c << 20, TextStats.E8Bits)
     assert(out.toSeq === Seq(
       (1L, "a", 5L, m8(5) - m8(3)),
       (2L, "b", 3L, m8(3) - m8(2)),
@@ -361,7 +361,7 @@ class TextStatsSpec extends SparkSpec {
     assert(out.find(_._1 == "B").get._3 === "q")
     // independent re-statement of the G² arithmetic via the Scala
     // Mitchell mirror (property-pinned to the SQL emitter elsewhere)
-    def L(n: Long): Long = TextStats.mitchellE8Long(n << 20) - 160
+    def L(n: Long): Long = TextStats.mitchellLong(n << 20, TextStats.E8Bits) - 160
     def term(n: Long, r: Long, c: Long, nTot: Long): Long =
       if (n > 0) n * (L(n) + L(nTot) - L(r) - L(c)) else 0L
     def g2(n11: Long, df: Long, nc: Long, n: Long): Long =
@@ -653,7 +653,7 @@ class TextStatsSpec extends SparkSpec {
         BigInt(3) * n1w1(b._1) * ncw2(b._2)
       val qRaw = (BigInt(4) * c1(b._1) * nt * (1L << shift)) / num
       val q = qRaw.max(BigInt(1L << shift)).min(BigInt(1L << 62)).toLong
-      TextStats.mitchellE8Long(q) - 8L * shift
+      TextStats.mitchellLong(q, TextStats.E8Bits) - 8L * shift
     }
     val expected = docBgs.map { case (id, bgs) =>
       val s8 = bgs.map(sE8).sum
@@ -729,7 +729,7 @@ class TextStatsSpec extends SparkSpec {
       (num / den).toLong.max(1L << shift).min(1L << 62)
     }
     def bits(qv: Long): Long =
-      ((TextStats.mitchellE8Long(qv) - 8L * TextStats.LmShift) * 10) / 8
+      ((TextStats.mitchellLong(qv, TextStats.E8Bits) - 8L * TextStats.LmShift) * 10) / 8
     assert(out.toSeq === Seq(
       ("a", 1L, "b", bits(q(3, 2, 2, 1, 3))),
       ("a", 2L, "c", bits(q(3, 1, 2, 1, 3))),
@@ -872,7 +872,7 @@ class TextStatsSpec extends SparkSpec {
 
   test("qlRetrieve: hand Dirichlet gain + prior via the mitchell mirror") {
     val mu = 2048L
-    def e8(q: Long) = TextStats.mitchellE8Long(q)
+    def e8(q: Long) = TextStats.mitchellLong(q, TextStats.E8Bits)
     // equal dl so the prior cancels and ranking is gain-only
     val docs = Seq(
       (1L, "apple apple x"), // tf 2
