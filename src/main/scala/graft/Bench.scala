@@ -2,6 +2,7 @@ package graft
 
 import java.nio.file.{Files, Path, Paths}
 
+import graft.ops.Lineage
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark main: runs the headline queries on SPARK_GRAFT_SF_DIR and
@@ -496,25 +497,14 @@ object Bench {
     def run(name: String): (Double, Double) = {
       val load1 = loadavg().head
       val t0 = System.nanoTime()
-      // measurement-honesty fix (r15, outside the timed region): drop
-      // localCheckpoint blocks the query leaked into the storage pool —
-      // across a ~300-query sweep the accumulation degrades LATER
-      // queries' figures up to 10× (measured: q250 warm 49 s as the
-      // 15th query of a session vs 5.0 s isolated), and under the
-      // stalest-first rotation a different subset suffers each round,
-      // silently breaking round-over-round comparability.
-      // try/finally (r16): a FAILED query's leaked blocks must be
-      // dropped too — the old catch-path return skipped the sweep and
-      // left them contaminating every later query.
       try {
-        Queries.all(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
-        ((System.nanoTime() - t0) / 1e9, load1)
+        Lineage.scoped {
+          Queries.all(name)(spark, sfDir).write.format("noop").mode("overwrite").save()
+          ((System.nanoTime() - t0) / 1e9, load1)
+        }
       } catch { case e: Throwable =>
         System.err.println(s"[bench] $name failed: ${e.getMessage}")
         (-1.0, load1)
-      } finally {
-        spark.sparkContext.getPersistentRDDs.values
-          .foreach(_.unpersist(blocking = false))
       }
     }
 
@@ -789,13 +779,9 @@ object Bench {
         s"[bench] budget: headline degraded mode (remaining=${remainingSec()}s)" +
           " — no warm pass, single trials")
       else headline.foreach { n =>
-        try {
+        try Lineage.scoped {
           Queries.all(n)(spark, sfDir)
             .write.format("noop").mode("overwrite").save()
-          // same leak hygiene as run(): the warm pass must not seed the
-          // storage pool the timed trials then fight
-          spark.sparkContext.getPersistentRDDs.values
-            .foreach(_.unpersist(blocking = false))
         } catch { case _: Throwable => () }
       }
       headlineResults =

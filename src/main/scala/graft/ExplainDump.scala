@@ -1,5 +1,7 @@
 package graft
 
+import graft.ops.Lineage
+
 /** Dev tool: dump `.explain("formatted")` for catalog queries to files —
   * `runMain graft.ExplainDump <sfDir> <outDir> <queryName>...`
   * (no names = all). One `<outDir>/<name>.txt` per query. Runs on the
@@ -17,9 +19,9 @@ object ExplainDump {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     names.foreach { n =>
       try {
-        val plan = SparkEntry.queries(n)(spark, sfDir)
+        val plan = Lineage.scoped(SparkEntry.queries(n)(spark, sfDir)
           .queryExecution.explainString(
-            org.apache.spark.sql.execution.FormattedMode)
+            org.apache.spark.sql.execution.FormattedMode))
         java.nio.file.Files.write(
           java.nio.file.Paths.get(outDir, s"$n.txt"),
           plan.getBytes("UTF-8"))

@@ -1,5 +1,6 @@
 package graft
 
+import graft.ops.Lineage
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -83,7 +84,7 @@ object PinnedHashes {
     val spark = Session.local(Session.cpus)
     spark.sparkContext.setLogLevel("ERROR")
     pinned.values.flatMap(_.keys).toSeq.distinct.sorted.foreach { name =>
-      val (n, h) = canonicalHash(Queries.all(name)(spark, sfDir))
+      val (n, h) = Lineage.scoped(canonicalHash(Queries.all(name)(spark, sfDir)))
       println(s"""      "$name" ->\n        (${n}L, "$h"),""")
     }
     spark.stop()

@@ -1,5 +1,7 @@
 package graft
 
+import graft.ops.Lineage
+
 /** Plan audit main: prints the formatted physical plan of each headline
   * query and flags scale killers — missing filter pushdown, unpruned
   * scans, cartesian products, missing broadcasts, non-codegen spans —
@@ -593,13 +595,18 @@ object PlanAudit {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.sparkContext.setLogLevel("ERROR")
 
-    Bench.headline.foreach { name =>
+    // one query's formatted plan and flags; its cuts are freed on return
+    def audit(name: String): (String, Seq[String]) = Lineage.scoped {
       val df = Queries.all(name)(spark, sfDir)
       val plan = df.queryExecution.explainString(
         org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
+      (plan, flagsFor(name, df, plan, df.queryExecution.executedPlan.toString))
+    }
+
+    Bench.headline.foreach { name =>
+      val (plan, flags) = audit(name)
       println(s"\n================ $name ================")
       println(plan)
-      val flags = flagsFor(name, df, plan, df.queryExecution.executedPlan.toString)
       if (flags.nonEmpty) println(s"!! FLAGS: ${flags.mkString(", ")}")
     }
 
@@ -609,10 +616,7 @@ object PlanAudit {
     var flagged = 0
     Queries.all.keys.toSeq.sorted.filterNot(_ == "q65_dedup_clusters").foreach { name =>
       try {
-        val df = Queries.all(name)(spark, sfDir)
-        val plan = df.queryExecution.explainString(
-          org.apache.spark.sql.execution.ExplainMode.fromString("formatted"))
-        val flags = flagsFor(name, df, plan, df.queryExecution.executedPlan.toString)
+        val flags = audit(name)._2
         if (flags.nonEmpty) { flagged += 1; println(s"!! $name: ${flags.mkString(", ")}") }
       } catch {
         case e: Exception => flagged += 1; println(s"!! $name: plan build failed: ${e.getMessage}")

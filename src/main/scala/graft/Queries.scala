@@ -868,8 +868,9 @@ object Queries {
     * pieces: exact dedup (keep min id per content hash) → near-dup
     * dedup (keep each cluster's canonical member, from the STAGED
     * label table q65/q74 also consume — the clustering job runs once
-    * per corpus, not once per query) → quality filter → language-ID →
-    * token budget → PII redaction. One broadcast semi-join + one label
+    * per corpus and [[graft.ops.Lineage.scoped]] block, not once per
+    * consumer) → quality filter → language-ID → token budget → PII
+    * redaction. One broadcast semi-join + one label
     * join + map-only projections; the oracle composes the same
     * formulas in CTEs.
     */
@@ -2851,10 +2852,11 @@ object Queries {
   /** Quality-argmax cluster representatives
     * ([[graft.dedup.Curation.clusterRepresentatives]]): per near-dup
     * family (the STAGED q65/q66 label table — the clustering job runs
-    * once per corpus) the member with the highest q122 milli-quality,
-    * smallest-id tiebreak, plus the family size — keep-best dedup,
-    * the realistic upgrade over keep-min-id. One label join + one
-    * cluster-keyed struct-max aggregation; no per-cluster window.
+    * once per corpus and scope) the member with the highest q122
+    * milli-quality, smallest-id tiebreak, plus the family size —
+    * keep-best dedup, the realistic upgrade over keep-min-id. One
+    * label join + one cluster-keyed struct-max aggregation; no
+    * per-cluster window.
     */
   val q176_cluster_reps: Q = (s, d) => {
     val docs = Tables.documents(s, d)

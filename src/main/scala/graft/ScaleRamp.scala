@@ -1,5 +1,6 @@
 package graft
 
+import graft.ops.Lineage
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
@@ -93,11 +94,16 @@ object ScaleRamp {
       new java.io.File(s"$outDir/lineitem.parquet").exists()
     synthesize(spark, srcDir, outDir, factor, cpus, reuse)
 
-    def time(dir: String, name: String): Double = {
+    // each timed run in its own scope: no query's cuts outlive it
+    def timeDf(mk: () => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
-      Queries.all(name)(spark, dir).write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
+      Lineage.scoped {
+        mk().write.format("noop").mode("overwrite").save()
+        (System.nanoTime() - t0) / 1e9
+      }
     }
+    def time(dir: String, name: String): Double =
+      timeDf(() => Queries.all(name)(spark, dir))
     // sketch queries ride the ramp with FIXED knobs deliberately:
     // their state is constant-size by construction (1024 registers /
     // 8 KiB bitmap / d×w counters), so the 10× factor should track the
@@ -226,11 +232,6 @@ object ScaleRamp {
     def docs(dir: String) = spark.read.parquet(s"$dir/documents.parquet")
     def emb(dir: String) = spark.read.parquet(s"$dir/embeddings.parquet")
     def cust(dir: String) = spark.read.parquet(s"$dir/customer.parquet")
-    def timeDf(mk: () => org.apache.spark.sql.DataFrame): Double = {
-      val t0 = System.nanoTime()
-      mk().write.format("noop").mode("overwrite").save()
-      (System.nanoTime() - t0) / 1e9
-    }
     val opRows: Seq[(String, Double, Double, Double)] = Seq[
         (String, () => org.apache.spark.sql.DataFrame,
           () => org.apache.spark.sql.DataFrame)](

@@ -1,5 +1,7 @@
 package graft
 
+import graft.ops.Lineage
+
 /** Child-process main for the bench's sf1 scaling cell (r16, the r15
   * verdict's ask #5): times a comma-separated query list over a
   * pre-synthesized 10× ramp dir at THIS fork's core count. The parent
@@ -11,9 +13,8 @@ package graft
   *
   * Kill-proofing, the StatefulBench discipline: one line per query the
   * moment it completes (`SCALING <name> cpus=<n> sec=<s>`), queries
-  * shed individually under GRAFT_CHILD_BUDGET_SEC, leaked checkpoint
-  * blocks dropped between queries (the r15 sweep-hygiene rule — any
-  * multi-query harness must).
+  * shed individually under GRAFT_CHILD_BUDGET_SEC, each pass run in
+  * its own [[Lineage.scoped]] block so no query's cuts outlive it.
   */
 object ScalingCell {
   def main(args: Array[String]): Unit = {
@@ -23,8 +24,9 @@ object ScalingCell {
     val remainingSec = Bench.childClock()
     val spark = Session.local(cpus)
     spark.sparkContext.setLogLevel("ERROR")
-    def sweep(): Unit = spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = false))
+    def pass(n: String): Unit = Lineage.scoped {
+      Queries.all(n)(spark, dir).write.format("noop").mode("overwrite").save()
+    }
     names.foreach { n =>
       if (remainingSec() < 45)
         System.err.println(s"[bench] scaling child budget: skipped $n " +
@@ -33,16 +35,15 @@ object ScalingCell {
         spark.sparkContext.setJobDescription(s"scaling/$n")
         // one untimed warm pass (codegen/JIT — the headline-trial
         // discipline), then the timed pass through the noop sink
-        Queries.all(n)(spark, dir).write.format("noop").mode("overwrite").save()
-        sweep()
+        pass(n)
         val t1 = System.nanoTime()
-        Queries.all(n)(spark, dir).write.format("noop").mode("overwrite").save()
+        pass(n)
         val sec = (System.nanoTime() - t1) / 1e9
         println(f"SCALING $n cpus=$cpus sec=$sec%.3f")
         System.out.flush()
       } catch { case e: Throwable =>
         System.err.println(s"[bench] scaling $n failed: ${e.getMessage}")
-      } finally sweep()
+      }
     }
     spark.stop()
   }

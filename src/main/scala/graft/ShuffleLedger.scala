@@ -1,7 +1,8 @@
 package graft
 
+import graft.ops.Lineage
 import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{GraftBridge, SparkSession}
 
 /** Shuffle-volume ledger: MEASURED shuffle bytes/records per headline
   * query at two scale factors — the volume half of the 100 TB
@@ -71,23 +72,13 @@ object ShuffleLedger {
       if (!proceed()) return (-1L, -1L)
       bytes.set(0); recs.set(0)
       try {
-        Queries.all(name)(spark, dir)
-          .write.format("noop").mode("overwrite").save()
-        // listener events post asynchronously after the job ends; the
-        // bus has no public drain hook, so settle on a short quiescence
-        // window (counters stable twice in a row), BOUNDED at 5 s —
-        // a concurrent job on a shared context trickling task-ends
-        // must not spin this loop forever; at timeout we proceed with
-        // the counters observed (the trailing events are at most the
-        // last wave of a 32-thread stage, noise at ledger granularity)
-        var prev = -1L
-        var same = 0
-        val settleDeadline = System.nanoTime() + 5L * 1000 * 1000 * 1000
-        while (same < 2 && System.nanoTime() < settleDeadline) {
-          Thread.sleep(150)
-          val cur = bytes.get + recs.get
-          if (cur == prev) same += 1 else { same = 0; prev = cur }
+        Lineage.scoped {
+          Queries.all(name)(spark, dir)
+            .write.format("noop").mode("overwrite").save()
         }
+        // task-end events reach the listener asynchronously; every one
+        // of this query's is posted by now, so one drain makes it exact
+        GraftBridge.drainListenerBus(spark.sparkContext)
         (bytes.get, recs.get)
       } catch { case e: Throwable =>
         System.err.println(s"[shuffle] $name @$dir failed: ${e.getMessage}")

@@ -1,5 +1,7 @@
 package graft
 
+import graft.ops.Lineage
+
 /** Dev tool: time individual catalog queries — materialized through the
   * noop sink (every column of every row computed; `count()` would let
   * Catalyst prune columns and whole subtrees, see the optimization
@@ -20,16 +22,11 @@ object TimeQuery {
       spark.sparkContext.setJobDescription(n)
       val times = (1 to 2).map { _ =>
         val t0 = System.nanoTime()
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        (System.nanoTime() - t0) / 1e9
+        Lineage.scoped {
+          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          (System.nanoTime() - t0) / 1e9
+        }
       }
-      // drop leaked localCheckpoint blocks: queries that eagerly
-      // checkpoint leave their RDD blocks in the storage pool for the
-      // rest of the session, and the accumulation degrades LATER
-      // queries' figures up to 10x (measured: q250 warm 49 s as the
-      // 15th query of a session vs 5.0 s isolated)
-      spark.sparkContext.getPersistentRDDs.values
-        .foreach(_.unpersist(blocking = false))
       println(f"$n%-28s cold ${times.head}%7.3f s  warm ${times.last}%7.3f s")
     }
     spark.stop()

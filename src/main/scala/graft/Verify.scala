@@ -1,5 +1,6 @@
 package graft
 import java.nio.file.{Files, Paths}
+import graft.ops.Lineage
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -14,9 +15,10 @@ object Verify {
     spark.sparkContext.setLogLevel("WARN")
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
+      try Lineage.scoped {
+        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          .parquet(s"$outDir/$name")
+      } catch { case e: Throwable =>
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
@@ -45,8 +47,8 @@ object Verify {
     if (pins.nonEmpty) {
       val checks = pins.toSeq.sortBy(_._1).map { case (name, (eRows, eHash)) =>
         val (rows, hash, err) =
-          try { val (r, h) = PinnedHashes.canonicalHash(
-              SparkEntry.queries(name)(spark, sfDir)); (r, h, null: String) }
+          try { val (r, h) = Lineage.scoped(PinnedHashes.canonicalHash(
+              SparkEntry.queries(name)(spark, sfDir))); (r, h, null: String) }
           catch { case e: Throwable => (-1L, "", e.getMessage) }
         val ok = err == null && rows == eRows && hash == eHash
         System.err.println(s"[verify] pinned $name: " +

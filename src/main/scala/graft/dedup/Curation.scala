@@ -17,10 +17,13 @@ import scala.collection.concurrent.TrieMap
   * [[Dedup.nearDupClusters]] already eagerly checkpoints its result, so
   * the staged DataFrame IS the materialization — and hand every
   * consumer the same table. The memo is keyed by (session, corpus key,
-  * parameters); entries live for the session, like the checkpoint
-  * blocks they reference. On a real cluster the equivalent move is
-  * writing the label table to storage between jobs; within one session
-  * this is the zero-ceremony form.
+  * parameters); an entry lives as long as the cuts it references —
+  * until the [[graft.ops.Lineage.scoped]] block that built it exits,
+  * or for the session when built outside any scope. The catalog
+  * harnesses run each query in its own scope, so there each consumer
+  * query builds its own table. On a real cluster the equivalent move
+  * is writing the label table to storage between jobs; within one
+  * session this is the zero-ceremony form.
   */
 object Curation {
 
@@ -46,6 +49,7 @@ object Curation {
       s"$corpusKey|$idCol|$textCol|$threshold|$numHashes|$bands|$shingleWidth")
     staged.getOrElseUpdate(key, {
       builds.incrementAndGet()
+      graft.ops.Lineage.onExit(staged.remove(key))
       val pairs = Dedup.minhashNearDupPairs(graft.ops.Scale.fanOut(docs),
         idCol, textCol, threshold, numHashes, bands, shingleWidth)
       Dedup.nearDupClusters(pairs)

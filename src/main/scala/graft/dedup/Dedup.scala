@@ -533,10 +533,8 @@ object Dedup {
     // each round's plan references the previous round's ~4× (two star
     // ops, each reading its input twice), so lineage MUST be cut every
     // round — persist alone leaves an exponentially-growing logical
-    // plan that the optimizer re-walks per round. The dual-path
-    // (reliable checkpoint dir when set, localCheckpoint otherwise)
-    // is the shared [[Lineage.cut]] — see the trade-off note on the
-    // final cut below.
+    // plan that the optimizer re-walks per round — see the trade-off
+    // note on the final cut below.
     // ONE materialization of the caller's pairs subtree (r15): the old
     // shape evaluated `pairs` twice — once for the initial edge set and
     // once for the vertex set — and the caller's pair source is often
@@ -573,7 +571,9 @@ object Dedup {
         if (nextCount != edgeCount) 1L
         else next.exceptAll(edges).union(edges.exceptAll(next))
           .limit(1).count()
-      edges.unpersist(blocking = false)
+      // round 0's edges is `initial`, a filter over `oriented`, whose
+      // blocks `allIds` still reads: free only this loop's own cuts
+      if (iter > 0) Lineage.release(edges)
       edges = next
       edgeCount = nextCount
       converged = diff == 0
@@ -603,11 +603,9 @@ object Dedup {
     // (the old eager one re-materialized the full label set for
     // nothing, one more driver-synchronized job on the operator the
     // round-11 judge measured as the catalog's slowest). Callers keep
-    // a live dependency on the last round's checkpoint blocks, which
-    // is why this round's `edges` is NOT unpersisted here. On a
-    // long-lived session note the checkpoint-file lifetime: reliable
-    // checkpoints persist until RDD GC and are only auto-deleted under
-    // spark.cleaner.referenceTracking.cleanCheckpoints=true.
+    // a live dependency on the last round's cut, which is why this
+    // round's `edges` is NOT released here: the caller's
+    // [[Lineage.scoped]] block frees it with the query's other cuts.
     (labeled, iter)
   }
 
@@ -687,9 +685,7 @@ object Dedup {
     * (id, ts, n), materialized eagerly: this table always has several
     * consumers downstream (df counts, prefix ranking, verify joins)
     * and exchange reuse alone re-runs the post-shuffle collect_set
-    * merge once per consumer — the q121/q143 lesson. Reliable
-    * checkpoint when a dir is configured, localCheckpoint otherwise
-    * (the connected-components rounds policy).
+    * merge once per consumer — the q121/q143 lesson.
     */
   private def sortedSets(d: DataFrame, id: String, its: Column,
                          itemKey: Column => Column): DataFrame = {
@@ -1665,10 +1661,7 @@ object Dedup {
     // materialized eagerly: exchange reuse alone still re-runs the
     // collect_set FINAL merge once per consumer (the shuffle output is
     // cached, the post-shuffle aggregate is not), and this table has
-    // four consumers. One row per doc — the cut is small by
-    // construction (same policy as the connected-components rounds:
-    // reliable checkpoint dir when configured, localCheckpoint
-    // otherwise).
+    // four consumers. One row per doc.
     val arrays0 = df
       .select(col(idCol).as("id"), explode(items).as("t0"))
       // itemKey runs on the EXPLODED flat column, not inside a
@@ -1831,8 +1824,8 @@ object Dedup {
     require(grid.nonEmpty && grid.forall { case (b, r) =>
       b >= 1 && b <= 64 && r >= 1 && r <= 64 },
       "grid entries must be (bands, rowsPerBand) in [1, 64]")
-    val bins = binsDf
-      .localCheckpoint() // ≤ 20 rows feed every config fold
+    // ≤ 20 rows feed every config fold
+    val bins = Lineage.cut(binsDf)
     val spark = binsDf.sparkSession
     import spark.implicits._
     val configs = grid.map { case (b, r) =>

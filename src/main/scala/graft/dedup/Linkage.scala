@@ -1,5 +1,6 @@
 package graft.dedup
 
+import graft.ops.Lineage
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -123,7 +124,7 @@ object Linkage {
             log2E8(greatest(lit(1000000L) - col(s"u_${f.name}"), lit(1L))))
             .as(s"wd_${f.name}"))
     }
-    uCols.reduce(_.crossJoin(_)).localCheckpoint()
+    Lineage.cut(uCols.reduce(_.crossJoin(_)))
   }
 
   /** Simplified-Soundex phonetic key, as a SQL emitter shared
@@ -330,11 +331,11 @@ object Linkage {
             index, maxBlock)
           .where(col("score_e8") >= scoreMin)
           .select(col("id_a").cast("long"), col("id_b").cast("long"))
-        pairsSoFar = pairsSoFar.unionByName(accepted).distinct()
-          .localCheckpoint() // cut per-trigger lineage growth
-        val batchRows = batch.localCheckpoint()
+        // cut per-trigger lineage growth
+        pairsSoFar = Lineage.cut(pairsSoFar.unionByName(accepted).distinct())
+        val batchRows = Lineage.cut(batch)
         deliveredSoFar = Some(deliveredSoFar
-          .map(_.unionByName(batchRows).localCheckpoint())
+          .map(d => Lineage.cut(d.unionByName(batchRows)))
           .getOrElse(batchRows))
         sink(goldenRecords(
           master.unionByName(deliveredSoFar.get), idCol,

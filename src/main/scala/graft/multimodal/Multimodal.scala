@@ -1,5 +1,6 @@
 package graft.multimodal
 
+import graft.ops.Lineage
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.catalyst.encoders.RowEncoder
 import org.apache.spark.sql.functions._
@@ -599,8 +600,8 @@ object Multimodal {
                       maxHamming: Int = 6,
                       maxBucket: Long = 4096L): DataFrame = {
     import org.apache.spark.sql.functions._
-    val h = hashed.select(col(idCol).cast("long").as("id"),
-      col(loCol).as("lo"), col(hiCol).as("hi")).localCheckpoint()
+    val h = Lineage.cut(hashed.select(col(idCol).cast("long").as("id"),
+      col(loCol).as("lo"), col(hiCol).as("hi")))
     val banded = h.select(col("id"), posexplode(array(
         expr("lo & 65535"), expr("(lo >> 16) & 65535"),
         expr("hi & 65535"), expr("(hi >> 16) & 65535")))

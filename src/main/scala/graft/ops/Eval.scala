@@ -531,12 +531,12 @@ object Eval {
   def cemAtt(df: DataFrame, treatCol: String, outcomeCol: String,
              covCols: Seq[String]): DataFrame = {
     val qc = covCols.map(col)
-    val st = df.groupBy(qc: _*)
+    // matched + dropped consumers of one pass
+    val st = Lineage.cut(df.groupBy(qc: _*)
       .agg(sum(when(col(treatCol), 1L).otherwise(0L)).as("n_t"),
         sum(when(col(treatCol), 0L).otherwise(1L)).as("n_c"),
         sum(when(col(treatCol), col(outcomeCol)).otherwise(0L)).as("s_t"),
-        sum(when(col(treatCol), 0L).otherwise(col(outcomeCol))).as("s_c"))
-      .localCheckpoint() // matched + dropped consumers of one pass
+        sum(when(col(treatCol), 0L).otherwise(col(outcomeCol))).as("s_c")))
     val matched = st.where(col("n_t") > 0 && col("n_c") > 0)
       .withColumn("__num", expr(
         "CAST(s_t AS DECIMAL(38,0)) * n_c - CAST(s_c AS DECIMAL(38,0)) * n_t"))
@@ -724,8 +724,8 @@ object Eval {
     */
   private def tauFromCellsDf(cells0: DataFrame,
                              groupCol: String): DataFrame = {
-    val cells = cells0
-      .localCheckpoint() // grid join + two marginals + totals read it
+    // grid join + two marginals + totals read it
+    val cells = Lineage.cut(cells0)
     val tot = cells.groupBy("g")
       .agg(sum("n").as("n_g"),
         sum(expr("CAST(n AS DECIMAL(38,0)) * (n - 1)")).as("txy2"))
@@ -799,8 +799,8 @@ object Eval {
     */
   private def rhoFromCellsDf(cells0: DataFrame,
                              groupCol: String): DataFrame = {
-    val cells = cells0
-      .localCheckpoint() // grid + two marginal consumers
+    // grid + two marginal consumers
+    val cells = Lineage.cut(cells0)
     def ranks(axis: String, out: String): DataFrame = {
       val w = Window.partitionBy("g").orderBy(axis)
         .rowsBetween(Window.unboundedPreceding, -1)
@@ -862,8 +862,8 @@ object Eval {
     */
   private def chiFromCellsDf(cells0: DataFrame,
                              groupCol: String): DataFrame = {
-    val cells = cells0
-      .localCheckpoint() // grid + two marginal consumers
+    // grid + two marginal consumers
+    val cells = Lineage.cut(cells0)
     val xm = cells.groupBy("g", "xb").agg(sum("n").as("rx"))
     val ym = cells.groupBy("g", "yb").agg(sum("n").as("cy"))
     val tot = cells.groupBy("g").agg(sum("n").as("n_g"),
@@ -985,7 +985,8 @@ object Eval {
     */
   private def mwuFromCells(cells0: DataFrame,
                            baseline: String, groupCol: String): DataFrame = {
-    val cells = cells0.localCheckpoint() // baseline + others + group list
+    // baseline + others + group list
+    val cells = Lineage.cut(cells0)
     val base = cells.where(col("g") === lit(baseline))
       .select(col("v"), col("n").as("nb"))
     val groups = cells.where(col("g") =!= lit(baseline))
@@ -1244,10 +1245,10 @@ object Eval {
   def bhFdrScreen(df: DataFrame, groupCol: String, successExpr:
       org.apache.spark.sql.Column, m: Int,
       qPpm: Long = 50000L): DataFrame = {
-    val cnt = df.groupBy(col(groupCol).as("g"))
+    // totals + per-group rows
+    val cnt = Lineage.cut(df.groupBy(col(groupCol).as("g"))
       .agg(count(lit(1)).as("n"),
-        sum(successExpr.cast("bigint")).as("s"))
-      .localCheckpoint() // totals + per-group rows
+        sum(successExpr.cast("bigint")).as("s")))
     val tot = cnt.agg(sum("n").as("nt"), sum("s").as("st"))
     val scored = cnt.crossJoin(broadcast(tot))
       .withColumn("z_x1000", expr(
@@ -1258,11 +1259,11 @@ object Eval {
           "(1.0 / n + 1.0 / (nt - n)))) END AS BIGINT)"))
     val w = Window.orderBy(abs(col("z_x1000")).desc, col("g"))
     // m-row report-table window by construction
-    val ranked = scored
+    // kmax + final report
+    val ranked = Lineage.cut(scored
       .withColumn("rnk", row_number().over(w))
       .withColumn("zcrit_x1000",
-        expr(bhZcritCaseSql("rnk", m, qPpm)))
-      .localCheckpoint() // kmax + final report
+        expr(bhZcritCaseSql("rnk", m, qPpm))))
     val kmax = ranked
       .agg(coalesce(max(when(abs(col("z_x1000")) >= col("zcrit_x1000"),
         col("rnk"))), lit(0)).as("kmax"))
@@ -1319,7 +1320,7 @@ object Eval {
     * ≤|α|-row q̂ table broadcasts against the test scan and every
     * α's coverage count folds in the SAME aggregation
     * (Σ when(r ≤ q̂ᵢ) per α via the tiny-side expand). NO
-    * checkpoint anywhere — the r14 form localCheckpointed the
+    * checkpoint anywhere — the r14 form cut the
     * corpus-proportional test-residual table (a non-replicated
     * executor-local materialization, the disk-fill/executor-loss
     * hazard class) and probed it once per α; the three split scans
@@ -1337,10 +1338,10 @@ object Eval {
       .groupBy("x")
       .agg(expr("CAST(sum(CAST(y AS DECIMAL(38,0))) div count(1) " +
         "AS BIGINT)").as("yhat")))
-    val resid = base.where(col("sp") === 1L).join(pred, Seq("x"))
+    // value-domain-bounded histogram, 2 consumers
+    val resid = Lineage.cut(base.where(col("sp") === 1L).join(pred, Seq("x"))
       .select(abs(col("y") - col("yhat")).as("r"))
-      .groupBy("r").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint() // value-domain-bounded histogram, 2 consumers
+      .groupBy("r").agg(count(lit(1)).as("cnt")))
     val nCal = resid.agg(sum("cnt").as("n_cal"))
     val w = Window.orderBy("r")
       .rowsBetween(Window.unboundedPreceding, 0)
@@ -1424,14 +1425,14 @@ object Eval {
     // would otherwise land negative bin ids the oracle twin mirrors
     // blindly); the per-bin conf_ppm still reflects the raw values,
     // so out-of-domain inputs show up as conf outside [0, 1e6]
-    val b = df.select(
+    // ≤ nBins rows feed three consumers
+    val b = Lineage.cut(df.select(
         expr(s"least(greatest(CAST($probPpmCol div $width AS BIGINT), 0), " +
           s"${nBins - 1})").as("bin"),
         col(probPpmCol).cast("bigint").as("p"),
         labelExpr.cast("bigint").as("y"))
       .groupBy("bin")
-      .agg(count(lit(1)).as("n"), sum("p").as("sp"), sum("y").as("sy"))
-      .localCheckpoint() // ≤ nBins rows feed three consumers
+      .agg(count(lit(1)).as("n"), sum("p").as("sp"), sum("y").as("sy")))
     calibrationFromBinsDf(b)
   }
 
@@ -1489,7 +1490,8 @@ object Eval {
 
   private def riskCoverageFromCountsDf(c0: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val c = c0.localCheckpoint() // totals + window off one reduction
+    // totals + window off one reduction
+    val c = Lineage.cut(c0)
     val tot = c.agg(sum("n").cast("bigint").as("n_total"))
     val w = Window.orderBy("p") // score-domain-bounded by construction
       .rowsBetween(Window.unboundedPreceding, 0)
@@ -1521,10 +1523,10 @@ object Eval {
     */
   def brownForsythe(df: DataFrame, groupCol: String,
                     valueExpr: org.apache.spark.sql.Column): DataFrame = {
-    val c = df.select(col(groupCol).as("g"),
+    // feeds totals, the median rank and the fold
+    val c = Lineage.cut(df.select(col(groupCol).as("g"),
         valueExpr.cast("bigint").as("v"))
-      .groupBy("g", "v").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint() // feeds totals, the median rank and the fold
+      .groupBy("g", "v").agg(count(lit(1)).as("cnt")))
     val tot = c.groupBy("g").agg(sum("cnt").as("n"))
     val w = Window.partitionBy("g").orderBy("v")
       .rowsBetween(Window.unboundedPreceding, 0)
@@ -1595,10 +1597,10 @@ object Eval {
     */
   def chiResiduals(df: DataFrame, rowCol: String,
                    colCol: String): DataFrame = {
-    val cells = df.groupBy(col(rowCol).cast("string").as("r"),
+    // margins + grid off one reduction
+    val cells = Lineage.cut(df.groupBy(col(rowCol).cast("string").as("r"),
         col(colCol).cast("string").as("c"))
-      .agg(count(lit(1)).as("o"))
-      .localCheckpoint() // margins + grid off one reduction
+      .agg(count(lit(1)).as("o")))
     val rm = cells.groupBy("r").agg(sum("o").as("nr"))
     val cm = cells.groupBy("c").agg(sum("o").as("nc"))
     val tot = cells.agg(sum("o").as("n"))
@@ -1679,8 +1681,8 @@ object Eval {
     */
   private def cohensDFromMomentsDf(moments: DataFrame, groupCol: String,
                                    baseline: String): DataFrame = {
-    val m = moments
-      .localCheckpoint() // baseline row + comparison rows share it
+    // baseline row + comparison rows share it
+    val m = Lineage.cut(moments)
     val base = m.where(col("g") === lit(baseline))
       .select(col("n").as("nb"), col("s").as("sb"), col("q").as("qb"))
     m.where(col("g") =!= lit(baseline))
@@ -1909,8 +1911,8 @@ object Eval {
     * VERBATIM by [[cliffsDelta]] and [[cliffsFromCounts]].
     */
   private def cliffsFromCellsDf(cells0: DataFrame): DataFrame = {
-    val cells = cells0
-      .localCheckpoint() // grid + cums + totals off one reduction
+    // grid + cums + totals off one reduction
+    val cells = Lineage.cut(cells0)
     val vals = cells.select("v").distinct()
     val grps = cells.select("g").distinct()
     val w = Window.partitionBy("g").orderBy("v")
@@ -1982,8 +1984,8 @@ object Eval {
     * [[jonckheereFromCounts]].
     */
   private def jonckheereFromCellsDf(cells0: DataFrame): DataFrame = {
-    val cells = cells0
-      .localCheckpoint() // grid, cums and totals off one reduction
+    // grid, cums and totals off one reduction
+    val cells = Lineage.cut(cells0)
     val vals = cells.select("v").distinct()
     val grps = cells.select("g").distinct()
     val w = Window.partitionBy("g").orderBy("v")
@@ -2051,8 +2053,8 @@ object Eval {
     * [[kruskalWallisFromCounts]].
     */
   private def kruskalWallisFromCellsDf(cells0: DataFrame): DataFrame = {
-    val cells = cells0
-      .localCheckpoint() // pooled ranks + per-group sums share it
+    // pooled ranks + per-group sums share it
+    val cells = Lineage.cut(cells0)
     val tv = cells.groupBy("v").agg(sum("n").as("t"))
     // value-domain-bounded global rank window (the q278 pooled shape)
     val w = Window.orderBy("v").rowsBetween(Window.unboundedPreceding, -1)
@@ -2241,9 +2243,8 @@ object Eval {
     val perFold = Lineage.cut(
       rocAuc(scored, "fold", "conf_bin", "ok")) // k rows feed the report twice
     // every consumer of the count grids is materialized inside the
-    // perFold cut — release their storage now (ADVICE r15: operators
-    // own their checkpointed intermediates; the harness-level sweep
-    // cannot see a leak that lives and dies inside one call)
+    // perFold cut — release their storage now rather than at the end
+    // of the caller's scope
     Lineage.release(cntF)
     Lineage.release(clsF)
     val mom = perFold.where(col("auc_x1e6") >= 0)
@@ -2361,12 +2362,12 @@ object Eval {
         s"${nBins - 1})").as("bin"),
       col(probPpmCol).cast("bigint").as("p"),
       labelExpr.cast("bigint").as("y"))
-    val b = base.groupBy("bin")
+    // ≤ nBins rows feed totals + three folds
+    val b = Lineage.cut(base.groupBy("bin")
       .agg(count(lit(1)).as("n"), sum("p").as("sp"), sum("y").as("sy"),
         // Σ(p − 10⁶·y)²: per-term ≤ 10¹², DECIMAL against 10¹²-row sums
         sum(expr("CAST(p - 1000000 * y AS DECIMAL(38,0)) " +
-          "* (p - 1000000 * y)")).as("sq"))
-      .localCheckpoint() // ≤ nBins rows feed totals + three folds
+          "* (p - 1000000 * y)")).as("sq")))
     val tot = b.agg(sum("n").as("nt"), sum("sy").as("syt"),
         sum("sq").as("sqt"))
       .select(col("nt"), col("sqt"),
@@ -2479,7 +2480,8 @@ object Eval {
       s"ELSE CAST($x AS DECIMAL(38,0)) * ((($x) - 1) div 2) END)"
 
   private def adjustedRandFromCellsDf(cells: DataFrame): DataFrame = {
-    val c = cells.localCheckpoint() // 4 bounded-grid consumers
+    // 4 bounded-grid consumers
+    val c = Lineage.cut(cells)
     val rows = c.groupBy("a").agg(sum("cnt").as("na"))
       .agg(sum(expr(pairsSql("na"))).as("pa"),
         count(lit(1)).as("ka"))
@@ -2541,7 +2543,8 @@ object Eval {
   }
 
   private def bcubedFromCellsDf(cells: DataFrame): DataFrame = {
-    val c = cells.localCheckpoint() // 3 bounded-grid consumers
+    // 3 bounded-grid consumers
+    val c = Lineage.cut(cells)
     val p = c.groupBy("a")
       .agg(sum(expr("CAST(cnt AS DECIMAL(38,0)) * cnt")).as("s2"),
         sum("cnt").as("na"))
@@ -2601,7 +2604,8 @@ object Eval {
     def wLogE256(w: String, num: String, den: String): org.apache.spark.sql.Column =
       expr(s"CAST($w AS DECIMAL(38,0))") * (graft.functions.MitchellE8.e256(
         expr(s"($num * ${shift}L) div ($den)")) - lit(sh.toLong))
-    val c = cells.localCheckpoint() // marginals + joint off one pass
+    // marginals + joint off one pass
+    val c = Lineage.cut(cells)
     val ra = c.groupBy("a").agg(sum("cnt").as("na"))
     val rb = c.groupBy("b").agg(sum("cnt").as("nb"))
     val tot = c.agg(sum("cnt").as("n"))

@@ -82,11 +82,10 @@ object Funnel {
     // the one-row aggregate is re-selected once per step row below —
     // cut lineage so the funnelTimes pipeline (S filtered scans +
     // joins) runs once, not |steps| times (the rowChecks discipline)
-    val counts = times.agg(
+    val counts = Lineage.cut(times.agg(
       count(lit(1)).as("__total"),
       steps.indices.map(i =>
-        count(col(s"t_${steps(i)}")).as(s"__c$i")): _*)
-      .localCheckpoint()
+        count(col(s"t_${steps(i)}")).as(s"__c$i")): _*))
     reportRows(counts, steps)
   }
 
@@ -147,11 +146,10 @@ object Funnel {
     */
   def seasonalAnomalies(df: DataFrame, typeCol: String, tsCol: String,
                         k: Int = 3): DataFrame = {
-    val c = df.select(col(typeCol).as("et"),
+    val c = Lineage.cut(df.select(col(typeCol).as("et"),
         date_trunc("day", col(tsCol)).as("d"),
         hour(col(tsCol)).as("hod"))
-      .groupBy("et", "d", "hod").agg(count(lit(1)).as("x"))
-      .localCheckpoint()
+      .groupBy("et", "d", "hod").agg(count(lit(1)).as("x")))
     val types = c.select("et").distinct()
     val dates = c.select("d").distinct()
     val hods = df.sparkSession.range(0, 24)
@@ -193,10 +191,9 @@ object Funnel {
   def cusumShifts(df: DataFrame, typeCol: String,
                   tsCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val c = df.select(col(typeCol).as("et"),
+    val c = Lineage.cut(df.select(col(typeCol).as("et"),
         date_trunc("hour", col(tsCol)).as("h"))
-      .groupBy("et", "h").agg(count(lit(1)).as("x"))
-      .localCheckpoint()
+      .groupBy("et", "h").agg(count(lit(1)).as("x")))
     val hours = c.select("h").distinct()
     val grid = c.select("et").distinct()
       .crossJoin(broadcast(hours))
@@ -244,10 +241,9 @@ object Funnel {
     */
   def mannKendallTrend(df: DataFrame, typeCol: String,
                        tsCol: String): DataFrame = {
-    val c = df.select(col(typeCol).as("et"),
+    val c = Lineage.cut(df.select(col(typeCol).as("et"),
         date_trunc("day", col(tsCol)).as("d"))
-      .groupBy("et", "d").agg(count(lit(1)).as("x"))
-      .localCheckpoint()
+      .groupBy("et", "d").agg(count(lit(1)).as("x")))
     val days = c.select("d").distinct()
     val grid = c.select("et").distinct()
       .crossJoin(broadcast(days))
@@ -319,7 +315,8 @@ object Funnel {
     */
   def changepointFromCounts(c0: DataFrame): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val c = c0.localCheckpoint() // grid keys + series off one reduction
+    // grid keys + series off one reduction
+    val c = Lineage.cut(c0)
     val days = c.select("d").distinct()
     val grid = c.select("et").distinct()
       .crossJoin(broadcast(days)) // span-bounded day grid, zero-filled
@@ -330,7 +327,8 @@ object Funnel {
         sum("x").cast("decimal(38,0)").as("s"))
     val w = Window.partitionBy("et").orderBy("d")
       .rowsBetween(Window.unboundedPreceding, 0)
-    val cuts = grid
+    // argmax + pick read the same bounded table
+    val cuts = Lineage.cut(grid
       .withColumn("t", count(lit(1)).over(w))
       .withColumn("sl", sum("x").over(w).cast("decimal(38,0)"))
       .join(broadcast(tot), Seq("et"))
@@ -339,8 +337,7 @@ object Funnel {
         "CAST((1000 * (sl * sl * (n - t) * n " +
           "+ (s - sl) * (s - sl) * t * n " +
           "- s * s * t * (n - t))) " +
-          "div (CAST(t AS DECIMAL(38,0)) * (n - t) * n) AS BIGINT)"))
-      .localCheckpoint() // argmax + pick read the same bounded table
+          "div (CAST(t AS DECIMAL(38,0)) * (n - t) * n) AS BIGINT)")))
     val best = cuts.groupBy("et").agg(max("gain_x1000").as("__g"))
     // renamed keys: picked derives from cuts, and a same-lineage join
     // trips DetectAmbiguousSelfJoin
@@ -371,13 +368,12 @@ object Funnel {
   def revenueTrend(df: DataFrame, tsCol: String,
                    amountCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val m = df.select(date_trunc("month", col(tsCol)).as("month"),
+    val m = Lineage.cut(df.select(date_trunc("month", col(tsCol)).as("month"),
         col(amountCol).as("__v"))
       .groupBy("month")
       .agg(count(lit(1)).as("n_orders"),
         expr("CAST(sum(CAST(__v AS DECIMAL(18,2))) * 100 AS BIGINT)")
-          .as("revenue_cents"))
-      .localCheckpoint()
+          .as("revenue_cents")))
     val bounds = m.agg(min("month").as("__lo"), max("month").as("__hi"))
     val grid = bounds.select(explode(expr(
         "sequence(__lo, __hi, interval 1 month)")).as("month"))
@@ -463,14 +459,13 @@ object Funnel {
       .orderBy(col("__ts"), col("__id"))
     val slots = (1 to depth).map(i =>
       max(when(col("__rn") === i, col("__t"))).as(s"__p$i"))
-    val paths = sess.withColumn("__rn", row_number().over(wS))
+    val paths = Lineage.cut(sess.withColumn("__rn", row_number().over(wS))
       .where(col("__rn") <= depth)
       .groupBy("__u", "__s")
       .agg(slots.head, slots.tail: _*)
       .select(concat_ws(">",
         (1 to depth).map(i => col(s"__p$i")): _*).as("path"))
-      .groupBy("path").agg(count(lit(1)).as("n_sessions"))
-      .localCheckpoint()
+      .groupBy("path").agg(count(lit(1)).as("n_sessions")))
     val total = paths.agg(sum("n_sessions").as("__nt"))
     paths.crossJoin(broadcast(total))
       .select(col("path"), col("n_sessions"),
@@ -504,9 +499,8 @@ object Funnel {
         "AS BIGINT)").as("cents"))
       .select(col("__k"), col("cents"),
         expr(s"cents div $bucketCents").as("bucket"))
-    val bk = per.groupBy("bucket")
-      .agg(count(lit(1)).as("n_customers"), sum("cents").as("bucket_cents"))
-      .localCheckpoint()
+    val bk = Lineage.cut(per.groupBy("bucket")
+      .agg(count(lit(1)).as("n_customers"), sum("cents").as("bucket_cents")))
     val tot = bk.agg(sum("n_customers").as("__nt"),
       sum("bucket_cents").as("__rt"))
     val w = Window.orderBy("bucket")
@@ -563,11 +557,10 @@ object Funnel {
           unix_timestamp(col("__ts")) - unix_timestamp(col("__touch.tts"))
             <= ttlSec, col("__touch.ttp"))
           .otherwise(lit("organic")).as("channel"))
-    val counts = attributed.groupBy("channel")
+    val counts = Lineage.cut(attributed.groupBy("channel")
       .agg(count(lit(1)).as("n_conversions"),
         sum(col("__v").cast("decimal(18,2)")).cast("double")
-          .as("revenue"))
-      .localCheckpoint()
+          .as("revenue")))
     val total = counts.agg(sum("n_conversions").as("__nt"))
     counts.crossJoin(broadcast(total))
       .select(col("channel"), col("n_conversions"),
@@ -593,10 +586,9 @@ object Funnel {
   def theilSenSlope(df: DataFrame, typeCol: String,
                     tsCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val c = df.select(col(typeCol).as("et"),
+    val c = Lineage.cut(df.select(col(typeCol).as("et"),
         date_trunc("day", col(tsCol)).as("d"))
-      .groupBy("et", "d").agg(count(lit(1)).as("x"))
-      .localCheckpoint()
+      .groupBy("et", "d").agg(count(lit(1)).as("x")))
     val days = c.select("d").distinct()
     val grid = c.select("et").distinct()
       .crossJoin(broadcast(days))
@@ -642,10 +634,9 @@ object Funnel {
     */
   def olsTrend(df: DataFrame, typeCol: String, tsCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val c = df.select(col(typeCol).as("et"),
+    val c = Lineage.cut(df.select(col(typeCol).as("et"),
         date_trunc("day", col(tsCol)).as("d"))
-      .groupBy("et", "d").agg(count(lit(1)).as("y"))
-      .localCheckpoint()
+      .groupBy("et", "d").agg(count(lit(1)).as("y")))
     val days = c.select("d").distinct()
     val grid = c.select("et").distinct()
       .crossJoin(broadcast(days))
@@ -695,10 +686,10 @@ object Funnel {
     */
   def seasonalStrength(df: DataFrame, typeCol: String,
                        tsCol: String): DataFrame = {
-    val base = df.select(col(typeCol).as("et"),
+    // one scan feeds both cell reductions
+    val base = Lineage.cut(df.select(col(typeCol).as("et"),
         date_trunc("day", col(tsCol)).as("d"),
-        hour(col(tsCol)).cast("bigint").as("hod"))
-      .localCheckpoint() // one scan feeds both cell reductions
+        hour(col(tsCol)).cast("bigint").as("hod")))
     val daily = base.groupBy("et", "d").agg(count(lit(1)).as("y"))
     val days = daily.select("d").distinct()
     val ets = daily.select("et").distinct()
@@ -745,10 +736,10 @@ object Funnel {
   def durbinWatson(df: DataFrame, typeCol: String,
                    tsCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val c = df.select(col(typeCol).as("et"),
+    // grid + the one-row-per-type fit share it
+    val c = Lineage.cut(df.select(col(typeCol).as("et"),
         date_trunc("day", col(tsCol)).as("d"))
-      .groupBy("et", "d").agg(count(lit(1)).as("y"))
-      .localCheckpoint() // grid + the one-row-per-type fit share it
+      .groupBy("et", "d").agg(count(lit(1)).as("y")))
     val days = c.select("d").distinct()
     val grid = c.select("et").distinct()
       .crossJoin(broadcast(days))
@@ -795,10 +786,9 @@ object Funnel {
   def leadLag(df: DataFrame, typeCol: String, tsCol: String,
               maxLag: Int = 6): DataFrame = {
     require(maxLag >= 1, s"maxLag=$maxLag must be >= 1")
-    val c = df.select(col(typeCol).as("et"),
+    val c = Lineage.cut(df.select(col(typeCol).as("et"),
         date_trunc("hour", col(tsCol)).as("h"))
-      .groupBy("et", "h").agg(count(lit(1)).as("x"))
-      .localCheckpoint()
+      .groupBy("et", "h").agg(count(lit(1)).as("x")))
     val hours = c.select("h").distinct()
     val grid = c.select("et").distinct()
       .crossJoin(broadcast(hours))
@@ -806,10 +796,9 @@ object Funnel {
       .na.fill(0L, Seq("x"))
     val mu = grid.groupBy("et")
       .agg(expr("CAST((1000 * sum(x)) div count(*) AS BIGINT)").as("mu"))
-    val dev = grid.join(broadcast(mu), Seq("et"))
+    val dev = Lineage.cut(grid.join(broadcast(mu), Seq("et"))
       .select(col("et"), col("h"),
-        expr("CAST(1000 * x - mu AS BIGINT)").as("dv"))
-      .localCheckpoint()
+        expr("CAST(1000 * x - mu AS BIGINT)").as("dv")))
     val lags = df.sparkSession.range(-maxLag, maxLag + 1)
       .select(col("id").cast("int").as("lag"))
     // β's row at hour hb contributes to lag ℓ at base hour hb − ℓ:
@@ -860,10 +849,9 @@ object Funnel {
   def autocorrelation(df: DataFrame, typeCol: String, tsCol: String,
                       maxLag: Int = 26): DataFrame = {
     require(maxLag >= 1, s"maxLag=$maxLag must be >= 1")
-    val c = df.select(col(typeCol).as("et"),
+    val c = Lineage.cut(df.select(col(typeCol).as("et"),
         date_trunc("hour", col(tsCol)).as("h"))
-      .groupBy("et", "h").agg(count(lit(1)).as("x"))
-      .localCheckpoint()
+      .groupBy("et", "h").agg(count(lit(1)).as("x")))
     val hours = c.select("h").distinct()
     val grid = c.select("et").distinct()
       .crossJoin(broadcast(hours))
@@ -871,10 +859,9 @@ object Funnel {
       .na.fill(0L, Seq("x"))
     val mu = grid.groupBy("et")
       .agg(expr("CAST((1000 * sum(x)) div count(*) AS BIGINT)").as("mu"))
-    val dev = grid.join(broadcast(mu), Seq("et"))
+    val dev = Lineage.cut(grid.join(broadcast(mu), Seq("et"))
       .select(col("et"), col("h"),
-        expr("CAST(1000 * x - mu AS BIGINT)").as("dv"))
-      .localCheckpoint()
+        expr("CAST(1000 * x - mu AS BIGINT)").as("dv")))
     val c0 = dev.groupBy("et")
       .agg(sum(expr("CAST(dv AS DECIMAL(38,0)) * dv")).as("c0"))
     val lags = df.sparkSession.range(1, maxLag + 1)
@@ -939,10 +926,10 @@ object Funnel {
   def runsTest(df: DataFrame, tsCol: String,
                valueExpr: org.apache.spark.sql.Column): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val daily = df.select(date_trunc("day", col(tsCol)).as("d"),
+    // median rank + sign walk share it
+    val daily = Lineage.cut(df.select(date_trunc("day", col(tsCol)).as("d"),
         valueExpr.cast("bigint").as("v"))
-      .groupBy("d").agg(sum("v").as("v"))
-      .localCheckpoint() // median rank + sign walk share it
+      .groupBy("d").agg(sum("v").as("v")))
     val vc = daily.groupBy("v").agg(count(lit(1)).as("cnt"))
     val totN = daily.agg(count(lit(1)).as("nt"))
     // value-count cumsum: bounded by distinct daily values (≤ days)
@@ -991,8 +978,8 @@ object Funnel {
   def burstiness(df: DataFrame, typeCol: String, tsCol: String): DataFrame = {
     val binned = df.select(col(typeCol).as("et"),
       date_trunc("hour", col(tsCol)).as("h"))
-    val counts = binned.groupBy("et", "h").agg(count(lit(1)).as("x"))
-      .localCheckpoint()
+    val counts = Lineage.cut(binned.groupBy("et", "h")
+      .agg(count(lit(1)).as("x")))
     val hours = counts.select("h").distinct()
     val grid = counts.select("et").distinct()
       .crossJoin(broadcast(hours))
@@ -1269,7 +1256,7 @@ object Funnel {
                   amountCol: String): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val maxD = df.agg(max(col(dateCol)).as("__mx"))
-    val base = df.groupBy(col(custCol).as("__c"))
+    val base = Lineage.cut(df.groupBy(col(custCol).as("__c"))
       .agg(max(col(dateCol)).as("__last"), count(lit(1)).as("f"),
         expr(s"CAST(sum(CAST($amountCol AS DECIMAL(18,2))) * 100 " +
           "AS BIGINT)").as("cents"))
@@ -1277,8 +1264,7 @@ object Funnel {
       .select(col("__c"),
         expr("CAST(datediff(__mx, __last) AS BIGINT)").as("r"),
         col("f"), col("cents"),
-        expr("cents div 10000").as("m"))
-      .localCheckpoint()
+        expr("cents div 10000").as("m")))
     // exact quintile cuts over the bounded value-count table of one
     // dimension: the global cumsum window runs over distinct VALUES
     // (span days / order counts / $100 buckets), never customers
@@ -1476,7 +1462,7 @@ object Funnel {
       .where(col("__pc") === 0L)
       .withColumn("__state",
         when(col("__t") === convType, CONV).otherwise(col("__t")))
-    val seq = seq0.localCheckpoint()
+    val seq = Lineage.cut(seq0)
     val pairs = seq
       .withColumn("__prevs", lag("__state", 1).over(w))
       .select(coalesce(col("__prevs"), lit(START)).as("src"),
@@ -1489,14 +1475,13 @@ object Funnel {
     val trans = pairs.union(terminals)
       .groupBy("src", "dst").agg(count(lit(1)).as("cnt"))
     val outTot = trans.groupBy("src").agg(sum("cnt").as("tot"))
-    val p = broadcast(trans.join(outTot, "src")
+    val p = broadcast(Lineage.cut(trans.join(outTot, "src")
       .select(col("src"), col("dst"),
-        expr("CAST((1000000 * cnt) div tot AS BIGINT)").as("p_ppm"))
-      .localCheckpoint())
-    val channels = trans.select(col("src").as("ch"))
+        expr("CAST((1000000 * cnt) div tot AS BIGINT)").as("p_ppm"))))
+    val channels = Lineage.cut(trans.select(col("src").as("ch"))
       .union(trans.select(col("dst").as("ch")))
       .where(!col("ch").isin(START, CONV, NULLS))
-      .distinct().localCheckpoint()
+      .distinct())
     val removedDim = channels.select(col("ch").as("removed"))
       .union(channels.sparkSession.range(1).select(lit(NONE).as("removed")))
     val convRows = broadcast(removedDim)
@@ -1510,7 +1495,7 @@ object Funnel {
         .groupBy(col("removed"), col("src").as("state"))
         .agg(expr("CAST(sum(p_ppm * r) div 1000000 AS BIGINT)").as("r"))
         .where(col("state") =!= CONV)
-      r = step.union(convRows).localCheckpoint()
+      r = Lineage.cut(step.union(convRows))
     }
     val reach = r.where(col("state") === START)
       .select(col("removed"), col("r").as("reach_ppm"))
@@ -1605,9 +1590,9 @@ object Funnel {
     */
   def growthAccounting(df: DataFrame, userCol: String,
                        tsCol: String): DataFrame = {
-    val uw = df.select(col(userCol).as("u"),
+    val uw = Lineage.cut(df.select(col(userCol).as("u"),
         date_trunc("week", col(tsCol)).as("w"))
-      .distinct().localCheckpoint()
+      .distinct())
     val first = uw.groupBy("u").agg(min("w").as("fw"))
     val weeks = uw.select("w").distinct()
     val grid = weeks.union(
@@ -1658,11 +1643,10 @@ object Funnel {
     import graft.functions.MitchellE8.log2E8
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("__u").orderBy(col("__ts"), col("__id"))
-    val pairs = df.select(col(userCol).as("__u"), col(typeCol).as("a"),
-        col(tsCol).as("__ts"), col(idCol).as("__id"))
+    val pairs = Lineage.cut(df.select(col(userCol).as("__u"),
+        col(typeCol).as("a"), col(tsCol).as("__ts"), col(idCol).as("__id"))
       .select(col("__u"), col("a"), lead("a", 1).over(w).as("b"))
-      .where(col("b").isNotNull)
-      .localCheckpoint()
+      .where(col("b").isNotNull))
     val counts = pairs.groupBy("a", "b").agg(count(lit(1)).as("cnt"))
     val tot = counts.groupBy("a").agg(sum("cnt").as("tot"))
     val scoredTrans = broadcast(counts.join(tot, "a")
@@ -1706,12 +1690,10 @@ object Funnel {
                        tsCol: String, idCol: String,
                        iters: Int = 5): DataFrame = {
     require(iters >= 1, s"iters=$iters must be >= 1")
-    val trans = markovTransitions(df, userCol, typeCol, tsCol, idCol)
+    val trans = Lineage.cut(markovTransitions(df, userCol, typeCol, tsCol, idCol)
       .select(col("from_type").as("a"), col("to_type").as("b"),
-        col("p_ppm"), col("n_from"))
-      .localCheckpoint()
-    val types = df.select(col(typeCol).as("st")).distinct()
-      .localCheckpoint()
+        col("p_ppm"), col("n_from")))
+    val types = Lineage.cut(df.select(col(typeCol).as("st")).distinct())
     val nT = types.count()
     var pi = types.select(col("st"),
       lit(1000000L / math.max(nT, 1L)).as("pi"))
@@ -1790,10 +1772,9 @@ object Funnel {
     */
   def ewmaBands(df: DataFrame, typeCol: String, tsCol: String,
                 warmup: Int = 7, k: Int = 3): DataFrame = {
-    val c = df.select(col(typeCol).as("et"),
+    val c = Lineage.cut(df.select(col(typeCol).as("et"),
         date_trunc("day", col(tsCol)).as("d"))
-      .groupBy("et", "d").agg(count(lit(1)).as("x"))
-      .localCheckpoint()
+      .groupBy("et", "d").agg(count(lit(1)).as("x")))
     val days = c.select("d").distinct()
     val grid = c.select("et").distinct()
       .crossJoin(broadcast(days))
@@ -1895,8 +1876,8 @@ object Funnel {
       val hraw = Lineage.cut(edges.join(auth, "a").groupBy("h")
         .agg(sum("s").as("r")))
       // auth is consumed by the hraw cut — except the final round's,
-      // which topA re-reads from its araw (released by the caller's
-      // session sweep, like the final hraw feeding topH)
+      // which topA re-reads from its araw (freed by the caller's
+      // Lineage.scoped block, like the final hraw feeding topH)
       if (i < iters) Lineage.release(araw)
       prevH = hraw
       val ht = hraw.agg(sum("r").as("t"))
@@ -1966,10 +1947,9 @@ object Funnel {
   def holtWinters(df: DataFrame, typeCol: String, tsCol: String,
                   horizon: Int = 7, warmup: Int = 14): DataFrame = {
     require(horizon >= 1, s"horizon=$horizon must be >= 1")
-    val c = df.select(col(typeCol).as("et"),
+    val c = Lineage.cut(df.select(col(typeCol).as("et"),
         date_trunc("day", col(tsCol)).as("d"))
-      .groupBy("et", "d").agg(count(lit(1)).as("x"))
-      .localCheckpoint()
+      .groupBy("et", "d").agg(count(lit(1)).as("x")))
     val days = c.select("d").distinct()
     val grid = c.select("et").distinct()
       .crossJoin(broadcast(days))
@@ -2018,10 +1998,9 @@ object Funnel {
   def brownForecast(df: DataFrame, typeCol: String, tsCol: String,
                     horizon: Int = 7, warmup: Int = 7): DataFrame = {
     require(horizon >= 1, s"horizon=$horizon must be >= 1")
-    val c = df.select(col(typeCol).as("et"),
+    val c = Lineage.cut(df.select(col(typeCol).as("et"),
         date_trunc("day", col(tsCol)).as("d"))
-      .groupBy("et", "d").agg(count(lit(1)).as("x"))
-      .localCheckpoint()
+      .groupBy("et", "d").agg(count(lit(1)).as("x")))
     val days = c.select("d").distinct()
     val grid = c.select("et").distinct()
       .crossJoin(broadcast(days))
@@ -2117,14 +2096,14 @@ object Funnel {
         max(date_trunc("day", col(tsCol))).as("last_d"),
         max(cohortExpr.cast("bigint")).as("g"))
     val maxD = spans.agg(max("last_d").as("max_d"))
-    val byT = spans.crossJoin(broadcast(maxD))
+    // two cohort slices + totals off one reduction
+    val byT = Lineage.cut(spans.crossJoin(broadcast(maxD))
       .select(col("g"),
         expr("CAST(datediff(last_d, first_d) AS BIGINT)").as("t"),
         expr(s"CASE WHEN datediff(max_d, last_d) > $horizonDays " +
           "THEN CAST(1 AS BIGINT) ELSE CAST(0 AS BIGINT) END").as("e"))
       .groupBy("g", "t")
-      .agg(sum("e").as("d"), count(lit(1)).as("a"))
-      .localCheckpoint() // two cohort slices + totals off one reduction
+      .agg(sum("e").as("d"), count(lit(1)).as("a")))
     val g0 = byT.where(col("g") === 0L)
       .select(col("t"), col("d").as("d0"), col("a").as("a0"))
     val g1 = byT.where(col("g") === 1L)
@@ -2171,20 +2150,20 @@ object Funnel {
     val maskCase = touches.zipWithIndex
       .map { case (t, i) => s"WHEN '$t' THEN ${1L << i}" }
       .mkString(s"CASE `$typeCol` ", " ", " ELSE 0 END")
-    val coal = df
+    // ≤2^c rows; feeds v-table + exposure diag
+    val coal = Lineage.cut(df
       .where(col(typeCol).isInCollection(touches :+ conversion))
       .groupBy(col(userCol))
       .agg(expr(s"bit_or($maskCase)").as("m"),
         max(when(col(typeCol) === conversion, 1L).otherwise(0L)).as("cv"))
       .where(col("m") > 0)
       .groupBy("m")
-      .agg(count(lit(1)).as("n"), sum("cv").as("cvs"))
-      .localCheckpoint() // ≤2^c rows; feeds v-table + exposure diag
-    val vt = spark.range(1L << c).toDF("s")
+      .agg(count(lit(1)).as("n"), sum("cv").as("cvs")))
+    // 2^c rows; subset + superset consumers
+    val vt = Lineage.cut(spark.range(1L << c).toDF("s")
       .join(coal.withColumnRenamed("m", "s"), Seq("s"), "left")
       .select(col("s"),
-        coalesce(expr("(1000000 * cvs) div n"), lit(0L)).as("vppm"))
-      .localCheckpoint() // 2^c rows; subset + superset consumers
+        coalesce(expr("(1000000 * cvs) div n"), lit(0L)).as("vppm")))
     val chans = touches.zipWithIndex
       .map { case (t, i) => (t, 1L << i) }.toDF("channel", "bit")
     val fact = (1 to 16).scanLeft(1L)(_ * _)

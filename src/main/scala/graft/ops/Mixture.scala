@@ -401,23 +401,23 @@ object Mixture {
     * DISJOINT by the anti-join, so cumulative covered ≡ Σ gains.
     *
     * Scale shape: ONE shingle pass to the distinct (doc, hash)
-    * table (localCheckpointed — every round re-reads it); each of
+    * table (cut — every round re-reads it); each of
     * the k rounds is one anti-join + one doc-keyed count + a 1-row
     * TakeOrdered argmax (the k driver-side single-row collects are
     * the bounded, documented kind — the q65/kMeans iterative
     * discipline); the covered set grows by ≤ the chosen doc's
-    * shingles per round and lives as a checkpointed hash column,
+    * shingles per round and lives as a cut hash column,
     * never corpus-wide state.
     */
   def maxCoverageSelect(df: DataFrame, idCol: String, textCol: String,
                         k: Int = 4, shingleWidth: Int = 3): DataFrame = {
     import graft.functions.TextFns
     val spark = df.sparkSession
-    val sh = df.select(col(idCol).cast("long").as("id"),
+    val sh = Lineage.cut(df.select(col(idCol).cast("long").as("id"),
         explode(TextFns.shingles(col(textCol), shingleWidth)).as("s"))
       .select(col("id"), HashFns.hash61(col("s")).as("h"))
-      .distinct().localCheckpoint()
-    var covered = sh.select("h").where(lit(false)).localCheckpoint()
+      .distinct())
+    var covered = Lineage.cut(sh.select("h").where(lit(false)))
     val rows = collection.mutable.ArrayBuffer.empty[(Long, Long, Long, Long)]
     var cum = 0L
     for (r <- 1 to k) {
@@ -429,9 +429,8 @@ object Mixture {
         val (bid, gain) = (best.head.getLong(0), best.head.getLong(1))
         cum += gain
         rows += ((r.toLong, bid, gain, cum))
-        covered = covered
-          .union(sh.where(col("id") === bid).select("h"))
-          .localCheckpoint()
+        covered = Lineage.cut(covered
+          .union(sh.where(col("id") === bid).select("h")))
       }
     }
     import spark.implicits._
@@ -548,8 +547,8 @@ object Mixture {
   private def rakeFromCellsDf(cells0: DataFrame, rowCol: String,
                               colCol: String, iters: Int): DataFrame = {
     require(iters >= 1 && iters <= 8, s"iters=$iters out of range")
-    val cells = cells0
-      .localCheckpoint() // dims + every sweep read the bounded grid
+    // dims + every sweep read the bounded grid
+    val cells = Lineage.cut(cells0)
     val dims = cells.agg(countDistinct("r").as("nr"),
       countDistinct("c").as("nc"),
       sum("n").cast("decimal(38,0)").as("nn"))
@@ -616,9 +615,9 @@ object Mixture {
                  etaDen: Int = 1): DataFrame = {
     val scored = TextStats.lmSurprisal(df, idCol, textCol,
       carry = Seq(srcCol))
-    val bySrc = scored.groupBy(col(srcCol).as("src"))
-      .agg(sum("n_bigrams").as("nb"), sum("surprisal_e8").as("se8"))
-      .localCheckpoint() // sources-bounded; totals + weights off one fold
+    // sources-bounded; totals + weights off one fold
+    val bySrc = Lineage.cut(scored.groupBy(col(srcCol).as("src"))
+      .agg(sum("n_bigrams").as("nb"), sum("surprisal_e8").as("se8")))
     doremiFromSumsDf(bySrc, etaNum, etaDen)
   }
 

@@ -140,8 +140,8 @@ object Profile {
     // histogram, totals, and group list all derive from it (it is
     // (groups × bins)-bounded, so cut lineage once instead of
     // re-scanning the corpus per derivation)
-    val sHist = binned.groupBy("g", "bin").agg(count(lit(1)).as("sc"))
-      .localCheckpoint()
+    val sHist = Lineage.cut(binned.groupBy("g", "bin")
+      .agg(count(lit(1)).as("sc")))
     val gHist = sHist.groupBy("bin").agg(sum("sc").as("gc"))
     val gTot = gHist.agg(sum("gc").as("gt"), count(lit(1)).as("nb"))
     val sTot = sHist.groupBy("g").agg(sum("sc").as("st"))
@@ -183,10 +183,9 @@ object Profile {
   def psiVsBaseline(df: DataFrame, groupCol: String, valueCol: String,
                     binWidth: Long, baseline: DataFrame): DataFrame = {
     require(binWidth > 0, s"binWidth=$binWidth must be positive")
-    val sHist = df.select(col(groupCol).as("g"),
+    val sHist = Lineage.cut(df.select(col(groupCol).as("g"),
         expr(s"CAST($valueCol div $binWidth AS BIGINT)").as("bin"))
-      .groupBy("g", "bin").agg(count(lit(1)).as("sc"))
-      .localCheckpoint()
+      .groupBy("g", "bin").agg(count(lit(1)).as("sc")))
     val base = baseline.select(col("bin").cast("bigint").as("bin"),
       col("bc").cast("bigint").as("bc"))
     val bTot = base.agg(sum("bc").as("bt"))
@@ -250,8 +249,8 @@ object Profile {
     require(binWidth > 0, s"binWidth=$binWidth must be positive")
     val binned = df.select(col(groupCol).as("g"),
       expr(s"CAST($valueCol div $binWidth AS BIGINT)").as("bin"))
-    val sHist = binned.groupBy("g", "bin").agg(count(lit(1)).as("sc"))
-      .localCheckpoint()
+    val sHist = Lineage.cut(binned.groupBy("g", "bin")
+      .agg(count(lit(1)).as("sc")))
     val gHist = sHist.groupBy("bin").agg(sum("sc").as("gc"))
     val gTot = gHist.agg(sum("gc").as("gt"))
     val sTot = sHist.groupBy("g").agg(sum("sc").as("st"))
@@ -404,11 +403,10 @@ object Profile {
                       loPct: Int = 5, hiPct: Int = 95): DataFrame = {
     require(0 <= loPct && loPct < hiPct && hiPct <= 100,
       s"bad percentile bounds [$loPct, $hiPct]")
-    val c = df.select(col(groupCol).as("g"),
+    val c = Lineage.cut(df.select(col(groupCol).as("g"),
         expr(s"CAST(CAST($valueCol AS DECIMAL(18,2)) * 100 AS BIGINT)")
           .as("cents"))
-      .groupBy("g", "cents").agg(count(lit(1)).as("cnt"))
-      .localCheckpoint()
+      .groupBy("g", "cents").agg(count(lit(1)).as("cnt")))
     val tot = c.groupBy("g")
       .agg(sum("cnt").as("n"),
         sum(expr("CAST(cnt AS DECIMAL(38,0)) * cents")).as("raw_sum"))
@@ -459,21 +457,20 @@ object Profile {
     require(binWidth > 0, s"binWidth=$binWidth must be positive")
     val binned = df.select(col(groupCol).as("g"),
       expr(s"CAST($valueCol div $binWidth AS BIGINT)").as("bin"))
-    val sHist = binned.groupBy("g", "bin").agg(count(lit(1)).as("sc"))
-      .localCheckpoint()
+    val sHist = Lineage.cut(binned.groupBy("g", "bin")
+      .agg(count(lit(1)).as("sc")))
     val bins = sHist.select("bin").distinct()
     val sTot = sHist.groupBy("g").agg(sum("sc").as("n"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("g").orderBy("bin")
       .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding, 0)
-    val cdf = sTot.select("g", "n").crossJoin(broadcast(bins))
+    val cdf = Lineage.cut(sTot.select("g", "n").crossJoin(broadcast(bins))
       .join(sHist, Seq("g", "bin"), "left")
       .select(col("g"), col("n"), col("bin"),
         sum(expr("coalesce(sc, CAST(0 AS BIGINT))")).over(w).as("cum"))
       .select(col("g"), col("n"), col("bin"),
         expr("CAST((CAST(cum AS DECIMAL(38,0)) * 1000000) div n AS BIGINT)")
-          .as("cdf_ppm"))
-      .localCheckpoint()
+          .as("cdf_ppm")))
     val a = cdf.select(col("g").as("ga"), col("n").as("n_a"),
       col("bin"), col("cdf_ppm").as("ca"))
     val b = cdf.select(col("g").as("gb"), col("n").as("n_b"),
@@ -593,8 +590,8 @@ object Profile {
     val tagged = df.select(col(idCol).as("__i"),
         array(raterCols.map(col): _*).as("__rs"))
       .select(col("__i"), explode(col("__rs")).as("cat"))
-    val nij = tagged.groupBy("__i", "cat").agg(count(lit(1)).as("nij"))
-      .localCheckpoint()
+    val nij = Lineage.cut(tagged.groupBy("__i", "cat")
+      .agg(count(lit(1)).as("nij")))
     val aRow = nij.agg(sum(expr("nij * (nij - 1)")).as("a"),
       countDistinct(col("__i")).as("n"))
     val cj = nij.groupBy("cat").agg(sum("nij").as("cj"))
@@ -623,10 +620,9 @@ object Profile {
     require(checks.nonEmpty, "need at least one check")
     // the ONE-row aggregate is re-selected once per check row — cut
     // lineage so the corpus scan runs once, not |checks| times
-    val agg = df.agg(count(lit(1)).as("__n"),
+    val agg = Lineage.cut(df.agg(count(lit(1)).as("__n"),
       checks.zipWithIndex.map { case ((_, p), i) =>
-        sum(when(expr(p), 1L).otherwise(0L)).as(s"__p$i") }: _*)
-      .localCheckpoint()
+        sum(when(expr(p), 1L).otherwise(0L)).as(s"__p$i") }: _*))
     val rows = checks.zipWithIndex.map { case ((name, _), i) =>
       agg.select(lit(name).as("check"), col("__n").as("n_rows"),
         col(s"__p$i").as("n_pass"),
@@ -882,10 +878,9 @@ object Profile {
   def jsDivergence(df: DataFrame, groupCol: String,
                    textCol: String): DataFrame = {
     import graft.functions.TextFns
-    val counts = df.select(col(groupCol).as("g"),
+    val counts = Lineage.cut(df.select(col(groupCol).as("g"),
         explode(TextFns.tokens(col(textCol))).as("w"))
-      .groupBy("g", "w").agg(count(lit(1)).as("c"))
-      .localCheckpoint()
+      .groupBy("g", "w").agg(count(lit(1)).as("c")))
     val tot = counts.groupBy("g").agg(sum("c").as("t"))
     val pairs = tot.select(col("g").as("ga"))
       .join(tot.select(col("g").as("gb")), col("ga") < col("gb"))
@@ -1076,9 +1071,9 @@ object Profile {
                  sensitiveCol: String,
                  tPpm: Long = 300000L): DataFrame = {
     val qc = quasiCols.map(col)
-    val cv = df.groupBy(qc :+ col(sensitiveCol).as("__v"): _*)
-      .agg(count(lit(1)).as("__cv"))
-      .localCheckpoint() // feeds the class sizes AND the grid join
+    // feeds the class sizes AND the grid join
+    val cv = Lineage.cut(df.groupBy(qc :+ col(sensitiveCol).as("__v"): _*)
+      .agg(count(lit(1)).as("__cv")))
     val vc = cv.groupBy("__v").agg(sum("__cv").cast("bigint").as("__cd"))
     val cls = cv.groupBy(qc: _*).agg(sum("__cv").cast("bigint").as("n_c"))
     val n = vc.agg(sum("__cd").cast("bigint").as("__n"))
@@ -1330,10 +1325,10 @@ object Profile {
     */
   def isotonicCalibration(df: DataFrame, binCol: String,
                           labelCol: String): DataFrame = {
-    val cells = df.groupBy(col(binCol).cast("bigint").as("bin"))
+    // interval grid + membership + report
+    val cells = Lineage.cut(df.groupBy(col(binCol).cast("bigint").as("bin"))
       .agg(count(lit(1)).as("n"),
-        sum(when(col(labelCol), 1L).otherwise(0L)).as("pos"))
-      .localCheckpoint() // interval grid + membership + report
+        sum(when(col(labelCol), 1L).otherwise(0L)).as("pos")))
     // bin-table-bounded inequality joins: broadcast the right sides
     // explicitly so the plan is a BroadcastNestedLoopJoin over the
     // ≤ B-row table, never a CartesianProduct (checkpointed tables
@@ -1372,10 +1367,10 @@ object Profile {
   def fairnessReport(df: DataFrame, groupCol: String,
                      selectedExpr: org.apache.spark.sql.Column,
                      refGroup: String): DataFrame = {
-    val cnt = df.groupBy(col(groupCol).as("g"))
+    // reference row + report rows
+    val cnt = Lineage.cut(df.groupBy(col(groupCol).as("g"))
       .agg(count(lit(1)).as("n"),
-        sum(selectedExpr.cast("bigint")).as("sel"))
-      .localCheckpoint() // reference row + report rows
+        sum(selectedExpr.cast("bigint")).as("sel")))
     val ref = cnt.where(col("g") === lit(refGroup))
       .select(col("n").as("n_ref"), col("sel").as("sel_ref"))
     cnt.crossJoin(broadcast(ref))
@@ -1413,12 +1408,12 @@ object Profile {
                      strata: Int): DataFrame = {
     require(binWidth > 0 && strata >= 1,
       s"binWidth=$binWidth, strata=$strata out of range")
-    val bins = df
+    // total + windowed consumers
+    val bins = Lineage.cut(df
       .groupBy(expr(s"$valueCol div $binWidth").as("b"))
       .agg(count(lit(1)).as("f"))
       .withColumn("isq", expr(
-        "CAST(floor(1000 * sqrt(CAST(f AS DOUBLE))) AS BIGINT)"))
-      .localCheckpoint() // total + windowed consumers
+        "CAST(floor(1000 * sqrt(CAST(f AS DOUBLE))) AS BIGINT)")))
     val tot = bins.agg(sum("isq").as("t"))
     val w = org.apache.spark.sql.expressions.Window.orderBy("b")
       .rowsBetween(org.apache.spark.sql.expressions.Window
@@ -1455,10 +1450,10 @@ object Profile {
   def kAnonymity(df: DataFrame, quasiCols: Seq[String],
                  sensitiveCol: String,
                  ks: Seq[Long] = Seq(2L, 5L, 10L, 25L)): DataFrame = {
-    val cls = df.groupBy(quasiCols.map(col): _*)
+    // totals + one fold per k threshold
+    val cls = Lineage.cut(df.groupBy(quasiCols.map(col): _*)
       .agg(count(lit(1)).as("sz"),
-        countDistinct(col(sensitiveCol)).as("ldiv"))
-      .localCheckpoint() // totals + one fold per k threshold
+        countDistinct(col(sensitiveCol)).as("ldiv")))
     val tot = cls.agg(
       sum("sz").cast("bigint").as("n_rows"),
       count(lit(1)).as("n_classes"),
@@ -1484,21 +1479,6 @@ object Profile {
           "div n_rows AS BIGINT)").as("l1_rows_ppm"))
   }
 
-  /** Concentration / diversity report of one categorical dimension:
-    * Herfindahl–Hirschman index (Σ share² — the antitrust
-    * concentration screen, here "is one source eating the corpus"),
-    * Simpson's diversity D = Σ nᵢ(nᵢ−1)/(N(N−1)) (Simpson 1949 —
-    * the probability two random rows share the group, sampled
-    * WITHOUT replacement, so tiny groups don't read as diversity
-    * they don't have), the effective number of groups 1/HHI (the
-    * "how many equal-size sources would look like this" rendering),
-    * and the top group's share. All exact integer ppm via DECIMAL
-    * cross-products. `dim` labels the row so several dimensions
-    * union into one report.
-    *
-    * Scale shape: one hash aggregation to the group-count table,
-    * then a one-row fold — shuffle carries groups, never rows.
-    */
   /** Theil-T inequality decomposition (Theil 1967) of a positive
     * value over units, split by group: q229's Lorenz curve draws the
     * whole-corpus inequality; this SPLITS it — how much is
@@ -1529,9 +1509,9 @@ object Profile {
     val unit = df.select(col(groupCol).cast("string").as("g"),
         valueExpr.cast("bigint").as("x"))
       .where(col("x") > 0)
-    val pg = unit.groupBy("g")
-      .agg(count(lit(1)).as("ng"), sum("x").as("xg"))
-      .localCheckpoint() // means + totals + the per-unit join share it
+    // means + totals + the per-unit join share it
+    val pg = Lineage.cut(unit.groupBy("g")
+      .agg(count(lit(1)).as("ng"), sum("x").as("xg")))
     val tot = pg.agg(sum("ng").as("n"), sum("xg").as("x"))
     val mg = pg.select(col("g"), col("ng"), col("xg"),
       expr("xg div ng").as("mg"))
@@ -1576,6 +1556,21 @@ object Profile {
     when(pos, lr).otherwise(-lr)
   }
 
+  /** Concentration / diversity report of one categorical dimension:
+    * Herfindahl–Hirschman index (Σ share² — the antitrust
+    * concentration screen, here "is one source eating the corpus"),
+    * Simpson's diversity D = Σ nᵢ(nᵢ−1)/(N(N−1)) (Simpson 1949 —
+    * the probability two random rows share the group, sampled
+    * WITHOUT replacement, so tiny groups don't read as diversity
+    * they don't have), the effective number of groups 1/HHI (the
+    * "how many equal-size sources would look like this" rendering),
+    * and the top group's share. All exact integer ppm via DECIMAL
+    * cross-products. `dim` labels the row so several dimensions
+    * union into one report.
+    *
+    * Scale shape: one hash aggregation to the group-count table,
+    * then a one-row fold — shuffle carries groups, never rows.
+    */
   def concentration(df: DataFrame, groupCol: String,
                     dim: String): DataFrame =
     concentrationFromCountsDf(

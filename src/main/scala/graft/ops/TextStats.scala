@@ -436,10 +436,10 @@ object TextStats {
     */
   def tokenF1(pairs: DataFrame, docs: DataFrame, idCol: String,
               textCol: String): DataFrame = {
-    val tf = docs.select(col(idCol).as("id"),
+    // two pair-side consumers + the length fold
+    val tf = Lineage.cut(docs.select(col(idCol).as("id"),
         explode(TextFns.tokens(col(textCol))).as("w"))
-      .groupBy("id", "w").agg(count(lit(1)).as("tf"))
-      .localCheckpoint() // two pair-side consumers + the length fold
+      .groupBy("id", "w").agg(count(lit(1)).as("tf")))
     val dl = tf.groupBy("id").agg(sum("tf").cast("bigint").as("dl"))
     val ov = pairs.select("id_a", "id_b")
       .join(tf.select(col("id").as("id_a"), col("w"),
@@ -601,9 +601,9 @@ object TextStats {
     */
   def vocabJaccard(df: DataFrame, groupCol: String,
                    textCol: String): DataFrame = {
-    val v = df.select(col(groupCol).as("g"),
+    val v = Lineage.cut(df.select(col(groupCol).as("g"),
         explode(array_distinct(TextFns.tokens(col(textCol)))).as("w"))
-      .distinct().localCheckpoint()
+      .distinct())
     val sizes = v.groupBy("g").agg(count(lit(1)).as("nv"))
     val inter = v.select(col("g").as("ga"), col("w"))
       .join(v.select(col("g").as("gb"), col("w")), Seq("w"))
@@ -652,8 +652,7 @@ object TextStats {
                   carry: Seq[String] = Seq.empty): DataFrame = {
     val toks = lmToks(df, idCol, textCol, carry)
     val bg = lmBigramRows(toks)
-    val c2t = bg.groupBy("w1", "bg").agg(count(lit(1)).as("c2"))
-      .localCheckpoint()
+    val c2t = Lineage.cut(bg.groupBy("w1", "bg").agg(count(lit(1)).as("c2")))
     val c1t = c2t.groupBy("w1")
       .agg(sum("c2").as("c1"), count(lit(1)).as("n1w1"))
     val ncw2 = c2t.select(substring_index(col("bg"), " ", -1).as("w2"))
@@ -706,8 +705,7 @@ object TextStats {
     import org.apache.spark.sql.expressions.Window
     val toks = lmToks(df, idCol, textCol, Seq.empty)
     val bg = lmBigramRows(toks)
-    val c2t = bg.groupBy("w1", "bg").agg(count(lit(1)).as("c2"))
-      .localCheckpoint()
+    val c2t = Lineage.cut(bg.groupBy("w1", "bg").agg(count(lit(1)).as("c2")))
     val c1t = c2t.groupBy("w1")
       .agg(sum("c2").as("c1"), count(lit(1)).as("n1w1"))
     val ncw2 = c2t.select(substring_index(col("bg"), " ", -1).as("w2"))
@@ -869,7 +867,7 @@ object TextStats {
     *
     * Scale shape: the corpus is touched ONCE (bigram explode +
     * count); everything after runs on the vocab²-bounded edge table
-    * — localCheckpointed, since `iters` joins re-read it — with
+    * — cut, since `iters` joins re-read it — with
     * node-keyed shuffles per iteration (the standard distributed
     * PageRank shape: O(E) per round, O(log-ish) rounds, never
     * corpus-sized state). N reaches the expression as a broadcast
@@ -903,7 +901,7 @@ object TextStats {
     * [[seedExpansion]]: bigram edges (2-shingles, the q124 split
     * convention), undirected doubling, exact ⌊w·10⁶/wdeg⌋ transition
     * shares through DECIMAL(38). Returns (shares, deg, nodes) — the
-    * first and third localCheckpointed, since the rank iterations
+    * first and third cut, since the rank iterations
     * re-read them.
     */
   private def wordGraphShares(df: DataFrame, idCol: String,
@@ -918,15 +916,12 @@ object TextStats {
     // vocab²-bounded and consumed by deg AND shares (and deg itself
     // by seeds + the final report join) — checkpoint once so the
     // corpus is scanned exactly once, never re-derived per branch
-    val edges = dir.groupBy("src", "dst").agg(count(lit(1)).as("w"))
-      .localCheckpoint()
-    val deg = edges.groupBy("src").agg(sum("w").as("wdeg"))
-      .localCheckpoint()
-    val shares = edges.join(deg, "src")
+    val edges = Lineage.cut(dir.groupBy("src", "dst").agg(count(lit(1)).as("w")))
+    val deg = Lineage.cut(edges.groupBy("src").agg(sum("w").as("wdeg")))
+    val shares = Lineage.cut(edges.join(deg, "src")
       .select(col("src"), col("dst"), expr(
         "CAST((CAST(w AS DECIMAL(38,0)) * 1000000) div wdeg AS BIGINT)")
-        .as("share_ppm"))
-      .localCheckpoint()
+        .as("share_ppm")))
     val nodes = deg.select(col("src").as("node"))
     (shares, deg, nodes)
   }
@@ -957,18 +952,17 @@ object TextStats {
     val (shares, deg, nodes) = wordGraphShares(df, idCol, textCol)
     // vocab-bounded degree table: orderBy+limit here never sorts the
     // corpus, only the vocabulary
-    val seeds = deg
+    // re-read every iteration (teleport mask)
+    val seeds = Lineage.cut(deg
       .orderBy(desc("wdeg"), col("src"))
       .limit(seedK)
-      .select(col("src").as("node"), lit(1L).as("is_seed"))
-      .localCheckpoint() // re-read every iteration (teleport mask)
+      .select(col("src").as("node"), lit(1L).as("is_seed")))
     val nSeeds = seeds.agg(count(lit(1)).as("n_seeds"))
     // checkpointed: the per-iteration joins and the final report all
     // re-read this bounded (node, is_seed) table, and a fresh lineage
     // avoids same-attribute self-join ambiguity across iterations
-    val seeded = nodes.join(seeds, Seq("node"), "left")
-      .na.fill(0L, Seq("is_seed"))
-      .localCheckpoint()
+    val seeded = Lineage.cut(nodes.join(seeds, Seq("node"), "left")
+      .na.fill(0L, Seq("is_seed")))
     var ranks = seeded.crossJoin(broadcast(nSeeds))
       .select(col("node"), col("is_seed"), expr(
         s"CAST(CASE WHEN is_seed = 1 THEN $Scale div n_seeds " +
@@ -1013,14 +1007,13 @@ object TextStats {
     import org.apache.spark.sql.expressions.Window
     require(nBuckets >= 1, s"nBuckets=$nBuckets must be positive")
     val maxId = df.agg(max(col(idCol).cast("bigint")).as("__max"))
-    val bw = df.select(col(idCol).cast("bigint").as("__id"),
+    val bw = Lineage.cut(df.select(col(idCol).cast("bigint").as("__id"),
         TextFns.tokens(col(textCol)).as("__w"))
       .crossJoin(broadcast(maxId))
       .select(expr(s"CAST(least($nBuckets - 1, " +
         s"(__id * $nBuckets) div (__max + 1)) AS BIGINT)").as("bucket"),
         explode(col("__w")).as("t"))
-      .groupBy("bucket", "t").agg(count(lit(1)).as("__c"))
-      .localCheckpoint()
+      .groupBy("bucket", "t").agg(count(lit(1)).as("__c")))
     val tokCounts = bw.groupBy("bucket").agg(sum("__c").as("n_tokens"))
     val newWords = bw.groupBy("t").agg(min("bucket").as("__fb"))
       .groupBy(col("__fb").as("bucket")).agg(count(lit(1)).as("n_new_words"))
@@ -1090,14 +1083,14 @@ object TextStats {
       .where(col("w1") =!= col("w2"))
     // canonical undirected simple edges (a < b) — vocab²-bounded and
     // consumed by degree + orientation + closure: cut lineage once
-    val e = bg.select(least(col("w1"), col("w2")).as("a"),
+    val e = Lineage.cut(bg.select(least(col("w1"), col("w2")).as("a"),
         greatest(col("w1"), col("w2")).as("b"))
-      .distinct().localCheckpoint()
+      .distinct())
     val deg = e.select(col("a").as("node"))
       .unionAll(e.select(col("b").as("node")))
       .groupBy("node").agg(count(lit(1)).as("degree"))
     // orient toward the higher (degree, node) endpoint
-    val oriented = e
+    val oriented = Lineage.cut(e
       .join(deg.select(col("node").as("a"), col("degree").as("__da")), "a")
       .join(deg.select(col("node").as("b"), col("degree").as("__db")), "b")
       .select(
@@ -1105,8 +1098,7 @@ object TextStats {
           (col("__da") === col("__db") && col("a") < col("b")),
           struct(col("a").as("u"), col("b").as("v")))
           .otherwise(struct(col("b").as("u"), col("a").as("v"))).as("__e"))
-      .select(col("__e.u").as("u"), col("__e.v").as("v"))
-      .localCheckpoint()
+      .select(col("__e.u").as("u"), col("__e.v").as("v")))
     val wedges = oriented.as("o1")
       .join(oriented.as("o2"), col("o1.u") === col("o2.u") &&
         col("o1.v") < col("o2.v"))
@@ -1164,7 +1156,7 @@ object TextStats {
     * DISTINCT edge set — everything after is vocab²-bounded, never
     * corpus-proportional. The peel is the q139/CC driver-round
     * pattern: `rounds` is a small constant, each round one degree
-    * aggregation + one semi-join on the (localCheckpointed,
+    * aggregation + one semi-join on the (cut,
     * shrinking) edge table; counts are 1-row aggregates.
     */
   def kcorePeel(df: DataFrame, idCol: String, textCol: String,
@@ -1173,20 +1165,21 @@ object TextStats {
     val bg = lmBigramRows(toks)
       .withColumn("w2", substring_index(col("bg"), " ", -1))
       .where(col("w1") =!= col("w2"))
-    var e = bg.select(least(col("w1"), col("w2")).as("a"),
+    var e = Lineage.cut(bg.select(least(col("w1"), col("w2")).as("a"),
         greatest(col("w1"), col("w2")).as("b"))
-      .distinct().localCheckpoint()
+      .distinct())
     def degrees(ed: DataFrame) = ed.select(col("a").as("node"))
       .unionAll(ed.select(col("b").as("node")))
       .groupBy("node").agg(count(lit(1)).as("degree"))
     val profile = scala.collection.mutable.Buffer.empty[(Long, Long, Long)]
     profile += ((0L, degrees(e).count(), e.count()))
     for (r <- 1 to rounds) {
-      val alive = degrees(e).where(col("degree") >= k)
-        .select(col("node")).localCheckpoint()
-      e = e.join(alive.select(col("node").as("a")), Seq("a"), "left_semi")
+      val alive = Lineage.cut(degrees(e).where(col("degree") >= k)
+        .select(col("node")))
+      e = Lineage.cut(e
+        .join(alive.select(col("node").as("a")), Seq("a"), "left_semi")
         .join(alive.select(col("node").as("b")), Seq("b"), "left_semi")
-        .select(col("a"), col("b")).localCheckpoint()
+        .select(col("a"), col("b")))
       profile += ((r.toLong, alive.count(), e.count()))
     }
     val spark = df.sparkSession
@@ -1694,8 +1687,7 @@ object TextStats {
     val counts = docs
       .select(explode(TextFns.tokens(col(textCol))).as("t"))
       .groupBy("t").agg(count(lit(1)).as("c"))
-    val top = counts.orderBy(desc("c"), col("t")).limit(k + 1)
-      .localCheckpoint()
+    val top = Lineage.cut(counts.orderBy(desc("c"), col("t")).limit(k + 1))
     val xk1 = top
       .agg(max(struct((-col("c")).as("nc"), col("t").as("tt"))).as("__b"))
       .select((-col("__b.nc")).as("xk1"))
@@ -1790,10 +1782,9 @@ object TextStats {
     */
   def sourceTfidfCosine(df: DataFrame, groupCol: String,
                         textCol: String): DataFrame = {
-    val tf = df.select(col(groupCol).as("g"),
+    val tf = Lineage.cut(df.select(col(groupCol).as("g"),
         explode(TextFns.tokens(col(textCol))).as("w"))
-      .groupBy("g", "w").agg(count(lit(1)).as("tf"))
-      .localCheckpoint()
+      .groupBy("g", "w").agg(count(lit(1)).as("tf")))
     val dfw = tf.groupBy("w").agg(count(lit(1)).as("dfw"))
     val ng = tf.select("g").distinct().agg(count(lit(1)).as("ng"))
     val wgt = tf.join(dfw, "w").crossJoin(broadcast(ng))
@@ -1961,7 +1952,7 @@ object TextStats {
     * Scale shape: the corpus is touched ONCE (the [[textRank]]
     * bigram explode + count); every round is one node-keyed join +
     * aggregation over the vocab²-bounded edge table
-    * (localCheckpointed — `iters`+2 consumers re-read it), with the
+    * (cut — `iters`+2 consumers re-read it), with the
     * per-node argmax window over the per-node candidate-label table
     * (bounded by degree). The modularity scalars are one-row
     * broadcasts; output is a bounded heap (topK by parameter).
@@ -1977,8 +1968,7 @@ object TextStats {
     val dir = bg.select(col("w1").as("src"), col("w2").as("dst"))
       .unionAll(bg.select(col("w2").as("src"), col("w1").as("dst")))
     // vocab²-bounded, re-read every round — cut lineage once
-    val edges = dir.groupBy("src", "dst").agg(count(lit(1)).as("w"))
-      .localCheckpoint()
+    val edges = Lineage.cut(dir.groupBy("src", "dst").agg(count(lit(1)).as("w")))
     var lab = edges.select(col("src").as("node")).distinct()
       .withColumn("lab", col("node"))
     for (round <- 1 to iters) {
@@ -1993,13 +1983,9 @@ object TextStats {
       // aggregation instead of a full sort+window pass; (2) cut the
       // lineage per round — each round consumes the prior label table
       // TWICE (neighbor join + self vote), and the table is
-      // vocab-bounded, the same class as the checkpointed edges above.
-      // r16: the cut routes through the shared dual-path Lineage.cut
-      // (reliable checkpoint under a configured checkpoint dir — a
-      // bare localCheckpoint dies with its executor at scale), and
-      // round k−1's table is RELEASED once round k is materialized:
-      // the old shape leaked one vocab-bounded checkpoint per round
-      // inside a single job, which no between-query sweep can see.
+      // vocab-bounded, the same class as the cut edges above. Round
+      // k−1's table is RELEASED once round k is materialized, so a
+      // long run holds one round's table, not one per round.
       val prev = lab
       lab = Lineage.cut(nbr.unionAll(self)
         .groupBy("dst", "lab").agg(sum("w").as("s"))
@@ -2137,13 +2123,13 @@ object TextStats {
   def lmCrossPerplexity(df: DataFrame, idCol: String, groupCol: String,
                         textCol: String): DataFrame = {
     val toks = lmToks(df, idCol, textCol, Seq(groupCol))
-    val aCounts = toks.where(size(col("w")) >= 2)
+    // feeds the grid + both model tables
+    val aCounts = Lineage.cut(toks.where(size(col("w")) >= 2)
       .select(col(groupCol).as("ga"),
         explode(TextFns.shingles(col("__text"), 2)).as("bg"))
       .select(col("ga"), substring_index(col("bg"), " ", 1).as("w1"),
         col("bg"))
-      .groupBy("ga", "w1", "bg").agg(count(lit(1)).as("ca"))
-      .localCheckpoint() // feeds the grid + both model tables
+      .groupBy("ga", "w1", "bg").agg(count(lit(1)).as("ca")))
     val c2 = aCounts.select(col("ga").as("gb"), col("bg"),
       col("ca").as("c2"))
     val c1 = aCounts.groupBy(col("ga").as("gb"), col("w1"))
@@ -2190,22 +2176,22 @@ object TextStats {
                    k: Int = 50): DataFrame = {
     import graft.plans.TopK
     require(k >= 1, s"k=$k must be positive")
-    val wc = df.select(col(groupCol).as("g"),
+    // feeds totals, top-k and the rate grid
+    val wc = Lineage.cut(df.select(col(groupCol).as("g"),
         explode(TextFns.tokens(col(textCol))).as("t"))
       .where(col("t") =!= "")
-      .groupBy("g", "t").agg(count(lit(1)).as("c"))
-      .localCheckpoint() // feeds totals, top-k and the rate grid
+      .groupBy("g", "t").agg(count(lit(1)).as("c")))
     val top = wc.groupBy("t").agg(sum("c").as("tc"))
       .agg(TopK.top_k(struct(col("tc"), col("t")), k).as("__top"))
       .select(explode(col("__top")).as("__row"))
       .select(col("__row.t").as("t"))
     val nG = wc.groupBy("g").agg(sum("c").as("n"))
-    val grid = nG.crossJoin(broadcast(top))
+    // (S × k) rates feed the stats and both z sides
+    val grid = Lineage.cut(nG.crossJoin(broadcast(top))
       .join(wc, Seq("g", "t"), "left")
       .select(col("g"), col("t"),
         expr("CAST((1000000 * CAST(coalesce(c, 0) AS DECIMAL(38,0))) " +
-          "div greatest(n, 1) AS BIGINT)").as("r"))
-      .localCheckpoint() // (S × k) rates feed the stats and both z sides
+          "div greatest(n, 1) AS BIGINT)").as("r")))
     // per-word across-source moments: r ≤ 10⁶ so S·Σr² stays BIGINT
     val z = grid.join(
         grid.groupBy("t").agg(count(lit(1)).as("s"), sum("r").as("sr"),

@@ -1,7 +1,7 @@
 package graft.sim
 
 import graft.functions.VectorFns._
-import graft.ops.Scale
+import graft.ops.{Lineage, Scale}
 import graft.plans.TopK
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
@@ -358,17 +358,17 @@ object Similarity {
       .select(col("id").as("qid"), col("v").as("qv"),
         explode(array(probes.map(p => col("bucket").bitwiseXOR(p)): _*))
           .as("bucket"))
-    val nbr = Scale.cappedBucketJoin(base, probing, Seq("bucket"),
+    // three consumers: degrees, edges, border
+    val nbr = Lineage.cut(Scale.cappedBucketJoin(base, probing, Seq("bucket"),
         col("id"), col("qid"), bucketCap, maxBucket)
       .where(col("id") =!= col("qid") &&
         cosine(col("v"), col("qv")) >= eps)
       .select(col("qid").as("src"), col("id").as("dst"))
-      .distinct()
-      .localCheckpoint()   // three consumers: degrees, edges, border
-    val core = nbr.groupBy("src").agg(count(lit(1)).as("__n"))
+      .distinct())
+    // two consumers: edge filter, labels
+    val core = Lineage.cut(nbr.groupBy("src").agg(count(lit(1)).as("__n"))
       .where(col("__n") >= minPts)
-      .select(col("src").as("id"))
-      .localCheckpoint()   // two consumers: edge filter, labels
+      .select(col("src").as("id")))
     val edges = nbr
       .join(core.select(col("id").as("src")), Seq("src"), "left_semi")
       .join(core.select(col("id").as("dst")), Seq("dst"), "left_semi")
@@ -806,16 +806,16 @@ object Similarity {
   def pcaTopComponent(df: DataFrame, idCol: String, vecCol: String,
                       iters: Int = 8, scale: Long = 1000L): DataFrame = {
     import org.apache.spark.sql.expressions.Window
-    val q = df.select(col(idCol).as("id"),
+    // grid self-join both sides + marginals
+    val q = Lineage.cut(df.select(col(idCol).as("id"),
         posexplode(expr(s"CAST($vecCol AS array<double>)"))
           .as(Seq("i", "x")))
       .select(col("id"), col("i").cast("bigint").as("i"),
-        expr(s"CAST(round(x * $scale) AS BIGINT)").as("xq"))
-      .localCheckpoint() // grid self-join both sides + marginals
+        expr(s"CAST(round(x * $scale) AS BIGINT)").as("xq")))
     val n1 = q.agg(countDistinct("id").as("n"))
-    val sx = q.groupBy("i")
-      .agg(sum(expr("CAST(xq AS DECIMAL(38,0))")).as("sx"))
-      .localCheckpoint() // row + column marginal consumers
+    // row + column marginal consumers
+    val sx = Lineage.cut(q.groupBy("i")
+      .agg(sum(expr("CAST(xq AS DECIMAL(38,0))")).as("sx")))
     val sp = q.as("l").join(q.as("r"), "id")
       .groupBy(col("l.i").as("i"), col("r.i").as("j"))
       .agg(sum(expr("CAST(l.xq AS DECIMAL(38,0)) * r.xq")).as("sp"))
@@ -897,8 +897,9 @@ object Similarity {
   def matryoshkaRecall(corpus: DataFrame, idCol: String, vecCol: String,
                        queries: DataFrame, qIdCol: String, qVecCol: String,
                        k: Int, dims: Seq[Int]): DataFrame = {
-    val exact = bruteForceTopK(corpus, idCol, vecCol,
-      queries, qIdCol, qVecCol, k).localCheckpoint() // Q×k rows, |dims| consumers
+    // Q×k rows, |dims| consumers
+    val exact = Lineage.cut(bruteForceTopK(corpus, idCol, vecCol,
+      queries, qIdCol, qVecCol, k))
     dims.map { dm =>
       val ct = corpus.select(col(idCol),
         slice(col(vecCol), 1, dm).as(vecCol))
@@ -1030,23 +1031,22 @@ object Similarity {
     val c = corpus.select(col(idCol).as("id"), toDouble(col(vecCol)).as("v"))
     val q = queries.select(col(qIdCol).as("query_id"),
       toDouble(col(qVecCol)).as("qv"))
-    val cand = TopK.topKPerKey(
+    val cand = Lineage.cut(TopK.topKPerKey(
         c.crossJoin(broadcast(q))
           .where(col("id") =!= col("query_id"))
           .select(col("query_id"), cosine(col("v"), col("qv")).as("rel"),
             col("id")),
         Seq("query_id"), col("rel"), Seq(col("id")), kCand)
-      .select(col("query_id"), col("id"), col("rel"))
-      .localCheckpoint()
+      .select(col("query_id"), col("id"), col("rel")))
     // pairwise candidate sims — Q × kCand² rows, computed once
     val cv = cand.join(c, "id")
-    val sims = cv.select(col("query_id"), col("id").as("ia"), col("v").as("va"))
+    val sims = Lineage.cut(cv
+      .select(col("query_id"), col("id").as("ia"), col("v").as("va"))
       .join(cv.select(col("query_id"), col("id").as("ib"), col("v").as("vb")),
         Seq("query_id"))
       .where(col("ia") =!= col("ib"))
       .select(col("query_id"), col("ia"), col("ib"),
-        cosine(col("va"), col("vb")).as("sim"))
-      .localCheckpoint()
+        cosine(col("va"), col("vb")).as("sim")))
     def argmax(scored: DataFrame, pick: Int): DataFrame =
       scored.groupBy("query_id")
         .agg(max(struct(col("mmr").as("s"), (-col("id")).as("ni"),
@@ -1119,11 +1119,10 @@ object Similarity {
                      docs: DataFrame, docIdCol: String, groupCol: String,
                      k: Int = 5): DataFrame = {
     val scales = sqScales(emb, vecCol)
-    val q = emb.select(col(idCol).as("id"),
+    val q = Lineage.cut(emb.select(col(idCol).as("id"),
         sqQuantize(col(vecCol), scales).as("qe"))
       .join(docs.select(col(docIdCol).as("id"), col(groupCol).as("g")),
-        Seq("id"))
-      .localCheckpoint()
+        Seq("id")))
     val cvecs = q.select(col("g"), posexplode(col("qe")).as(Seq("pos", "x")))
       .groupBy("g", "pos").agg(sum("x").as("sx"))
       .groupBy("g")
@@ -1163,8 +1162,8 @@ object Similarity {
                     docs: DataFrame, docIdCol: String, textCol: String,
                     numCells: Int = 4, iters: Int = 1, sampleN: Int = 64,
                     minDf: Long = 3L, topK: Int = 3): DataFrame = {
-    val asn = assignCells(emb, idCol, vecCol, numCells, iters, sampleN)
-      .localCheckpoint()
+    val asn = Lineage.cut(
+      assignCells(emb, idCol, vecCol, numCells, iters, sampleN))
     val words = docs.select(col(docIdCol).as("id"),
       explode(array_distinct(graft.functions.TextFns.tokens(col(textCol))))
         .as("w"))
@@ -1286,10 +1285,10 @@ object Similarity {
     require(m >= 1 && m <= 64, s"m=$m must be in [1, 64]")
     import graft.functions.{HashFns, VecDotLong}
     val scales = sqScales(df, vecCol)
-    val q = df.select(col(idCol).cast("long").as("id"),
+    // three consumers: probes-NN, sample, sample-NN
+    val q = Lineage.cut(df.select(col(idCol).cast("long").as("id"),
         sqQuantize(col(vecCol), scales).as("qv"))
-      .withColumn("nn", VecDotLong(col("qv"), col("qv")))
-      .localCheckpoint() // three consumers: probes-NN, sample, sample-NN
+      .withColumn("nn", VecDotLong(col("qv"), col("qv"))))
     val spark = df.sparkSession
     // probes must be uniform over the DATA's bounding box — drawing
     // on the full int8 grid inflates u wherever the data does not
@@ -1366,11 +1365,12 @@ object Similarity {
     val q = df.select(col(idCol).as("id"),
         sqQuantize(col(vecCol), scales).as("qv"))
       .join(cells, Seq("id"))
-    val cp = q.select(col("cell"), posexplode(col("qv")).as(Seq("pos", "x")))
+    // three consumers of the k×dim moment table
+    val cp = Lineage.cut(q
+      .select(col("cell"), posexplode(col("qv")).as(Seq("pos", "x")))
       .groupBy("cell", "pos")
       .agg(sum("x").as("s"), sum(expr("x * x")).as("ss"),
-        count(lit(1)).as("cnt"))
-      .localCheckpoint() // three consumers of the k×dim moment table
+        count(lit(1)).as("cnt")))
     val perCell = cp.groupBy("cell")
       .agg(expr("sum(CAST(s AS DECIMAL(38,0)) * s)").as("g"),
         max("cnt").as("n_c"))
@@ -1417,7 +1417,7 @@ object Similarity {
     * Scale shape: one k×dim moment pass for centroids (broadcast
     * back), one n·dim·k broadcast-join pass for the distances — the
     * same work assignCells itself does — two keyed aggregations, and
-    * a k-row report. The (id, cell) assignment is localCheckpointed
+    * a k-row report. The (id, cell) assignment is cut
     * so the k-means rounds run once, not once per consumer.
     */
   def silhouette(df: DataFrame, idCol: String, vecCol: String,
@@ -1425,8 +1425,8 @@ object Similarity {
                  seed: Long = 42L): DataFrame = {
     require(numCells >= 2, "silhouette needs at least 2 cells")
     val scales = sqScales(df, vecCol)
-    val cells = assignCells(df, idCol, vecCol, numCells, iters,
-      sampleN, seed).localCheckpoint()
+    val cells = Lineage.cut(assignCells(df, idCol, vecCol, numCells, iters,
+      sampleN, seed))
     val q = df.select(col(idCol).as("id"),
         sqQuantize(col(vecCol), scales).as("qv"))
       .join(cells, Seq("id"))
@@ -1489,12 +1489,13 @@ object Similarity {
     import org.apache.spark.sql.expressions.Window
     val scales = sqScales(df, vecCol)
     val planes = randomHyperplanes(numBits, dim, seed)
-    val base = df.select(col(idCol).as("id"), toDouble(col(vecCol)).as("v"))
+    // probe + corpus sides both read it
+    val base = Lineage.cut(df
+      .select(col(idCol).as("id"), toDouble(col(vecCol)).as("v"))
       .withColumn("bucket", hyperplaneSignature(col("v"), planes))
       .withColumn("qv", sqQuantize(col("v"), scales))
       .withColumn("nn", VecDotLong(col("qv"), col("qv")))
-      .select("id", "bucket", "qv", "nn")
-      .localCheckpoint() // probe + corpus sides both read it
+      .select("id", "bucket", "qv", "nn"))
     val probes: Seq[Column] =
       probeDeltas(numBits, multiProbeBits).map(lit)
     val probing = base.select(col("id").as("query_id"),

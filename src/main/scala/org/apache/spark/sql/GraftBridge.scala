@@ -1,12 +1,14 @@
 package org.apache.spark.sql
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
-/** Column ⇄ catalyst Expression bridge. Spark 4 hides the classic
-  * converters behind `private[sql]`; custom expressions (AvroCodec,
-  * ProtoCodec) need exactly these two hops and nothing else, so this
-  * lives in the sql package to reach them.
+/** Hops to Spark internals. Spark 4 hides the classic Column ⇄
+  * catalyst Expression converters behind `private[sql]` (custom
+  * expressions such as AvroCodec and ProtoCodec need them) and the
+  * listener bus behind `private[spark]`, so this lives in the sql
+  * package to reach them.
   */
 object GraftBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
@@ -28,4 +30,10 @@ object GraftBridge {
     */
   def dataFrame(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** Block until every event posted to `sc`'s listener bus so far has
+    * reached every listener (`LiveListenerBus.waitUntilEmpty` is
+    * private[spark]); throws `TimeoutException` after 10 s.
+    */
+  def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

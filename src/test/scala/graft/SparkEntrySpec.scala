@@ -1,7 +1,8 @@
 package graft
 
 /** Driver-contract guards: entry() returns rows, every oracle key has
-  * a query, every query runs at the smoke scale factor.
+  * a query, every query runs at the smoke scale factor and, inside
+  * [[graft.ops.Lineage.scoped]], leaves no persisted RDD behind.
   */
 class SparkEntrySpec extends SparkSpec {
 
@@ -20,9 +21,12 @@ class SparkEntrySpec extends SparkSpec {
   }
 
   test("all queries execute at sf0.001 and return rows") {
+    val sc = spark.sparkContext
     SparkEntry.queries.foreach { case (name, q) =>
-      val n = q(spark, sf).count()
+      val before = sc.getPersistentRDDs.keySet
+      val n = graft.ops.Lineage.scoped(q(spark, sf).count())
       assert(n > 0, s"$name returned no rows at $sf")
+      assert(sc.getPersistentRDDs.keySet === before, s"$name leaked RDDs")
     }
   }
 }

@@ -13,33 +13,26 @@ trait SparkSpec extends AnyFunSuite {
   lazy val sf: String = "/root/testdata/sf0.001"
 
   /** Spark jobs started by `body` on this thread. Jobs are matched by
-    * a thread-local property, so other threads' jobs never count; a
-    * tagged sentinel job after `body` flushes the asynchronous
-    * listener bus (events arrive in order), so the count is exact.
+    * a thread-local property, so other threads' jobs never count; one
+    * drain of the asynchronous listener bus after `body` delivers
+    * every job start it posted, so the count is exact.
     */
   def jobsIn(body: => Unit): Int = {
     val sc = spark.sparkContext
     val key = "graft.test.jobsIn"
     val tag = java.util.UUID.randomUUID().toString
     val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val sentinel = new java.util.concurrent.CountDownLatch(1)
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        if (e.properties != null && e.properties.getProperty(key) == tag) {
-          if (e.properties.getProperty("spark.job.description") == tag) sentinel.countDown()
-          else jobs.incrementAndGet()
-        }
+        if (e.properties != null && e.properties.getProperty(key) == tag)
+          jobs.incrementAndGet()
     }
     val prior = sc.getLocalProperty(key)
     sc.addSparkListener(listener)
     sc.setLocalProperty(key, tag)
     try {
       body
-      sc.setJobDescription(tag)
-      sc.parallelize(Seq(1), 1).count()
-      sc.setJobDescription(null)
-      assert(sentinel.await(30, java.util.concurrent.TimeUnit.SECONDS),
-        "listener bus never delivered the sentinel job")
+      org.apache.spark.sql.GraftBridge.drainListenerBus(sc)
       jobs.get
     } finally {
       sc.setLocalProperty(key, prior)

@@ -1,6 +1,7 @@
 package graft.dedup
 
 import graft.SparkSpec
+import graft.ops.Lineage
 import org.apache.spark.sql.functions._
 
 /** The staged-curation contract: the cluster-label stage (the most
@@ -43,6 +44,18 @@ class CurationSpec extends SparkSpec {
     val before = Curation.buildCount
     Curation.clusterLabels(docs, "doc_id", "text", corpusKey = "spec-corpus-b")
     assert(Curation.buildCount === before + 1)
+  }
+
+  test("a table staged inside a scope is shared there and rebuilt after it") {
+    def labels = Curation.clusterLabels(docs, "doc_id", "text",
+      corpusKey = "spec-corpus-scoped")
+    val before = Curation.buildCount
+    Lineage.scoped(assert(labels eq labels))
+    assert(Curation.buildCount === before + 1)
+    // the first scope freed its cuts, so the next one must not reuse them
+    val rows = Lineage.scoped(labels.as[(Long, Long)].collect().toMap)
+    assert(Curation.buildCount === before + 2)
+    assert(rows(2L) === 1L)
   }
 
   test("clusterRepresentatives: quality argmax with smallest-id tiebreak, partition-invariant") {

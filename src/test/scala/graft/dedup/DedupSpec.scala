@@ -2,7 +2,9 @@ package graft.dedup
 
 import graft.SparkSpec
 import graft.functions.TextFns
+import graft.ops.Lineage
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 class DedupSpec extends SparkSpec {
   import spark.implicits._
@@ -245,19 +247,45 @@ class DedupSpec extends SparkSpec {
     assert(sFin === Map("a" -> "a", "b" -> "a", "c" -> "a", "z" -> "y", "y" -> "y"))
   }
 
+  test("star contraction frees each round's edges once the next round is cut") {
+    val sc = spark.sparkContext
+    val before = sc.getPersistentRDDs.keySet
+    val pairs = (0L until 200L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    Lineage.scoped {
+      val (out, rounds) = Dedup.connectedComponents(pairs, maxIter = 12,
+        smallCutoff = 0L)
+      assert(rounds >= 4, s"the chain should need several rounds, took $rounds")
+      // the result still reads two cuts: `oriented` (through the vertex
+      // set) and the last round's edges
+      val grown = sc.getPersistentRDDs.keySet -- before
+      assert(grown.size <= 2, s"$rounds rounds left ${grown.size} cuts persisted")
+      assert(out.count() === 201)
+    }
+    assert(sc.getPersistentRDDs.keySet === before)
+  }
+
   test("near-dup clusters use the reliable checkpoint dir when configured") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
-    spark.sparkContext.setCheckpointDir(dir)
+    val dir = java.nio.file.Files.createTempDirectory("graft-ckpt")
+    def rddFiles = {
+      val walk = java.nio.file.Files.walk(dir)
+      try walk.iterator.asScala
+        .filter(_.getFileName.toString.startsWith("rdd-")).toList
+      finally walk.close()
+    }
+    spark.sparkContext.setCheckpointDir(dir.toString)
     try {
       // smallCutoff = 0: the star-contraction loop is what checkpoints
       // per round (the finisher path has no iterative lineage to cut)
       val pairs = Seq((2L, 3L), (1L, 2L), (10L, 11L)).toDF("id_a", "id_b")
-      val out = Dedup.nearDupClusters(pairs, smallCutoff = 0L)
-        .as[(Long, Long)].collect().toMap
+      val out = Lineage.scoped {
+        val out = Dedup.nearDupClusters(pairs, smallCutoff = 0L)
+          .as[(Long, Long)].collect().toMap
+        // the lineage cut actually went through the reliable dir
+        assert(rddFiles.nonEmpty)
+        out
+      }
       assert(out === Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L))
-      // the lineage cut actually went through the reliable dir
-      val wrote = new java.io.File(dir).listFiles()
-      assert(wrote != null && wrote.nonEmpty)
+      assert(rddFiles.isEmpty, s"scope exit left checkpoint data: $rddFiles")
     } finally spark.sparkContext.setCheckpointDir(null)
   }
 
