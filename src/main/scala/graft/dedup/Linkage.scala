@@ -327,19 +327,27 @@ object Linkage {
     records.writeStream
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        val accepted = probeIndex(batch, idCol, blockKey, fields,
+        // cut per-trigger lineage growth; each new cut replaces the one
+        // it grew from, which is freed once the new one is materialized
+        val batchRows = Lineage.cut(batch)
+        val accepted = probeIndex(batchRows, idCol, blockKey, fields,
             index, maxBlock)
           .where(col("score_e8") >= scoreMin)
           .select(col("id_a").cast("long"), col("id_b").cast("long"))
-        // cut per-trigger lineage growth
-        pairsSoFar = Lineage.cut(pairsSoFar.unionByName(accepted).distinct())
-        val batchRows = Lineage.cut(batch)
-        deliveredSoFar = Some(deliveredSoFar
-          .map(d => Lineage.cut(d.unionByName(batchRows)))
-          .getOrElse(batchRows))
-        sink(goldenRecords(
+        val pairs = Lineage.cut(pairsSoFar.unionByName(accepted).distinct())
+        Lineage.release(pairsSoFar)
+        pairsSoFar = pairs
+        deliveredSoFar = Some(deliveredSoFar.fold(batchRows) { d =>
+          val grown = Lineage.cut(d.unionByName(batchRows))
+          Lineage.release(d)
+          Lineage.release(batchRows)
+          grown
+        })
+        // the snapshot's own cuts (connected components' rounds) are
+        // freed once the sink has written it
+        Lineage.scoped(sink(goldenRecords(
           master.unionByName(deliveredSoFar.get), idCol,
-          pairsSoFar, canonCols, maxCols))
+          pairsSoFar, canonCols, maxCols)))
         ()
       }
       .start()

@@ -91,10 +91,11 @@ object Lineage {
     }
 
   /** Unpersist the local path's blocks and delete the reliable path's
-    * checkpoint file.
+    * checkpoint file. Quietly: `RDD.unpersist` would log a WARN for
+    * every locally checkpointed RDD, and every local cut is one.
     */
   private def free(rdd: RDD[_]): Unit = {
-    rdd.unpersist(blocking = false)
+    org.apache.spark.sql.GraftBridge.unpersistQuietly(rdd)
     rdd.getCheckpointFile.foreach { f =>
       val p = new Path(f)
       p.getFileSystem(rdd.sparkContext.hadoopConfiguration).delete(p, true)

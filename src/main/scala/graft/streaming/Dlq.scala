@@ -1,7 +1,8 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftBridge}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** Dead-letter-queue routing — the reference's most load-bearing
   * operator (SURVEY §2.9; `RecordProcessor.java:203-301`,
@@ -68,35 +69,40 @@ object Dlq {
     * returning. Either sink throwing fails the batch → micro-batch
     * retry → the no-loss invariant. `dlqSink=None` = log-and-advance.
     *
-    * Single-pass observability: pass/fail counts come from accumulators
-    * wired UNDER the cache, filled when the first sink action
-    * materializes the batch — no extra `count()` jobs (the old form ran
-    * two, tripling the passes over every micro-batch). The counts are
-    * observability counters with accumulator semantics: a sink that
-    * never runs an action leaves them 0, and speculative task retries
-    * could in principle over-count (same caveat as every Spark metric).
+    * One pass per micro-batch: the batch (with its error column) runs
+    * once as catalyst rows (`queryExecution.toRdd`), and a tally on that
+    * same pass counts the passed and failed rows into two accumulators
+    * — no `count()` jobs, and no conversion to external `Row`s and
+    * back. The tallied rows are copied into a MEMORY_AND_DISK RDD
+    * cache that every action of both sinks reads: the first action
+    * decodes, counts and caches each partition whole, and later ones
+    * (the sink's write after the DLQ write, or a second action inside
+    * one sink) read the cache, so each input row is decoded and counted
+    * once, the trigger's `numInputRows` equals the batch's rows, and
+    * the batch runs one job per sink action. The cache is dropped when
+    * the body returns or throws.
+    *
+    * The counts are observability counters with accumulator semantics:
+    * a sink that never runs an action leaves them 0, and speculative
+    * task retries could in principle over-count (same caveat as every
+    * Spark metric).
     */
   def processBatch(batch: DataFrame, errorCol: Column,
                    sink: DataFrame => Unit,
                    dlqSink: Option[DataFrame => Unit],
                    exceptionClass: String = "graft.DecodeFailure"): BatchOutcome = {
-    val sc = batch.sparkSession.sparkContext
-    val nPassed = sc.longAccumulator("graft.dlq.passed")
-    val nFailed = sc.longAccumulator("graft.dlq.failed")
+    val spark = batch.sparkSession
+    val nPassed = spark.sparkContext.longAccumulator("graft.dlq.passed")
+    val nFailed = spark.sparkContext.longAccumulator("graft.dlq.failed")
     val withErr = batch.withColumn("__error", errorCol)
     val errIdx = withErr.schema.fieldIndex("__error")
-    val enc = org.apache.spark.sql.catalyst.encoders.RowEncoder
-      .encoderFor(withErr.schema)
-    // tally both branches while the batch streams into the cache: the
-    // first action materializes whole partitions, so one pass fills both
-    val counted = withErr.mapPartitions { it =>
-      it.map { r =>
-        if (r.isNullAt(errIdx)) nPassed.add(1L) else nFailed.add(1L)
-        r
-      }
-    }(enc)
-    counted.persist()
+    // a cached row must be a copy: the plan reuses one row buffer
+    val rows = withErr.queryExecution.toRdd.map { r =>
+      if (r.isNullAt(errIdx)) nPassed.add(1L) else nFailed.add(1L)
+      r.copy()
+    }.persist(StorageLevel.MEMORY_AND_DISK)
     try {
+      val counted = GraftBridge.internalDataFrame(spark, rows, withErr.schema)
       val (passed, failed) = split(counted, col("__error"))
       // DLQ write precedes the sink; with no failures the DLQ branch is
       // an empty DataFrame and a well-behaved sink writes nothing
@@ -104,7 +110,7 @@ object Dlq {
       sink(passed.drop("__error"))
       BatchOutcome(passed = nPassed.value, failed = nFailed.value,
         dlqWritten = dlqSink.isDefined)
-    } finally counted.unpersist()
+    } finally rows.unpersist(blocking = false)
   }
 
   final case class BatchOutcome(passed: Long, failed: Long, dlqWritten: Boolean)

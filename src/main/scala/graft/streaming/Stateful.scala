@@ -793,6 +793,17 @@ object Stateful {
 
   final case class DocEvent(id: Long, ts: java.sql.Timestamp, text: String)
   final case class DupCandidate(id: Long, dup_of: Long, band: Int, hamming: Int)
+  /** One document in one band bucket of [[nearDupCandidates]]: event
+    * time as epoch milliseconds, the full SimHash signature.
+    */
+  final case class BandEvent(id: Long, ts_ms: Long, sig: Long)
+  object BandEvent {
+    /** Processing order within a bucket: (event time, id). */
+    val byTime: Ordering[BandEvent] = (a, b) => {
+      val c = java.lang.Long.compare(a.ts_ms, b.ts_ms)
+      if (c != 0) c else java.lang.Long.compare(a.id, b.id)
+    }
+  }
   /** Per-bucket state as PARALLEL PRIMITIVE ARRAYS, not a
     * List[(sig, id)]: the state row is re-encoded on every update
     * (≈ once per input event), and Spark's encoder writes Array[Long]
@@ -833,6 +844,15 @@ object Stateful {
     * `dup_of` may name a different (still-matching) prior doc.
     * Candidate SEMANTICS (at-least-once emission against
     * already-observed signatures) are unaffected.
+    *
+    * State key: one Long per bucket, `band << 16 | bval` (band 0–3 in
+    * bits 16–17, the band's 16-bit chunk of the signature in bits
+    * 0–15), so the grouping sort compares one long — its order is the
+    * (band, bval) order — and each bucket's rows arrive as
+    * [[BandEvent]]s with a primitive event time. The key schema
+    * changed from a (band, bval) pair to this Long, so a query
+    * checkpointed with the pair key cannot restart on this operator:
+    * start it from a fresh checkpoint.
     */
   def nearDupCandidates(docs: org.apache.spark.sql.Dataset[DocEvent],
                         watermarkDelay: String, stateTtlMs: Long,
@@ -854,18 +874,17 @@ object Stateful {
       .map(d => (d.id, d.ts, graft.dedup.Dedup.simhashLong(d.text)))
       .toDF("id", "ts", "sig")
       .withWatermark("ts", watermarkDelay)
-      .select(col("id"), col("ts"), col("sig"),
-        explode(array((0 until 4).map(b => struct(lit(b).as("band"),
-          shiftright(col("sig"), 16 * b).bitwiseAND(lit(0xFFFFL)).as("bval"))): _*))
-          .as("bk"))
-      .select(col("id"), col("ts"), col("sig"),
-        col("bk.band").as("band"), col("bk.bval").as("bval"))
-      .as[(Long, java.sql.Timestamp, Long, Int, Long)]
-    banded.groupByKey { case (_, _, _, band, bval) => (band, bval) }
+      .select(col("id"), col("ts"), unix_millis(col("ts")).as("ts_ms"),
+        col("sig"), explode(array((0 until 4).map(b =>
+          lit(b.toLong << 16).bitwiseOR(
+            shiftright(col("sig"), 16 * b).bitwiseAND(lit(0xFFFFL)))): _*))
+          .as("bucket"))
+    // `ts` stays in the rows: it carries the watermark the event-time
+    // timeout needs
+    banded.groupBy(col("bucket")).as[Long, BandEvent]
       .flatMapGroupsWithState[BucketSigs, DupCandidate](
         OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: (Int, Long),
-         rows: Iterator[(Long, java.sql.Timestamp, Long, Int, Long)],
+        (bucket: Long, rows: Iterator[BandEvent],
          state: GroupState[BucketSigs]) =>
           if (state.hasTimedOut) { state.remove(); Iterator.empty }
           else {
@@ -883,9 +902,10 @@ object Stateful {
             // at most sortChunk events at a time, sorted by (ts, id) for
             // chunk-deterministic processing order.
             val out = Seq.newBuilder[DupCandidate]
+            val band = (bucket >>> 16).toInt
             rows.grouped(sortChunk).foreach { chunk =>
-              chunk.sortBy(e => (e._2.getTime, e._1)).foreach {
-                case (id, ts, sig, band, _) =>
+              chunk.sorted(BandEvent.byTime).foreach {
+                case BandEvent(id, tsMs, sig) =>
                   // min matching prior id across stored state + this batch
                   var bestId = Long.MaxValue
                   var bestSig = 0L
@@ -911,7 +931,7 @@ object Stateful {
                   if (storedN + newSigs.length < maxPerBucket) {
                     newSigs += sig; newIds += id
                   }
-                  lastTs = math.max(lastTs, ts.getTime)
+                  lastTs = math.max(lastTs, tsMs)
               }
             }
             // A batch that appended nothing — exactly the at-cap hot

@@ -45,41 +45,48 @@ trait SparkSpec extends AnyFunSuite {
     * (INFO, a stage over `spark.sql.codegen.hugeMethodLimit` runs
     * without whole-stage codegen) and "Whole-stage codegen disabled for
     * plan" (WARN, the generated code failed to compile). Either means
-    * the stage runs interpreted. The logger is raised to INFO for the
-    * duration, since the shared session logs at WARN.
+    * the stage runs interpreted.
     */
-  def codegenFallbacksIn(body: => Unit): Int = {
-    import org.apache.logging.log4j.{Level, LogManager}
+  def codegenFallbacksIn(body: => Unit): Int =
+    logLinesIn(classOf[org.apache.spark.sql.execution.WholeStageCodegenExec].getName,
+      org.apache.logging.log4j.Level.INFO,
+      Seq("Found too long generated codes", "Whole-stage codegen disabled for plan"))(body)
+
+  /** Log lines containing any of `messages` that `logger` (a logger
+    * name; "" is the root, which every logger without its own
+    * configuration writes to) and its children log at `level` or above
+    * while `body` runs. The logger is set to `level` for the duration,
+    * since the shared session logs at WARN.
+    */
+  def logLinesIn(logger: String, level: org.apache.logging.log4j.Level,
+                 messages: Seq[String])(body: => Unit): Int = {
+    import org.apache.logging.log4j.LogManager
     import org.apache.logging.log4j.core.{LogEvent, Logger, LoggerContext}
     import org.apache.logging.log4j.core.appender.AbstractAppender
     import org.apache.logging.log4j.core.config.Property
-    val messages = Seq("Found too long generated codes",
-      "Whole-stage codegen disabled for plan")
-    val fallbacks = new java.util.concurrent.atomic.AtomicInteger()
-    val appender = new AbstractAppender("graft-codegen-fallbacks", null,
+    val lines = new java.util.concurrent.atomic.AtomicInteger()
+    val appender = new AbstractAppender("graft-log-lines", null,
         null, true, Property.EMPTY_ARRAY) {
       override def append(e: LogEvent): Unit = {
         val m = e.getMessage.getFormattedMessage
-        if (messages.exists(m.contains)) fallbacks.incrementAndGet()
+        if (messages.exists(m.contains)) lines.incrementAndGet()
       }
     }
-    val logger = LogManager.getLogger(
-      classOf[org.apache.spark.sql.execution.WholeStageCodegenExec])
-      .asInstanceOf[Logger]
+    val log = LogManager.getLogger(logger).asInstanceOf[Logger]
     val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
-    val prior = logger.getLevel
+    val prior = log.getLevel
     appender.start()
-    // addAppender gives the logger its own LoggerConfig, so the level
-    // change below stays on this one logger
-    logger.addAppender(appender)
-    logger.setLevel(Level.INFO)
-    logger.get().setLevel(Level.INFO)
+    // addAppender gives a non-root logger its own LoggerConfig, so the
+    // level change below stays on this one logger
+    log.addAppender(appender)
+    log.setLevel(level)
+    log.get().setLevel(level)
     ctx.updateLoggers()
-    try { body; fallbacks.get }
+    try { body; lines.get }
     finally {
-      logger.removeAppender(appender)
-      logger.setLevel(prior)
-      logger.get().setLevel(prior)
+      log.removeAppender(appender)
+      log.setLevel(prior)
+      log.get().setLevel(prior)
       ctx.updateLoggers()
       appender.stop()
     }

@@ -151,11 +151,19 @@ class LinkageSpec extends SparkSpec {
     }
     val incoming = (1 to 15).map(i =>
       (i.toLong, i.toLong % 5, s"k${i % 7}", s"s${(i + 1) % 3}"))
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    def held = (spark.sparkContext.getPersistentRDDs.keySet -- before).size
     stream.addData(incoming.take(6): _*)
     q.processAllAvailable()
+    val heldAfterOne = held
     stream.addData(incoming.drop(6): _*)
     q.processAllAvailable()
+    val heldAfterTwo = held
     q.stop()
+    // between triggers the stream holds only its accumulated pairs and
+    // delivered records: each trigger frees what its new cuts replaced
+    assert(heldAfterOne === 2 && heldAfterTwo === 2,
+      s"persisted RDDs after trigger 1, 2: $heldAfterOne, $heldAfterTwo")
     val allRecs = master.unionByName(
       incoming.toDF("id", "blk", "f1", "f2"))
     val pairs = Linkage.probeIndex(

@@ -91,6 +91,24 @@ class LineageSpec extends SparkSpec {
     } finally sc.setCheckpointDir(null)
   }
 
+  test("freeing a cut logs no lineage-truncation warning") {
+    import org.apache.logging.log4j.Level
+    val truncated = Seq("was locally checkpointed")
+    def warningsIn(body: => Unit) = logLinesIn("", Level.WARN, truncated)(body)
+    // the capture sees the warning RDD.unpersist logs for a local cut
+    assert(warningsIn {
+      val rdd = cutOf(10).queryExecution.logical.collectLeaves()
+        .collectFirst { case r: LogicalRDD => r.rdd }.get
+      rdd.unpersist(blocking = false)
+    } === 1)
+    val before = persisted
+    assert(warningsIn {
+      Lineage.release(cutOf(10))
+      Lineage.scoped { cutOf(20); cutOf(30) }
+    } === 0)
+    assert(persisted -- before === Set.empty)
+  }
+
   test("no main source other than Lineage checkpoints a plan") {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the project root: $root")

@@ -180,30 +180,72 @@ class StreamingSpec extends SparkSpec {
     assert(sizes.count(_ == 128) === 7 && sizes.count(_ == 104) === 1)
   }
 
-  test("processBatch is single-pass: one DLQ action + one sink action, no count jobs") {
-    val batch = Seq(
+  private def mixedBatch = Seq(
       record("t", 0, 0, "a", """{"k": 1}"""),
-      record("t", 0, 1, "b", "oops")).toDF()
-      .withColumn("res", Json.decodeResult(col("value").cast("string"), "k BIGINT"))
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
-    val listener = new org.apache.spark.scheduler.SparkListener {
-      override def onJobStart(js: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
-        jobs.incrementAndGet(); ()
-      }
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      val outcome = Dlq.processBatch(batch, col("res.error"),
+      record("t", 0, 1, "b", "oops"),
+      record("t", 1, 0, "c", """{"k": 3}""")).toDF()
+    .withColumn("res", Json.decodeResult(col("value").cast("string"), "k BIGINT"))
+
+  private def persisted = spark.sparkContext.getPersistentRDDs.keySet
+
+  test("processBatch is single-pass: one DLQ action + one sink action, no count jobs") {
+    val batch = mixedBatch
+    var outcome: Dlq.BatchOutcome = null
+    val jobs = jobsIn {
+      outcome = Dlq.processBatch(batch, col("res.error"),
         sink = df => { df.collect(); () },
         dlqSink = Some(df => { df.collect(); () }))
-      assert(outcome.passed === 1 && outcome.failed === 1 && outcome.dlqWritten)
-      // the listener bus is async — wait for the two expected job-start
-      // events, then a beat longer to catch any stray extra jobs
-      val deadline = System.currentTimeMillis() + 10000
-      while (jobs.get < 2 && System.currentTimeMillis() < deadline) Thread.sleep(20)
-      Thread.sleep(300)
-      assert(jobs.get === 2, s"expected exactly 2 jobs (dlq + sink), saw ${jobs.get}")
-    } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    assert(outcome.passed === 2 && outcome.failed === 1 && outcome.dlqWritten)
+    assert(jobs === 2, s"expected exactly 2 jobs (dlq + sink), saw $jobs")
+  }
+
+  test("processBatch with no DLQ sink: right counts from one sink job") {
+    val batch = mixedBatch
+    var outcome: Dlq.BatchOutcome = null
+    var sunk = 0L
+    val jobs = jobsIn {
+      outcome = Dlq.processBatch(batch, col("res.error"),
+        sink = df => { sunk = df.collect().length }, dlqSink = None)
+    }
+    assert(outcome.passed === 2 && outcome.failed === 1 && !outcome.dlqWritten)
+    assert(sunk === 2)
+    assert(jobs === 1, s"expected exactly 1 job (the sink), saw $jobs")
+  }
+
+  test("processBatch counts each row once when a sink runs several actions") {
+    val batch = mixedBatch
+    for (dlqSink <- Seq(None, Some((df: DataFrame) => { df.collect(); () }))) {
+      var sunk = (0L, 0L)
+      val outcome = Dlq.processBatch(batch, col("res.error"),
+        sink = df => { sunk = (df.count(), df.collect().length.toLong) },
+        dlqSink = dlqSink)
+      assert(sunk === ((2L, 2L)))
+      assert(outcome.passed === 2 && outcome.failed === 1,
+        s"counts with dlqSink=${dlqSink.isDefined}: $outcome")
+    }
+  }
+
+  test("processBatch frees its row cache on return and when a sink throws") {
+    val batch = mixedBatch
+    val before = persisted
+    var cachedInSink = -1
+    val outcome = Dlq.processBatch(batch, col("res.error"),
+      sink = df => { cachedInSink = (persisted -- before).size; df.collect(); () },
+      dlqSink = Some(df => { df.collect(); () }))
+    assert(outcome.passed === 2 && outcome.failed === 1)
+    assert(cachedInSink === 1, "two consumers share one row cache")
+    assert(persisted === before)
+    for (failing <- Seq("dlq", "sink")) {
+      def sinkOf(name: String): DataFrame => Unit = df =>
+        if (name == failing) throw new RuntimeException(s"$name down")
+        else { df.collect(); () }
+      intercept[RuntimeException] {
+        Dlq.processBatch(batch, col("res.error"),
+          sink = sinkOf("sink"), dlqSink = Some(sinkOf("dlq")))
+      }
+      assert(persisted === before, s"a failing $failing sink left its cache")
+    }
   }
 
   test("ofVoid: success-on-return covers all rows; throw fails the batch") {
