@@ -351,6 +351,11 @@ object Dedup {
       when(element_at(counts, 64) > 0, lit(Long.MinValue)).otherwise(lit(0L))
   }
 
+  /** [[simhashLong]]'s token separator: `String.split` would compile
+    * this regex on every call (it has no single-char fast path).
+    */
+  private val SimhashWs = java.util.regex.Pattern.compile(TextFns.WS_CLASS + "+")
+
   /** Scala-native [[simhash]] — bit-identical values computed off-plan
     * in a tight JVM loop. The column form evaluates ~770 interpreted
     * lambda calls per doc (~1.5 ms); this is microseconds, which is
@@ -365,10 +370,11 @@ object Dedup {
     val trimmed = text.substring(i, j)
     val counts = new Array[Int](64)
     if (trimmed.nonEmpty) {
-      val toks = trimmed.split(TextFns.WS_CLASS + "+", -1)
+      val toks = SimhashWs.split(trimmed, -1)
+      val md = graft.functions.Md5Long.digest()
       var t = 0
       while (t < toks.length) {
-        val h = graft.functions.Md5Long.hashBytes(
+        val h = graft.functions.Md5Long.hashBytes(md,
           toks(t).getBytes(java.nio.charset.StandardCharsets.UTF_8))
         var b = 0
         while (b < 64) {

@@ -53,8 +53,16 @@ object Md5Long {
   /** Raw-bytes form, same thread-local digest (used off-plan too —
     * [[HashFns.hash61Bytes]]).
     */
-  def hashBytes(bytes: Array[Byte]): Long = {
-    val md = digests.get()
+  def hashBytes(bytes: Array[Byte]): Long = hashBytes(digests.get(), bytes)
+
+  /** This thread's digest, for a caller hashing many values in a loop:
+    * pass it to the two-argument [[hashBytes]] to skip the per-value
+    * thread-local lookup. It must stay on the thread that fetched it.
+    */
+  def digest(): MessageDigest = digests.get()
+
+  /** [[hashBytes]] with a digest from [[digest]]. */
+  def hashBytes(md: MessageDigest, bytes: Array[Byte]): Long = {
     md.reset()
     val d = md.digest(bytes)
     ((d(0) & 0xFFL) << 56) | ((d(1) & 0xFFL) << 48) | ((d(2) & 0xFFL) << 40) |

@@ -1,12 +1,25 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoder, KeyValueGroupedDataset}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Stateful streaming operators — capabilities beyond the reference
   * (kpipe explicitly has no windows/state, `README.md:203-208`) that a
   * training-data stream pipeline needs. All state is watermark-bounded:
   * unbounded streaming state is the #1 way a 100 TB stream job dies.
+  *
+  * Every keyed operator below is one per-batch fold run by
+  * `keyedTtlFold`, the only `flatMapGroupsWithState` call, so these
+  * rules hold for all of them and are stated once:
+  *  - a key whose event-time timeout fires is removed (only
+  *    [[sessionize]] emits a last row for it);
+  *  - the state write is optional: a batch that moved nothing skips it;
+  *  - while a key's state exists, every batch that sees the key re-arms
+  *    its timeout at the fold's event-time anchor + the TTL, so every
+  *    key's state has a scheduled death;
+  *  - the TTL drift a skipped write causes is bounded by the watermark
+  *    delay.
   */
 object Stateful {
 
@@ -52,47 +65,74 @@ object Stateful {
   // Custom keyed state (flatMapGroupsWithState)                        //
   // ------------------------------------------------------------------ //
 
+  /** The keyed-state shell every operator below runs on:
+    * `flatMapGroupsWithState` in Append mode with an EVENT-TIME timeout
+    * (the watermark drives state death, so behavior is deterministic and
+    * replayable; processing-time timeouts would re-trigger forever in
+    * tests and drift in production). Per key and micro-batch:
+    *
+    *  - timed out: the state is removed and `onTimeout(key, old)` is
+    *    emitted (nothing by default);
+    *  - otherwise `step(key, stored state, batch rows)` returns
+    *    `(write, anchorMs, out)`, then `write` (if any) replaces the
+    *    state, and while state exists its timeout is re-armed at
+    *    `anchorMs + ttlMs`; `out` is emitted.
+    *
+    * `write = None` skips the state write. State-store commit volume is
+    * the throughput ceiling of these paths, so a fold whose batch moved
+    * nothing (redelivery, duplicates, a full near-dup bucket) leaves the
+    * stored row as it is and only the TTL clock advances. The stored
+    * row's own `lastTs` then lags the true last arrival, so a later
+    * batch can anchor below the timeout it replaces; that drift is
+    * bounded by the watermark delay (events behind the watermark never
+    * reach a fold).
+    */
+  private def keyedTtlFold[K, V, S: Encoder, U: Encoder](
+      grouped: KeyValueGroupedDataset[K, V], ttlMs: Long)(
+      step: (K, Option[S], Iterator[V]) => (Option[S], Long, Iterator[U]),
+      onTimeout: (K, S) => Iterator[U] = (_: K, _: S) => Iterator.empty): Dataset[U] =
+    grouped.flatMapGroupsWithState[S, U](
+      OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
+      (key: K, rows: Iterator[V], state: GroupState[S]) =>
+        if (state.hasTimedOut) {
+          val old = state.get
+          state.remove()
+          onTimeout(key, old)
+        } else {
+          val (write, anchorMs, out) = step(key, state.getOption, rows)
+          write.foreach(state.update)
+          if (state.exists) state.setTimeoutTimestamp(anchorMs + ttlMs)
+          out
+        }
+    }
+
   final case class SessionEvent(user: Long, ts: java.sql.Timestamp, value: Double)
   final case class SessionState(count: Long, total: Double, lastTs: Long)
   final case class SessionUpdate(user: Long, events: Long, total: Double, closed: Boolean)
 
-  /** Inactivity-gap sessionization over a typed event stream — the
-    * `KeyValueGroupedDataset.flatMapGroupsWithState` shape: per-key
-    * mutable state with an EVENT-TIME inactivity timeout (the
-    * watermark drives session close, so behavior is deterministic and
-    * replayable; processing-time timeouts would re-trigger forever in
-    * tests and drift in production). Emits a running update per batch
-    * and a final `closed=true` row when the watermark passes the gap,
-    * then clears the state — bounded-state discipline: every key's
-    * state has a scheduled death.
+  /** Inactivity-gap sessionization over a typed event stream: per-key
+    * (count, total, last event time) with the gap as the event-time
+    * TTL. Emits a running update per batch and a final `closed=true`
+    * row when the watermark passes the gap, then clears the state.
     */
   def sessionize(ds: org.apache.spark.sql.Dataset[SessionEvent],
                  gapMs: Long, watermarkDelay: String = "1 second")
       : org.apache.spark.sql.Dataset[SessionUpdate] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val spark = ds.sparkSession
     import spark.implicits._
-    ds.withWatermark("ts", watermarkDelay)
-      .groupByKey(_.user)
-      .flatMapGroupsWithState[SessionState, SessionUpdate](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (user: Long, events: Iterator[SessionEvent], state: GroupState[SessionState]) =>
-          if (state.hasTimedOut) {
-            val s = state.get
-            state.remove()
-            Iterator(SessionUpdate(user, s.count, s.total, closed = true))
-          } else {
-            val evs = events.toSeq
-            val prev = state.getOption.getOrElse(SessionState(0, 0.0, 0L))
-            val next = SessionState(
-              prev.count + evs.size,
-              prev.total + evs.map(_.value).sum,
-              evs.map(_.ts.getTime).foldLeft(prev.lastTs)(math.max))
-            state.update(next)
-            state.setTimeoutTimestamp(next.lastTs + gapMs)
-            Iterator(SessionUpdate(user, next.count, next.total, closed = false))
-          }
-      }
+    keyedTtlFold(ds.withWatermark("ts", watermarkDelay).groupByKey(_.user), gapMs)(
+      (user: Long, stored: Option[SessionState], events: Iterator[SessionEvent]) => {
+        val evs = events.toSeq
+        val prev = stored.getOrElse(SessionState(0, 0.0, 0L))
+        val next = SessionState(
+          prev.count + evs.size,
+          prev.total + evs.map(_.value).sum,
+          evs.map(_.ts.getTime).foldLeft(prev.lastTs)(math.max))
+        (Some(next), next.lastTs,
+          Iterator(SessionUpdate(user, next.count, next.total, closed = false)))
+      },
+      onTimeout = (user: Long, s: SessionState) =>
+        Iterator(SessionUpdate(user, s.count, s.total, closed = true)))
   }
 
   // ------------------------------------------------------------------ //
@@ -129,41 +169,33 @@ object Stateful {
                     steps: Seq[String], watermarkDelay: String = "10 seconds",
                     stateTtlMs: Long = 3600L * 1000)
       : org.apache.spark.sql.Dataset[FunnelUpdate] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     require(steps.nonEmpty && steps.distinct.size == steps.size,
       s"bad step list: $steps")
     val spark = ds.sparkSession
     import spark.implicits._
     val stepArr = steps.toArray
-    ds.withWatermark("ts", watermarkDelay)
-      .groupByKey(_.user)
-      .flatMapGroupsWithState[FunnelState, FunnelUpdate](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (user: Long, events: Iterator[FunnelEvent], state: GroupState[FunnelState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            var times = state.getOption.map(_.times).getOrElse(Array.empty[Long])
-            val before = times.length
-            val evs = events.toArray.sortBy(_.ts.getTime)
-            var lastTs = 0L
-            evs.foreach { e =>
-              val t = e.ts.getTime
-              lastTs = math.max(lastTs, t)
-              if (times.length < stepArr.length &&
-                  e.eventType == stepArr(times.length) &&
-                  (times.isEmpty || t > times.last))
-                times = times :+ t
-            }
-            if (times.length > before || state.getOption.isEmpty)
-              state.update(FunnelState(times))
-            if (lastTs > 0L) state.setTimeoutTimestamp(lastTs + stateTtlMs)
-            if (times.length > before)
-              Iterator(FunnelUpdate(user, times.length,
-                new java.sql.Timestamp(times.last),
-                converted = times.length == stepArr.length))
-            else Iterator.empty
-          }
-      }
+    keyedTtlFold(ds.withWatermark("ts", watermarkDelay).groupByKey(_.user), stateTtlMs) {
+      (user: Long, stored: Option[FunnelState], events: Iterator[FunnelEvent]) =>
+        var times = stored.map(_.times).getOrElse(Array.empty[Long])
+        val before = times.length
+        val evs = events.toArray.sortBy(_.ts.getTime)
+        var lastTs = 0L
+        evs.foreach { e =>
+          val t = e.ts.getTime
+          lastTs = math.max(lastTs, t)
+          if (times.length < stepArr.length &&
+              e.eventType == stepArr(times.length) &&
+              (times.isEmpty || t > times.last))
+            times = times :+ t
+        }
+        val advanced = times.length > before
+        (if (advanced || stored.isEmpty) Some(FunnelState(times)) else None, lastTs,
+          if (advanced)
+            Iterator(FunnelUpdate(user, times.length,
+              new java.sql.Timestamp(times.last),
+              converted = times.length == stepArr.length))
+          else Iterator.empty)
+    }
   }
 
   final case class FunnelReach(user: Long, step: Int,
@@ -193,43 +225,34 @@ object Stateful {
                     steps: Seq[String], watermarkDelay: String = "10 seconds",
                     stateTtlMs: Long = 3600L * 1000)
       : org.apache.spark.sql.Dataset[FunnelReach] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     require(steps.nonEmpty && steps.distinct.size == steps.size,
       s"bad step list: $steps")
     val spark = ds.sparkSession
     import spark.implicits._
     val stepArr = steps.toArray
-    ds.withWatermark("ts", watermarkDelay)
-      .groupByKey(_.user)
-      .flatMapGroupsWithState[FunnelState, FunnelReach](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (user: Long, events: Iterator[FunnelEvent], state: GroupState[FunnelState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val firstSeen = state.getOption.isEmpty
-            var times = state.getOption.map(_.times).getOrElse(Array.empty[Long])
-            val before = times.length
-            val evs = events.toArray.sortBy(_.ts.getTime)
-            val out = scala.collection.mutable.ArrayBuffer.empty[FunnelReach]
-            if (firstSeen && evs.nonEmpty)
-              out += FunnelReach(user, 0, evs.head.ts)
-            var lastTs = 0L
-            evs.foreach { e =>
-              val t = e.ts.getTime
-              lastTs = math.max(lastTs, t)
-              if (times.length < stepArr.length &&
-                  e.eventType == stepArr(times.length) &&
-                  (times.isEmpty || t > times.last)) {
-                times = times :+ t
-                out += FunnelReach(user, times.length, e.ts)
-              }
-            }
-            if (times.length > before || firstSeen)
-              state.update(FunnelState(times))
-            if (lastTs > 0L) state.setTimeoutTimestamp(lastTs + stateTtlMs)
-            out.iterator
+    keyedTtlFold(ds.withWatermark("ts", watermarkDelay).groupByKey(_.user), stateTtlMs) {
+      (user: Long, stored: Option[FunnelState], events: Iterator[FunnelEvent]) =>
+        val firstSeen = stored.isEmpty
+        var times = stored.map(_.times).getOrElse(Array.empty[Long])
+        val before = times.length
+        val evs = events.toArray.sortBy(_.ts.getTime)
+        val out = scala.collection.mutable.ArrayBuffer.empty[FunnelReach]
+        if (firstSeen && evs.nonEmpty)
+          out += FunnelReach(user, 0, evs.head.ts)
+        var lastTs = 0L
+        evs.foreach { e =>
+          val t = e.ts.getTime
+          lastTs = math.max(lastTs, t)
+          if (times.length < stepArr.length &&
+              e.eventType == stepArr(times.length) &&
+              (times.isEmpty || t > times.last)) {
+            times = times :+ t
+            out += FunnelReach(user, times.length, e.ts)
           }
-      }
+        }
+        (if (times.length > before || firstSeen) Some(FunnelState(times)) else None,
+          lastTs, out.iterator)
+    }
   }
 
   // ------------------------------------------------------------------ //
@@ -262,46 +285,33 @@ object Stateful {
                       watermarkDelay: String = "10 seconds",
                       stateTtlMs: Long = 3600L * 1000)
       : org.apache.spark.sql.Dataset[CoverageUpdate] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val spark = ds.sparkSession
     import spark.implicits._
-    ds.withWatermark("ts", watermarkDelay)
-      .groupByKey(_.user)
-      .flatMapGroupsWithState[CoverageState, CoverageUpdate](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (user: Long, events: Iterator[CoverageEvent],
-         state: GroupState[CoverageState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            var st = state.getOption.getOrElse(
-              CoverageState(Long.MinValue, Long.MinValue, 0L, 0L, 0L))
-            val evs = events.toArray.sortBy(_.ts.getTime)
-            var lastTs = 0L
-            evs.foreach { e =>
-              val s = math.floorDiv(e.ts.getTime, 1000L)
-              lastTs = math.max(lastTs, e.ts.getTime)
-              st =
-                if (st.islands == 0L)
-                  CoverageState(s, s, 1L, ttlSec, 1L)
-                else if (s - st.lastStartSec >= ttlSec)
-                  st.copy(lastStartSec = s, islands = st.islands + 1,
-                    coveredSec = st.coveredSec + ttlSec,
-                    nEvents = st.nEvents + 1)
-                else
-                  st.copy(lastStartSec = math.max(st.lastStartSec, s),
-                    coveredSec = st.coveredSec +
-                      math.max(s - st.lastStartSec, 0L),
-                    nEvents = st.nEvents + 1)
-            }
-            if (evs.nonEmpty) {
-              state.update(st)
-              state.setTimeoutTimestamp(lastTs + stateTtlMs)
-              Iterator(CoverageUpdate(user, st.nEvents, st.islands,
-                st.coveredSec,
-                st.lastStartSec - st.firstStartSec + ttlSec))
-            } else Iterator.empty
-          }
-      }
+    keyedTtlFold(ds.withWatermark("ts", watermarkDelay).groupByKey(_.user), stateTtlMs) {
+      (user: Long, stored: Option[CoverageState], events: Iterator[CoverageEvent]) =>
+        var st = stored.getOrElse(
+          CoverageState(Long.MinValue, Long.MinValue, 0L, 0L, 0L))
+        var lastTs = 0L
+        events.toArray.sortBy(_.ts.getTime).foreach { e =>
+          val s = math.floorDiv(e.ts.getTime, 1000L)
+          lastTs = math.max(lastTs, e.ts.getTime)
+          st =
+            if (st.islands == 0L)
+              CoverageState(s, s, 1L, ttlSec, 1L)
+            else if (s - st.lastStartSec >= ttlSec)
+              st.copy(lastStartSec = s, islands = st.islands + 1,
+                coveredSec = st.coveredSec + ttlSec,
+                nEvents = st.nEvents + 1)
+            else
+              st.copy(lastStartSec = math.max(st.lastStartSec, s),
+                coveredSec = st.coveredSec +
+                  math.max(s - st.lastStartSec, 0L),
+                nEvents = st.nEvents + 1)
+        }
+        (Some(st), lastTs,
+          Iterator(CoverageUpdate(user, st.nEvents, st.islands, st.coveredSec,
+            st.lastStartSec - st.firstStartSec + ttlSec)))
+    }
   }
 
   // ------------------------------------------------------------------ //
@@ -330,54 +340,37 @@ object Stateful {
   def hllRunning(events: org.apache.spark.sql.Dataset[KeyedValue],
                  watermarkDelay: String, stateTtlMs: Long)
       : org.apache.spark.sql.Dataset[HllUpdate] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val spark = events.sparkSession
     import spark.implicits._
     val estNum = BigInt(graft.ops.Sketch.HllEstNumX10)
-    events
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[HllState, HllUpdate](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: String, rows: Iterator[KeyedValue], state: GroupState[HllState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val s = state.getOption.getOrElse(HllState(new Array[Byte](1024), 0L))
-            val regs = s.regs.clone()
-            var lastTs = s.lastTs
-            var n = 0L
-            var changed = false
-            rows.foreach { kv =>
-              // native twin of the column pipeline: h = md5-derived
-              // 61-bit hash, bucket = low 10 bits, rho = rank of the
-              // remaining 51 bits (52 - bitLength), register = max
-              val h = graft.functions.HashFns.hash61Bytes(
-                kv.value.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-              val bucket = (h & 1023L).toInt
-              val w = h >>> 10
-              val rho =
-                (if (w == 0L) 52 else 52 - (64 - java.lang.Long.numberOfLeadingZeros(w))).toByte
-              if (rho > regs(bucket)) { regs(bucket) = rho; changed = true }
-              lastTs = math.max(lastTs, kv.ts.getTime)
-              n += 1
-            }
-            // State-store commit volume is the throughput ceiling on
-            // this path, so a batch that bumped NO register (every
-            // value already observed — redelivery, duplicates) skips
-            // the 1 KiB state rewrite and only advances the TTL clock.
-            // rho ≥ 1 always bumps fresh all-zero state, so the skip
-            // branch implies state exists (setTimeoutTimestamp without
-            // update is legal). The stored lastTs then lags the true
-            // last arrival; the TTL drift is bounded by the watermark
-            // delay (late events past the watermark never reach here).
-            if (changed) state.update(HllState(regs, lastTs))
-            if (state.exists) state.setTimeoutTimestamp(lastTs + stateTtlMs)
-            var regSum = 0L
-            var i = 0
-            while (i < 1024) { regSum += 1L << (52 - regs(i)); i += 1 }
-            Iterator.single(HllUpdate(key, regSum, (estNum / regSum).toLong, n))
-          }
-      }
+    keyedTtlFold(events.withWatermark("ts", watermarkDelay).groupByKey(_.key), stateTtlMs) {
+      (key: String, stored: Option[HllState], rows: Iterator[KeyedValue]) =>
+        val s = stored.getOrElse(HllState(new Array[Byte](1024), 0L))
+        val regs = s.regs.clone()
+        var lastTs = s.lastTs
+        var n = 0L
+        var changed = false
+        rows.foreach { kv =>
+          // native twin of the column pipeline: h = md5-derived
+          // 61-bit hash, bucket = low 10 bits, rho = rank of the
+          // remaining 51 bits (52 - bitLength), register = max
+          val h = graft.functions.HashFns.hash61Bytes(
+            kv.value.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+          val bucket = (h & 1023L).toInt
+          val w = h >>> 10
+          val rho =
+            (if (w == 0L) 52 else 52 - (64 - java.lang.Long.numberOfLeadingZeros(w))).toByte
+          if (rho > regs(bucket)) { regs(bucket) = rho; changed = true }
+          lastTs = math.max(lastTs, kv.ts.getTime)
+          n += 1
+        }
+        var regSum = 0L
+        var i = 0
+        while (i < 1024) { regSum += 1L << (52 - regs(i)); i += 1 }
+        // no register moved (every value already observed): no write
+        (if (changed) Some(HllState(regs, lastTs)) else None, lastTs,
+          Iterator.single(HllUpdate(key, regSum, (estNum / regSum).toLong, n)))
+    }
   }
 
   final case class CmsState(counts: Array[Long], lastTs: Long)
@@ -399,46 +392,37 @@ object Stateful {
                  watermarkDelay: String, stateTtlMs: Long,
                  w: Int = 1024, d: Int = 4)
       : org.apache.spark.sql.Dataset[CmsEstimate] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val spark = events.sparkSession
     import spark.implicits._
-    events
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[CmsState, CmsEstimate](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: String, rows: Iterator[KeyedValue], state: GroupState[CmsState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val s = state.getOption.getOrElse(CmsState(new Array[Long](d * w), 0L))
-            val counts = s.counts.clone()
-            var lastTs = s.lastTs
-            val seen = scala.collection.mutable.LinkedHashMap.empty[String, Long]
-            rows.foreach { kv =>
-              val x = graft.functions.HashFns.hash61Bytes(
-                kv.value.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-              var j = 0
-              while (j < d) {
-                counts(j * w + (graft.functions.HashFns.hashAtLong(x, j) % w).toInt) += 1
-                j += 1
-              }
-              lastTs = math.max(lastTs, kv.ts.getTime)
-              seen.put(kv.value, x)
-            }
-            state.update(CmsState(counts, lastTs))
-            state.setTimeoutTimestamp(lastTs + stateTtlMs)
-            seen.iterator.map { case (v, x) =>
-              var est = Long.MaxValue
-              var j = 0
-              while (j < d) {
-                val c = counts(j * w + (graft.functions.HashFns.hashAtLong(x, j) % w).toInt)
-                if (c < est) est = c
-                j += 1
-              }
-              CmsEstimate(key, v, est)
-            }.toSeq.iterator
+    keyedTtlFold(events.withWatermark("ts", watermarkDelay).groupByKey(_.key), stateTtlMs) {
+      (key: String, stored: Option[CmsState], rows: Iterator[KeyedValue]) =>
+        val s = stored.getOrElse(CmsState(new Array[Long](d * w), 0L))
+        val counts = s.counts.clone()
+        var lastTs = s.lastTs
+        val seen = scala.collection.mutable.LinkedHashMap.empty[String, Long]
+        rows.foreach { kv =>
+          val x = graft.functions.HashFns.hash61Bytes(
+            kv.value.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+          var j = 0
+          while (j < d) {
+            counts(j * w + (graft.functions.HashFns.hashAtLong(x, j) % w).toInt) += 1
+            j += 1
           }
-      }
+          lastTs = math.max(lastTs, kv.ts.getTime)
+          seen.put(kv.value, x)
+        }
+        (Some(CmsState(counts, lastTs)), lastTs,
+          seen.iterator.map { case (v, x) =>
+            var est = Long.MaxValue
+            var j = 0
+            while (j < d) {
+              val c = counts(j * w + (graft.functions.HashFns.hashAtLong(x, j) % w).toInt)
+              if (c < est) est = c
+              j += 1
+            }
+            CmsEstimate(key, v, est)
+          }.toSeq.iterator)
+    }
   }
 
   final case class BloomState(words: Array[Long], lastTs: Long)
@@ -465,45 +449,35 @@ object Stateful {
                    watermarkDelay: String, stateTtlMs: Long,
                    mBits: Int = 1 << 16, k: Int = 4)
       : org.apache.spark.sql.Dataset[BloomSeen] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val spark = events.sparkSession
     import spark.implicits._
-    events
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[BloomState, BloomSeen](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: String, rows: Iterator[KeyedValue], state: GroupState[BloomState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val s = state.getOption
-              .getOrElse(BloomState(new Array[Long](mBits / 64), 0L))
-            val words = s.words.clone()
-            var lastTs = s.lastTs
-            var changed = false
-            val out = Seq.newBuilder[BloomSeen]
-            rows.foreach { kv =>
-              val x = graft.functions.HashFns.hash61Bytes(
-                kv.value.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-              var seen = true
-              var j = 0
-              while (j < k) {
-                val pos = (graft.functions.HashFns.hashAtLong(x, j) % mBits).toInt
-                val mask = 1L << (pos & 63)
-                val widx = pos >>> 6
-                if ((words(widx) & mask) == 0L) {
-                  seen = false; words(widx) |= mask; changed = true
-                }
-                j += 1
-              }
-              out += BloomSeen(key, kv.value, seen)
-              lastTs = math.max(lastTs, kv.ts.getTime)
+    keyedTtlFold(events.withWatermark("ts", watermarkDelay).groupByKey(_.key), stateTtlMs) {
+      (key: String, stored: Option[BloomState], rows: Iterator[KeyedValue]) =>
+        val s = stored.getOrElse(BloomState(new Array[Long](mBits / 64), 0L))
+        val words = s.words.clone()
+        var lastTs = s.lastTs
+        var changed = false
+        val out = Seq.newBuilder[BloomSeen]
+        rows.foreach { kv =>
+          val x = graft.functions.HashFns.hash61Bytes(
+            kv.value.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+          var seen = true
+          var j = 0
+          while (j < k) {
+            val pos = (graft.functions.HashFns.hashAtLong(x, j) % mBits).toInt
+            val mask = 1L << (pos & 63)
+            val widx = pos >>> 6
+            if ((words(widx) & mask) == 0L) {
+              seen = false; words(widx) |= mask; changed = true
             }
-            if (changed) state.update(BloomState(words, lastTs))
-            if (state.exists) state.setTimeoutTimestamp(lastTs + stateTtlMs)
-            out.result().iterator
+            j += 1
           }
-      }
+          out += BloomSeen(key, kv.value, seen)
+          lastTs = math.max(lastTs, kv.ts.getTime)
+        }
+        (if (changed) Some(BloomState(words, lastTs)) else None, lastTs,
+          out.result().iterator)
+    }
   }
 
   final case class KmvState(vals: Array[Long], lastTs: Long)
@@ -526,45 +500,36 @@ object Stateful {
   def kmvRunning(events: org.apache.spark.sql.Dataset[KeyedValue],
                  watermarkDelay: String, stateTtlMs: Long, k: Int = 256)
       : org.apache.spark.sql.Dataset[KmvUpdate] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val spark = events.sparkSession
     import spark.implicits._
     val estNum = BigInt(graft.ops.Sketch.kmvEstNumX10(k))
-    events
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[KmvState, KmvUpdate](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: String, rows: Iterator[KeyedValue], state: GroupState[KmvState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val s = state.getOption.getOrElse(KmvState(Array.emptyLongArray, 0L))
-            val set = scala.collection.mutable.TreeSet.from(s.vals)
-            var lastTs = s.lastTs
-            var n = 0L
-            var changed = false
-            rows.foreach { kv =>
-              val h = graft.functions.HashFns.hash61Bytes(
-                kv.value.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-              // insert only if it belongs in the bottom-k; evict the
-              // displaced max so the set never exceeds k entries
-              if ((set.size < k || h < set.last) && set.add(h)) {
-                if (set.size > k) set.remove(set.last)
-                changed = true
-              }
-              lastTs = math.max(lastTs, kv.ts.getTime)
-              n += 1
-            }
-            if (changed) state.update(KmvState(set.toArray, lastTs))
-            if (state.exists) state.setTimeoutTimestamp(lastTs + stateTtlMs)
-            val held = set.size.toLong
-            val kth = if (set.isEmpty) 0L else set.last
-            val est =
-              if (held < k) held * 10
-              else (estNum / math.max(kth, 1L)).toLong
-            Iterator.single(KmvUpdate(key, held, kth, est, n))
+    keyedTtlFold(events.withWatermark("ts", watermarkDelay).groupByKey(_.key), stateTtlMs) {
+      (key: String, stored: Option[KmvState], rows: Iterator[KeyedValue]) =>
+        val s = stored.getOrElse(KmvState(Array.emptyLongArray, 0L))
+        val set = scala.collection.mutable.TreeSet.from(s.vals)
+        var lastTs = s.lastTs
+        var n = 0L
+        var changed = false
+        rows.foreach { kv =>
+          val h = graft.functions.HashFns.hash61Bytes(
+            kv.value.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+          // insert only if it belongs in the bottom-k; evict the
+          // displaced max so the set never exceeds k entries
+          if ((set.size < k || h < set.last) && set.add(h)) {
+            if (set.size > k) set.remove(set.last)
+            changed = true
           }
-      }
+          lastTs = math.max(lastTs, kv.ts.getTime)
+          n += 1
+        }
+        val held = set.size.toLong
+        val kth = if (set.isEmpty) 0L else set.last
+        val est =
+          if (held < k) held * 10
+          else (estNum / math.max(kth, 1L)).toLong
+        (if (changed) Some(KmvState(set.toArray, lastTs)) else None, lastTs,
+          Iterator.single(KmvUpdate(key, held, kth, est, n)))
+    }
   }
 
   final case class HistState(bins: Array[Long], cnts: Array[Long], lastTs: Long)
@@ -591,55 +556,42 @@ object Stateful {
                   watermarkDelay: String, stateTtlMs: Long,
                   binWidth: Long = 8L, pcts: Seq[Int] = Seq(50, 90, 99))
       : org.apache.spark.sql.Dataset[HistQuantileUpdate] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val spark = events.sparkSession
     import spark.implicits._
-    events
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[HistState, HistQuantileUpdate](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: String, rows: Iterator[KeyedValue], state: GroupState[HistState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val s = state.getOption
-              .getOrElse(HistState(Array.emptyLongArray, Array.emptyLongArray, 0L))
-            val m = scala.collection.mutable.HashMap.empty[Long, Long]
-            var i = 0
-            while (i < s.bins.length) { m.put(s.bins(i), s.cnts(i)); i += 1 }
-            var lastTs = s.lastTs
-            var n = 0L
-            rows.foreach { kv =>
-              val b = kv.value.toLong / binWidth
-              m.update(b, m.getOrElse(b, 0L) + 1L)
-              lastTs = math.max(lastTs, kv.ts.getTime)
-              n += 1
+    keyedTtlFold(events.withWatermark("ts", watermarkDelay).groupByKey(_.key), stateTtlMs) {
+      (key: String, stored: Option[HistState], rows: Iterator[KeyedValue]) =>
+        val s = stored.getOrElse(HistState(Array.emptyLongArray, Array.emptyLongArray, 0L))
+        val m = scala.collection.mutable.HashMap.empty[Long, Long]
+        var i = 0
+        while (i < s.bins.length) { m.put(s.bins(i), s.cnts(i)); i += 1 }
+        var lastTs = s.lastTs
+        rows.foreach { kv =>
+          val b = kv.value.toLong / binWidth
+          m.update(b, m.getOrElse(b, 0L) + 1L)
+          lastTs = math.max(lastTs, kv.ts.getTime)
+        }
+        // counting fold: every delivered event moves a counter, so
+        // every batch writes
+        val sorted = m.toArray.sortBy(_._1)
+        val total = sorted.iterator.map(_._2).sum
+        (Some(HistState(sorted.map(_._1), sorted.map(_._2), lastTs)), lastTs,
+          pcts.iterator.map { p =>
+            // same integer ceil-rank rule as the batch readback:
+            // target_rank = (pct·total + 99) div 100, bin = smallest
+            // bin whose cumulative count reaches it
+            val target = (p * total + 99L) / 100L
+            var cum = 0L
+            var j = 0
+            while (j < sorted.length && cum + sorted(j)._2 < target) {
+              cum += sorted(j)._2; j += 1
             }
-            // counting fold: any delivered event moves a counter, so
-            // only a genuinely empty batch skips the state rewrite
-            val sorted = m.toArray.sortBy(_._1)
-            if (n > 0)
-              state.update(HistState(sorted.map(_._1), sorted.map(_._2), lastTs))
-            if (state.exists) state.setTimeoutTimestamp(lastTs + stateTtlMs)
-            val total = sorted.iterator.map(_._2).sum
-            pcts.iterator.map { p =>
-              // same integer ceil-rank rule as the batch readback:
-              // target_rank = (pct·total + 99) div 100, bin = smallest
-              // bin whose cumulative count reaches it
-              val target = (p * total + 99L) / 100L
-              var cum = 0L
-              var j = 0
-              while (j < sorted.length && cum + sorted(j)._2 < target) {
-                cum += sorted(j)._2; j += 1
-              }
-              // sorted is non-empty: this branch only runs for groups
-              // that delivered rows (timeouts returned above), and any
-              // delivered row populates at least one bin
-              val bin = sorted(math.min(j, sorted.length - 1))._1
-              HistQuantileUpdate(key, p.toLong, target, bin, bin * binWidth, total)
-            }.toSeq.iterator
-          }
-      }
+            // sorted is non-empty: a fold only runs for groups that
+            // delivered rows (timeouts never reach it), and any
+            // delivered row populates at least one bin
+            val bin = sorted(math.min(j, sorted.length - 1))._1
+            HistQuantileUpdate(key, p.toLong, target, bin, bin * binWidth, total)
+          }.toSeq.iterator)
+    }
   }
 
   final case class TopkState(items: Array[String], cnts: Array[Long],
@@ -669,37 +621,26 @@ object Stateful {
                   cap: Int = 64, emitK: Int = 5)
       : org.apache.spark.sql.Dataset[TopkUpdate] = {
     require(cap > 0 && emitK > 0, s"need positive cap/emitK, got $cap/$emitK")
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val spark = events.sparkSession
     import spark.implicits._
-    events
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[TopkState, TopkUpdate](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: String, rows: Iterator[KeyedValue], state: GroupState[TopkState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val s = state.getOption.getOrElse(
-              TopkState(Array.empty, Array.emptyLongArray, Array.emptyLongArray, 0L))
-            val ss = SpaceSaving.restore(cap, s.items, s.cnts, s.errs)
-            var lastTs = s.lastTs
-            var n = 0L
-            rows.foreach { kv =>
-              ss.add(kv.value)
-              lastTs = math.max(lastTs, kv.ts.getTime)
-              n += 1
-            }
-            // counting fold: any delivered event moves a counter, so
-            // only a genuinely empty batch skips the state rewrite
-            val (items, cnts, errs) = ss.snapshot()
-            if (n > 0) state.update(TopkState(items, cnts, errs, lastTs))
-            if (state.exists) state.setTimeoutTimestamp(lastTs + stateTtlMs)
-            ss.top(emitK).zipWithIndex.map { case ((item, est, err), i) =>
-              TopkUpdate(key, item, est, err, i + 1L)
-            }.iterator
-          }
-      }
+    keyedTtlFold(events.withWatermark("ts", watermarkDelay).groupByKey(_.key), stateTtlMs) {
+      (key: String, stored: Option[TopkState], rows: Iterator[KeyedValue]) =>
+        val s = stored.getOrElse(
+          TopkState(Array.empty, Array.emptyLongArray, Array.emptyLongArray, 0L))
+        val ss = SpaceSaving.restore(cap, s.items, s.cnts, s.errs)
+        var lastTs = s.lastTs
+        rows.foreach { kv =>
+          ss.add(kv.value)
+          lastTs = math.max(lastTs, kv.ts.getTime)
+        }
+        // counting fold: every delivered event moves a counter, so
+        // every batch writes
+        val (items, cnts, errs) = ss.snapshot()
+        (Some(TopkState(items, cnts, errs, lastTs)), lastTs,
+          ss.top(emitK).zipWithIndex.map { case ((item, est, err), i) =>
+            TopkUpdate(key, item, est, err, i + 1L)
+          }.iterator)
+    }
   }
 
   final case class WeightedEvent(key: String, ts: java.sql.Timestamp,
@@ -729,66 +670,54 @@ object Stateful {
                       watermarkDelay: String, stateTtlMs: Long, k: Int = 256)
       : org.apache.spark.sql.Dataset[PrioUpdate] = {
     require(k > 0, s"k must be positive, got $k")
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val spark = events.sparkSession
     import spark.implicits._
     val Two61 = 2305843009213693952L
-    events
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.key)
-      .flatMapGroupsWithState[PrioState, PrioUpdate](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: String, rows: Iterator[WeightedEvent], state: GroupState[PrioState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val s = state.getOption.getOrElse(
-              PrioState(Array.emptyLongArray, Array.empty, Array.emptyLongArray, 0L))
-            val set = scala.collection.mutable.TreeSet.empty[(Long, String)]
-            val wOf = scala.collection.mutable.HashMap.empty[(Long, String), Long]
-            var i = 0
-            while (i < s.ts.length) {
-              val e = (s.ts(i), s.ids(i))
-              set.add(e); wOf.put(e, s.ws(i)); i += 1
-            }
-            var lastTs = s.lastTs
-            var changed = false
-            var n = 0L
-            rows.foreach { ev =>
-              val h = graft.functions.HashFns.hash61Bytes(
-                ev.id.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-              val t = h / math.max(ev.w, 1L)
-              val e = (t, ev.id)
-              // bottom-(k+1) insert with displaced-max eviction;
-              // re-delivered ids land on an existing (t, id) — no-op
-              if ((set.size < k + 1 || implicitly[Ordering[(Long, String)]]
-                    .lt(e, set.last)) && set.add(e)) {
-                wOf.put(e, ev.w)
-                if (set.size > k + 1) { val mx = set.last; set.remove(mx); wOf.remove(mx) }
-                changed = true
-              }
-              lastTs = math.max(lastTs, ev.ts.getTime)
-              n += 1
-            }
-            if (changed) {
-              val arr = set.toArray
-              state.update(PrioState(arr.map(_._1), arr.map(_._2),
-                arr.map(wOf), lastTs))
-            }
-            if (state.exists || n > 0) {
-              if (state.exists) state.setTimeoutTimestamp(lastTs + stateTtlMs)
-              val held = set.toSeq
-              val (sample, tau) =
-                if (held.size == k + 1) (held.init, held.last._1)
-                else (held, -1L)
-              val whs = sample.iterator.map { e =>
-                if (tau < 0) wOf(e)
-                else math.max(wOf(e), Two61 / math.max(tau, 1L))
-              }.sum
-              Iterator.single(
-                PrioUpdate(key, sample.size.toLong, tau, whs, n))
-            } else Iterator.empty
+    keyedTtlFold(events.withWatermark("ts", watermarkDelay).groupByKey(_.key), stateTtlMs) {
+      (key: String, stored: Option[PrioState], rows: Iterator[WeightedEvent]) =>
+        val s = stored.getOrElse(
+          PrioState(Array.emptyLongArray, Array.empty, Array.emptyLongArray, 0L))
+        val set = scala.collection.mutable.TreeSet.empty[(Long, String)]
+        val wOf = scala.collection.mutable.HashMap.empty[(Long, String), Long]
+        var i = 0
+        while (i < s.ts.length) {
+          val e = (s.ts(i), s.ids(i))
+          set.add(e); wOf.put(e, s.ws(i)); i += 1
+        }
+        var lastTs = s.lastTs
+        var changed = false
+        var n = 0L
+        rows.foreach { ev =>
+          val h = graft.functions.HashFns.hash61Bytes(
+            ev.id.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+          val t = h / math.max(ev.w, 1L)
+          val e = (t, ev.id)
+          // bottom-(k+1) insert with displaced-max eviction;
+          // re-delivered ids land on an existing (t, id) — no-op
+          if ((set.size < k + 1 || implicitly[Ordering[(Long, String)]]
+                .lt(e, set.last)) && set.add(e)) {
+            wOf.put(e, ev.w)
+            if (set.size > k + 1) { val mx = set.last; set.remove(mx); wOf.remove(mx) }
+            changed = true
           }
-      }
+          lastTs = math.max(lastTs, ev.ts.getTime)
+          n += 1
+        }
+        val held = set.toSeq
+        val (sample, tau) =
+          if (held.size == k + 1) (held.init, held.last._1)
+          else (held, -1L)
+        val whs = sample.iterator.map { e =>
+          if (tau < 0) wOf(e)
+          else math.max(wOf(e), Two61 / math.max(tau, 1L))
+        }.sum
+        val write =
+          if (changed) {
+            val arr = set.toArray
+            Some(PrioState(arr.map(_._1), arr.map(_._2), arr.map(wOf), lastTs))
+          } else None
+        (write, lastTs, Iterator.single(PrioUpdate(key, sample.size.toLong, tau, whs, n)))
+    }
   }
 
   final case class DocEvent(id: Long, ts: java.sql.Timestamp, text: String)
@@ -859,7 +788,6 @@ object Stateful {
                         maxDist: Int = 3, maxPerBucket: Int = 1024,
                         sortChunk: Int = 4096)
       : org.apache.spark.sql.Dataset[DupCandidate] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val spark = docs.sparkSession
     import spark.implicits._
     // signature via the Scala-native simhash (bit-identical to the
@@ -881,75 +809,61 @@ object Stateful {
           .as("bucket"))
     // `ts` stays in the rows: it carries the watermark the event-time
     // timeout needs
-    banded.groupBy(col("bucket")).as[Long, BandEvent]
-      .flatMapGroupsWithState[BucketSigs, DupCandidate](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (bucket: Long, rows: Iterator[BandEvent],
-         state: GroupState[BucketSigs]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val s = state.getOption
-              .getOrElse(BucketSigs(Array.emptyLongArray, Array.emptyLongArray, 0L))
-            val storedN = s.sigs.length
-            // this batch's additions buffer separately and concatenate
-            // into the state ONCE per batch — appending per event would
-            // copy the arrays quadratically
-            val newSigs = scala.collection.mutable.ArrayBuffer.empty[Long]
-            val newIds = scala.collection.mutable.ArrayBuffer.empty[Long]
-            var lastTs = s.lastTs
-            // out is bounded by ≤1 candidate per input event (tiny rows);
-            // the INPUT buffer is the bounded one: `grouped` materializes
-            // at most sortChunk events at a time, sorted by (ts, id) for
-            // chunk-deterministic processing order.
-            val out = Seq.newBuilder[DupCandidate]
-            val band = (bucket >>> 16).toInt
-            rows.grouped(sortChunk).foreach { chunk =>
-              chunk.sorted(BandEvent.byTime).foreach {
-                case BandEvent(id, tsMs, sig) =>
-                  // min matching prior id across stored state + this batch
-                  var bestId = Long.MaxValue
-                  var bestSig = 0L
-                  var i = 0
-                  while (i < storedN) {
-                    if (s.ids(i) != id && s.ids(i) < bestId &&
-                        java.lang.Long.bitCount(s.sigs(i) ^ sig) <= maxDist) {
-                      bestId = s.ids(i); bestSig = s.sigs(i)
-                    }
-                    i += 1
-                  }
-                  var j = 0
-                  while (j < newSigs.length) {
-                    if (newIds(j) != id && newIds(j) < bestId &&
-                        java.lang.Long.bitCount(newSigs(j) ^ sig) <= maxDist) {
-                      bestId = newIds(j); bestSig = newSigs(j)
-                    }
-                    j += 1
-                  }
-                  if (bestId != Long.MaxValue)
-                    out += DupCandidate(id, bestId, band,
-                      java.lang.Long.bitCount(bestSig ^ sig))
-                  if (storedN + newSigs.length < maxPerBucket) {
-                    newSigs += sig; newIds += id
-                  }
-                  lastTs = math.max(lastTs, tsMs)
+    keyedTtlFold(banded.groupBy(col("bucket")).as[Long, BandEvent], stateTtlMs) {
+      (bucket: Long, stored: Option[BucketSigs], rows: Iterator[BandEvent]) =>
+        val s = stored.getOrElse(
+          BucketSigs(Array.emptyLongArray, Array.emptyLongArray, 0L))
+        val storedN = s.sigs.length
+        // this batch's additions buffer separately and concatenate
+        // into the state ONCE per batch — appending per event would
+        // copy the arrays quadratically
+        val newSigs = scala.collection.mutable.ArrayBuffer.empty[Long]
+        val newIds = scala.collection.mutable.ArrayBuffer.empty[Long]
+        var lastTs = s.lastTs
+        // out is bounded by ≤1 candidate per input event (tiny rows);
+        // the INPUT buffer is the bounded one: `grouped` materializes
+        // at most sortChunk events at a time, sorted by (ts, id) for
+        // chunk-deterministic processing order.
+        val out = Seq.newBuilder[DupCandidate]
+        val band = (bucket >>> 16).toInt
+        rows.grouped(sortChunk).foreach { chunk =>
+          chunk.sorted(BandEvent.byTime).foreach {
+            case BandEvent(id, tsMs, sig) =>
+              // min matching prior id across stored state + this batch
+              var bestId = Long.MaxValue
+              var bestSig = 0L
+              var i = 0
+              while (i < storedN) {
+                if (s.ids(i) != id && s.ids(i) < bestId &&
+                    java.lang.Long.bitCount(s.sigs(i) ^ sig) <= maxDist) {
+                  bestId = s.ids(i); bestSig = s.sigs(i)
+                }
+                i += 1
               }
-            }
-            // A batch that appended nothing — exactly the at-cap hot
-            // bucket, where every event still matches but none is
-            // retained — previously re-encoded the full maxPerBucket
-            // arrays (~16 KiB) into the state store anyway. Skip the
-            // write and only advance the TTL clock (state exists here:
-            // an empty bucket always accepts its first event, so
-            // newSigs is only empty when storedN > 0 or rows was
-            // empty). TTL drift from the stale stored lastTs is
-            // bounded by the watermark delay, as in [[hllRunning]].
-            if (newSigs.nonEmpty)
-              state.update(BucketSigs(s.sigs ++ newSigs, s.ids ++ newIds, lastTs))
-            if (storedN + newSigs.length > 0)
-              state.setTimeoutTimestamp(lastTs + stateTtlMs)
-            out.result().iterator
+              var j = 0
+              while (j < newSigs.length) {
+                if (newIds(j) != id && newIds(j) < bestId &&
+                    java.lang.Long.bitCount(newSigs(j) ^ sig) <= maxDist) {
+                  bestId = newIds(j); bestSig = newSigs(j)
+                }
+                j += 1
+              }
+              if (bestId != Long.MaxValue)
+                out += DupCandidate(id, bestId, band,
+                  java.lang.Long.bitCount(bestSig ^ sig))
+              if (storedN + newSigs.length < maxPerBucket) {
+                newSigs += sig; newIds += id
+              }
+              lastTs = math.max(lastTs, tsMs)
           }
-      }
+        }
+        // nothing appended — the at-cap hot bucket, where every event
+        // still matches but none is retained: no ~16 KiB rewrite
+        val write =
+          if (newSigs.isEmpty) None
+          else Some(BucketSigs(s.sigs ++ newSigs, s.ids ++ newIds, lastTs))
+        (write, lastTs, out.result().iterator)
+    }
   }
 
   final case class ValueEvent(group: String, ts: java.sql.Timestamp,
@@ -975,53 +889,44 @@ object Stateful {
                  binWidth: Long, baseline: Map[Long, Long],
                  watermarkDelay: String, stateTtlMs: Long)
       : org.apache.spark.sql.Dataset[PsiUpdate] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     require(binWidth > 0, s"binWidth=$binWidth must be positive")
     val spark = ds.sparkSession
     import spark.implicits._
     val bt = baseline.values.sum
-    ds.withWatermark("ts", watermarkDelay)
-      .groupByKey(_.group)
-      .flatMapGroupsWithState[PsiHistState, PsiUpdate](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: String, rows: Iterator[ValueEvent], state: GroupState[PsiHistState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val s = state.getOption.getOrElse(
-              PsiHistState(Array.empty, Array.empty, 0L))
-            val hist = scala.collection.mutable.LinkedHashMap[Long, Long]()
-            s.bins.zip(s.counts).foreach { case (b, c) => hist(b) = c }
-            var last = s.lastTs
-            rows.foreach { e =>
-              val b = java.lang.Math.floorDiv(e.value, binWidth)
-              hist(b) = hist.getOrElse(b, 0L) + 1L
-              last = math.max(last, e.ts.getTime)
-            }
-            state.update(PsiHistState(hist.keys.toArray, hist.values.toArray, last))
-            state.setTimeoutTimestamp(last + stateTtlMs)
-            val union = (hist.keySet ++ baseline.keySet).toArray
-            val nb = union.length.toLong
-            val st = hist.values.sum
-            var psi = 0L
-            union.foreach { b =>
-              // >= 1 ppm clamp (mirrors Profile.psiVsBaseline): once
-              // st+nb or bt+nb passes ~1e6 the floored ppm hits 0 and
-              // the Mitchell ratio below would divide by zero, killing
-              // the query in exactly the regime a drift monitor serves
-              val pPpm = math.max(1L,
-                ((hist.getOrElse(b, 0L) + 1L) * 1000000L) / (st + nb))
-              val qPpm = math.max(1L,
-                ((baseline.getOrElse(b, 0L) + 1L) * 1000000L) / (bt + nb))
-              val ratio = (math.max(pPpm, qPpm) << graft.ops.TextStats.LmShift) /
-                math.min(pPpm, qPpm)
-              psi += math.abs(pPpm - qPpm) *
-                (graft.ops.TextStats.mitchellLong(ratio,
-                  graft.ops.TextStats.E8Bits) -
-                  8L * graft.ops.TextStats.LmShift)
-            }
-            Iterator.single(PsiUpdate(key, st, nb, psi))
-          }
-      }
+    keyedTtlFold(ds.withWatermark("ts", watermarkDelay).groupByKey(_.group), stateTtlMs) {
+      (key: String, stored: Option[PsiHistState], rows: Iterator[ValueEvent]) =>
+        val s = stored.getOrElse(PsiHistState(Array.empty, Array.empty, 0L))
+        val hist = scala.collection.mutable.LinkedHashMap[Long, Long]()
+        s.bins.zip(s.counts).foreach { case (b, c) => hist(b) = c }
+        var last = s.lastTs
+        rows.foreach { e =>
+          val b = java.lang.Math.floorDiv(e.value, binWidth)
+          hist(b) = hist.getOrElse(b, 0L) + 1L
+          last = math.max(last, e.ts.getTime)
+        }
+        val union = (hist.keySet ++ baseline.keySet).toArray
+        val nb = union.length.toLong
+        val st = hist.values.sum
+        var psi = 0L
+        union.foreach { b =>
+          // >= 1 ppm clamp (mirrors Profile.psiVsBaseline): once
+          // st+nb or bt+nb passes ~1e6 the floored ppm hits 0 and
+          // the Mitchell ratio below would divide by zero, killing
+          // the query in exactly the regime a drift monitor serves
+          val pPpm = math.max(1L,
+            ((hist.getOrElse(b, 0L) + 1L) * 1000000L) / (st + nb))
+          val qPpm = math.max(1L,
+            ((baseline.getOrElse(b, 0L) + 1L) * 1000000L) / (bt + nb))
+          val ratio = (math.max(pPpm, qPpm) << graft.ops.TextStats.LmShift) /
+            math.min(pPpm, qPpm)
+          psi += math.abs(pPpm - qPpm) *
+            (graft.ops.TextStats.mitchellLong(ratio,
+              graft.ops.TextStats.E8Bits) -
+              8L * graft.ops.TextStats.LmShift)
+        }
+        (Some(PsiHistState(hist.keys.toArray, hist.values.toArray, last)), last,
+          Iterator.single(PsiUpdate(key, st, nb, psi)))
+    }
   }
 
   final case class BasketEvent(user: Long, ts: java.sql.Timestamp,
@@ -1045,40 +950,32 @@ object Stateful {
   def pairIncrements(ds: org.apache.spark.sql.Dataset[BasketEvent],
                      watermarkDelay: String, stateTtlMs: Long)
       : org.apache.spark.sql.Dataset[PairInc] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val spark = ds.sparkSession
     import spark.implicits._
-    ds.withWatermark("ts", watermarkDelay)
+    val baskets = ds.withWatermark("ts", watermarkDelay)
       // UTC day bucket, matching the batch form's to_date under the
       // session's UTC timezone (never the JVM default zone)
       .groupByKey(e => (e.user, e.ts.toInstant
         .atZone(java.time.ZoneOffset.UTC).toLocalDate.toEpochDay))
-      .flatMapGroupsWithState[BasketItems, PairInc](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (_: (Long, Long), rows: Iterator[BasketEvent],
-         state: GroupState[BasketItems]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val s = state.getOption.getOrElse(BasketItems(Array.empty, 0L))
-            val items = scala.collection.mutable.LinkedHashSet(s.items: _*)
-            var last = s.lastTs
-            val out = Seq.newBuilder[PairInc]
-            rows.foreach { e =>
-              last = math.max(last, e.ts.getTime)
-              if (!items.contains(e.item)) {
-                items.foreach { prev =>
-                  out += PairInc(prev, e.item)
-                  out += PairInc(e.item, prev)
-                }
-                items += e.item
-              }
+    keyedTtlFold(baskets, stateTtlMs) {
+      (_: (Long, Long), stored: Option[BasketItems], rows: Iterator[BasketEvent]) =>
+        val s = stored.getOrElse(BasketItems(Array.empty, 0L))
+        val items = scala.collection.mutable.LinkedHashSet(s.items: _*)
+        var last = s.lastTs
+        val out = Seq.newBuilder[PairInc]
+        rows.foreach { e =>
+          last = math.max(last, e.ts.getTime)
+          if (!items.contains(e.item)) {
+            items.foreach { prev =>
+              out += PairInc(prev, e.item)
+              out += PairInc(e.item, prev)
             }
-            if (items.size > s.items.length)
-              state.update(BasketItems(items.toArray, last))
-            state.setTimeoutTimestamp(last + stateTtlMs)
-            out.result().iterator
+            items += e.item
           }
-      }
+        }
+        (if (items.size > s.items.length) Some(BasketItems(items.toArray, last)) else None,
+          last, out.result().iterator)
+    }
   }
 
   final case class TypedEvent(user: Long, ts: java.sql.Timestamp,
@@ -1101,30 +998,19 @@ object Stateful {
   def transitionIncrements(ds: org.apache.spark.sql.Dataset[TypedEvent],
                            watermarkDelay: String, stateTtlMs: Long)
       : org.apache.spark.sql.Dataset[TransInc] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val spark = ds.sparkSession
     import spark.implicits._
-    ds.withWatermark("ts", watermarkDelay)
-      .groupByKey(_.user)
-      .flatMapGroupsWithState[LastType, TransInc](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (_: Long, rows: Iterator[TypedEvent], state: GroupState[LastType]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val sorted = rows.toArray.sortBy(e => (e.ts.getTime, e.id))
-            val out = Seq.newBuilder[TransInc]
-            var prev = state.getOption.orNull
-            sorted.foreach { e =>
-              if (prev != null) out += TransInc(prev.tpe, e.tpe)
-              prev = LastType(e.tpe, e.ts.getTime, e.id)
-            }
-            if (prev != null) {
-              state.update(prev)
-              state.setTimeoutTimestamp(prev.ts + stateTtlMs)
-            }
-            out.result().iterator
-          }
-      }
+    keyedTtlFold(ds.withWatermark("ts", watermarkDelay).groupByKey(_.user), stateTtlMs) {
+      (_: Long, stored: Option[LastType], rows: Iterator[TypedEvent]) =>
+        val sorted = rows.toArray.sortBy(e => (e.ts.getTime, e.id))
+        val out = Seq.newBuilder[TransInc]
+        var prev = stored.orNull
+        sorted.foreach { e =>
+          if (prev != null) out += TransInc(prev.tpe, e.tpe)
+          prev = LastType(e.tpe, e.ts.getTime, e.id)
+        }
+        (Some(prev), prev.ts, out.result().iterator)
+    }
   }
 
   final case class DayCount(et: String, day: java.sql.Timestamp, x: Long)
@@ -1152,64 +1038,53 @@ object Stateful {
                   startDayMs: Long, watermarkDelay: String,
                   stateTtlMs: Long, warmup: Int = 7, k: Int = 3)
       : org.apache.spark.sql.Dataset[EwmaUpdate] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val spark = ds.sparkSession
     import spark.implicits._
     val DayMs = 86400000L
-    ds.withWatermark("day", watermarkDelay)
-      .groupByKey(_.et)
-      .flatMapGroupsWithState[EwmaState, EwmaUpdate](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (et: String, rows: Iterator[DayCount], state: GroupState[EwmaState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val out = Seq.newBuilder[EwmaUpdate]
-            var st = state.getOption.orNull
-            def step(dayMs: Long, x: Long): Unit = {
-              val x1000 = 1000L * x
-              if (st == null) {
-                // grid origin: zero-fill from startDay up to this day
-                if (dayMs > startDayMs) {
-                  st = EwmaState(0L, startDayMs, 0L, 0L)
-                  out += EwmaUpdate(et, new java.sql.Timestamp(startDayMs),
-                    0L, 0L, 0L, is_anomaly = false)
-                  step(dayMs, x)
-                  return
-                }
-                st = EwmaState(0L, dayMs, x1000, 0L)
-                out += EwmaUpdate(et, new java.sql.Timestamp(dayMs), x,
-                  x1000, 0L, is_anomaly = false)
-              } else if (dayMs > st.lastDayMs) {
-                var d = st.lastDayMs + DayMs
-                while (d < dayMs) { // silent days step as zeros (dev = m)
-                  val t = st.t + 1
-                  val flag = t >= warmup && st.m > k * math.max(st.dd, 1000L)
-                  val m2 = (7L * st.m) / 8L
-                  val dd2 = (7L * st.dd + st.m) / 8L
-                  out += EwmaUpdate(et, new java.sql.Timestamp(d), 0L, m2,
-                    dd2, flag)
-                  st = EwmaState(t, d, m2, dd2)
-                  d += DayMs
-                }
-                val t = st.t + 1
-                val dev = math.abs(x1000 - st.m)
-                val flag = t >= warmup && dev > k * math.max(st.dd, 1000L)
-                val m2 = (7L * st.m + x1000) / 8L
-                val dd2 = (7L * st.dd + dev) / 8L
-                out += EwmaUpdate(et, new java.sql.Timestamp(dayMs), x,
-                  m2, dd2, flag)
-                st = EwmaState(t, dayMs, m2, dd2)
-              } // late/duplicate day: drop (watermark contract)
+    keyedTtlFold(ds.withWatermark("day", watermarkDelay).groupByKey(_.et), stateTtlMs) {
+      (et: String, stored: Option[EwmaState], rows: Iterator[DayCount]) =>
+        val out = Seq.newBuilder[EwmaUpdate]
+        var st = stored.orNull
+        def step(dayMs: Long, x: Long): Unit = {
+          val x1000 = 1000L * x
+          if (st == null) {
+            // grid origin: zero-fill from startDay up to this day
+            if (dayMs > startDayMs) {
+              st = EwmaState(0L, startDayMs, 0L, 0L)
+              out += EwmaUpdate(et, new java.sql.Timestamp(startDayMs),
+                0L, 0L, 0L, is_anomaly = false)
+              step(dayMs, x)
+              return
             }
-            rows.toArray.sortBy(_.day.getTime)
-              .foreach(r => step(r.day.getTime, r.x))
-            if (st != null) {
-              state.update(st)
-              state.setTimeoutTimestamp(st.lastDayMs + stateTtlMs)
+            st = EwmaState(0L, dayMs, x1000, 0L)
+            out += EwmaUpdate(et, new java.sql.Timestamp(dayMs), x,
+              x1000, 0L, is_anomaly = false)
+          } else if (dayMs > st.lastDayMs) {
+            var d = st.lastDayMs + DayMs
+            while (d < dayMs) { // silent days step as zeros (dev = m)
+              val t = st.t + 1
+              val flag = t >= warmup && st.m > k * math.max(st.dd, 1000L)
+              val m2 = (7L * st.m) / 8L
+              val dd2 = (7L * st.dd + st.m) / 8L
+              out += EwmaUpdate(et, new java.sql.Timestamp(d), 0L, m2,
+                dd2, flag)
+              st = EwmaState(t, d, m2, dd2)
+              d += DayMs
             }
-            out.result().iterator
-          }
-      }
+            val t = st.t + 1
+            val dev = math.abs(x1000 - st.m)
+            val flag = t >= warmup && dev > k * math.max(st.dd, 1000L)
+            val m2 = (7L * st.m + x1000) / 8L
+            val dd2 = (7L * st.dd + dev) / 8L
+            out += EwmaUpdate(et, new java.sql.Timestamp(dayMs), x,
+              m2, dd2, flag)
+            st = EwmaState(t, dayMs, m2, dd2)
+          } // late/duplicate day: drop (watermark contract)
+        }
+        rows.toArray.sortBy(_.day.getTime)
+          .foreach(r => step(r.day.getTime, r.x))
+        (Some(st), st.lastDayMs, out.result().iterator)
+    }
   }
 
   final case class HwState(t: Long, lastDayMs: Long, lv: Long, tr: Long,
@@ -1234,62 +1109,51 @@ object Stateful {
                 startDayMs: Long, watermarkDelay: String,
                 stateTtlMs: Long)
       : org.apache.spark.sql.Dataset[HwUpdate] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     val spark = ds.sparkSession
     import spark.implicits._
     val DayMs = 86400000L
     def sdiv8(e: Long) = if (e >= 0) e / 8 else -((-e) / 8)
-    ds.withWatermark("day", watermarkDelay)
-      .groupByKey(_.et)
-      .flatMapGroupsWithState[HwState, HwUpdate](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (et: String, rows: Iterator[DayCount], state: GroupState[HwState]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val out = Seq.newBuilder[HwUpdate]
-            var st = state.getOption.orNull
-            def emit(dayMs: Long, x: Long): Unit = {
-              val nxt = ((st.t + 1) % 7).toInt
-              out += HwUpdate(et, new java.sql.Timestamp(dayMs), x,
-                st.t + 1, st.lv, st.tr, st.lv + st.tr + st.se(nxt))
+    keyedTtlFold(ds.withWatermark("day", watermarkDelay).groupByKey(_.et), stateTtlMs) {
+      (et: String, stored: Option[HwState], rows: Iterator[DayCount]) =>
+        val out = Seq.newBuilder[HwUpdate]
+        var st = stored.orNull
+        def emit(dayMs: Long, x: Long): Unit = {
+          val nxt = ((st.t + 1) % 7).toInt
+          out += HwUpdate(et, new java.sql.Timestamp(dayMs), x,
+            st.t + 1, st.lv, st.tr, st.lv + st.tr + st.se(nxt))
+        }
+        def step(dayMs: Long, x: Long): Unit = {
+          val x1000 = 1000L * x
+          if (st == null) {
+            if (dayMs > startDayMs) {
+              st = HwState(0L, startDayMs, 0L, 0L, Seq.fill(7)(0L))
+              emit(startDayMs, 0L)
+              step(dayMs, x)
+              return
             }
-            def step(dayMs: Long, x: Long): Unit = {
-              val x1000 = 1000L * x
-              if (st == null) {
-                if (dayMs > startDayMs) {
-                  st = HwState(0L, startDayMs, 0L, 0L, Seq.fill(7)(0L))
-                  emit(startDayMs, 0L)
-                  step(dayMs, x)
-                  return
-                }
-                st = HwState(0L, dayMs, x1000, 0L, Seq.fill(7)(0L))
-                emit(dayMs, x)
-              } else if (dayMs > st.lastDayMs) {
-                var d = st.lastDayMs + DayMs
-                while (d <= dayMs) {
-                  val xd = if (d == dayMs) x else 0L
-                  val xm = 1000L * xd
-                  val t = st.t + 1
-                  val idx = (t % 7).toInt
-                  val s = st.se(idx)
-                  val lvN = sdiv8((xm - s) + 7L * (st.lv + st.tr))
-                  val trN = sdiv8((lvN - st.lv) + 7L * st.tr)
-                  val seN = st.se.updated(idx, sdiv8((xm - lvN) + 7L * s))
-                  st = HwState(t, d, lvN, trN, seN)
-                  emit(d, xd)
-                  d += DayMs
-                }
-              } // late/duplicate day: drop (watermark contract)
+            st = HwState(0L, dayMs, x1000, 0L, Seq.fill(7)(0L))
+            emit(dayMs, x)
+          } else if (dayMs > st.lastDayMs) {
+            var d = st.lastDayMs + DayMs
+            while (d <= dayMs) {
+              val xd = if (d == dayMs) x else 0L
+              val xm = 1000L * xd
+              val t = st.t + 1
+              val idx = (t % 7).toInt
+              val s = st.se(idx)
+              val lvN = sdiv8((xm - s) + 7L * (st.lv + st.tr))
+              val trN = sdiv8((lvN - st.lv) + 7L * st.tr)
+              val seN = st.se.updated(idx, sdiv8((xm - lvN) + 7L * s))
+              st = HwState(t, d, lvN, trN, seN)
+              emit(d, xd)
+              d += DayMs
             }
-            rows.toArray.sortBy(_.day.getTime)
-              .foreach(r => step(r.day.getTime, r.x))
-            if (st != null) {
-              state.update(st)
-              state.setTimeoutTimestamp(st.lastDayMs + stateTtlMs)
-            }
-            out.result().iterator
-          }
-      }
+          } // late/duplicate day: drop (watermark contract)
+        }
+        rows.toArray.sortBy(_.day.getTime)
+          .foreach(r => step(r.day.getTime, r.x))
+        (Some(st), st.lastDayMs, out.result().iterator)
+    }
   }
 
   final case class CheckEvent(check: String, pass: Boolean,
@@ -1318,7 +1182,6 @@ object Stateful {
                     watermarkDelay: String, stateTtlMs: Long,
                     minPassX1000: Long = 1000L)
       : org.apache.spark.sql.Dataset[CheckStatus] = {
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
     require(checks.nonEmpty, "need at least one check")
     val spark = df.sparkSession
     import spark.implicits._
@@ -1330,29 +1193,21 @@ object Stateful {
       .select(col("e.check").as("check"), col("e.pass").as("pass"),
         col("e.ts").as("ts"))
       .as[CheckEvent]
-    events
-      .withWatermark("ts", watermarkDelay)
-      .groupByKey(_.check)
-      .flatMapGroupsWithState[CheckCounts, CheckStatus](
-        OutputMode.Append, GroupStateTimeout.EventTimeTimeout) {
-        (key: String, rows: Iterator[CheckEvent], state: GroupState[CheckCounts]) =>
-          if (state.hasTimedOut) { state.remove(); Iterator.empty }
-          else {
-            val s = state.getOption.getOrElse(CheckCounts(0L, 0L, 0L))
-            var n = s.n
-            var p = s.p
-            var last = s.lastTs
-            rows.foreach { e =>
-              n += 1
-              if (e.pass) p += 1
-              last = math.max(last, e.ts.getTime)
-            }
-            state.update(CheckCounts(n, p, last))
-            state.setTimeoutTimestamp(last + stateTtlMs)
-            val px = if (n == 0) 0L else 1000L * p / n
-            Iterator.single(CheckStatus(key, n, p, px, px >= minPassX1000))
-          }
-      }
+    keyedTtlFold(events.withWatermark("ts", watermarkDelay).groupByKey(_.check), stateTtlMs) {
+      (key: String, stored: Option[CheckCounts], rows: Iterator[CheckEvent]) =>
+        val s = stored.getOrElse(CheckCounts(0L, 0L, 0L))
+        var n = s.n
+        var p = s.p
+        var last = s.lastTs
+        rows.foreach { e =>
+          n += 1
+          if (e.pass) p += 1
+          last = math.max(last, e.ts.getTime)
+        }
+        val px = if (n == 0) 0L else 1000L * p / n
+        (Some(CheckCounts(n, p, last)), last,
+          Iterator.single(CheckStatus(key, n, p, px, px >= minPassX1000)))
+    }
   }
 }
 

@@ -1525,4 +1525,98 @@ class StatefulSpec extends SparkSpec {
     assert(Eval.vMeasureFromCounts(spark, folded).collect().toSeq ===
       Eval.vMeasure(df, "pred", "truth").collect().toSeq)
   }
+
+  test("streaming funnel reaches: an event at epoch 0 is late before any fold sees it") {
+    implicit val sqlCtx = spark.sqlContext
+    val steps = Seq("view", "click")
+    def fev(user: Long, tpe: String, ms: Long) =
+      Stateful.FunnelEvent(user, tpe, new java.sql.Timestamp(ms))
+    val minute = 60L * 1000
+    val stream = MemoryStream[Stateful.FunnelEvent]
+    val reaches = mutable.Buffer.empty[Stateful.FunnelReach]
+    val q = Stateful.funnelReaches(stream.toDS(), steps, stateTtlMs = minute).writeStream
+      .outputMode("append")
+      .option("checkpointLocation", tmpDir())
+      .foreachBatch { (df: org.apache.spark.sql.Dataset[Stateful.FunnelReach], _: Long) =>
+        reaches.synchronized { reaches ++= df.collect() }
+        ()
+      }.start()
+    // user 1's first event carries event time 0, the usual value of a
+    // missing timestamp. The watermark starts at 0 and Spark drops
+    // events at or behind it, so no key state is created for it: a
+    // fold never anchors a TTL at or before the epoch
+    stream.addData(fev(1, "view", 0L)); q.processAllAvailable()
+    stream.addData(fev(2, "view", 10 * minute)); q.processAllAvailable()
+    stream.addData(fev(2, "view", 11 * minute)); q.processAllAvailable()
+    stream.addData(fev(1, "view", 12 * minute)); q.processAllAvailable()
+    q.stop()
+    // the epoch-0 view emitted nothing; the 12-minute one is a first sighting
+    val u1 = reaches.filter(_.user == 1L).map(r => (r.step, r.ts.getTime)).sorted
+    assert(u1 === Seq((0, 12 * minute), (1, 12 * minute)))
+  }
+
+  test("skip-write TTL: a batch that moves no HLL register still re-arms the timeout") {
+    implicit val sqlCtx = spark.sqlContext
+    val stream = MemoryStream[Stateful.KeyedValue]
+    val out = mutable.Buffer.empty[(Long, Stateful.HllUpdate)]
+    val q = Stateful.hllRunning(stream.toDS(),
+        watermarkDelay = "1 second", stateTtlMs = 5 * 60 * 1000).writeStream
+      .outputMode("append")
+      .option("checkpointLocation", tmpDir())
+      .foreachBatch { (df: org.apache.spark.sql.Dataset[Stateful.HllUpdate], id: Long) =>
+        out.synchronized { out ++= df.collect().map(u => (id, u)) }
+        ()
+      }.start()
+    def kv(key: String, hhmm: String, v: String) = Stateful.KeyedValue(key,
+      java.sql.Timestamp.valueOf(s"2024-01-01 $hhmm:00"), v)
+    def send(rows: Stateful.KeyedValue*): Unit = {
+      stream.addData(rows); q.processAllAvailable()
+    }
+    def sums(key: String): Seq[Long] =
+      out.filter(_._2.key == key).sortBy(_._1).map(_._2.hll_reg_sum).toSeq
+    val regSum = graft.ops.Sketch.hllDistinct(
+        Seq(("x", "x"), ("xy", "x"), ("xy", "y")).toDF("key", "v"), Seq("key"), col("v"))
+      .select("key", "hll_reg_sum").as[(String, Long)].collect().toMap
+    assert(regSum("x") !== regSum("xy"), "x and y must land in different registers")
+    send(kv("a", "10:00", "x"), kv("a", "10:00", "y"))
+    // x again: no register moves, so the state row is not rewritten
+    // (its lastTs stays 10:00), but the timeout moves to 10:04 + 5 min
+    send(kv("a", "10:04", "x"))
+    // watermark to 10:06:59 — past 10:05, short of 10:09 — and one more
+    // batch that runs with it and fires whatever timed out
+    send(kv("filler", "10:07", "f"))
+    send(kv("filler", "10:07", "f"))
+    send(kv("a", "10:08", "x"))
+    assert(sums("a") === Seq(regSum("xy"), regSum("xy"), regSum("xy")),
+      "key a expired at the stale 10:05 timeout")
+    // now past 10:08 + 5 min: the state expires and a starts over
+    send(kv("filler", "10:20", "f"))
+    send(kv("filler", "10:20", "f"))
+    send(kv("a", "10:20", "x"))
+    q.stop()
+    assert(sums("a") === Seq(regSum("xy"), regSum("xy"), regSum("xy"), regSum("x")))
+  }
+
+  test("keyedTtlFold is the only flatMapGroupsWithState call under src/main/scala") {
+    import java.nio.file.{Files, Paths}
+    import scala.jdk.CollectionConverters._
+    val root = Paths.get("src/main/scala")
+    assert(Files.isDirectory(root), s"run from the project root: $root")
+    // the call syntax, not the bare name (comments mention the name)
+    val call = """\.(?:flatM|m)apGroupsWithState\b""".r
+    val walk = Files.walk(root)
+    val calls = try walk.iterator.asScala
+      .filter(_.toString.endsWith(".scala"))
+      .flatMap { p =>
+        val lines = Files.readAllLines(p).asScala.toIndexedSeq
+        lines.indices.filter(i => call.findFirstIn(lines(i)).isDefined)
+          .map(i => (root.relativize(p).toString, lines, i))
+      }.toList
+    finally walk.close()
+    assert(calls.map(_._1) ===
+      List(Paths.get("graft", "streaming", "Stateful.scala").toString))
+    val (_, lines, at) = calls.head
+    val enclosing = (at to 0 by -1).map(lines).find(_.matches("""\s*(private )?def .*"""))
+    assert(enclosing.exists(_.contains("def keyedTtlFold")), s"call sits in $enclosing")
+  }
 }
