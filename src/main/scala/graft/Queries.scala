@@ -224,13 +224,10 @@ object Queries {
     * null error on success; malformed input would fill `decode_error`
     * and route to the DLQ branch (graft.streaming).
     */
-  val q17_result_split: Q = (s, d) => {
-    val decoded = graft.formats.Json.decodeResult(col("props"), "k BIGINT")
-    Tables.events(s, d)
-      .select(col("event_id"), decoded.as("res"))
+  val q17_result_split: Q = (s, d) =>
+    graft.formats.Json.decodeResultDF(Tables.events(s, d), col("props"), "k BIGINT", "res")
       .select(col("event_id"), col("res.value.k").as("k"), col("res.error").as("decode_error"))
       .orderBy("event_id")
-  }
 
   /** Running windowed sum per user (exact decimal accumulation). */
   val q18_window_running: Q = (s, d) => {

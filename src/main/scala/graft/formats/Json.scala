@@ -26,34 +26,21 @@ object Json {
   def decode(payload: Column, schema: StructType): Column =
     from_json(payload, schema)
 
-  /** Decode with error capture → `struct(value, error)`.
+  /** Decode `payload` with error capture into `outCol` =
+    * `struct(value, error)`.
     *
     * Failure detection uses `columnNameOfCorruptRecord`: a malformed
     * payload parses to a struct whose corrupt-record field holds the raw
     * input — exact, per-row, no exceptions in the task. Null/empty input
     * decodes to null value with null error (kpipe: null/empty → null,
     * not an error — `JsonFormat.java:56-60`).
-    */
-  def decodeResult(payload: Column, ddl: String): Column = {
-    val schema = schemaOf(ddl).add("_corrupt", org.apache.spark.sql.types.StringType)
-    val parsed = from_json(payload, schema,
-      Map("mode" -> "PERMISSIVE", "columnNameOfCorruptRecord" -> "_corrupt"))
-    val failed = parsed.getField("_corrupt").isNotNull
-    struct(
-      when(failed, lit(null).cast(schemaOf(ddl))).otherwise(parsed.dropFields("_corrupt"))
-        .as("value"),
-      when(failed, concat(lit("malformed JSON: "), substring(payload, 1, 64)))
-        .otherwise(lit(null).cast("string")).as("error"))
-  }
-
-  /** DataFrame-level decode with error capture — the hot-path form.
     *
-    * The Column form above references the parse result three times, and
-    * `JsonToStructs` is CodegenFallback (no subexpression elimination),
-    * so Catalyst evaluates THREE full JSON parses per record — measured
-    * 5.9× slower at 2M records. This form parses once into an
-    * intermediate attribute; CollapseProject keeps it separate because
-    * the non-cheap expression is multiply referenced.
+    * The parse result is referenced three times, and `JsonToStructs` is
+    * CodegenFallback (no subexpression elimination), so a single
+    * Column expression would evaluate THREE full JSON parses per record
+    * (measured 5.9× slower at 2M records). This form parses once into
+    * an intermediate attribute; CollapseProject keeps it separate
+    * because the non-cheap expression is multiply referenced.
     */
   def decodeResultDF(df: org.apache.spark.sql.DataFrame, payload: Column, ddl: String,
                      outCol: String): org.apache.spark.sql.DataFrame = {

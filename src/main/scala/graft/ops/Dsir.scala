@@ -100,14 +100,10 @@ object Dsir {
       .join(checked, Seq("b"), "left")
       .na.fill(0L, Seq("c_r", "c_t"))
       .crossJoin(broadcast(tot))
-    def q(totE: String, cE: String): String =
-      s"CAST(least(greatest((CAST($totE + $numBuckets AS DECIMAL(38,0)) * ${1L << Shift}) " +
-        s"div ($cE + 1), CAST(${1L << Shift} AS BIGINT)), " +
-        s"CAST(${1L << 62} AS BIGINT)) AS BIGINT)"
+    def surprisal(tot: String, c: String): Column =
+      MitchellE8.log2Ratio(col(tot) + numBuckets, col(c) + 1)
     full
-      .withColumn("q_t", expr(q("tot_t", "c_t")))
-      .withColumn("q_r", expr(q("tot_r", "c_r")))
-      .withColumn("lam_e8", MitchellE8(col("q_r")) - MitchellE8(col("q_t")))
+      .withColumn("lam_e8", surprisal("tot_r", "c_r") - surprisal("tot_t", "c_t"))
       .select("b", "lam_e8")
   }
 

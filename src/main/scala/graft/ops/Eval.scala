@@ -1146,17 +1146,14 @@ object Eval {
       .withColumn("p1_ppm", expr(
         s"least(p0_ppm + ($mdeRelPct * p0_ppm) div 100, " +
           "CAST(999999 AS BIGINT))"))
-      // p1 >= p0 unless p0 = 10^6, so both scaled ratios sit in the
-      // Mitchell domain; at p0 = 10^6 (every trial a success) __r1 lies
-      // in (2^20 - 2^12, 2^20), where the ladder's truncating division
-      // also gives the floor value, and __r0 = 0 multiplies n - k = 0
-      .withColumn("__r1", expr(
-        s"(p1_ppm * ${1L << 20}) div p0_ppm"))
-      .withColumn("__r0", expr(
-        s"((1000000 - p0_ppm) * ${1L << 20}) div (1000000 - p1_ppm)"))
+      // p1 >= p0 unless p0 = 10^6, so both ratio logs are >= 0; at
+      // p0 = 10^6 (every trial a success) p1/p0 < 1 logs to 0, as the
+      // ladder's truncating division also gives, and the log of
+      // (10^6 - p0)/(10^6 - p1) = 0 multiplies n - k = 0
       .withColumn("llr_e256",
-        col("k") * (MitchellE8.e256(col("__r1")) - lit(5120L)) -
-          (col("n") - col("k")) * (MitchellE8.e256(col("__r0")) - lit(5120L)))
+        col("k") * MitchellE8.log2RatioE256(col("p1_ppm"), col("p0_ppm")) -
+          (col("n") - col("k")) * MitchellE8.log2RatioE256(
+            lit(1000000L) - col("p0_ppm"), lit(1000000L) - col("p1_ppm")))
       .select(col("g"), col("n"), col("k"), col("p0_ppm"), col("p1_ppm"),
         col("llr_e256"),
         expr(s"CASE WHEN llr_e256 >= $upE256 THEN 'accept_h1' " +
@@ -2101,14 +2098,17 @@ object Eval {
     * deterministic (`id % k` — the q74 leakage-safe-split
     * discipline), so the report is reproducible and oracle-exact;
     * the mean/σ fold uses the same common-denominator variance +
-    * floor(√) idiom as q313.
+    * floor(√) idiom as q313. Every fold whose complement holds a
+    * labeled doc is reported, even when that complement has no tokens
+    * (its docs score on priors alone, as a per-fold `trainScore` does).
     *
     * Scale shape (post r15/r16 fusions): ONE tokenize+aggregate pass
     * builds the (fold, label, token) count grid, every per-fold
-    * complement model derives from it by subtraction, the surprisal
-    * arithmetic runs once per MODEL-GRID row (never per corpus
-    * token), and one scoring pass probes the broadcast grid per
-    * (token, class); everything after runs on the k-row fold table.
+    * complement model derives from it by subtraction, and the k
+    * complement models are ONE fold-keyed [[NaiveBayes.NbModel]] that
+    * [[NaiveBayes.score]] scores in one pass (`by` = the fold), with
+    * the surprisal arithmetic once per model-grid row, never per
+    * corpus token; everything after runs on the k-row fold table.
     */
   def cvAuc(docs: DataFrame, labelCol: String, idCol: String,
             textCol: String, folds: Int = 5): DataFrame = {
@@ -2118,21 +2118,18 @@ object Eval {
     // tokenize+aggregate passes plus k scoring passes (7.6 s warm at
     // sf0.1; 5× the corpus I/O at 100 TB). Counts are additive, so
     // each fold's complement model is global − own-fold, derived from
-    // a single per-(fold, label, token) aggregation; scoring then runs
-    // once over the whole corpus with each doc joining its own fold's
-    // model. Bit-identical to NaiveBayes.train/score per fold: same
-    // add-one smoothing, same Mitchell e8 surprisal, same integer
-    // counts (complement counts are exact subtractions).
+    // a single per-(fold, label, token) aggregation, and equals
+    // NaiveBayes.train on the complement: complement counts are exact
+    // subtractions.
     val k = folds.toLong
-    val shift = graft.ops.TextStats.LmShift
-    val two20 = s"CAST(${1L << shift} AS BIGINT)"
     val base = docs.select(col(idCol).as("__id"),
       pmod(col(idCol), lit(k)).as("__f"),
-      col(labelCol).as("__lab"),
-      graft.functions.TextFns.tokens(col(textCol)).as("__w"))
+      col(labelCol).as("__lab"), col(textCol).as("__text"))
     // the training side drops null-label docs, as NaiveBayes.train does
     // (a null label is no class); every doc of a fold is still scored
     val labeled = base.where(col("__lab").isNotNull)
+      .select(col("__f"), col("__lab"),
+        graft.functions.TextFns.tokens(col("__text")).as("__w"))
     // grid-bounded count tables (folds × labels × vocab), cut once
     // (dual-path: reliable checkpoint under a checkpoint dir, r16) —
     // three consumers below, released after the fold table lands
@@ -2142,104 +2139,47 @@ object Eval {
     val foldsDf = docs.sparkSession.range(folds)
       .select(col("id").as("__f"))
     // per-fold complement (label, token) counts: global − own fold
-    val modelF = cntF.groupBy("__lab", "t").agg(sum("c").as("cg"))
+    val tokenCounts = cntF.groupBy("__lab", "t").agg(sum("c").as("cg"))
       .crossJoin(foldsDf)
       .join(cntF, Seq("__f", "__lab", "t"), "left")
       .na.fill(0L, Seq("c"))
-      .select(col("__f"), col("__lab"), col("t"),
+      .select(col("__f"), col("__lab").as("label"), col("t"),
         (col("cg") - col("c")).as("c"))
       .where(col("c") > 0)
-    // per-fold complement vocabulary size (distinct tokens in ANY
-    // other fold) — r16: V_total − (tokens appearing ONLY in fold f),
-    // from one pass over the (fold, token) table instead of the old
-    // k× crossJoin + re-distinct; v = 0 folds are dropped exactly like
-    // the old inner join dropped folds with no complement vocabulary
-    val tft = cntF.select("__f", "t").distinct()
+    // per-fold complement vocabulary (distinct tokens in ANY other
+    // fold): every token outside fold f, i.e. all but the tokens that
+    // appear ONLY in fold f — from one pass over the (fold, token) table
+    val vocab = cntF.select("__f", "t").distinct()
       .groupBy("t").agg(count(lit(1)).as("nf"), min("__f").as("f0"))
-    val vTot = tft.agg(count(lit(1)).as("vt"))
-    val onlyF = tft.where(col("nf") === 1)
-      .groupBy(col("f0").as("__f")).agg(count(lit(1)).as("only"))
-    val vF = foldsDf.crossJoin(broadcast(vTot))
-      .join(onlyF, Seq("__f"), "left")
-      .na.fill(0L, Seq("only"))
-      .select(col("__f"), (col("vt") - col("only")).as("v"))
-      .where(col("v") > 0)
-    // per-fold complement class doc/token totals and priors. r16: the
-    // class token totals fold out of cntF (Σ_t c ≡ Σ_docs size(__w),
-    // exactly) instead of re-tokenizing the corpus — one tokenize pass
-    // fewer; the doc counts read only (fold, label), never the text.
+      .crossJoin(foldsDf)
+      .where(col("nf") > 1 || col("f0") =!= col("__f"))
+      .select("__f", "t")
+    // per-fold complement class doc/token totals. r16: the class token
+    // totals fold out of cntF (Σ_t c ≡ Σ_docs size(__w), exactly)
+    // instead of re-tokenizing the corpus — one tokenize pass fewer;
+    // the doc counts read only (fold, label), never the text.
     val clsF = Lineage.cut(
       labeled.groupBy("__f", "__lab").agg(count(lit(1)).as("nd"))
         .join(cntF.groupBy("__f", "__lab").agg(sum("c").as("nt")),
           Seq("__f", "__lab"), "left")
         .na.fill(0L, Seq("nt"))) // k × L rows
-    val clsModelF = clsF.groupBy("__lab")
+    val classCounts = clsF.groupBy("__lab")
       .agg(sum("nd").as("ndg"), sum("nt").as("ntg"))
       .crossJoin(foldsDf)
       .join(clsF, Seq("__f", "__lab"), "left")
       .na.fill(0L, Seq("nd", "nt"))
-      .select(col("__f"), col("__lab"),
+      .select(col("__f"), col("__lab").as("label"),
         (col("ndg") - col("nd")).as("n_docs"),
         (col("ntg") - col("nt")).as("n_tokens"))
       .where(col("n_docs") > 0)
-    val nAllF = clsModelF.groupBy("__f").agg(sum("n_docs").as("n_all"))
-    val classesF = clsModelF.join(vF, Seq("__f")).join(nAllF, Seq("__f"))
-      .withColumn("qp", expr(
-        s"greatest((CAST(n_all AS DECIMAL(38,0)) * ${1L << shift}) " +
-          s"div n_docs, $two20)"))
-      .withColumn("prior_e8",
-        graft.functions.MitchellE8(col("qp")) - lit(8L * shift))
-      .select("__f", "__lab", "n_tokens", "v", "prior_e8")
-    // one scoring pass (r16, the r15 verdict's #2 ask): the surprisal
-    // arithmetic moves OFF the corpus — the old shape ran the DECIMAL
-    // division + Mitchell log per (corpus token × class) and
-    // shuffle-joined every one of those rows against the model table.
-    // Both factors are functions of the VOCAB-BOUNDED model grid, so
-    // they precompute there once: m8tab carries the per-(fold, class,
-    // token) surprisal for seen tokens, u8tab the per-(fold, class)
-    // unseen-token constant (the c = 0 smoothing row, same expression
-    // with c pinned to 0). Scoring is then one broadcast hash probe +
-    // an integer add per (token, class) row, no shuffle before the
-    // per-(doc, class) partial aggregation. Bit-identical: identical
-    // q/m8 expressions over the identical (c, n_tokens, v) values,
-    // and the per-(doc, class) sum of longs is order-free. Broadcast
-    // bound: |vocab| × folds × labels rows — the same grid the
-    // checkpointed cntF already commits to; beyond broadcastable
-    // vocabularies the old shuffle join is the fallback shape.
-    val m8tab = modelF
-      .join(broadcast(classesF.select(col("__f"), col("__lab"),
-        col("n_tokens"), col("v"))), Seq("__f", "__lab"))
-      .withColumn("q", expr(
-        s"greatest((CAST(n_tokens + v AS DECIMAL(38,0)) * ${1L << shift}) " +
-          s"div (c + 1), $two20)"))
-      .select(col("__f"), col("__lab").as("__cls"), col("t"),
-        (graft.functions.MitchellE8(col("q")) - lit(8L * shift)).as("m8v"))
-    val u8tab = classesF
-      .withColumn("c", lit(0L))
-      .withColumn("q", expr(
-        s"greatest((CAST(n_tokens + v AS DECIMAL(38,0)) * ${1L << shift}) " +
-          s"div (c + 1), $two20)"))
-      .select(col("__f"), col("__lab").as("__cls"),
-        (graft.functions.MitchellE8(col("q")) - lit(8L * shift)).as("u8v"))
-    val perTok = base.select(col("__f"), col("__id"), explode(col("__w")).as("t"))
-      .join(broadcast(u8tab), Seq("__f"))
-      .join(broadcast(m8tab), Seq("__f", "__cls", "t"), "left")
-      .groupBy("__id", "__cls")
-      .agg(sum(coalesce(col("m8v"), col("u8v"))).as("tok_e8"))
-    val w = Window.partitionBy("__id")
-      .orderBy(col("s_e8").asc, col("__cls").asc)
-    val scored = base.select(col("__f"), col("__id"), col("__lab"))
-      .join(broadcast(classesF.select(col("__f"),
-        col("__lab").as("__cls"), col("prior_e8"))), Seq("__f"))
-      .join(perTok, Seq("__id", "__cls"), "left")
-      .withColumn("s_e8", col("prior_e8") + coalesce(col("tok_e8"), lit(0L)))
-      .withColumn("rnk", row_number().over(w))
-      .withColumn("nxt", lead(col("s_e8"), 1).over(w))
-      .where(col("rnk") === 1)
+    // one scoring pass: each doc under its own fold's complement model,
+    // then q256's margin bins
+    val scored = NaiveBayes.score(base, "__id", "__text",
+        NaiveBayes.NbModel(classCounts, tokenCounts, vocab),
+        carry = Seq("__lab"), by = Seq("__f"))
       .select(col("__f").as("fold"),
-        expr("least(coalesce(nxt - s_e8, 0) div 2, CAST(10 AS BIGINT))")
-          .as("conf_bin"),
-        (col("__lab") === col("__cls")).as("ok"))
+        expr("least(margin_e8 div 2, CAST(10 AS BIGINT))").as("conf_bin"),
+        (col("__lab") === col("pred")).as("ok"))
     val perFold = Lineage.cut(
       rocAuc(scored, "fold", "conf_bin", "ok")) // k rows feed the report twice
     // every consumer of the count grids is materialized inside the
@@ -2594,16 +2534,13 @@ object Eval {
   }
 
   private def vMeasureFromCellsDf(cells: DataFrame): DataFrame = {
-    val shift = 1L << graft.ops.TextStats.LmShift
-    // ratio log2 in e256 units: the 2²⁰ domain pre-shift is a +256·20
-    // additive bias on EVERY term and would NOT cancel in the
-    // H(b|a)/H(b) quotient — subtract it per term (the q333
-    // discipline); num ≥ den throughout so the difference is ≥ 0
-    val sh = 256 * graft.ops.TextStats.LmShift
-    // w·log2(num/den) in e256 units over DECIMAL(38,0)
+    // w·log2(num/den) in e256 units over DECIMAL(38,0): the ratio log
+    // carries no 2²⁰ pre-shift bias, which would NOT cancel in the
+    // H(b|a)/H(b) quotient (the q333 discipline); num ≥ den throughout
+    // so every term is ≥ 0
     def wLogE256(w: String, num: String, den: String): org.apache.spark.sql.Column =
-      expr(s"CAST($w AS DECIMAL(38,0))") * (graft.functions.MitchellE8.e256(
-        expr(s"($num * ${shift}L) div ($den)")) - lit(sh.toLong))
+      col(w).cast("decimal(38,0)") *
+        graft.functions.MitchellE8.log2RatioE256(col(num), col(den))
     // marginals + joint off one pass
     val c = Lineage.cut(cells)
     val ra = c.groupBy("a").agg(sum("cnt").as("na"))

@@ -146,16 +146,8 @@ object Mixture {
       .groupBy("src").agg(sum("__t").as("n"))
     val tot = counts.agg(sum("n").as("__tot"))
     val scored = counts.crossJoin(broadcast(tot))
-      // same ≤ 2^62 clamp as Dsir.weights/pmiCollocations: a tiny
-      // source in a corpus past ~2^43 total tokens would push the
-      // DECIMAL ratio out of BIGINT range (NULL under non-ANSI casts)
-      .withColumn("__q", expr(
-        s"CAST(least(greatest((CAST(__tot AS DECIMAL(38,0)) * ${1L << TextStats.LmShift}) " +
-          s"div greatest(n, CAST(1 AS BIGINT)), " +
-          s"CAST(${1L << TextStats.LmShift} AS BIGINT)), " +
-          s"CAST(${1L << 62} AS BIGINT)) AS BIGINT)"))
-      // __q is clamped to >= 2^20 above
-      .withColumn("delta_e8", MitchellE8(col("__q")) - lit(8L * TextStats.LmShift))
+      .withColumn("delta_e8",
+        MitchellE8.log2Ratio(col("__tot"), greatest(col("n"), lit(1L))))
       .withColumn("__d", expr(TextStats.exp2E8Sql(
         s"(((${alphaDen - alphaNum}) * delta_e8) div $alphaDen) + " +
           s"${8 * TextStats.LmShift}")))

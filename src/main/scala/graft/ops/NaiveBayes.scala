@@ -1,6 +1,6 @@
 package graft.ops
 
-import graft.functions.TextFns
+import graft.functions.{MitchellE8, TextFns}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -43,12 +43,17 @@ import org.apache.spark.sql.functions._
   * the (doc, class) aggregation, and the per-doc argmin window runs
   * on the same partitioning. At sf0.001 q256 plans 4 document scans
   * and 13 Spark jobs. The grid broadcast is unconditional (ROADMAP:
-  * "unconditional broadcast hints"). No state outside the query plan.
+  * "unconditional broadcast hints"); its one `broadcast(m8tab)` hint
+  * in [[score]] serves both callers, the single-model family (q114,
+  * q256 and the rest of `trainScore`) and the fold-keyed models of
+  * [[Eval.cvAuc]]. No state outside the query plan.
   */
 object NaiveBayes {
 
   /** A trained model: `classCounts(label, n_docs, n_tokens)`,
-    * `tokenCounts(label, t, c)`, `vocab(t)` — all mergeable.
+    * `tokenCounts(label, t, c)`, `vocab(t)` — all mergeable. A keyed
+    * family of models (see [[score]]'s `by`) leads each table with the
+    * key columns.
     */
   final case class NbModel(classCounts: DataFrame, tokenCounts: DataFrame,
                            vocab: DataFrame)
@@ -78,75 +83,83 @@ object NaiveBayes {
       .agg(sum("c").as("c")),
     a.vocab.unionByName(b.vocab).distinct())
 
-  private val Shift = TextStats.LmShift
-  private val Two20 = s"CAST(${1L << Shift} AS BIGINT)"
-
   /** −log2 of the smoothed p(t | class) in eighth-bits for a token
-    * seen `c` times in the class: m8(((T_l + V) << SHIFT) div (c + 1))
-    * − 8·SHIFT, over the `n_tokens` and `v` columns in scope.
+    * seen `c` times in the class: log2((T_l + V)/(c + 1)), over the
+    * `n_tokens` and `v` columns in scope.
     */
-  private def surprisalE8(c: String): Column =
-    graft.functions.MitchellE8(expr(
-      s"greatest((CAST(n_tokens + v AS DECIMAL(38,0)) * ${1L << Shift}) " +
-        s"div ($c + 1), $Two20)")) - lit(8L * Shift)
+  private def surprisalE8(c: Column): Column =
+    MitchellE8.log2Ratio(col("n_tokens") + col("v"), c + 1)
 
-  /** Score docs under a model: one row per doc — `(idCol, carry...,
-    * pred, s_e8, margin_e8)` with `pred` the minimum-surprisal class
-    * (ties to the smallest label), `s_e8` its total surprisal in
-    * eighth-bits, and `margin_e8` the gap to the runner-up (0 when
-    * the model has a single class). Unseen tokens smooth through
-    * c = 0; empty and null docs score on priors alone.
+  /** Score docs under a model: one row per doc — `(idCol, by...,
+    * carry..., pred, s_e8, margin_e8)` with `pred` the
+    * minimum-surprisal class (ties to the smallest label), `s_e8` its
+    * total surprisal in eighth-bits, and `margin_e8` the gap to the
+    * runner-up (0 when the model has a single class). Unseen tokens
+    * smooth through c = 0; empty and null docs score on priors alone.
+    *
+    * `by` keys a family of models scored in one pass: the docs and all
+    * three model tables carry the key columns, and each doc is scored
+    * under its own key's model only (a key with no class rows scores
+    * none of its docs). [[Eval.cvAuc]] keys its leave-one-fold-out
+    * models by fold; with no key (q256 and every single-model caller)
+    * the plan is one model's.
     */
   def score(docs: DataFrame, idCol: String, textCol: String, model: NbModel,
-            carry: Seq[String] = Seq.empty): DataFrame = {
-    // the per-class table (label, T_l, V, prior −log2(N_l/N), the
-    // unseen-token c = 0 surprisal), built once: ONE global aggregation
-    // over the class rows and the vocabulary rows (label null) yields
-    // the class list and V, and N folds from that list. The grid below
-    // prunes the prior, so a separate N aggregate would differ between
-    // the two consumers and be re-planned, scan included; this way both
-    // share the one aggregation stage and each model table is read once
-    val clsCols = model.classCounts.select("label", "n_docs", "n_tokens")
+            carry: Seq[String] = Seq.empty, by: Seq[String] = Nil): DataFrame = {
+    // the per-class table (by, label, T_l, V, prior −log2(N_l/N), the
+    // unseen-token c = 0 surprisal), built once: ONE aggregation per
+    // key over the class rows and the vocabulary rows (label null)
+    // yields the class list and V, and N folds from that list. The grid
+    // below prunes the prior, so a separate N aggregate would differ
+    // between the two consumers and be re-planned, scan included; this
+    // way both share the one aggregation stage and each model table is
+    // read once
+    val keys = by.map(col)
+    def keyed(cs: Column*): Seq[Column] = keys ++ cs
+    val clsCols = model.classCounts.select(keyed(col("label"), col("n_docs"), col("n_tokens")): _*)
     val classes = clsCols
-      .unionByName(model.vocab.select(clsCols.schema.map(f =>
+      .unionByName(model.vocab.select(keys ++ clsCols.schema.drop(by.size).map(f =>
         lit(null).cast(f.dataType).as(f.name)): _*))
+      .groupBy(keys: _*)
       .agg(collect_list(when(col("label").isNotNull,
           struct("label", "n_docs", "n_tokens"))).as("cls"),
         count_if(col("label").isNull).as("v"))
-      .select(explode(col("cls")).as("c"), col("v"),
-        aggregate(col("cls.n_docs"), lit(0L), _ + _).as("n_all"))
-      .select(col("c.*"), col("v"), col("n_all"))
-      .select(col("label"), col("n_tokens"), col("v"),
-        (graft.functions.MitchellE8(expr(
-          s"greatest((CAST(n_all AS DECIMAL(38,0)) * ${1L << Shift}) div n_docs, $Two20)"))
-          - lit(8L * Shift)).as("prior_e8"),
-        surprisalE8("CAST(0 AS BIGINT)").as("u8v"))
-    // the surprisal of every seen (class, token) on the VOCAB-BOUNDED
-    // model grid (r16), so the corpus side is one hash probe and an
-    // integer add per (token, class) row. Broadcast bound: trained
-    // vocab × L rows, not bounded by construction. Without the hint
-    // q256 plans the same broadcast join at sf0.001 and sf0.01 (size
-    // estimate under the threshold) and a sort-merge join at sf0.1; a
-    // size-based choice is ROADMAP's open "unconditional broadcast
-    // hints" item.
+      .select(keyed(explode(col("cls")).as("c"), col("v"),
+        aggregate(col("cls.n_docs"), lit(0L), _ + _).as("n_all")): _*)
+      .select(keyed(col("c.*"), col("v"), col("n_all")): _*)
+      .select(keyed(col("label"), col("n_tokens"), col("v"),
+        MitchellE8.log2Ratio(col("n_all"), col("n_docs")).as("prior_e8"),
+        surprisalE8(lit(0L)).as("u8v")): _*)
+    // the surprisal of every seen (key, class, token) on the
+    // VOCAB-BOUNDED model grid (r16), so the corpus side is one hash
+    // probe and an integer add per (token, class) row. Broadcast bound:
+    // trained vocab × L rows (× keys), not bounded by construction.
+    // This is the one `broadcast(m8tab)` hint of both NB scorers, q256's
+    // family and [[Eval.cvAuc]]. Without the hint q256 plans the same
+    // broadcast join at sf0.001 and sf0.01 (size estimate under the
+    // threshold) and a sort-merge join at sf0.1; a size-based choice is
+    // ROADMAP's open "unconditional broadcast hints" item.
     val m8tab = model.tokenCounts
-      .join(broadcast(classes.select("label", "n_tokens", "v")), Seq("label"))
-      .select(col("label"), col("t"), surprisalE8("c").as("m8v"))
+      .join(broadcast(classes.select(keyed(col("label"), col("n_tokens"), col("v")): _*)),
+        by :+ "label")
+      .select(keyed(col("label"), col("t"), surprisalE8(col("c")).as("m8v")): _*)
     // ONE scan of the docs, hash-partitioned by id once so that the
     // (doc, class) aggregation and the per-doc argmin window both run
     // in place: each token (a null token for an empty or null doc) ×
-    // the L classes, one aggregation that adds the prior, the window.
-    // Bit-identical to summing per-token surprisals and the prior
-    // apart: the same q/m8 expressions over the same (c, n_tokens, v)
-    // values, and a sum of longs is order-free.
-    val byClass = docs
-      .select(col(idCol).as("__id") +: carry.map(col) :+ col(textCol).as("__text"): _*)
+    // its key's L classes, one aggregation that adds the prior, the
+    // window. Bit-identical to summing per-token surprisals and the
+    // prior apart: the same q/m8 expressions over the same (c,
+    // n_tokens, v) values, and a sum of longs is order-free.
+    val keyCarry = keys ++ carry.map(col)
+    val idCarry = col("__id") +: keyCarry
+    val toks = docs
+      .select(col(idCol).as("__id") +: keyCarry :+ col(textCol).as("__text"): _*)
       .repartition(col("__id"))
-      .select(col("__id") +: carry.map(col) :+
-        explode_outer(TextFns.tokens(col("__text"))).as("t"): _*)
-      .crossJoin(broadcast(classes.select("label", "prior_e8", "u8v")))
-      .join(broadcast(m8tab), Seq("label", "t"), "left")
-      .groupBy(col("__id") +: carry.map(col) :+ col("label") :+ col("prior_e8"): _*)
+      .select(idCarry :+ explode_outer(TextFns.tokens(col("__text"))).as("t"): _*)
+    val perClass = broadcast(classes.select(keyed(col("label"), col("prior_e8"), col("u8v")): _*))
+    val byClass = (if (by.isEmpty) toks.crossJoin(perClass) else toks.join(perClass, by))
+      .join(broadcast(m8tab), by ++ Seq("label", "t"), "left")
+      .groupBy(idCarry :+ col("label") :+ col("prior_e8"): _*)
       .agg(sum(when(col("t").isNull, lit(0L))
         .otherwise(coalesce(col("m8v"), col("u8v")))).as("tok_e8"))
       .withColumn("s_e8", col("prior_e8") + col("tok_e8"))
@@ -155,7 +168,7 @@ object NaiveBayes {
       .withColumn("rnk", row_number().over(w))
       .withColumn("nxt", lead(col("s_e8"), 1).over(w))
       .where(col("rnk") === 1)
-      .select(col("__id").as(idCol) +: carry.map(col) :+
+      .select(col("__id").as(idCol) +: keyCarry :+
         col("label").as("pred") :+ col("s_e8").cast("bigint").as("s_e8") :+
         coalesce(col("nxt") - col("s_e8"), lit(0L)).cast("bigint").as("margin_e8"): _*)
   }

@@ -160,12 +160,10 @@ object Profile {
           .as("p_ppm"),
         expr("greatest(CAST((CAST(gc + 1 AS DECIMAL(38,0)) * 1000000) " +
           "div (gt + nb) AS BIGINT), CAST(1 AS BIGINT))").as("q_ppm"))
-      .select(col("g"), col("st"), col("p_ppm"), col("q_ppm"),
-        expr(s"CAST((greatest(p_ppm, q_ppm) * ${1L << TextStats.LmShift}) " +
-          "div least(p_ppm, q_ppm) AS BIGINT)").as("q"))
       .select(col("g"), col("st"),
-        (abs(col("p_ppm") - col("q_ppm")) * (MitchellE8(col("q")) -
-          lit(8L * TextStats.LmShift))).as("term"))
+        (abs(col("p_ppm") - col("q_ppm")) * MitchellE8.log2Ratio(
+          greatest(col("p_ppm"), col("q_ppm")), least(col("p_ppm"), col("q_ppm"))))
+          .as("term"))
       .groupBy("g", "st")
       .agg(count(lit(1)).as("n_bins"), sum("term").as("__t"))
       .select(col("g").as(groupCol), col("st").as("n_rows"),
@@ -212,12 +210,10 @@ object Profile {
         expr("greatest(CAST((CAST(coalesce(bc, 0) + 1 AS DECIMAL(38,0)) " +
           "* 1000000) div (bt + nb) AS BIGINT), CAST(1 AS BIGINT))")
           .as("q_ppm"))
-      .select(col("g"), col("st"), col("p_ppm"), col("q_ppm"),
-        expr(s"CAST((greatest(p_ppm, q_ppm) * ${1L << TextStats.LmShift}) " +
-          "div least(p_ppm, q_ppm) AS BIGINT)").as("q"))
       .select(col("g"), col("st"),
-        (abs(col("p_ppm") - col("q_ppm")) * (MitchellE8(col("q")) -
-          lit(8L * TextStats.LmShift))).as("term"))
+        (abs(col("p_ppm") - col("q_ppm")) * MitchellE8.log2Ratio(
+          greatest(col("p_ppm"), col("q_ppm")), least(col("p_ppm"), col("q_ppm"))))
+          .as("term"))
       .groupBy("g", "st")
       .agg(count(lit(1)).as("n_bins"), sum("term").as("__t"))
       .select(col("g").as(groupCol), col("st").as("n_rows"),
@@ -1278,7 +1274,6 @@ object Profile {
     * [[woeIvFromCounts]] so batch and streaming cannot drift.
     */
   private def woeIvFromCountsDf(counts: DataFrame): DataFrame = {
-    val sh = 1L << graft.ops.TextStats.LmShift
     val tot = counts.groupBy("feature")
       .agg(sum("n_pos").as("p_tot"), sum("n_neg").as("n_tot"))
     val scored = counts.join(broadcast(tot), Seq("feature"))
@@ -1287,10 +1282,10 @@ object Profile {
       .withColumn("qneg",
         expr("CAST(n_neg + 1 AS DECIMAL(38,0)) * (p_tot + 1)"))
       // each branch takes the larger-over-smaller ratio, so the log
-      // argument is >= 2^20
+      // is >= 0
       .withColumn("woe_e8", when(col("qpos") >= col("qneg"),
-          MitchellE8(expr(s"(qpos * $sh) div qneg")) - lit(160L))
-        .otherwise(-(MitchellE8(expr(s"(qneg * $sh) div qpos")) - lit(160L))))
+          MitchellE8.log2Ratio(col("qpos"), col("qneg")))
+        .otherwise(-MitchellE8.log2Ratio(col("qneg"), col("qpos"))))
       .withColumn("dp_ppm", expr(
         "(1000000 * n_pos) div greatest(p_tot, 1) - " +
           "(1000000 * n_neg) div greatest(n_tot, 1)"))
@@ -1515,22 +1510,15 @@ object Profile {
     val tot = pg.agg(sum("ng").as("n"), sum("xg").as("x"))
     val mg = pg.select(col("g"), col("ng"), col("xg"),
       expr("xg div ng").as("mg"))
-    // ratio column FIRST (greatest·2^20 div least, so >= 2^20), then
-    // the native e256 log over it
-    val shift = 1L << graft.ops.TextStats.LmShift
     val within = unit.join(broadcast(mg.select("g", "mg")), Seq("g"))
-      .withColumn("__q",
-        expr(s"(greatest(x, mg) * ${shift}L) div least(x, mg)"))
-      .withColumn("__lr", signedLogE256(col("x") >= col("mg"), col("__q")))
+      .withColumn("__lr", signedLogE256(col("x"), col("mg")))
       .select(col("g"),
         expr("CAST(x AS DECIMAL(38,0)) * __lr").as("t"))
       .groupBy("g").agg(sum("t").as("tw"))
     mg.join(within, Seq("g"))
       .crossJoin(broadcast(tot))
       .withColumn("__m", expr("x div n"))
-      .withColumn("__qb",
-        expr(s"(greatest(mg, __m) * ${shift}L) div least(mg, __m)"))
-      .withColumn("__lrb", signedLogE256(col("mg") >= col("__m"), col("__qb")))
+      .withColumn("__lrb", signedLogE256(col("mg"), col("__m")))
       .select(col("g").as(groupCol),
         col("ng").cast("bigint").as("n_units"),
         col("xg").cast("bigint").as("total_value"),
@@ -1548,12 +1536,13 @@ object Profile {
           .as("within_me256"))
   }
 
-  /** ±(m256(q) − 256·SHIFT), the sign taken from `pos`: the signed
-    * ratio log of [[theilDecomposition]]'s terms.
+  /** log2(a/b) in 1/256-bit units as ±log2(larger/smaller), the sign
+    * + when a ≥ b: the signed ratio log of [[theilDecomposition]]'s
+    * terms.
     */
-  private def signedLogE256(pos: Column, q: Column): Column = {
-    val lr = MitchellE8.e256(q) - lit(256L * TextStats.LmShift)
-    when(pos, lr).otherwise(-lr)
+  private def signedLogE256(a: Column, b: Column): Column = {
+    val lr = MitchellE8.log2RatioE256(greatest(a, b), least(a, b))
+    when(a >= b, lr).otherwise(-lr)
   }
 
   /** Concentration / diversity report of one categorical dimension:

@@ -188,18 +188,14 @@ object TextStats {
     * cannot drift in the arithmetic. Operate over columns (tf, df,
     * dl, n_docs, avdl).
     */
-  private def bm25QExpr: String = {
-    val two20 = s"CAST(${1L << LmShift} AS BIGINT)"
-    s"greatest((CAST((2 * n_docs) - (2 * df) + 1 AS DECIMAL(38,0)) " +
-      s"* ${1L << LmShift}) div ((2 * df) + 1), $two20)"
-  }
+  private def bm25IdfE8: Column =
+    MitchellE8.log2Ratio(expr("(2 * n_docs) - (2 * df) + 1"), expr("(2 * df) + 1"))
   private val Bm25TfnExpr =
     "(22000 * tf * avdl) div ((10 * tf * avdl) + (3 * avdl) + (9 * dl))"
 
   private def bm25Score(tfRows: DataFrame): DataFrame =
     tfRows
-      .withColumn("q", expr(bm25QExpr))
-      .withColumn("idf_e8", MitchellE8(col("q")) - lit(8L * LmShift))
+      .withColumn("idf_e8", bm25IdfE8)
       .withColumn("tfn_x1000", expr(Bm25TfnExpr))
       .groupBy("__id")
       .agg(sum(expr("idf_e8 * tfn_x1000")).as("bm25_x"),
@@ -486,6 +482,22 @@ object TextStats {
         explode(TextFns.shingles(col("__text"), 2)).as("bg"))
       .select(col("__id"), substring_index(col("bg"), " ", 1).as("w1"), col("bg"))
 
+  /** The add-one bigram surprisal log2((c1 + V)/(c2 + 1)) in
+    * eighth-bits over (c1, c2, v) columns — shared by [[lmScore]],
+    * [[surprisalSpansUnderModel]] and [[lmCrossPerplexity]].
+    */
+  private def lmSurprisalE8: Column =
+    MitchellE8.log2Ratio(col("c1") + col("v"), col("c2") + 1)
+
+  /** The inverse Kneser–Ney probability 4·c1·Nt / (max(4·c2 − 3, 0)·Nt
+    * + 3·N1+(w1·)·N1+(·w2)) as a (numerator, denominator) pair over
+    * (c1, c2, nt, n1w1, ncw2) columns — shared by [[knSurprisal]] and
+    * [[knNextWord]].
+    */
+  private def knNum: Column = expr("CAST(4 AS DECIMAL(38,0)) * c1 * nt")
+  private def knDen: Column = expr("CAST(greatest(4 * c2 - 3, 0) AS DECIMAL(38,0)) * nt " +
+    "+ CAST(3 AS DECIMAL(38,0)) * n1w1 * ncw2")
+
   private def lmToks(df: DataFrame, idCol: String, textCol: String,
                      carry: Seq[String]): DataFrame =
     df.select(col(idCol).as("__id") +: carry.map(col) :+
@@ -528,21 +540,13 @@ object TextStats {
       .join(c2, Seq("bg"), "left").na.fill(0L, Seq("c2"))
       .join(c1, Seq("w1"), "left").na.fill(0L, Seq("c1"))
       .crossJoin(broadcast(v))
-      // clamp is a no-op whenever the vocab is non-empty (c1+v ≥ c2+1
-      // because c1 = Σ c2 over the left context); it only guards the
-      // degenerate empty-model case so m8 stays in range. The product
-      // goes through DECIMAL (HUGEINT on the oracle side) so a
-      // trillion-token c1 cannot wrap the << SHIFT scaling; the div
-      // result is BIGINT-ranged by construction (q < 2^63 whenever
-      // (c1+v)/(c2+1) < 2^43, i.e. always — c2+1 ≥ 1 and c1 ≤ corpus
-      // bigrams means the RATIO, not the product, bounds q)
-      .withColumn("q",
-        expr(s"greatest((CAST(c1 + v AS DECIMAL(38,0)) * ${1L << LmShift}) div (c2 + 1), " +
-          s"CAST(${1L << LmShift} AS BIGINT))"))
-      .withColumn("m8", MitchellE8(col("q")))
+      // c1+v ≥ c2+1 whenever the vocab is non-empty (c1 = Σ c2 over
+      // the left context); an empty model logs to 0 (Mitchell clamps
+      // below the floor). The ratio, not the product, bounds q: c2+1 ≥
+      // 1 and c1 ≤ corpus bigrams keep it far below the 2^62 cap
+      .withColumn("e8", lmSurprisalE8)
       .groupBy("__id")
-      .agg(count(lit(1)).as("n_bigrams"),
-        sum(expr(s"m8 - ${8 * LmShift}")).as("surprisal_e8"))
+      .agg(count(lit(1)).as("n_bigrams"), sum("e8").as("surprisal_e8"))
     toks.select((col("__id") +: carry.map(col)): _*)
       .join(scored, Seq("__id"), "left")
       .select(col("__id").as(idCol) +: carry.map(col) :+
@@ -638,11 +642,12 @@ object TextStats {
     * "how many kinds of places does this word appear" continuation
     * count that makes KN famous, Nt = total bigram types). The
     * per-bigram surprisal is the Mitchell eighth-bit log of the
-    * inverse ratio, integer end to end; q is clamped to
-    * [2^20, 2^62] so a vanishing continuation probability cannot
+    * inverse ratio, integer end to end; [[MitchellE8.log2Ratio]]
+    * clamps q to ≤ 2^62 so a vanishing continuation probability cannot
     * leave Mitchell's domain (caps one bigram at ~42 bits —
     * unreachable on any self-scored corpus, where c2 ≥ 1 bounds the
-    * ratio by 4·c1·Nt/Nt = 4·c1).
+    * ratio by 4·c1·Nt/Nt = 4·c1). The ratio is ≥ 1 for every observed
+    * bigram (c1 ≥ c2 + N1+(w1·) − 1 and N1+(·w2) ≤ Nt), so q ≥ 2^20.
     *
     * Scale shape: the q106 class — bigram explode, three count
     * aggregations (c2 / per-w1 / per-w2) and a 1-row Nt broadcast,
@@ -664,15 +669,9 @@ object TextStats {
       .withColumn("w2", substring_index(col("bg"), " ", -1))
       .join(ncw2, Seq("w2"))
       .crossJoin(broadcast(nt))
-      .withColumn("q", expr(
-        s"CAST(least(greatest((CAST(4 AS DECIMAL(38,0)) * c1 * nt * ${1L << LmShift}) div " +
-          s"(CAST(greatest(4 * c2 - 3, 0) AS DECIMAL(38,0)) * nt " +
-          s"+ CAST(3 AS DECIMAL(38,0)) * n1w1 * ncw2), " +
-          s"CAST(${1L << LmShift} AS BIGINT)), CAST(${1L << 62} AS BIGINT)) AS BIGINT)"))
-      .withColumn("m8", MitchellE8(col("q")))
+      .withColumn("e8", MitchellE8.log2Ratio(knNum, knDen))
       .groupBy("__id")
-      .agg(count(lit(1)).as("n_bigrams"),
-        sum(expr(s"m8 - ${8 * LmShift}")).as("kn_surprisal_e8"))
+      .agg(count(lit(1)).as("n_bigrams"), sum("e8").as("kn_surprisal_e8"))
     toks.select((col("__id") +: carry.map(col)): _*)
       .join(scored, Seq("__id"), "left")
       .select(col("__id").as(idCol) +: carry.map(col) :+
@@ -716,18 +715,13 @@ object TextStats {
       .withColumn("w2", substring_index(col("bg"), " ", -1))
       .join(ncw2, Seq("w2"))
       .crossJoin(broadcast(nt))
-      .withColumn("q", expr(
-        s"CAST(least(greatest((CAST(4 AS DECIMAL(38,0)) * c1 * nt * ${1L << LmShift}) div " +
-          s"(CAST(greatest(4 * c2 - 3, 0) AS DECIMAL(38,0)) * nt " +
-          s"+ CAST(3 AS DECIMAL(38,0)) * n1w1 * ncw2), " +
-          s"CAST(${1L << LmShift} AS BIGINT)), CAST(${1L << 62} AS BIGINT)) AS BIGINT)"))
+      .withColumn("q", MitchellE8.ratioQ(knNum, knDen))
     val w = Window.partitionBy("w1").orderBy(col("q"), col("w2"))
     scored.withColumn("rank", row_number().over(w).cast("bigint"))
       .where(col("rank") <= topK)
-      .withColumn("m8", MitchellE8(col("q")))
+      .withColumn("e8", MitchellE8.log2Ratio(knNum, knDen))
       .select(col("w1").as("context"), col("rank"),
-        col("w2").as("next_word"),
-        expr(s"((m8 - ${8 * LmShift}) * 10) div 8").as("kn_bits_x10"))
+        col("w2").as("next_word"), expr("(e8 * 10) div 8").as("kn_bits_x10"))
   }
 
   /** Token-blocklist gate (the C4 "bad words" filter, Raffel et al.
@@ -837,11 +831,9 @@ object TextStats {
     parts
       .join(c1l, "w1").join(c1r, "w2")
       .crossJoin(broadcast(nTot))
-      .withColumn("q", expr(
-        s"CAST(least(greatest((CAST(c2 AS DECIMAL(38,0)) * n_tot * ${1L << LmShift}) " +
-          s"div (CAST(c1l AS DECIMAL(38,0)) * c1r), CAST(${1L << LmShift} AS BIGINT)), " +
-          s"CAST(${1L << 62} AS BIGINT)) AS BIGINT)"))
-      .withColumn("pmi_e8", MitchellE8(col("q")) - lit(8L * LmShift))
+      .withColumn("pmi_e8", MitchellE8.log2Ratio(
+        col("c2").cast("decimal(38,0)") * col("n_tot"),
+        col("c1l").cast("decimal(38,0)") * col("c1r")))
       .where(col("c2") >= minCount)
       .select(col("bg").as("bigram"), col("c2"), col("pmi_e8"))
       .orderBy(desc("pmi_e8"), col("bigram"))
@@ -2078,10 +2070,7 @@ object TextStats {
       .join(c2, Seq("bg"), "left").na.fill(0L, Seq("c2"))
       .join(c1, Seq("w1"), "left").na.fill(0L, Seq("c1"))
       .crossJoin(broadcast(v))
-      .withColumn("q",
-        expr(s"greatest((CAST(c1 + v AS DECIMAL(38,0)) * ${1L << LmShift}) " +
-          s"div (c2 + 1), CAST(${1L << LmShift} AS BIGINT))"))
-      .withColumn("e8", MitchellE8(col("q")) - lit(8L * LmShift))
+      .withColumn("e8", lmSurprisalE8)
     val ws = Window.partitionBy("__id").orderBy("pos")
       .rowsBetween(-(window - 1), 0)
     val wr = Window.partitionBy("__id")
@@ -2142,13 +2131,9 @@ object TextStats {
       .join(c2, Seq("gb", "bg"), "left").na.fill(0L, Seq("c2"))
       .join(c1, Seq("gb", "w1"), "left").na.fill(0L, Seq("c1"))
       .join(broadcast(vb), Seq("gb"))
-      .withColumn("q",
-        expr(s"greatest((CAST(c1 + v AS DECIMAL(38,0)) * ${1L << LmShift}) " +
-          s"div (c2 + 1), CAST(${1L << LmShift} AS BIGINT))"))
-      .withColumn("m8", MitchellE8(col("q")))
+      .withColumn("e8", lmSurprisalE8)
       .groupBy(col("ga").as("group_a"), col("gb").as("group_b"))
-      .agg(sum("ca").as("n_bigrams"),
-        sum(expr(s"ca * (m8 - ${8 * LmShift})")).as("cross_e8"))
+      .agg(sum("ca").as("n_bigrams"), sum(col("ca") * col("e8")).as("cross_e8"))
       .select(col("group_a"), col("group_b"),
         col("n_bigrams").cast("bigint").as("n_bigrams"),
         col("cross_e8").cast("bigint").as("cross_e8"),

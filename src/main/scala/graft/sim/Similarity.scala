@@ -1512,16 +1512,14 @@ object Similarity {
       .where(col("d2") > 0)
     // per-query candidate window — bucketCap-bounded (q76's class)
     val w = Window.partitionBy("query_id").orderBy(col("d2"), col("id"))
-    val sh = 1L << graft.ops.TextStats.LmShift
     val mu = cand.withColumn("rn", row_number().over(w))
       .where(col("rn") <= 2)
       .groupBy("query_id")
       .agg(min(when(col("rn") === 1, col("d2"))).as("d1"),
         min(when(col("rn") === 2, col("d2"))).as("d2b"))
       .where(col("d2b").isNotNull)
-      // d2b >= d1 > 0, so the ratio is >= 2^20
-      .select((graft.functions.MitchellE8(expr(s"(d2b * $sh) div d1")) -
-        lit(160L)).as("e8"))
+      // d2b >= d1 > 0, so the log is >= 0
+      .select(graft.functions.MitchellE8.log2Ratio(col("d2b"), col("d1")).as("e8"))
     mu.agg(count(lit(1)).as("n_points"), sum("e8").as("sum_e8"))
       .select(col("n_points"), col("sum_e8"),
         expr("CAST(CASE WHEN coalesce(sum_e8, 0) <= 0 THEN -1 ELSE " +

@@ -11,7 +11,8 @@ package graft
 class CodegenFallbackSpec extends SparkSpec {
 
   /** Every catalog query that reaches a Mitchell log in its Spark plan,
-    * plus q32 and q181, the two past fallbacks.
+    * plus q32 and q181, the two past fallbacks. The NaiveBayes family
+    * (q114 … q325) reaches it through `NaiveBayes.score`.
     */
   private val mitchellQueries = Seq(
     "q32_langid", "q106_lm_surprisal", "q109_bm25", "q120_dsir_scores",
@@ -23,7 +24,10 @@ class CodegenFallbackSpec extends SparkSpec {
     "q254_kn_next_word", "q255_source_tfidf_cosine", "q259_woe_iv",
     "q263_golden_records", "q268_intrinsic_dim", "q293_ql_retrieval",
     "q306_sprt", "q312_lm_cross_ppl", "q317_surprisal_spans", "q333_theil",
-    "q337_vmeasure")
+    "q337_vmeasure", "q114_nb_classifier", "q179_classification_report",
+    "q180_cohens_kappa", "q184_uncertainty_sample", "q212_calibration_report",
+    "q218_fleiss_kappa", "q256_nb_auc", "q286_isotonic_calibration",
+    "q290_mcnemar", "q295_krippendorff", "q320_cv_auc", "q325_cochran_q")
 
   test("codegenFallbacksIn counts a stage over the huge-method limit") {
     val s = spark.newSession()

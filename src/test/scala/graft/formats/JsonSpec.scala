@@ -11,14 +11,14 @@ import org.apache.spark.sql.functions._
 class JsonSpec extends SparkSpec {
   import spark.implicits._
 
-  test("decodeResult: Passed / Failed / null-input matrix") {
+  test("decodeResultDF: Passed / Failed / null-input matrix") {
     val rows = Seq[String](
       """{"k": 7, "s": "hi"}""",
       """not json at all""",
       """{"k": "type-mismatch-ok"}""",
       null,
       "").toDF("payload")
-      .select(Json.decodeResult(col("payload"), "k BIGINT, s STRING").as("res"))
+      .transform(Json.decodeResultDF(_, col("payload"), "k BIGINT, s STRING", "res"))
       .select("res.value.k", "res.value.s", "res.error")
       .collect()
     // Passed

@@ -810,6 +810,27 @@ class EvalSpec extends SparkSpec {
     assert(fused.head._3 >= 1L)
   }
 
+  test("cvAuc: a fold whose complement has no tokens scores on priors") {
+    // folds = 2 and every fold-1 doc is empty: fold 0's complement model
+    // has classes but an empty vocabulary (V = 0), and a per-fold
+    // trainScore still scores fold 0's docs on the class priors
+    val docs = (0L until 12L).map { i =>
+      val lab = if (i % 3 == 0) "a" else "b"
+      val text = if (i % 2 == 1) "" else if (lab == "a") "alpha alef" else "beta bet"
+      (i, lab, text)
+    }.toDF("doc_id", "lang", "text")
+    val (fused, naive) = cvAucFusedAndNaive(docs, 2)
+    assert(fused === naive)
+    assert(fused.map(_._1) === Seq(0L, 1L))
+  }
+
+  test("q320 at sf0.001: at most 41 jobs") {
+    val q = graft.Queries.all("q320_cv_auc")
+    graft.Tables.documents(spark, sf) // the schema memo is warm in the catalog
+    val jobs = jobsIn { q(spark, sf).collect(); () }
+    assert(jobs <= 41, s"q320 ran $jobs jobs")
+  }
+
   test("chiResiduals: hand 2x2 standardized residuals share magnitude sqrt(chi2)") {
     val df = (Seq.fill(30)(("r1", "a")) ++ Seq.fill(10)(("r1", "b")) ++
       Seq.fill(10)(("r2", "a")) ++ Seq.fill(10)(("r2", "b")))

@@ -46,8 +46,8 @@ class StreamingSpec extends SparkSpec {
     val q = stream.toDF().writeStream
       .option("checkpointLocation", tmpDir())
       .foreachBatch { (batch: org.apache.spark.sql.Dataset[Row], _: Long) =>
-        val decoded = batch.toDF().withColumn("res",
-          Json.decodeResult(col("value").cast("string"), "k BIGINT"))
+        val decoded = Json.decodeResultDF(batch.toDF(),
+          col("value").cast("string"), "k BIGINT", "res")
         Dlq.processBatch(decoded, col("res.error"),
           sink = df => sunk.synchronized { sunk ++= df.collect() },
           dlqSink = Some(df => dlqd.synchronized { dlqd ++= df.collect() }))
@@ -79,7 +79,7 @@ class StreamingSpec extends SparkSpec {
 
   test("DLQ outage fails the batch — stall, never drop (invariant I3)") {
     val batch = Seq(record("t", 0, 0, "a", "poison")).toDF()
-      .withColumn("res", Json.decodeResult(col("value").cast("string"), "k BIGINT"))
+      .transform(Json.decodeResultDF(_, col("value").cast("string"), "k BIGINT", "res"))
     var sinkRan = false
     intercept[RuntimeException] {
       Dlq.processBatch(batch, col("res.error"),
@@ -95,7 +95,7 @@ class StreamingSpec extends SparkSpec {
     val batch = Seq(
       record("t", 0, 0, "a", """{"k": 1}"""),
       record("t", 0, 1, "b", "oops")).toDF()
-      .withColumn("res", Json.decodeResult(col("value").cast("string"), "k BIGINT"))
+      .transform(Json.decodeResultDF(_, col("value").cast("string"), "k BIGINT", "res"))
     var sunk = 0L
     val outcome = Dlq.processBatch(batch, col("res.error"),
       sink = df => sunk = df.count(), dlqSink = None)
@@ -184,7 +184,7 @@ class StreamingSpec extends SparkSpec {
       record("t", 0, 0, "a", """{"k": 1}"""),
       record("t", 0, 1, "b", "oops"),
       record("t", 1, 0, "c", """{"k": 3}""")).toDF()
-    .withColumn("res", Json.decodeResult(col("value").cast("string"), "k BIGINT"))
+    .transform(Json.decodeResultDF(_, col("value").cast("string"), "k BIGINT", "res"))
 
   private def persisted = spark.sparkContext.getPersistentRDDs.keySet
 
@@ -293,8 +293,8 @@ class StreamingSpec extends SparkSpec {
     spark.streams.addListener(listener)
     try {
       val decoded = Metrics.observeResults(
-        stream.toDF().withColumn("res",
-          Json.decodeResult(col("value").cast("string"), "k BIGINT")),
+        Json.decodeResultDF(stream.toDF(),
+          col("value").cast("string"), "k BIGINT", "res"),
         "results", col("res.error"), lit(false))
       val q = decoded.writeStream
         .option("checkpointLocation", tmpDir())
